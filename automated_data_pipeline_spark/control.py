@@ -6,11 +6,20 @@ PipelineRunner.java:212-218). A Spark-native engine has no cheap
 row-update primitive, so the control plane is **event-sourced**: every
 state change appends an immutable full-state row (tiny parquet file,
 written driver-side via pyarrow — the control plane is metadata beside
-the dataflow, exactly like the reference's SQLite-beside-the-pipeline);
-the *current* state is the latest row per key, derived with a window
-function. Appends are atomic-by-file, so concurrent readers (the
-monitoring API) never see torn state — the reference gets the same
-property from WAL journaling (orchestrator/db.js:17).
+the dataflow, exactly like the reference's SQLite-beside-the-pipeline).
+Appends are atomic-by-file, so concurrent readers (the monitoring API)
+never see torn state — the reference gets the same property from WAL
+journaling (orchestrator/db.js:17).
+
+Reads never scan with Spark. Event files are immutable once in place
+and uniquely named, so each store instance decodes every file with
+pyarrow exactly once (cached by file name; a directory listing per
+read picks up other writers' files and drops deleted ones). The
+*current* state — latest row per key by ``event_seq``, ties to the
+earliest file — is computed once per listing in Arrow, and the
+``runs``/``steps``/``logs`` views are local relations over those Arrow
+tables: no file scan, no schema-inference job, no window shuffle, and
+point filters over them fold on the driver.
 
 At scale this would be a Delta/Iceberg table with OPTIMIZE compaction;
 the event-sourced latest-wins view is identical.
@@ -26,13 +35,11 @@ from datetime import datetime, timezone
 from typing import Any
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from .schemas import STEP_NAMES
-from .plans.empty import empty_local_frame
 
 _RUN_FIELDS = [
     ("run_id", pa.string()),
@@ -78,6 +85,95 @@ def utcnow() -> datetime:
     return datetime.now(timezone.utc)
 
 
+class _EventTable:
+    """One control table: appends one immutable single-row parquet file
+    per event and reads them back through a decode-once cache."""
+
+    def __init__(self, directory: str, fields, keys: list[str] | None = None):
+        self.directory = directory
+        self.schema = pa.schema(fields)
+        self.keys = keys  # latest-wins key; None = append-only (logs)
+        os.makedirs(directory, exist_ok=True)
+        self._lock = threading.Lock()
+        self._files: dict[str, pa.Table] = {}
+        self._names: list[str] = []
+        self._events = self.schema.empty_table()
+        self._latest: pa.Table | None = None
+
+    def append(self, row: dict[str, Any]) -> None:
+        arrays = [pa.array([row.get(f.name)], type=f.type) for f in self.schema]
+        table = pa.Table.from_arrays(arrays, schema=self.schema)
+        fname = f"{time.time_ns():020d}-{uuid.uuid4().hex[:8]}.parquet"
+        tmp = os.path.join(self.directory, f".tmp-{fname}")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(self.directory, fname))
+        with self._lock:  # our own event: no need to decode it back
+            self._files[fname] = table
+
+    def _refresh(self) -> None:
+        """Sync the cache with a listing (call under ``_lock``).
+        Dot/underscore-prefixed entries (a crashed write's '.tmp-*',
+        run-number claims) are not events. A file is decoded the first
+        time a listing shows it; one that left the listing leaves the
+        view. A decode error propagates: an empty answer would make
+        update_run merge onto a bare {run_id} (wiping state to NULLs)
+        and restart run numbering at 1."""
+        names = sorted(
+            f for f in os.listdir(self.directory)
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        )
+        if names == self._names:
+            return
+        self._files = {
+            n: self._files[n] if n in self._files
+            else pq.ParquetFile(os.path.join(self.directory, n)).read()
+            for n in names
+        }
+        self._names = names
+        self._events = (
+            pa.concat_tables(self._files.values()).combine_chunks()
+            if names else self.schema.empty_table()
+        )
+        self._latest = None
+
+    def events(self) -> pa.Table:
+        """Every event row, in file-name order."""
+        with self._lock:
+            self._refresh()
+            return self._events
+
+    def latest(self) -> pa.Table:
+        """Latest-wins row per key (``event_seq`` dropped), computed once
+        per listing. On equal ``event_seq`` the earliest file in name
+        order wins: the sort is stable over name-ordered events, and
+        ``first`` of an unthreaded group-by keeps input order."""
+        with self._lock:
+            self._refresh()
+            if self._latest is None:
+                events = self._events
+                order = pc.sort_indices(events, [("event_seq", "descending")])
+                winners = (
+                    events.select(self.keys).take(order)
+                    .append_column("_pos", order)
+                    .group_by(self.keys, use_threads=False)
+                    .aggregate([("_pos", "first")])
+                )
+                self._latest = events.take(winners["_pos_first"]).drop_columns(
+                    ["event_seq"]
+                )
+            return self._latest
+
+    def latest_row(self, key: dict[str, Any]) -> dict[str, Any] | None:
+        """The ``latest`` row for one key, or None."""
+        latest = self.latest()
+        mask = None
+        for k, v in key.items():
+            hit = pc.equal(latest[k], v)
+            mask = hit if mask is None else pc.and_(mask, hit)
+        rows = latest.filter(mask).to_pylist()
+        return rows[0] if rows else None
+
+
 class ControlStore:
     """Append-only control tables under ``<workdir>/control/``."""
 
@@ -86,8 +182,11 @@ class ControlStore:
         self.runs_dir = os.path.join(workdir, "control", "pipeline_runs")
         self.steps_dir = os.path.join(workdir, "control", "step_runs")
         self.logs_dir = os.path.join(workdir, "control", "pipeline_logs")
-        for d in (self.runs_dir, self.steps_dir, self.logs_dir):
-            os.makedirs(d, exist_ok=True)
+        self._run_events = _EventTable(self.runs_dir, _RUN_FIELDS, ["run_id"])
+        self._step_events = _EventTable(
+            self.steps_dir, _STEP_FIELDS, ["run_id", "step_number"]
+        )
+        self._log_events = _EventTable(self.logs_dir, _LOG_FIELDS)
         # current-state caches so each append carries full state
         self._runs: dict[str, dict[str, Any]] = {}
         self._steps: dict[tuple[str, int], dict[str, Any]] = {}
@@ -98,93 +197,15 @@ class ControlStore:
         # both read MAX(run_number)=N and both hand out N+1.
         self._lock = threading.RLock()
 
-    # ---- low-level append ----------------------------------------------
-    def _append(self, directory: str, fields, row: dict[str, Any]) -> None:
-        schema = pa.schema(fields)
-        arrays = [pa.array([row.get(name)], type=typ) for name, typ in fields]
-        table = pa.Table.from_arrays(arrays, schema=schema)
-        fname = f"{time.time_ns():020d}-{uuid.uuid4().hex[:8]}.parquet"
-        tmp = os.path.join(directory, f".tmp-{fname}")
-        pq.write_table(table, tmp)
-        os.replace(tmp, os.path.join(directory, fname))
-
-    def _disk_rows(self, directory: str, columns: list[str] | None = None):
-        """All event rows on disk as a list of dicts (control tables are
-        tiny metadata; this is a footer-level read, no Spark job).
-
-        Only the no-data-yet case maps to [] — a real read error must
-        PROPAGATE: swallowing it would make update_run fall through to
-        a bare {run_id} merge base (wiping state to NULLs) and restart
-        run numbering at 1, exactly what the disk fallback exists to
-        prevent."""
-        # dot/underscore-prefixed entries are invisible to pyarrow's
-        # ParquetDataset (hidden-file convention) — counting a stale
-        # '.tmp-*.parquet' (crash between write_table and os.replace)
-        # here would make ParquetDataset fail on an effectively empty
-        # directory and brick the control plane
-        if not os.path.isdir(directory) or not any(
-            f.endswith(".parquet") and not f.startswith((".", "_"))
-            for f in os.listdir(directory)
-        ):
-            return []
-        ds = pq.ParquetDataset(directory)
-        return ds.read(columns=columns).to_pylist()
-
-    def _latest_disk_state(self, directory: str, key: dict[str, Any]) -> dict[str, Any] | None:
-        """Latest-wins row for one key from disk — the cross-process
-        fallback when this instance's cache has never seen the key
-        (another process started the run; we must not wipe its state
-        to NULLs on update).
-
-        Two-phase read (ADVICE r13: the probe ran per run completion
-        and read EVERY column of EVERY event file while holding the
-        store lock): phase 1 scans only the key + event_seq columns
-        across fragments to locate the winning event; phase 2 reads
-        the full row from the ONE file that holds it. Ties on
-        event_seq keep the earliest fragment/row — the same winner the
-        old single-pass strict-> comparison produced."""
-        if not os.path.isdir(directory) or not any(
-            f.endswith(".parquet") and not f.startswith((".", "_"))
-            for f in os.listdir(directory)
-        ):
-            return None
-        cols = list(key) + ["event_seq"]
-        ds = pq.ParquetDataset(directory)
-        best_seq, best_frag = None, None
-        for frag in ds.fragments:
-            for row in frag.to_table(columns=cols).to_pylist():
-                if all(row.get(k) == v for k, v in key.items()):
-                    seq = row.get("event_seq") or 0
-                    if best_seq is None or seq > best_seq:
-                        best_seq, best_frag = seq, frag
-        if best_frag is None:
-            return None
-        # first full row in the winning fragment with the winning seq —
-        # the same iteration order as phase 1, so the same row the old
-        # single-pass strict-> comparison selected
-        for row in best_frag.to_table().to_pylist():
-            if (row.get("event_seq") or 0) == best_seq and all(
-                row.get(k) == v for k, v in key.items()
-            ):
-                best = dict(row)
-                best.pop("event_seq", None)
-                return best
-        return None
-
     # ---- run lifecycle (reference: index.js:32-51; PipelineRunner.java:59-119)
     def next_run_number(self) -> int:
         """A1: COALESCE(MAX(RunNumber),0)+1 (index.js:36) — max over BOTH
         this instance's cache and disk, so concurrent stores on one
         workdir don't hand out duplicate numbers from a stale cache."""
-        mx = 0
         with self._lock:
-            runs_snapshot = list(self._runs.values())
-        for r in runs_snapshot:
-            mx = max(mx, r.get("run_number") or 0)
-        for row in self._disk_rows(self.runs_dir, columns=["run_number"]):
-            if row.get("run_number") is not None:
-                mx = max(mx, row["run_number"])
-        return mx + 1
+            mx = max((r.get("run_number") or 0 for r in self._runs.values()), default=0)
+        on_disk = pc.max(self._run_events.events()["run_number"]).as_py()
+        return max(mx, on_disk or 0) + 1
 
     def _claim_run_number(self) -> int:
         """Allocate a fresh run number exclusively ACROSS processes: the
@@ -193,7 +214,7 @@ class ControlStore:
         or two processes) could both read MAX=N and hand out N+1. An
         O_EXCL claim file per number arbitrates — the loser advances
         to the next free number (same discipline as TargetTable's
-        version claims; pyarrow ignores the underscore-prefixed
+        version claims; the event listing skips the underscore-prefixed
         markers)."""
         n = self.next_run_number()
         while True:
@@ -224,8 +245,8 @@ class ControlStore:
         # run KEEPS its run_number — the client already saw it — and
         # its row/steps reset to Running/Pending for the new attempt
         # instead of being re-inserted under a fresh number.
-        existing = self._runs.get(run_id) or self._latest_disk_state(
-            self.runs_dir, {"run_id": run_id}
+        existing = self._runs.get(run_id) or self._run_events.latest_row(
+            {"run_id": run_id}
         )
         run_number = (
             existing["run_number"]
@@ -272,7 +293,7 @@ class ControlStore:
         row["event_seq"] = time.time_ns()
         with self._lock:
             self._runs[row["run_id"]] = row
-        self._append(self.runs_dir, _RUN_FIELDS, row)
+        self._run_events.append(row)
 
     def _write_step(self, row: dict[str, Any]) -> None:
         row = dict(row)
@@ -280,24 +301,21 @@ class ControlStore:
         row["event_seq"] = time.time_ns()
         with self._lock:
             self._steps[(row["run_id"], row["step_number"])] = row
-        self._append(self.steps_dir, _STEP_FIELDS, row)
+        self._step_events.append(row)
 
     def latest_run_state(self, run_id: str) -> dict[str, Any] | None:
-        """Latest-wins state row for one run, straight from DISK (not
-        the in-process cache): the cross-process-correct answer —
-        another store instance (timeout sweeper, second process) may
-        have written a newer event this cache never saw. Driver-side
-        footer read of the tiny control table; no Spark job (the
-        latest-per-key window the ``runs`` view computes, for one
-        key)."""
-        with self._lock:
-            return self._latest_disk_state(self.runs_dir, {"run_id": run_id})
+        """Latest-wins state row for one run from the event files on
+        DISK, not this instance's write cache: another store instance
+        (timeout sweeper, second process) may have written a newer
+        event. Answered on the driver — the ``runs`` view's row for one
+        key, with no Spark job."""
+        return self._run_events.latest_row({"run_id": run_id})
 
     def update_run(self, run_id: str, **fields: Any) -> None:
         with self._lock:
             cur = self._runs.get(run_id)
             if cur is None:  # started by another process — merge, don't wipe
-                cur = self._latest_disk_state(self.runs_dir, {"run_id": run_id})
+                cur = self._run_events.latest_row({"run_id": run_id})
             cur = dict(cur or {"run_id": run_id})
             cur.update(fields)
             self._write_run(cur)
@@ -306,8 +324,8 @@ class ControlStore:
         with self._lock:
             cur = self._steps.get((run_id, step_number))
             if cur is None:
-                cur = self._latest_disk_state(
-                    self.steps_dir, {"run_id": run_id, "step_number": step_number}
+                cur = self._step_events.latest_row(
+                    {"run_id": run_id, "step_number": step_number}
                 )
             cur = dict(cur or {"run_id": run_id, "step_number": step_number})
             cur.update(fields)
@@ -324,9 +342,7 @@ class ControlStore:
         details: str | None = None,
     ) -> None:
         """Append-only log stream (logger.js:21-33; PipelineLogger.java:15-34)."""
-        self._append(
-            self.logs_dir,
-            _LOG_FIELDS,
+        self._log_events.append(
             {
                 "log_id": time.time_ns(),
                 "run_id": run_id,
@@ -340,49 +356,12 @@ class ControlStore:
             },
         )
 
-    # ---- DataFrame views ------------------------------------------------
-    def _latest(self, df: DataFrame, keys: list[str]) -> DataFrame:
-        w = Window.partitionBy(*keys).orderBy(F.col("event_seq").desc())
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "event_seq")
-        )
-
-    def _read_dir(self, spark: SparkSession, directory: str, fields) -> DataFrame:
-        files = [
-            f
-            for f in os.listdir(directory)
-            if f.endswith(".parquet") and not f.startswith(".")
-        ]
-        if not files:
-            # empty frame with the right schema
-            schema = pa.schema(fields)
-            return empty_local_frame(spark, str_schema(schema))
-        return spark.read.parquet(directory)
-
+    # ---- DataFrame views: local relations over the Arrow tables ------
     def runs(self, spark: SparkSession) -> DataFrame:
-        return self._latest(self._read_dir(spark, self.runs_dir, _RUN_FIELDS), ["run_id"])
+        return spark.createDataFrame(self._run_events.latest())
 
     def steps(self, spark: SparkSession) -> DataFrame:
-        return self._latest(
-            self._read_dir(spark, self.steps_dir, _STEP_FIELDS),
-            ["run_id", "step_number"],
-        )
+        return spark.createDataFrame(self._step_events.latest())
 
     def logs(self, spark: SparkSession) -> DataFrame:
-        return self._read_dir(spark, self.logs_dir, _LOG_FIELDS)
-
-
-def str_schema(schema: pa.Schema) -> str:
-    """pyarrow schema -> Spark DDL string for empty-frame construction."""
-    mapping = {
-        pa.string(): "string",
-        pa.int64(): "bigint",
-        pa.int32(): "int",
-        pa.timestamp("us", tz="UTC"): "timestamp",
-    }
-    parts = []
-    for f in schema:
-        parts.append(f"{f.name} {mapping.get(f.type, 'string')}")
-    return ", ".join(parts)
+        return spark.createDataFrame(self._log_events.events())

@@ -143,15 +143,7 @@ class PipelineApiServer:
 
     def run_logs(self, run_id: str) -> list[dict] | None:
         # 404 contract: the run must exist (server.js:114-119)
-        from pyspark.sql import functions as F
-
-        present = (
-            self.control.runs(self.spark)
-            .filter(F.col("run_id") == run_id)
-            .limit(1)
-            .count()
-        )
-        if not present:
+        if self.control.latest_run_state(run_id) is None:
             return None
         return rows_to_jsonable(
             api.run_logs(self.control.logs(self.spark), run_id)
@@ -326,17 +318,10 @@ class PipelineApiServer:
         worker thread stamps the Cancelled status/steps — unlike the
         reference's immediate UPDATE, the status flips when the run
         actually stops, which is the honest ordering."""
-        from pyspark.sql import functions as F
-
-        rows = (
-            self.control.runs(self.spark)
-            .filter(F.col("run_id") == run_id)
-            .select("status")
-            .collect()
-        )
-        if not rows:
+        state = self.control.latest_run_state(run_id)
+        if state is None:
             return 404, {"error": "Run not found"}
-        status = rows[0]["status"]
+        status = state["status"]
         if status != "Running":
             return 400, {"error": f"Run is not running (status: {status})"}
         self.runner.cancel(run_id)

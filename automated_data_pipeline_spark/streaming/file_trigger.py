@@ -55,6 +55,13 @@ def batch_run_id(checkpoint_key: str, batch_id: int, path: str = "") -> str:
     )
 
 
+def _succeeded(runner: PipelineRunner, run_id: str) -> bool:
+    """Exactly-once probe: the run already finished Success (a
+    driver-side point lookup, no Spark job)."""
+    state = runner.control.latest_run_state(run_id)
+    return state is not None and state["status"] == "Success"
+
+
 def run_batch_idempotent(
     runner: PipelineRunner,
     batch_df,
@@ -70,12 +77,7 @@ def run_batch_idempotent(
     already Succeeded and skips, instead of appending a duplicate run
     (and duplicate stage rows)."""
     rid = batch_run_id(checkpoint_key, batch_id)
-    existing = (
-        runner.control.runs(runner.spark)
-        .filter((F.col("run_id") == rid) & (F.col("status") == "Success"))
-        .take(1)
-    )
-    if existing:
+    if _succeeded(runner, rid):
         return None
     runner.run(
         source_df=batch_df,
@@ -138,14 +140,7 @@ def start_file_trigger(
         paths = sorted({r["path"] for r in batch_df.select("path").collect()})
         for p in paths:
             rid = batch_run_id(checkpoint_dir, batch_id, p)
-            existing = (
-                runner.control.runs(runner.spark)
-                .filter(
-                    (F.col("run_id") == rid) & (F.col("status") == "Success")
-                )
-                .take(1)
-            )
-            if existing:
+            if _succeeded(runner, rid):
                 continue
             try:
                 runner.run(

@@ -42,6 +42,7 @@ same survivors from the store, so a crashed downstream write can retry.
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -95,8 +96,12 @@ class LshStore:
                 "read it with the matching release"
             )
         if found is None:
-            with open(marker, "w") as f:
+            # temp file + os.replace: a crash mid-write leaves a
+            # dot-prefixed partial temp (never read), not a torn marker
+            tmp = os.path.join(path, f"._format_version.tmp-{uuid.uuid4().hex[:8]}")
+            with open(tmp, "w") as f:
                 f.write(str(LSH_STORE_FORMAT_VERSION))
+            os.replace(tmp, marker)
 
     def buckets(self, spark: SparkSession) -> DataFrame:
         _recover_compact(self.buckets_dir)

@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import math
 import os
+import urllib.parse
 from contextlib import contextmanager
 
 # ~8 MB compressed source bytes per state partition (~64 MB decoded
@@ -47,9 +48,19 @@ TARGET_SOURCE_BYTES_PER_PARTITION = 8 << 20
 
 def source_bytes(*paths: str) -> int:
     """Total bytes under the given files/directories (driver-side
-    metadata walk — no Spark job)."""
+    metadata walk — no Spark job). Local paths only: a remote scheme
+    (``s3://``, ``hdfs://``, ``abfss://`` ...) raises ValueError
+    instead of quietly totalling 0 bytes and sizing to the floor."""
     total = 0
     for p in paths:
+        url = urllib.parse.urlparse(p)
+        if url.scheme not in ("", "file"):
+            raise ValueError(
+                f"source_bytes sizes local sources only, got {url.scheme}:// "
+                f"path {p!r}"
+            )
+        if url.scheme == "file":
+            p = url.path
         if os.path.isfile(p):
             total += os.path.getsize(p)
         elif os.path.isdir(p):

@@ -139,6 +139,100 @@ def test_cross_instance_update_preserves_state(spark, workdir):
     assert a.next_run_number() == 3  # and vice versa
 
 
+def _event_file(directory, name, **row):
+    """Write one run event file by hand (name order under test control)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from automated_data_pipeline_spark.control import _RUN_FIELDS
+
+    schema = pa.schema(_RUN_FIELDS)
+    table = pa.Table.from_pylist([row], schema=schema)
+    pq.write_table(table, os.path.join(directory, name))
+    return os.path.join(directory, name)
+
+
+def test_read_cache_sees_later_writes_of_another_store(spark, workdir):
+    """Store B's decode-once cache is warm before store A writes; B's
+    views and point lookups must still see A's later events, including
+    a newer state of a run B already decoded."""
+    from automated_data_pipeline_spark.control import ControlStore
+
+    a, b = ControlStore(workdir), ControlStore(workdir)
+    r1 = a.start_run(pipeline_name="A1")
+    assert b.latest_run_state(r1)["status"] == "Running"
+    assert [r["run_id"] for r in b.runs(spark).collect()] == [r1]
+    assert b.logs(spark).count() == 0
+
+    a.update_run(r1, status="Success", finished_at=utcnow())
+    a.update_step(r1, 1, status="Success")
+    r2 = a.start_run(pipeline_name="A2")
+    a.log(r2, "Info", "hello")
+
+    state = b.latest_run_state(r1)
+    assert state["status"] == "Success" and state["pipeline_name"] == "A1"
+    assert "event_seq" not in state
+    got = {r["run_id"]: r["status"] for r in b.runs(spark).collect()}
+    assert got == {r1: "Success", r2: "Running"}
+    steps = {
+        (s["run_id"], s["step_number"]): s["status"]
+        for s in b.steps(spark).collect()
+    }
+    assert len(steps) == 8 and steps[(r1, 1)] == "Success"
+    assert steps[(r1, 2)] == steps[(r2, 1)] == "Pending"
+    assert [r["message"] for r in b.logs(spark).collect()] == ["hello"]
+    assert b.next_run_number() == 3
+
+
+def test_read_cache_tie_delete_and_hidden_files(spark, workdir):
+    """Equal event_seq: the earliest file in name order wins, in the
+    runs view and the point lookup alike, warm or cold. A deleted event
+    file leaves the view; '.tmp-*' and '_claim_*' entries never enter."""
+    import os
+
+    from automated_data_pipeline_spark.control import ControlStore
+
+    store = ControlStore(workdir)
+    d = store.runs_dir
+    # written in reverse name order, so write order is not the tiebreak
+    _event_file(d, "00000000000000000002-b.parquet", run_id="r", run_number=1,
+                status="LaterName", event_seq=5)
+    first = _event_file(d, "00000000000000000001-a.parquet", run_id="r",
+                        run_number=1, status="EarlierName", event_seq=5)
+    other = _event_file(d, "00000000000000000003-c.parquet", run_id="s",
+                        run_number=2, status="Running", event_seq=1)
+    for st in (store, ControlStore(workdir)):
+        assert st.latest_run_state("r")["status"] == "EarlierName"
+        view = {x["run_id"]: x["status"] for x in st.runs(spark).collect()}
+        assert view == {"r": "EarlierName", "s": "Running"}
+    # a newer event_seq beats file order
+    _event_file(d, "00000000000000000000-z.parquet", run_id="r", run_number=1,
+                status="Newest", event_seq=6)
+    assert store.latest_run_state("r")["status"] == "Newest"
+
+    # deletion drops the event from the warm cache's view
+    os.remove(other)
+    assert store.latest_run_state("s") is None
+    assert [x["run_id"] for x in store.runs(spark).collect()] == ["r"]
+    assert store.next_run_number() == 2
+
+    # crashed temp writes and run-number claims are not events
+    with open(os.path.join(d, ".tmp-00000000000000000009-x.parquet"), "wb") as f:
+        f.write(b"torn")
+    with open(os.path.join(d, "_claim_run_000000042"), "wb"):
+        pass
+    with open(os.path.join(store.logs_dir, ".tmp-torn.parquet"), "wb") as f:
+        f.write(b"torn")
+    for st in (store, ControlStore(workdir)):
+        assert [x["run_id"] for x in st.runs(spark).collect()] == ["r"]
+        assert st.logs(spark).count() == 0
+        assert st.next_run_number() == 2
+    os.remove(first)
+    assert store.latest_run_state("r")["status"] == "Newest"
+
+
 def test_run_number_fallback_oldest_is_one(spark, workdir):
     runner = _run_once(spark, workdir, name="First")
     _run_once(spark, workdir, name="Second")

@@ -101,6 +101,41 @@ def test_get_endpoints_match_dataframe_twins(spark, served):
     assert _get(srv.port, "/bogus")[0] == 404
 
 
+def test_gui_requests_job_budget_and_local_views(spark, served):
+    """The control views are local relations, so each GUI request is a
+    few driver-side jobs, not a parquet scan + schema inference + window
+    shuffle per table. A new barrier (file scan, window, extra action)
+    fails here instead of hiding in host noise."""
+    srv, runner = served
+    rid = srv.list_runs(None, None)[0]["run_id"]
+    requests = {
+        "runs": lambda: srv.list_runs(None, None),
+        "run_detail": lambda: srv.run_detail(rid),
+        "run_logs": lambda: srv.run_logs(rid),
+        "logs": lambda: srv.list_logs(None, None, None, 500),
+    }
+    sc = spark.sparkContext
+    listener_bus = sc._jsc.sc().listenerBus()
+    for name, request in requests.items():
+        group = f"gui-budget-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            assert request()
+        finally:
+            sc.setJobGroup("", "")
+        listener_bus.waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) <= 3, f"{name}: {len(jobs)} Spark jobs"
+
+    for view in ("runs", "steps", "logs"):
+        qe = getattr(runner.control, view)(spark)._jdf.queryExecution()
+        plan = qe.optimizedPlan().toString()
+        assert "LocalRelation" in plan, plan
+        assert "Window" not in plan, plan
+        assert "Relation" not in plan.replace("LocalRelation", ""), plan
+        assert "FileScan" not in qe.executedPlan().toString()
+
+
 def test_trigger_upload_runs_pipeline(spark, served):
     srv, runner = served
     csv = b"OrderId,CustomerName,Amount,OrderDate\nORD-000001,Ada,12.5,2024-01-01\n"

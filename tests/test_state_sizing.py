@@ -48,6 +48,25 @@ def test_sizing_math(spark, tmp_path):
     assert source_bytes(str(tmp_path / "nope")) == 0
 
 
+def test_source_bytes_rejects_remote_schemes(tmp_path):
+    """A remote source must fail loudly: walking it with os.path would
+    total 0 bytes and size the stream to the floor."""
+    import pytest
+
+    for uri in ("s3://bucket/events", "s3a://bucket/x", "hdfs://nn:8020/events",
+                "abfss://c@acct.dfs.core.windows.net/events", "gs://b/x"):
+        with pytest.raises(ValueError, match="local sources only"):
+            source_bytes(uri)
+    # one remote path among local ones still raises
+    f = tmp_path / "local.bin"
+    f.write_bytes(b"x" * 7)
+    with pytest.raises(ValueError):
+        source_bytes(str(f), "hdfs://nn/events")
+    # file: URIs are local
+    assert source_bytes(f"file://{f}") == 7
+    assert source_bytes(str(f)) == 7
+
+
 def test_conf_restored(spark, tmp_path):
     f = tmp_path / "s.bin"
     f.write_bytes(b"x" * (64 << 20))
