@@ -1,4 +1,5 @@
-"""Monitoring read API as pure DataFrame queries (SURVEY.md §3.4).
+"""Monitoring read API (SURVEY.md §3.4), as DataFrame queries and as
+their Arrow twins over the control store's tables.
 
 Each function mirrors one reference endpoint:
 - list_runs:   GET /runs   — optional pipeline/status equality filters,
@@ -10,12 +11,24 @@ Each function mirrors one reference endpoint:
 - list_logs:   GET /logs — runId/pipeline/level filters, ORDER BY log_at
                DESC LIMIT min(n, 2000) default 500 (server.js:143-158)
 
-All are declarative single-pass plans: conjunctive filters push to the
-scan; ORDER-BY+LIMIT compiles to TakeOrderedAndProject (no full sort).
+The DataFrame functions are declarative single-pass plans (conjunctive
+filters push to the scan; ORDER-BY+LIMIT compiles to
+TakeOrderedAndProject) for library callers with a Spark session.
+
+The ``*_arrow`` twins answer the same queries over the control store's
+Arrow tables (``ControlStore.runs_table`` etc.) on the driver, with no
+Spark job, so the HTTP endpoints never queue behind pipeline tasks for
+the task slots — the reference likewise reads its control database,
+not the ETL engine. They keep Spark's semantics: equality filters drop
+nulls, ascending sorts put nulls first and descending sorts last, and
+ties break on ``run_id``/``log_id``. The DataFrame functions stay the
+reference the endpoint tests compare the twins against.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -23,6 +36,11 @@ from pyspark.sql.window import Window
 MAX_RUNS = 100  # server.js:57
 DEFAULT_LOG_LIMIT = 500  # server.js:158
 MAX_LOG_LIMIT = 2000
+# run_detail's steps[] fields, in struct order (server.js:100)
+STEP_DETAIL_COLUMNS = [
+    "step_number", "step_name", "status", "started_at", "finished_at",
+    "rows_affected", "rows_processed", "rows_total", "error_message",
+]
 
 # S9 upload validation limits: .csv/.json whitelist and the Node-side
 # 10 MB multer cap (python_code/api/server.js:23-31); the Java servlet
@@ -98,13 +116,7 @@ def run_detail(runs: DataFrame, steps: DataFrame, run_id: str) -> DataFrame:
         .groupBy("run_id")
         .agg(
             F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        "step_number", "step_name", "status", "started_at",
-                        "finished_at", "rows_affected", "rows_processed",
-                        "rows_total", "error_message",
-                    )
-                )
+                F.collect_list(F.struct(*STEP_DETAIL_COLUMNS))
             ).alias("steps")
         )
     )
@@ -130,11 +142,16 @@ def list_logs(
         df = df.filter(F.col("pipeline_name") == pipeline)
     if level is not None:
         df = df.filter(F.col("level") == level)
-    # clamp BOTH ends: a user-supplied negative limit would reach
-    # DataFrame.limit(-1), which raises (a parseable query param must
-    # not become a 500)
-    limit = max(0, min(limit, MAX_LOG_LIMIT))
-    return df.orderBy(F.desc("log_at"), F.desc("log_id")).limit(limit)
+    return df.orderBy(F.desc("log_at"), F.desc("log_id")).limit(
+        _log_limit(limit)
+    )
+
+
+def _log_limit(limit: int) -> int:
+    """Clamp BOTH ends: a user-supplied negative limit would reach
+    DataFrame.limit(-1), which raises (a parseable query param must not
+    become a 500)."""
+    return max(0, min(limit, MAX_LOG_LIMIT))
 
 
 def derived_run_status(steps: DataFrame) -> DataFrame:
@@ -158,3 +175,86 @@ def derived_run_status(steps: DataFrame) -> DataFrame:
             .alias("derived_status"),
         )
     )
+
+
+# ---- Arrow twins (driver-side, no Spark job) ---------------------------
+def _where(table: pa.Table, **equals) -> pa.Table:
+    """Conjunctive ``column == value`` filters; a None value is no
+    filter. Null cells never match, as in Spark."""
+    mask = None
+    for column, value in equals.items():
+        if value is not None:
+            hit = pc.equal(table[column], value)
+            mask = hit if mask is None else pc.and_(mask, hit)
+    return table if mask is None else table.filter(mask)
+
+
+def _ordered(
+    table: pa.Table, columns: list[str], descending: bool, limit: int | None = None
+) -> pa.Table:
+    """ORDER BY ``columns`` (one direction) [LIMIT n] with Spark's
+    default null placement: first ascending, last descending."""
+    order = pc.sort_indices(
+        table,
+        sort_keys=[(c, "descending" if descending else "ascending") for c in columns],
+        null_placement="at_end" if descending else "at_start",
+    )
+    return table.take(order if limit is None else order[:limit])
+
+
+def with_run_number_fallback_arrow(runs: pa.Table) -> pa.Table:
+    """``with_run_number_fallback`` over the runs Arrow table: all or
+    nothing, oldest run (created_at, then run_id) is #1."""
+    if pc.any(pc.is_valid(runs["run_number"])).as_py():
+        return runs
+    oldest_first = _ordered(runs, ["created_at", "run_id"], descending=False)
+    return oldest_first.set_column(
+        runs.schema.get_field_index("run_number"),
+        "run_number",
+        pa.array(range(1, runs.num_rows + 1), pa.int64()),
+    )
+
+
+def list_runs_arrow(
+    runs: pa.Table,
+    pipeline: str | None = None,
+    status: str | None = None,
+    limit: int = MAX_RUNS,
+) -> pa.Table:
+    df = _where(runs, pipeline_name=pipeline, status=status)
+    return _ordered(df, ["created_at", "run_id"], descending=True, limit=limit)
+
+
+def run_detail_arrow(runs: pa.Table, steps: pa.Table, run_id: str) -> pa.Table:
+    """``run_detail`` over the Arrow tables: the run row with its steps
+    nested as steps[] ordered by step_number. A run without steps gets
+    an empty list where the DataFrame twin's left join gives null; the
+    endpoint renders both as []."""
+    run = _where(runs, run_id=run_id)
+    own = _ordered(
+        _where(steps, run_id=run_id), ["step_number"], descending=False
+    ).select(STEP_DETAIL_COLUMNS)
+    nested = pa.ListArray.from_arrays(
+        pa.array([0, own.num_rows], pa.int32()),
+        pa.StructArray.from_arrays(
+            [c.combine_chunks() for c in own.columns], fields=list(own.schema)
+        ),
+    )
+    return run.append_column(
+        "steps", pa.chunked_array([nested] * run.num_rows, type=nested.type)
+    )
+
+
+def run_logs_arrow(logs: pa.Table, run_id: str) -> pa.Table:
+    return _ordered(_where(logs, run_id=run_id), ["log_at", "log_id"], descending=False)
+
+
+def list_logs_arrow(
+    logs: pa.Table,
+    run_id: str | None = None,
+    pipeline: str | None = None,
+    level: str | None = None,
+    limit: int = DEFAULT_LOG_LIMIT,
+) -> pa.Table:
+    df = _where(logs, run_id=run_id, pipeline_name=pipeline, level=level)
+    return _ordered(df, ["log_at", "log_id"], descending=True, limit=_log_limit(limit))

@@ -16,10 +16,12 @@ and uniquely named, so each store instance decodes every file with
 pyarrow exactly once (cached by file name; a directory listing per
 read picks up other writers' files and drops deleted ones). The
 *current* state — latest row per key by ``event_seq``, ties to the
-earliest file — is computed once per listing in Arrow, and the
-``runs``/``steps``/``logs`` views are local relations over those Arrow
-tables: no file scan, no schema-inference job, no window shuffle, and
-point filters over them fold on the driver.
+earliest file — is computed once per listing in Arrow. Driver-side
+readers (the monitoring endpoints, the timeout sweep) take those Arrow
+tables directly (``runs_table``/``steps_table``/``logs_table``) and run
+no Spark job; the ``runs``/``steps``/``logs`` DataFrame views are local
+relations over the same tables: no file scan, no schema-inference job,
+no window shuffle.
 
 At scale this would be a Delta/Iceberg table with OPTIMIZE compaction;
 the event-sourced latest-wins view is identical.
@@ -356,12 +358,24 @@ class ControlStore:
             },
         )
 
-    # ---- DataFrame views: local relations over the Arrow tables ------
+    # ---- current-state views ------------------------------------------
+    # The Arrow tables answer driver-side readers (the monitoring
+    # endpoints, the timeout sweep) with no Spark job; the DataFrame
+    # views are local relations over the same tables.
+    def runs_table(self) -> pa.Table:
+        return self._run_events.latest()
+
+    def steps_table(self) -> pa.Table:
+        return self._step_events.latest()
+
+    def logs_table(self) -> pa.Table:
+        return self._log_events.events()
+
     def runs(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(self._run_events.latest())
+        return spark.createDataFrame(self.runs_table())
 
     def steps(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(self._step_events.latest())
+        return spark.createDataFrame(self.steps_table())
 
     def logs(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(self._log_events.events())
+        return spark.createDataFrame(self.logs_table())

@@ -1,5 +1,5 @@
-"""Thin HTTP read API over the monitoring DataFrame queries (api.py),
-mirroring the reference's Express server route-for-route
+"""Thin HTTP read API over the monitoring queries (api.py), mirroring
+the reference's Express server route-for-route
 (python_code/api/server.js:42-169; ApiServlet.java:435-593):
 
 - GET  /runs                 — ?pipeline=&status=, newest-first, top 100
@@ -43,15 +43,21 @@ Logs.jsx, run-detail.jsp with its 2 s auto-refresh):
 
 Design notes:
 - stdlib only (ThreadingHTTPServer): the engine charter is "no new
-  dependencies"; each request runs one already-planned DataFrame query.
+  dependencies". The read endpoints (and their HTML pages) answer
+  from the control store's Arrow tables through api.py's ``*_arrow``
+  twins — filter, sort, limit and nest on the driver, zero Spark jobs
+  per request — as the reference reads its control DB, not the ETL
+  engine.
 - The reference runs the triggered pipeline in a CHILD PROCESS so the
   API stays responsive (server.js:175-190); a Spark driver must keep
   the pipeline inside its own JVM session, so the equivalent here is a
-  daemon thread — Spark job submission is thread-safe, and the read
-  endpoints stay live while the pipeline runs.
-- Query results serialize through a single timestamp-aware JSON
-  canonicalizer, so cross-checking an endpoint against its DataFrame
-  twin is exact (tests/test_http_api.py does precisely that).
+  daemon thread. The read endpoints stay live while the pipeline runs
+  because they never wait for a task slot
+  (tests/test_http_api.py::test_read_endpoints_answer_while_task_slots_are_busy).
+- Results serialize through a single timestamp-aware JSON
+  canonicalizer shared by Arrow tables and collected DataFrames, so
+  cross-checking an endpoint against its DataFrame twin is exact
+  (tests/test_http_api.py does precisely that).
 """
 
 from __future__ import annotations
@@ -67,31 +73,46 @@ from email.parser import BytesParser
 from email.policy import default as email_default_policy
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from . import api, web
 
 
-def rows_to_jsonable(df: DataFrame) -> list[dict]:
-    """Collect a (small, already-limited) result and canonicalize values
-    for JSON: timestamps/dates to ISO-8601 strings, Rows to dicts,
-    bytes to hex. Endpoint frames are all bounded (point lookups or
-    LIMIT-ed lists), so the collect is driver-safe by construction."""
+def _jsonable(v):
+    """Canonicalize one value for JSON: timestamps/dates to ISO-8601
+    strings, Rows and structs to dicts, bytes to hex. A timezone-aware
+    timestamp (Arrow's UTC values) renders as naive local time, the way
+    Spark's ``collect`` returns the same instant, so a DataFrame twin
+    and an Arrow twin serialize byte-identically on any process
+    timezone."""
+    if isinstance(v, datetime):
+        if v.tzinfo is not None:
+            v = v.astimezone().replace(tzinfo=None)
+        return v.isoformat(sep=" ", timespec="microseconds")
+    if isinstance(v, date):
+        return v.isoformat()
+    if isinstance(v, bytes):
+        return v.hex()
+    if isinstance(v, list):
+        return [_jsonable(x) for x in v]
+    if isinstance(v, dict):
+        return {k: _jsonable(x) for k, x in v.items()}
+    if hasattr(v, "asDict"):  # nested Row (steps[] structs)
+        return _jsonable(v.asDict())
+    return v
 
-    def conv(v):
-        if isinstance(v, datetime):
-            return v.isoformat(sep=" ", timespec="microseconds")
-        if isinstance(v, date):
-            return v.isoformat()
-        if isinstance(v, bytes):
-            return v.hex()
-        if isinstance(v, list):
-            return [conv(x) for x in v]
-        if hasattr(v, "asDict"):  # nested Row (steps[] structs)
-            return {k: conv(x) for k, x in v.asDict().items()}
-        return v
 
-    return [{k: conv(v) for k, v in r.asDict().items()} for r in df.collect()]
+def rows_to_jsonable(rows: DataFrame | pa.Table) -> list[dict]:
+    """A (small, already-limited) result as JSON-ready dicts: an Arrow
+    table converts on the driver, a DataFrame is collected. Endpoint
+    results are all bounded (point lookups or LIMIT-ed lists), so the
+    collect is driver-safe by construction."""
+    if isinstance(rows, pa.Table):
+        records = rows.to_pylist()
+    else:
+        records = [r.asDict() for r in rows.collect()]
+    return [_jsonable(r) for r in records]
 
 
 class PipelineApiServer:
@@ -120,39 +141,40 @@ class PipelineApiServer:
         self.port = self._httpd.server_address[1]
         self._thread: threading.Thread | None = None
 
-    # -- data access (each maps to one api.py DataFrame function) -----
+    # -- data access: the Arrow twins in api.py, no Spark job ----------
     def runs_df(self) -> DataFrame:
+        """The runs view the DataFrame twins query (library callers and
+        the endpoint tests' reference)."""
         return api.with_run_number_fallback(self.control.runs(self.spark))
+
+    def runs_table(self) -> pa.Table:
+        return api.with_run_number_fallback_arrow(self.control.runs_table())
 
     def list_runs(self, pipeline, status) -> list[dict]:
         return rows_to_jsonable(
-            api.list_runs(self.runs_df(), pipeline=pipeline, status=status)
+            api.list_runs_arrow(self.runs_table(), pipeline=pipeline, status=status)
         )
 
     def run_detail(self, run_id: str) -> dict | None:
         out = rows_to_jsonable(
-            api.run_detail(
-                self.runs_df(), self.control.steps(self.spark), run_id
+            api.run_detail_arrow(
+                self.runs_table(), self.control.steps_table(), run_id
             )
         )
-        if not out:
-            return None
-        detail = out[0]
-        detail["steps"] = detail.get("steps") or []
-        return detail
+        return out[0] if out else None
 
     def run_logs(self, run_id: str) -> list[dict] | None:
         # 404 contract: the run must exist (server.js:114-119)
         if self.control.latest_run_state(run_id) is None:
             return None
         return rows_to_jsonable(
-            api.run_logs(self.control.logs(self.spark), run_id)
+            api.run_logs_arrow(self.control.logs_table(), run_id)
         )
 
     def list_logs(self, run_id, pipeline, level, limit) -> list[dict]:
         return rows_to_jsonable(
-            api.list_logs(
-                self.control.logs(self.spark),
+            api.list_logs_arrow(
+                self.control.logs_table(),
                 run_id=run_id,
                 pipeline=pipeline,
                 level=level,

@@ -12,9 +12,10 @@ Mirrors the reference orchestrators:
 - timeout sweep: Running runs older than 6h -> 'Failed-TimeOut-6Hours'
   (ApiServlet.java:382-433).
 
-Data plane: stage tables are parquet partitioned by run_id (per-run reads
-partition-prune, the Spark analogue of the reference's indexed
-``WHERE RunId = ?`` scans); the target table is versioned
+Data plane: stage tables are parquet partitioned by run_id (a per-run read
+lists only its own partition, with the schema declared in schemas.py —
+the Spark analogue of the reference's indexed ``WHERE RunId = ?``
+scans); the target table is versioned
 (``v=N`` directories + atomic LATEST pointer) so migrate commits are
 snapshot-isolated — readers of version N never see a half-written N+1,
 the plain-parquet stand-in for a Delta transaction log.
@@ -22,23 +23,35 @@ the plain-parquet stand-in for a Delta transaction log.
 
 from __future__ import annotations
 
+import logging
 import os
 import threading
-from datetime import timedelta
+from datetime import timedelta, timezone
 from typing import Any, Callable
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Observation
+from pyspark.sql.types import StructType
 
 from .control import ControlStore, utcnow
 from .operators import stages, upsert
 from .progress_monitor import StepProgressMonitor
-from .schemas import STEP_NAMES
+from .schemas import (
+    LANDING_SCHEMA,
+    STAGING_SCHEMA,
+    STEP_NAMES,
+    TARGET_SCHEMA,
+    TRANSFORMED_SCHEMA,
+)
 from .sources.files import read_orders_file, resolve_input_columns
 
 RUN_TIMEOUT_HOURS = 6  # ApiServlet.java:382-383
 TIMEOUT_STATUS = "Failed-TimeOut-6Hours"
+
+log = logging.getLogger(__name__)
 
 
 class PipelineCancelledError(RuntimeError):
@@ -46,10 +59,13 @@ class PipelineCancelledError(RuntimeError):
 
 
 class TargetTable:
-    """Versioned parquet target with an atomic LATEST pointer."""
+    """Versioned parquet target with an atomic LATEST pointer.
+    ``schema`` is the table's declared schema, read without Spark's
+    footer-inference job; None infers it from the files."""
 
-    def __init__(self, path: str):
+    def __init__(self, path: str, schema: StructType | None = None):
         self.path = path
+        self.schema = schema
         os.makedirs(path, exist_ok=True)
         self._pointer = os.path.join(path, "_LATEST")
         self._commit_lock = threading.Lock()
@@ -71,7 +87,8 @@ class TargetTable:
         v = self.latest_version()
         if v is None:
             return None
-        return spark.read.parquet(os.path.join(self.path, f"v={v}"))
+        reader = spark.read if self.schema is None else spark.read.schema(self.schema)
+        return reader.parquet(os.path.join(self.path, f"v={v}"))
 
     def commit(self, df: DataFrame) -> int:
         """Allocate a version exclusively (O_EXCL claim file), write it,
@@ -170,11 +187,19 @@ class PipelineRunner:
         use_delta = target_format == "delta" or (
             target_format == "auto" and upsert.delta_available(spark)
         )
-        target_cls = DeltaTargetTable if use_delta else TargetTable
         self.landing_dir = os.path.join(workdir, "stages", "landing")
         self.staging_dir = os.path.join(workdir, "stages", "staging")
         self.transformed_dir = os.path.join(workdir, "stages", "staging_transformed")
-        self.target = target_cls(os.path.join(workdir, "stages", "target"))
+        self._stage_schemas = {
+            self.landing_dir: LANDING_SCHEMA,
+            self.staging_dir: STAGING_SCHEMA,
+            self.transformed_dir: TRANSFORMED_SCHEMA,
+        }
+        target_path = os.path.join(workdir, "stages", "target")
+        self.target = (
+            DeltaTargetTable(target_path) if use_delta
+            else TargetTable(target_path, TARGET_SCHEMA)
+        )
         self._cancel_flags: set[str] = set()
         self._lock = threading.Lock()
 
@@ -182,10 +207,16 @@ class PipelineRunner:
     def cancel(self, run_id: str) -> None:
         with self._lock:
             self._cancel_flags.add(run_id)
+        self._cancel_jobs(run_id)
+
+    def _cancel_jobs(self, run_id: str) -> None:
+        """Best-effort cancel of the run's Spark job group: the caller
+        has already recorded the verdict (cancel flag, timeout status),
+        so a failed cancel is logged, not raised."""
         try:
             self.spark.sparkContext.cancelJobGroup(run_id)
-        except Exception:
-            pass
+        except Exception as exc:  # noqa: BLE001 — best effort, see above
+            log.warning("cancelJobGroup failed for run %s: %s", run_id, exc)
 
     def _check_cancelled(self, run_id: str) -> None:
         with self._lock:
@@ -249,7 +280,17 @@ class PipelineRunner:
         return int(obs.get["n"])
 
     def _read_stage(self, directory: str, run_id: str) -> DataFrame:
-        return self.spark.read.parquet(directory).where(F.col("run_id") == run_id)
+        """One run's rows of a stage table. Only the run's own partition
+        is listed (``basePath`` keeps ``run_id`` as a column, taken from
+        the path), and the declared schema stands in for Spark's
+        footer-inference job, so a read costs the same at any history
+        length."""
+        return (
+            self.spark.read.schema(self._stage_schemas[directory])
+            .option("basePath", directory)
+            .parquet(f"{directory}/run_id={run_id}")
+            .where(F.col("run_id") == run_id)
+        )
 
     # ---- the four steps -------------------------------------------------
     def _step_pull(self, run_id: str, source_path: str) -> int:
@@ -383,38 +424,34 @@ class PipelineRunner:
         worker's own eventual completion is discarded by
         ``_finalize_run``'s timeout guard."""
         now = now or utcnow()
-        cutoff = now - timedelta(hours=timeout_hours)
-        marked: list[str] = []
-        rows = (
-            self.control.runs(self.spark)
-            .filter((F.col("status") == "Running") & (F.col("started_at") < F.lit(cutoff)))
-            .select("run_id")
-            .collect()
-        )
-        stale_steps = {}
-        if rows:
-            ids = [r["run_id"] for r in rows]
-            for s in (
-                self.control.steps(self.spark)
-                .filter(
-                    F.col("run_id").isin(ids)
-                    & F.col("status").isin("Running", "Pending")
+        # a naive ``now`` is local time, as Spark reads a naive literal
+        cutoff = (now - timedelta(hours=timeout_hours)).astimezone(timezone.utc)
+        # driver-side over the control store's Arrow tables: no Spark
+        # job, so the sweep never waits for task slots a hung run holds
+        runs = self.control.runs_table()
+        ids = runs.filter(
+            pc.and_(
+                pc.equal(runs["status"], "Running"),
+                pc.less(runs["started_at"], pa.scalar(cutoff)),
+            )
+        )["run_id"].to_pylist()
+        stale_steps: dict[str, list[int]] = {}
+        if ids:
+            steps = self.control.steps_table()
+            stale = steps.filter(
+                pc.and_(
+                    pc.is_in(steps["run_id"], pa.array(ids, pa.string())),
+                    pc.is_in(steps["status"], pa.array(["Running", "Pending"])),
                 )
-                .select("run_id", "step_number")
-                .collect()
-            ):
+            )
+            for s in stale.select(["run_id", "step_number"]).to_pylist():
                 stale_steps.setdefault(s["run_id"], []).append(s["step_number"])
-        for r in rows:
-            rid = r["run_id"]
-            try:
-                self.spark.sparkContext.cancelJobGroup(rid)
-            except Exception:  # noqa: BLE001 — sweep must finish
-                pass
+        for rid in ids:
+            self._cancel_jobs(rid)
             for step in stale_steps.get(rid, []):
                 self.control.update_step(
                     rid, step, status="Failed", finished_at=now,
                     error_message=TIMEOUT_STATUS,
                 )
             self.control.update_run(rid, status=TIMEOUT_STATUS, finished_at=now)
-            marked.append(rid)
-        return marked
+        return ids

@@ -79,8 +79,11 @@ def _page(title: str, body: str, refresh_sec: int | None = None) -> str:
 
 def _duration_sec(row: dict) -> str:
     """RunDetail.jsx:26-29: whole seconds between started and finished,
-    '-' when either side is missing. Endpoint rows carry ISO strings
-    (rows_to_jsonable); raw datetimes also accepted for direct use."""
+    '-' when either side is missing. Endpoint rows carry naive ISO
+    strings in the process's local time (http_api renders the Arrow
+    twins' UTC values as Spark's collect renders them), so a run that
+    spans a DST shift is off by the shift. Raw datetimes, both naive or
+    both aware, are also accepted for direct use."""
     s, f = row.get("started_at"), row.get("finished_at")
 
     def as_dt(v):

@@ -76,16 +76,46 @@ def test_timeout_sweep(spark, workdir):
     # a run left Running for >6h gets swept; a fresh Running run doesn't
     stale = runner.control.start_run(pipeline_name="Stuck")
     fresh = runner.control.start_run(pipeline_name="FreshRunning")
-    n = len(runner.sweep_timeouts(now=utcnow() + timedelta(hours=7)))
-    # both are older than 7h-6h=1h? no: stale+fresh started 'now', cutoff
-    # = now+7h-6h = start+1h -> both swept. Re-check with a tight now:
-    assert n == 2
-    n2 = len(runner.sweep_timeouts(now=utcnow()))
-    assert n2 == 0  # nothing Running anymore
+    sc = spark.sparkContext
+    sc.setJobGroup("timeout-sweep", "sweep")
+    try:
+        n = len(runner.sweep_timeouts(now=utcnow() + timedelta(hours=7)))
+        # both are older than 7h-6h=1h? no: stale+fresh started 'now', cutoff
+        # = now+7h-6h = start+1h -> both swept. Re-check with a tight now:
+        assert n == 2
+        n2 = len(runner.sweep_timeouts(now=utcnow()))
+        assert n2 == 0  # nothing Running anymore
+    finally:
+        sc.setJobGroup("", "")
+    # the sweep reads the control store's Arrow tables: no Spark job, so
+    # it never waits for task slots a hung run holds
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("timeout-sweep") == []
     statuses = {
         r["run_id"]: r["status"] for r in runner.control.runs(spark).collect()
     }
     assert statuses[stale] == TIMEOUT_STATUS and statuses[fresh] == TIMEOUT_STATUS
+
+
+def test_failed_job_group_cancel_is_logged(workdir, caplog):
+    """cancelJobGroup is best effort in cancel() and the sweep, but a
+    failure is logged with the run id instead of vanishing."""
+    from types import SimpleNamespace
+
+    def refuse(group):
+        raise RuntimeError("context stopped")
+
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(cancelJobGroup=refuse))
+    runner = PipelineRunner(fake, workdir, progress_interval=None, target_format="parquet")
+    with caplog.at_level("WARNING", logger="automated_data_pipeline_spark.runner"):
+        runner.cancel("run-x")
+        stale = runner.control.start_run(pipeline_name="Stuck")
+        assert runner.sweep_timeouts(now=utcnow() + timedelta(hours=7)) == [stale]
+    with pytest.raises(PipelineCancelledError):
+        runner._check_cancelled("run-x")
+    logged = [r.getMessage() for r in caplog.records]
+    assert any("run-x" in m and "context stopped" in m for m in logged), logged
+    assert any(stale in m for m in logged), logged
 
 
 def test_scrape_to_df_normalization(spark):

@@ -5,12 +5,15 @@ uploads and drive a real pipeline run (server.js:42-169 parity)."""
 from __future__ import annotations
 
 import json
+import os
+import threading
 import time
 import urllib.request
 
 import pytest
 
 from automated_data_pipeline_spark import api
+from automated_data_pipeline_spark.control import ControlStore, utcnow
 from automated_data_pipeline_spark.http_api import (
     PipelineApiServer,
     rows_to_jsonable,
@@ -64,37 +67,95 @@ def served(spark, workdir):
     srv.stop()
 
 
-def test_get_endpoints_match_dataframe_twins(spark, served):
+def _twin_bodies(srv, run_ids):
+    """Each GET path with the JSON its DataFrame twin (api.py over the
+    Spark views) serializes to: filters, limits past both clamps, and
+    every run's detail and logs."""
+    spark = srv.spark
+    runs, steps, logs = srv.runs_df(), srv.control.steps(spark), srv.control.logs(spark)
+    twins = {
+        "/runs": api.list_runs(runs),
+        "/runs?pipeline=Alpha": api.list_runs(runs, pipeline="Alpha"),
+        "/runs?status=Running": api.list_runs(runs, status="Running"),
+        "/runs?pipeline=Beta&status=Success": api.list_runs(
+            runs, pipeline="Beta", status="Success"
+        ),
+        "/logs": api.list_logs(logs),
+        "/logs?level=Info&limit=5": api.list_logs(logs, level="Info", limit=5),
+        "/logs?limit=-1": api.list_logs(logs, limit=-1),
+        "/logs?limit=99999": api.list_logs(logs, limit=99999),
+        "/logs?pipeline=Alpha&level=Info": api.list_logs(
+            logs, pipeline="Alpha", level="Info"
+        ),
+    }
+    for rid in run_ids:
+        twins[f"/runs/{rid}/logs"] = api.run_logs(logs, rid)
+        twins[f"/logs?runId={rid}&limit=3"] = api.list_logs(logs, run_id=rid, limit=3)
+    bodies = {path: rows_to_jsonable(df) for path, df in twins.items()}
+    for rid in run_ids:
+        detail = rows_to_jsonable(api.run_detail(runs, steps, rid))[0]
+        bodies[f"/runs/{rid}"] = {**detail, "steps": detail["steps"] or []}
+    return bodies
+
+
+def _unnumbered_store(workdir):
+    """A store whose runs carry no stored run_number (written by
+    update_run alone), so both twins synthesize the numbers."""
+    store = ControlStore(workdir)
+    for k, pipeline in enumerate(["Alpha", "Beta", "Alpha"]):
+        rid = f"unnumbered-{k}"
+        store.update_run(rid, pipeline_name=pipeline, status="Success",
+                         created_at=utcnow(), started_at=utcnow())
+        store.update_step(rid, 1, step_name="Data Pull", status="Success")
+        store.log(rid, "Info", f"run {k}", pipeline_name=pipeline)
+    return store
+
+
+def test_get_endpoints_match_dataframe_twins(spark, served, workdir):
+    """The endpoints answer from the Arrow twins; each response must
+    equal its DataFrame twin byte for byte, on a store with a live run
+    (Pending steps with null timestamps) and on one with no stored run
+    numbers, in UTC and in a non-UTC process timezone (Spark's collect
+    renders local time)."""
     srv, runner = served
-    runs_df = srv.runs_df()
+    runner.control.start_run(pipeline_name="Alpha", run_id="live-run")
+    unnumbered = PipelineApiServer(spark, _unnumbered_store(workdir + "-u")).start()
+    tz_before = os.environ.get("TZ")
+    try:
+        for tz in (None, "America/St_Johns"):
+            if tz:
+                os.environ["TZ"] = tz
+                time.tzset()
+            for server in (srv, unnumbered):
+                run_ids = [r["run_id"] for r in _get(server.port, "/runs")[1]]
+                assert len(run_ids) == 3
+                for path, want in _twin_bodies(server, run_ids).items():
+                    status, body = _get(server.port, path)
+                    assert status == 200, path
+                    assert body == want, (tz, path)
+        numbers = {
+            r["run_id"]: r["run_number"] for r in _get(unnumbered.port, "/runs")[1]
+        }
+        assert numbers == {"unnumbered-0": 1, "unnumbered-1": 2, "unnumbered-2": 3}
+    finally:
+        unnumbered.stop()
+        if tz_before is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = tz_before
+        time.tzset()
 
-    status, body = _get(srv.port, "/runs")
-    assert status == 200
-    assert body == rows_to_jsonable(api.list_runs(runs_df))
-    assert len(body) == 2
-
-    status, alpha = _get(srv.port, "/runs?pipeline=Alpha")
+    status, alpha = _get(srv.port, "/runs?pipeline=Alpha&status=Success")
     assert [r["pipeline_name"] for r in alpha] == ["Alpha"]
-
     rid = alpha[0]["run_id"]
     status, detail = _get(srv.port, f"/runs/{rid}")
-    assert status == 200
-    assert detail["run_id"] == rid
     assert [s["step_number"] for s in detail["steps"]] == [1, 2, 3, 4]
     assert all(s["status"] == "Success" for s in detail["steps"])
-
-    status, logs = _get(srv.port, f"/runs/{rid}/logs")
-    assert status == 200
-    assert logs == rows_to_jsonable(
-        api.run_logs(runner.control.logs(spark), rid)
-    )
-    assert len(logs) >= 10
-
-    status, recent = _get(srv.port, "/logs?level=Info&limit=5")
-    assert status == 200 and len(recent) == 5
-    assert recent == rows_to_jsonable(
-        api.list_logs(runner.control.logs(spark), level="Info", limit=5)
-    )
+    live = _get(srv.port, "/runs/live-run")[1]
+    assert [s["started_at"] for s in live["steps"]] == [None] * 4
+    assert len(_get(srv.port, f"/runs/{rid}/logs")[1]) >= 10
+    assert len(_get(srv.port, "/logs?level=Info&limit=5")[1]) == 5
+    assert _get(srv.port, "/logs?limit=-1")[1] == []
 
     assert _get(srv.port, "/runs/nope")[0] == 404
     assert _get(srv.port, "/runs/nope/logs")[0] == 404
@@ -102,10 +163,11 @@ def test_get_endpoints_match_dataframe_twins(spark, served):
 
 
 def test_gui_requests_job_budget_and_local_views(spark, served):
-    """The control views are local relations, so each GUI request is a
-    few driver-side jobs, not a parquet scan + schema inference + window
-    shuffle per table. A new barrier (file scan, window, extra action)
-    fails here instead of hiding in host noise."""
+    """GUI requests are answered from the control store's Arrow tables
+    on the driver: zero Spark jobs per request, so a Spark job sneaking
+    back into an endpoint fails here instead of hiding in host noise.
+    The DataFrame views stay local relations: no parquet scan, schema
+    inference or window shuffle."""
     srv, runner = served
     rid = srv.list_runs(None, None)[0]["run_id"]
     requests = {
@@ -125,7 +187,7 @@ def test_gui_requests_job_budget_and_local_views(spark, served):
             sc.setJobGroup("", "")
         listener_bus.waitUntilEmpty()
         jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert len(jobs) <= 3, f"{name}: {len(jobs)} Spark jobs"
+        assert len(jobs) == 0, f"{name}: {len(jobs)} Spark jobs"
 
     for view in ("runs", "steps", "logs"):
         qe = getattr(runner.control, view)(spark)._jdf.queryExecution()
@@ -134,6 +196,48 @@ def test_gui_requests_job_budget_and_local_views(spark, served):
         assert "Window" not in plan, plan
         assert "Relation" not in plan.replace("LocalRelation", ""), plan
         assert "FileScan" not in qe.executedPlan().toString()
+
+
+def test_read_endpoints_answer_while_task_slots_are_busy(spark, served):
+    """While a Spark job holds every task slot (a pipeline run in
+    flight), GET /runs and GET /runs/{id} still answer within 1 s: they
+    run no Spark job, so they do not queue for a slot."""
+    srv, _ = served
+    rid = srv.list_runs(None, None)[0]["run_id"]
+    sc = spark.sparkContext
+    slots = sc.defaultParallelism
+    group = "hold-every-slot"
+    outcome = []
+
+    def hold_slots():
+        sc.setJobGroup(group, "hold every task slot", interruptOnCancel=True)
+        try:
+            sc.parallelize(range(slots), slots).foreach(lambda _: time.sleep(60))
+            outcome.append("finished")
+        except Exception as exc:  # the cancel below ends the job
+            outcome.append(exc)
+
+    holder = threading.Thread(target=hold_slots, daemon=True)
+    holder.start()
+    try:
+        tracker = sc.statusTracker()
+        deadline = time.time() + 60
+        busy = 0
+        while busy < slots and time.time() < deadline:
+            time.sleep(0.1)
+            stages = [tracker.getStageInfo(s) for s in tracker.getActiveStageIds()]
+            busy = sum(st.numActiveTasks for st in stages if st is not None)
+        assert busy >= slots, f"only {busy}/{slots} slots held"
+        for path in ("/runs", f"/runs/{rid}"):
+            t0 = time.perf_counter()
+            status, _ = _get(srv.port, path)
+            took = time.perf_counter() - t0
+            assert status == 200 and took < 1.0, f"{path}: {took:.2f} s"
+    finally:
+        sc.cancelJobGroup(group)
+        holder.join(timeout=60)
+    assert not holder.is_alive()
+    assert outcome and outcome[0] != "finished"
 
 
 def test_trigger_upload_runs_pipeline(spark, served):

@@ -151,3 +151,50 @@ def test_upsert_merge_partial_update_semantics(spark):
         "k2": ("old-b", 99),   # only score updated (set_columns)
         "k3": ("new-c", 77),   # inserted with ALL columns from updates
     }
+
+
+def test_declared_stage_schemas_match_stage_outputs(spark):
+    """Stage and target reads take their schema from schemas.py instead
+    of inferring it from parquet footers, so each declared schema must
+    be exactly what its stage writes (names, order and types)."""
+    from automated_data_pipeline_spark.operators import stages
+    from automated_data_pipeline_spark.schemas import (
+        LANDING_SCHEMA,
+        STAGING_SCHEMA,
+        TARGET_SCHEMA,
+        TRANSFORMED_SCHEMA,
+    )
+    from automated_data_pipeline_spark.sources.files import resolve_input_columns
+    from automated_data_pipeline_spark.sources.generators import generate_orders
+
+    def shape(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    landing = stages.pull(resolve_input_columns(generate_orders(spark, 3)), "r", "G")
+    staging = stages.extract(landing)
+    transformed = stages.transform(staging)
+    assert shape(landing.schema) == shape(LANDING_SCHEMA)
+    assert shape(staging.schema) == shape(STAGING_SCHEMA)
+    assert shape(transformed.schema) == shape(TRANSFORMED_SCHEMA)
+    assert shape(stages.migrate_updates(transformed).schema) == shape(TARGET_SCHEMA)
+
+
+def test_stage_reads_run_no_schema_inference_jobs(spark, tmp_path, workdir):
+    """A run's stage and target reads list only its own partition with
+    a declared schema: a bulk load (CSV directory in, no target yet)
+    runs 6 Spark jobs and a delta (merged into the target) 8, at any
+    history length. Footer inference added one job per read (9 / 12)."""
+    from automated_data_pipeline_spark.sources.generators import generate_orders
+
+    bulk, delta = str(tmp_path / "bulk"), str(tmp_path / "delta")
+    generate_orders(spark, 200).write.option("header", True).csv(bulk)
+    generate_orders(spark, 50).write.option("header", True).csv(delta)
+    runner = PipelineRunner(spark, workdir)
+    sc = spark.sparkContext
+    jobs = []
+    for src in (bulk, delta, delta):
+        rid = runner.run(source_path=src)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(rid)))
+    assert jobs == [6, 8, 8]
+    assert runner.target.read(spark).count() == 200
