@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .control import where
+
 MAX_RUNS = 100  # server.js:57
 DEFAULT_LOG_LIMIT = 500  # server.js:158
 MAX_LOG_LIMIT = 2000
@@ -178,17 +180,6 @@ def derived_run_status(steps: DataFrame) -> DataFrame:
 
 
 # ---- Arrow twins (driver-side, no Spark job) ---------------------------
-def _where(table: pa.Table, **equals) -> pa.Table:
-    """Conjunctive ``column == value`` filters; a None value is no
-    filter. Null cells never match, as in Spark."""
-    mask = None
-    for column, value in equals.items():
-        if value is not None:
-            hit = pc.equal(table[column], value)
-            mask = hit if mask is None else pc.and_(mask, hit)
-    return table if mask is None else table.filter(mask)
-
-
 def _ordered(
     table: pa.Table, columns: list[str], descending: bool, limit: int | None = None
 ) -> pa.Table:
@@ -221,7 +212,7 @@ def list_runs_arrow(
     status: str | None = None,
     limit: int = MAX_RUNS,
 ) -> pa.Table:
-    df = _where(runs, pipeline_name=pipeline, status=status)
+    df = where(runs, pipeline_name=pipeline, status=status)
     return _ordered(df, ["created_at", "run_id"], descending=True, limit=limit)
 
 
@@ -230,9 +221,9 @@ def run_detail_arrow(runs: pa.Table, steps: pa.Table, run_id: str) -> pa.Table:
     nested as steps[] ordered by step_number. A run without steps gets
     an empty list where the DataFrame twin's left join gives null; the
     endpoint renders both as []."""
-    run = _where(runs, run_id=run_id)
+    run = where(runs, run_id=run_id)
     own = _ordered(
-        _where(steps, run_id=run_id), ["step_number"], descending=False
+        where(steps, run_id=run_id), ["step_number"], descending=False
     ).select(STEP_DETAIL_COLUMNS)
     nested = pa.ListArray.from_arrays(
         pa.array([0, own.num_rows], pa.int32()),
@@ -246,7 +237,7 @@ def run_detail_arrow(runs: pa.Table, steps: pa.Table, run_id: str) -> pa.Table:
 
 
 def run_logs_arrow(logs: pa.Table, run_id: str) -> pa.Table:
-    return _ordered(_where(logs, run_id=run_id), ["log_at", "log_id"], descending=False)
+    return _ordered(where(logs, run_id=run_id), ["log_at", "log_id"], descending=False)
 
 
 def list_logs_arrow(
@@ -256,5 +247,5 @@ def list_logs_arrow(
     level: str | None = None,
     limit: int = DEFAULT_LOG_LIMIT,
 ) -> pa.Table:
-    df = _where(logs, run_id=run_id, pipeline_name=pipeline, level=level)
+    df = where(logs, run_id=run_id, pipeline_name=pipeline, level=level)
     return _ordered(df, ["log_at", "log_id"], descending=True, limit=_log_limit(limit))

@@ -43,6 +43,18 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .schemas import STEP_NAMES
 
+
+def where(table: pa.Table, **equals) -> pa.Table:
+    """Conjunctive ``column == value`` filters; a None value is no
+    filter. Null cells never match, as in Spark."""
+    mask = None
+    for column, value in equals.items():
+        if value is not None:
+            hit = pc.equal(table[column], value)
+            mask = hit if mask is None else pc.and_(mask, hit)
+    return table if mask is None else table.filter(mask)
+
+
 _RUN_FIELDS = [
     ("run_id", pa.string()),
     ("run_number", pa.int64()),
@@ -167,12 +179,7 @@ class _EventTable:
 
     def latest_row(self, key: dict[str, Any]) -> dict[str, Any] | None:
         """The ``latest`` row for one key, or None."""
-        latest = self.latest()
-        mask = None
-        for k, v in key.items():
-            hit = pc.equal(latest[k], v)
-            mask = hit if mask is None else pc.and_(mask, hit)
-        rows = latest.filter(mask).to_pylist()
+        rows = where(self.latest(), **key).to_pylist()
         return rows[0] if rows else None
 
 

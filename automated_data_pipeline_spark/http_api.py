@@ -142,11 +142,6 @@ class PipelineApiServer:
         self._thread: threading.Thread | None = None
 
     # -- data access: the Arrow twins in api.py, no Spark job ----------
-    def runs_df(self) -> DataFrame:
-        """The runs view the DataFrame twins query (library callers and
-        the endpoint tests' reference)."""
-        return api.with_run_number_fallback(self.control.runs(self.spark))
-
     def runs_table(self) -> pa.Table:
         return api.with_run_number_fallback_arrow(self.control.runs_table())
 

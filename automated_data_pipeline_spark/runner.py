@@ -60,10 +60,10 @@ class PipelineCancelledError(RuntimeError):
 
 class TargetTable:
     """Versioned parquet target with an atomic LATEST pointer.
-    ``schema`` is the table's declared schema, read without Spark's
-    footer-inference job; None infers it from the files."""
+    ``schema`` is the table's declared schema, so a read runs no
+    footer-inference job."""
 
-    def __init__(self, path: str, schema: StructType | None = None):
+    def __init__(self, path: str, schema: StructType):
         self.path = path
         self.schema = schema
         os.makedirs(path, exist_ok=True)
@@ -87,8 +87,7 @@ class TargetTable:
         v = self.latest_version()
         if v is None:
             return None
-        reader = spark.read if self.schema is None else spark.read.schema(self.schema)
-        return reader.parquet(os.path.join(self.path, f"v={v}"))
+        return spark.read.schema(self.schema).parquet(os.path.join(self.path, f"v={v}"))
 
     def commit(self, df: DataFrame) -> int:
         """Allocate a version exclusively (O_EXCL claim file), write it,

@@ -6,6 +6,7 @@ join-rewrite TargetTable carries identical semantics otherwise."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from automated_data_pipeline_spark.operators import upsert
 from automated_data_pipeline_spark.runner import (
@@ -21,8 +22,13 @@ needs_delta = pytest.mark.skipif(
 )
 
 
+_SCHEMA = StructType(
+    [StructField("order_id", StringType()), StructField("amount", DoubleType())]
+)
+
+
 def _updates(spark, rows):
-    return spark.createDataFrame(rows, "order_id string, amount double")
+    return spark.createDataFrame(rows, _SCHEMA)
 
 
 def test_runner_routes_target_format(spark, workdir):
@@ -54,7 +60,7 @@ def _merge_twice_and_check(spark, target):
 
 
 def test_parquet_target_merge_contract(spark, tmp_path):
-    _merge_twice_and_check(spark, TargetTable(str(tmp_path / "t")))
+    _merge_twice_and_check(spark, TargetTable(str(tmp_path / "t"), _SCHEMA))
 
 
 @needs_delta

@@ -67,12 +67,17 @@ def served(spark, workdir):
     srv.stop()
 
 
+def _runs_df(srv):
+    """The runs view the DataFrame twins query."""
+    return api.with_run_number_fallback(srv.control.runs(srv.spark))
+
+
 def _twin_bodies(srv, run_ids):
     """Each GET path with the JSON its DataFrame twin (api.py over the
     Spark views) serializes to: filters, limits past both clamps, and
     every run's detail and logs."""
     spark = srv.spark
-    runs, steps, logs = srv.runs_df(), srv.control.steps(spark), srv.control.logs(spark)
+    runs, steps, logs = _runs_df(srv), srv.control.steps(spark), srv.control.logs(spark)
     twins = {
         "/runs": api.list_runs(runs),
         "/runs?pipeline=Alpha": api.list_runs(runs, pipeline="Alpha"),
@@ -338,7 +343,7 @@ def test_gui_run_list_renders_dataframe_rows(spark, served):
     srv, _ = served
     status, ctype, page = _get_html(srv.port, "/")
     assert status == 200 and ctype.startswith("text/html")
-    runs = rows_to_jsonable(api.list_runs(srv.runs_df()))
+    runs = rows_to_jsonable(api.list_runs(_runs_df(srv)))
     assert len(runs) == 2
     for r in runs:
         assert f'href="/ui/runs/{r["run_id"]}"' in page
@@ -356,7 +361,7 @@ def test_gui_run_detail_renders_steps_and_logs_link(spark, served):
     and rows-affected; a FINISHED run must NOT carry the 2 s
     auto-refresh meta tag (the JSP only refreshes while live)."""
     srv, runner = served
-    rid = rows_to_jsonable(api.list_runs(srv.runs_df()))[0]["run_id"]
+    rid = rows_to_jsonable(api.list_runs(_runs_df(srv)))[0]["run_id"]
     status, ctype, page = _get_html(srv.port, f"/ui/runs/{rid}")
     assert status == 200 and ctype.startswith("text/html")
     detail = srv.run_detail(rid)
