@@ -33,10 +33,6 @@ def tokens(c: Column) -> Column:
     return F.filter(F.split(F.lower(c), r"\s+"), lambda x: x != F.lit(""))
 
 
-def distinct_tokens(c: Column) -> Column:
-    return F.array_distinct(tokens(c))
-
-
 def bigram_shingles(words: Column) -> Column:
     """Distinct word-bigram shingles of a token array (for Jaccard /
     MinHash dedup). Empty when fewer than 2 tokens."""

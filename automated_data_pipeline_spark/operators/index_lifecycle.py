@@ -56,7 +56,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..storefs import fs_for
-from ..streaming.incremental_dedup import _has_parquet, _recover_compact
+from ..streaming.fold import (
+    _has_parquet,
+    _recover_compact,
+    rewrite_dir,
+    staged_path,
+    start_fold_stream,
+    swap_in_staged,
+)
 from . import similarity
 from ..plans.empty import empty_local_frame
 
@@ -242,7 +249,7 @@ def compact_index(
         out = df.repartition(
             n_files, F.pmod(F.xxhash64(*df.columns), F.lit(n_files))
         )
-    tmp = data_dir.rstrip("/") + ".compact"
+    tmp = staged_path(data_dir)
     writer = out.write.mode("overwrite")
     if _PARTITIONED[family]:
         writer = writer.partitionBy("ivf_cluster")
@@ -256,11 +263,7 @@ def compact_index(
         # stays a regular (typed) column and pruning filters still
         # resolve against the empty scan.
         df.limit(0).coalesce(1).write.mode("overwrite").parquet(tmp)
-    fs = fs_for(data_dir)
-    old = data_dir.rstrip("/") + ".old"
-    fs.rename(data_dir, old)
-    fs.rename(tmp, data_dir)
-    fs.rmtree(old)
+    swap_in_staged(data_dir)
     if applied is not None:
         _trim_tombstones(spark, index_path, applied, id_col)
     _consolidate_ledger(spark, index_path)
@@ -306,16 +309,10 @@ def _trim_tombstones(
         .localCheckpoint(eager=True)
     )
     tomb_dir = f"{index_path}/tombstones"
-    fs = fs_for(tomb_dir)
     if not leftover.take(1):
-        fs.rmtree(tomb_dir)
+        fs_for(tomb_dir).rmtree(tomb_dir)
         return
-    tmp = tomb_dir + ".compact"
-    leftover.write.mode("overwrite").parquet(tmp)
-    old = tomb_dir + ".old"
-    fs.rename(tomb_dir, old)
-    fs.rename(tmp, tomb_dir)
-    fs.rmtree(old)
+    rewrite_dir(tomb_dir, leftover)
 
 
 def needs_compaction(
@@ -358,20 +355,12 @@ def start_incremental_tombstones(
     argument — set union is idempotent). Returns the started
     StreamingQuery."""
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def fold(batch_df, *_):
         add_tombstones(spark, index_path, batch_df, id_col)
 
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(source_dir)
+    return start_fold_stream(
+        spark, source_dir, schema, checkpoint_dir, fold, available_now
     )
-    writer = reader.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def rebuild_index_generation(
@@ -428,7 +417,7 @@ def rebuild_index_generation(
     live = corpus
     if tombs.take(1):
         live = corpus.join(F.broadcast(tombs), id_col, "left_anti")
-    tmp = index_path.rstrip("/") + ".compact"
+    tmp = staged_path(index_path)
 
     if family == "ivf":
         assigned, cent_df = similarity.ivf_index(
@@ -504,11 +493,7 @@ def rebuild_index_generation(
     if late.take(1):
         late.write.mode("overwrite").parquet(f"{tmp}/tombstones")
 
-    old = index_path.rstrip("/") + ".old"
-    fs = fs_for(index_path)
-    fs.rename(index_path, old)
-    fs.rename(tmp, index_path)
-    fs.rmtree(old)
+    swap_in_staged(index_path)
 
 
 def rebuild_if_drifted(

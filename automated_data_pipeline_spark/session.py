@@ -47,12 +47,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def tune_for_oracle(spark: SparkSession) -> SparkSession:
-    """Pin the runtime-settable confs that keep results portable across
-    engines (used by ``__spark_entry__`` queries, which receive the
-    driver's session rather than ours)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    return spark

@@ -1,12 +1,9 @@
 """Synthetic orders generators (SURVEY.md §2.1 S11) — fully distributed
 ``spark.range`` pipelines, no driver-side loops.
 
-Deterministic variant mirrors python_code/scripts/generate-large-csv.mjs:20-35:
+The recipe mirrors python_code/scripts/generate-large-csv.mjs:20-35:
 row i -> ORD-{i:06d}, C{(i % 2000)+1}, amount from a 14-value cycle,
 date = 2024-01-01 + (i % 400) days.
-
-Random variant mirrors java_code/gen_1m_csv.py:8-23: amounts uniform
-10..5000 rounded to 2dp, customers C{1..50000}, dates 2020-01-01+0..1400d.
 """
 
 from __future__ import annotations
@@ -39,29 +36,3 @@ def generate_orders(spark: SparkSession, n_rows: int, partitions: int | None = N
             "yyyy-MM-dd",
         ).alias("OrderDate"),
     )
-
-
-def generate_orders_random(
-    spark: SparkSession, n_rows: int, seed: int = 42, partitions: int | None = None
-) -> DataFrame:
-    """Random variant (gen_1m_csv.py semantics), seeded for reproducibility."""
-    rng = spark.range(0, n_rows, numPartitions=partitions)
-    return rng.select(
-        F.format_string("ORD-%07d", F.col("id") + 1).alias("OrderId"),
-        F.format_string(
-            "C%06d", (F.floor(F.rand(seed) * 50000) + 1).cast("int")
-        ).alias("CustomerId"),
-        F.round(F.rand(seed + 1) * 4990 + 10, 2).cast("string").alias("Amount"),
-        F.date_format(
-            F.date_add(
-                F.lit("2020-01-01").cast("date"),
-                F.floor(F.rand(seed + 2) * 1400).cast("int"),
-            ),
-            "yyyy-MM-dd",
-        ).alias("OrderDate"),
-    )
-
-
-def write_orders_csv(df: DataFrame, path: str) -> None:
-    """Materialize a generated frame as CSV files for file-based pipeline runs."""
-    df.write.mode("overwrite").option("header", True).csv(path)

@@ -4,14 +4,13 @@ ingest plus partition-directory compaction — the two pieces that turn
 NOT idempotent by itself) into something a 24/7 vector pipeline can
 sit on.
 
-Exactly-once: every appended row is stamped with its micro-batch key
-(``{checkpoint}#{batch_id}`` — the ``incremental_dedup`` convention),
+Exactly-once: every appended row is stamped with its micro-batch key,
 and only the FIRST batch after a (re)start probes the corpus for an
-already-landed key (a crashed attempt is always the restart batch;
-steady-state batches skip the probe job entirely). This covers
-exactly Spark's recovery contract: committed batches never re-fire,
-so the only possible replay is the last uncommitted batch — which IS
-the first batch after the restart. Wholesale checkpoint deletion is
+already-landed key — both the fold-stream skeleton's rules
+(``streaming/fold.py``). This covers exactly Spark's recovery
+contract: committed batches never re-fire, so the only possible
+replay is the last uncommitted batch — which IS the first batch
+after the restart. Wholesale checkpoint deletion is
 outside the contract (it reprocesses committed batches under reused
 batch ids, of which only the first is probed); reprocess-from-scratch
 belongs with a fresh index, same as the other stores. The probe asks
@@ -32,7 +31,8 @@ Compaction: each ingest batch lands one small file per touched
 O(batches x clusters) tiny files. ``compact_ivf_index`` rewrites the
 corpus to ``files_per_cluster`` files per directory (deterministic id
 hash sub-split — no rand(), so a retried task writes the same rows)
-under the same crash-self-healing two-rename swap as the stores; rows
+under the stores' crash-self-healing two-rename swap
+(``fold.swap_in_staged``); rows
 and batch_key stamps are preserved, so replay probes keep working
 across compactions and queries are value-identical (pytest-pinned).
 At 100 TB this runs as a periodic job per hot partition range; here
@@ -40,8 +40,6 @@ it is one repartition + partitioned write.
 """
 
 from __future__ import annotations
-
-import os
 
 import pandas as pd  # module-level: pandas_udf type hints are lazy
 # strings under future-annotations and resolve against module globals
@@ -59,7 +57,7 @@ from ..operators.similarity import (
     write_pq_index,
     write_sq8_index,
 )
-from .incremental_dedup import _has_parquet, _recover_compact
+from .fold import _recover_compact, batch_landed, start_fold_stream
 
 
 def write_ivf_index_for_ingest(
@@ -148,9 +146,8 @@ def start_incremental_ann_ingest(
     )
 
     corpus_dir = f"{index_path}/{_DATA_DIR[family]}"
-    maybe_replay = [True]
 
-    def process(batch_df: DataFrame, batch_id: int):
+    def fold(batch_df, _batch_id, key, maybe_replay):
         # a crash mid-compact leaves the corpus parked at '.old', and
         # a crash mid-generation-swap parks the whole INDEX at
         # '{index_path}.old' (operators/index_lifecycle.py); heal both
@@ -159,24 +156,15 @@ def start_incremental_ann_ingest(
         # entry points: compact start, rebuild start, and ingest)
         _recover_compact(index_path)
         _recover_compact(corpus_dir)
-        key = f"{checkpoint_dir}#{batch_id}"
-        # applied = stamped on the corpus OR recorded in the ledger.
+        # applied = recorded in the ledger OR stamped on the corpus.
         # The ledger leg is what survives physical purges: if every
         # row of an uncommitted batch was tombstoned and compacted
         # away between sessions, the stamp probe alone would re-append
         # it and resurrect deleted vectors (the r10 advisor's finding;
         # compact/rebuild fold stamps into the ledger pre-swap).
-        done = maybe_replay[0] and (
-            key in applied_batch_key_set(index_path)
-            or (
-                _has_parquet(corpus_dir) and bool(
-                    spark.read.parquet(corpus_dir)
-                    .filter(F.col("batch_key") == key)
-                    .take(1)
-                )
-            )
-        )
-        if not done:
+        if maybe_replay and key in applied_batch_key_set(index_path):
+            return
+        if not (maybe_replay and batch_landed(spark, corpus_dir, key)):
             append(
                 spark,
                 index_path,
@@ -187,23 +175,14 @@ def start_incremental_ann_ingest(
                 record_drift(
                     spark, index_path, batch_df, key, vec_col, family=family
                 )
-            # AFTER the corpus append: a crash in between leaves the
-            # stamp probe (or, post-purge, the compactor's pre-swap
-            # ledger fold) to detect the landed rows
-            record_applied_batch_keys(spark, index_path, [key])
-        maybe_replay[0] = False
+        # AFTER the corpus append: a crash in between leaves the stamp
+        # probe to detect the landed rows, and the replay records the
+        # key then
+        record_applied_batch_keys(spark, index_path, [key])
 
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(source_dir)
+    return start_fold_stream(
+        spark, source_dir, schema, checkpoint_dir, fold, available_now
     )
-    writer = reader.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def compact_ivf_index(

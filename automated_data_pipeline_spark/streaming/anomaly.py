@@ -5,9 +5,10 @@ A batch z-score tells you yesterday had an outage; a stream wants the
 same signal within one trigger interval. ``attach_volume_monitor``
 wraps a foreachBatch handler: every micro-batch appends its per-time-
 window event counts to a parquet metrics table with (batch_key,
-batched-at) lineage — replay-idempotent exactly like
-``quality_monitor`` (a crashed-and-replayed batch probes its
-batch_key before writing, so counts are never double-appended).
+batched-at) lineage — replay-idempotent through the fold-stream
+skeleton's keyed append (``streaming/fold.py``: a crashed-and-replayed
+batch probes its batch_key before writing, so counts are never
+double-appended).
 ``read_anomalies`` then scores each window against its TRAILING
 windows (excluding itself — a spike must not inflate its own
 baseline) using the suite's exact-integer-sums recipe: the window
@@ -30,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.stats import anomaly_flag, trailing_zscore
+from .fold import append_once, fold_handler
 
 
 def batch_window_counts(
@@ -67,32 +69,14 @@ def attach_volume_monitor(
     ``quality_monitor.attach_quality_monitor``: ``run_key`` scopes the
     batch_key (pass the checkpoint dir), and only the first batch
     after a (re)start pays the probe read."""
-    from .incremental_dedup import _has_parquet
 
-    maybe_replay = [True]
-
-    def wrapped(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        key = f"{run_key}#{int(batch_id)}"
-        already = (
-            maybe_replay[0]
-            and _has_parquet(metrics_path)
-            and bool(
-                spark.read.parquet(metrics_path)
-                .filter(F.col("batch_key") == key)
-                .take(1)
-            )
-        )
-        maybe_replay[0] = False
-        if not already:
-            counts = batch_window_counts(
-                batch_df, batch_id, ts_col, window
-            ).withColumn("batch_key", F.lit(key))
-            counts.write.mode("append").parquet(metrics_path)
+    def fold(batch_df, batch_id, key, maybe_replay):
+        counts = batch_window_counts(batch_df, batch_id, ts_col, window)
+        append_once(metrics_path, counts, key, maybe_replay)
         if handler is not None:
             handler(batch_df, batch_id)
 
-    return wrapped
+    return fold_handler(run_key, fold)
 
 
 def read_window_volumes(spark, metrics_path: str) -> DataFrame:

@@ -30,22 +30,19 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TX
 from .incremental_dedup import FingerprintStore
-from ..plans.empty import empty_local_frame
 
 
 class PostingsStore(FingerprintStore):
     """Append-only parquet postings: (doc_id, term, tf) per batch;
     inherits the idempotent-append keying and crash-safe compaction."""
 
-    def _empty(self, spark: SparkSession) -> DataFrame:
-        return empty_local_frame(spark, "doc_id bigint, term string, tf bigint, batch_key string")
+    schema = "doc_id bigint, term string, tf bigint, batch_key string"
 
 
 class DocLenStore(FingerprintStore):
     """Append-only parquet per-document token counts."""
 
-    def _empty(self, spark: SparkSession) -> DataFrame:
-        return empty_local_frame(spark, "doc_id bigint, dl bigint, batch_key string")
+    schema = "doc_id bigint, dl bigint, batch_key string"
 
 
 def batch_postings(

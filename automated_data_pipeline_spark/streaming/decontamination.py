@@ -34,14 +34,13 @@ property the blocklist/decontamination axis is built on.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import sketches as SK
-from .incremental_dedup import _has_parquet, _recover_compact
 from ..plans.empty import empty_local_frame
+from ..storefs import fs_for
+from .fold import _has_parquet, _recover_compact, rewrite_dir, start_fold_stream
 
 
 def suggest_m_bits(expected_items: int, target_fp: float = 0.002,
@@ -71,17 +70,14 @@ class BloomBitStore:
         self.path = path
         self.m_bits = int(m_bits)
         self.k_hashes = int(k_hashes)
-        os.makedirs(path, exist_ok=True)
-
-    def _empty(self, spark: SparkSession) -> DataFrame:
-        return empty_local_frame(spark, "bit bigint")
+        fs_for(path).mkdirs(path)
 
     def read_bits(self, spark: SparkSession) -> DataFrame:
         """The merged filter: distinct set-bit rows (duplicate and
         replayed appends collapse here, making appends idempotent)."""
         _recover_compact(self.path)
         if not _has_parquet(self.path):
-            return self._empty(spark)
+            return empty_local_frame(spark, "bit bigint")
         return spark.read.parquet(self.path).select("bit").distinct()
 
     def merge_batch(self, batch: DataFrame, item_col) -> None:
@@ -105,18 +101,9 @@ class BloomBitStore:
         """Rewrite the file pile into the distinct form (bounded at
         m_bits rows). Same crash-self-healing two-rename swap as the
         fingerprint/HLL stores; not safe concurrently with an ingest."""
-        import shutil
-
         _recover_compact(self.path)
-        if not _has_parquet(self.path):
-            return
-        reduced = self.read_bits(spark).coalesce(n_files)
-        tmp = self.path.rstrip("/") + ".compact"
-        reduced.write.mode("overwrite").parquet(tmp)
-        old = self.path.rstrip("/") + ".old"
-        os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
+        if _has_parquet(self.path):
+            rewrite_dir(self.path, self.read_bits(spark).coalesce(n_files))
 
 
 def decontaminate_batch(
@@ -176,22 +163,15 @@ def start_incremental_bloom(
     """Wire the bit store to a file-source stream of benchmark items:
     every file (an eval shard, a new benchmark dump) is a micro-batch
     whose items' bits merge into the filter. ``item_expr`` is a Column
-    producing the filtered item from a shard row. Returns the started
-    StreamingQuery."""
+    producing the filtered item from a shard row. No replay probe: the
+    read-side DISTINCT absorbs a replayed shard's bits. Returns the
+    started StreamingQuery."""
 
-    def process(batch_df: DataFrame, batch_id: int):
+    def fold(batch_df, *_):
         store.merge_batch(
             batch_df.select(item_expr.alias("_item")), F.col("_item")
         )
 
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(source_dir)
+    return start_fold_stream(
+        spark, source_dir, schema, checkpoint_dir, fold, available_now
     )
-    writer = reader.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

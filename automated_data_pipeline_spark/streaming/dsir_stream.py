@@ -7,7 +7,8 @@ the target-subset token count and the raw token count ("Data
 Selection for Language Models via Importance Resampling", Xie et al.
 2023 — the estimator only ever sees bucket counts, never documents).
 Integer counts merge exactly across any micro-batch split, so the
-``source_histogram`` store pattern carries over verbatim: one row per
+fold-stream store pattern (``streaming/fold.py``) carries over
+verbatim: one row per
 (bucket, batch_key), idempotent appends under deterministic batch
 keys, crash-safe compaction, O(batch tokens) per increment. From the
 merged store the per-document importance weights — and therefore the
@@ -29,8 +30,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
+from .fold import start_fold_stream
 from .incremental_dedup import FingerprintStore
-from ..plans.empty import empty_local_frame
 
 
 class DsirBucketStore(FingerprintStore):
@@ -38,8 +39,7 @@ class DsirBucketStore(FingerprintStore):
     raw); inherits the idempotent-append keying and crash-safe
     compaction."""
 
-    def _empty(self, spark: SparkSession) -> DataFrame:
-        return empty_local_frame(spark, "bucket bigint, n_target bigint, n_raw bigint, batch_key string")
+    schema = "bucket bigint, n_target bigint, n_raw bigint, batch_key string"
 
 
 def batch_dsir_buckets(
@@ -196,25 +196,14 @@ def start_incremental_dsir(
     contract (committed batches never re-fire; the only possible
     replay is the last uncommitted batch, which IS the restart batch).
     Returns the started StreamingQuery."""
-    maybe_replay = [True]
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        key = f"{checkpoint_dir}#{int(batch_id)}"
+    def fold(batch_df, _batch_id, key, maybe_replay):
         update_dsir_buckets(
             spark, batch_df, store, text_col=text_col,
             is_target=is_target, n_buckets=n_buckets, batch_key=key,
-            assume_fresh=not maybe_replay[0],
+            assume_fresh=not maybe_replay,
         )
-        maybe_replay[0] = False
 
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(source_dir)
+    return start_fold_stream(
+        spark, source_dir, schema, checkpoint_dir, fold, available_now
     )
-    writer = reader.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -108,8 +108,9 @@ def start_file_trigger(
     """Start the streaming trigger; returns the StreamingQuery.
 
     Each discovered file becomes one pipeline run through the batch
-    readers (header-resolved, format-sniffed); the per-file run count
-    is bounded per micro-batch by the source's maxFilesPerTrigger.
+    readers (header-resolved, format-sniffed); one micro-batch takes
+    every upload pending in the landing dir (the reader sets no
+    maxFilesPerTrigger).
     A header-only file still produces its (0-row) run — the reference
     records every upload. (A fully EMPTY file emits no text row and
     stays invisible; the file source offers no hook for it.)
@@ -134,9 +135,10 @@ def start_file_trigger(
     )
 
     def process_batch(batch_df, batch_id: int):
-        # file list is bounded by maxFilesPerTrigger — a driver-side
-        # loop over FILES (not rows), matching the reference's
-        # one-process-per-upload orchestration
+        # file list = the uploads pending at this trigger (no
+        # maxFilesPerTrigger; each file capped by api.validate_upload)
+        # — a driver-side loop over FILES (not rows), matching the
+        # reference's one-process-per-upload orchestration
         paths = sorted({r["path"] for r in batch_df.select("path").collect()})
         for p in paths:
             rid = batch_run_id(checkpoint_dir, batch_id, p)

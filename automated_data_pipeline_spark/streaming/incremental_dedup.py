@@ -44,71 +44,42 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
-from ..storefs import fs_for
 from ..plans.empty import empty_local_frame
-
-
-def _recover_compact(path: str) -> None:
-    """Self-heal a crash mid-compact (see ``FingerprintStore.compact``):
-    if the live dir vanished between the two renames, the '.old' backup
-    IS the store — move it back; if both exist, '.old' is post-swap
-    debris — drop it. Stale '.compact' output is always discarded.
-    Called at store-read time and at compact start; both are
-    by-contract never concurrent with an in-flight compact. All I/O
-    goes through the storefs seam, so the discipline works unchanged
-    on HDFS/S3 store paths (VERDICT r11 item 5)."""
-    fs = fs_for(path)
-    base = path.rstrip("/")
-    old, tmp = base + ".old", base + ".compact"
-    if fs.isdir(old):
-        if not fs.isdir(base):
-            fs.rename(old, base)
-        else:
-            fs.rmtree(old)
-    if fs.isdir(tmp):
-        fs.rmtree(tmp)
-
-
-def _has_parquet(path: str) -> bool:
-    """True iff ``path`` contains at least one parquet part file.
-    Cheap driver-side probe so empty/missing dirs don't go through
-    spark.read (which logs a JVM AnalysisException even when the
-    Python caller catches it)."""
-    return fs_for(path).has_parquet(path)
+from ..storefs import fs_for
+from .fold import (
+    _has_parquet,
+    _recover_compact,
+    append_once,
+    batch_landed,
+    rewrite_dir,
+    start_fold_stream,
+)
 
 
 class FingerprintStore:
     """Append-only parquet fingerprint set keyed for idempotent
-    micro-batch appends."""
+    micro-batch appends. Subclasses are the other fold stores: each
+    declares only its empty-store ``schema`` (DDL) and inherits the
+    keyed replay probe and the crash-safe compaction."""
+
+    # The empty-store frame is LocalRelation-empty (plans/empty.py):
+    # the optimizer can PROVE it empty, so first-batch joins against a
+    # fresh store collapse entirely and probes answer driver-side.
+    schema = "fingerprint string, doc_id bigint, batch_key string"
 
     def __init__(self, path: str):
         self.path = path
         fs_for(path).mkdirs(path)
 
-    def _empty(self, spark: SparkSession) -> DataFrame:
-        # LocalRelation-empty (r14, plans/empty.py): the optimizer can
-        # PROVE it empty, so first-batch joins against a fresh store
-        # collapse entirely and probes answer driver-side (r13's
-        # coalesce(1) only shrank the empty RDD — it still blocked
-        # PropagateEmptyRelation and cost this bench row 2x)
-        return empty_local_frame(spark, "fingerprint string, doc_id bigint, batch_key string")
-
     def read(self, spark: SparkSession) -> DataFrame:
         _recover_compact(self.path)
         if not _has_parquet(self.path):
-            return self._empty(spark)
+            return empty_local_frame(spark, self.schema)
         return spark.read.parquet(self.path)
 
     def has_batch(self, spark: SparkSession, batch_key: str) -> bool:
         _recover_compact(self.path)
-        # an empty store holds no batch: answer driver-side, zero jobs
-        if not _has_parquet(self.path):
-            return False
-        return bool(
-            spark.read.parquet(self.path)
-            .filter(F.col("batch_key") == batch_key)
-            .take(1)
-        )
+        return batch_landed(spark, self.path, batch_key)
 
     def append(self, df: DataFrame) -> None:
         df.write.mode("append").parquet(self.path)
@@ -116,24 +87,14 @@ class FingerprintStore:
     def compact(self, spark: SparkSession, n_files: int = 8) -> None:
         """Rewrite the append-only store into few large files (one
         small parquet lands per micro-batch otherwise). Not safe
-        concurrently with an ingest — run between sessions. The
-        two-rename swap is not atomic; every crash window is covered by
-        ``_recover_compact`` (run at compact start and store read): a
-        crash between the renames leaves the store at '.old' and the
-        next access moves it back, a crash after the swap leaves stale
-        '.old'/'.compact' debris that the next access drops. Same
-        pathology/remedy as ``incremental_lsh.LshStore.compact``."""
+        concurrently with an ingest — run between sessions. Rows are
+        preserved, so replay probes keep working; every crash window
+        of the swap self-heals (``fold.swap_in_staged``)."""
         _recover_compact(self.path)
-        if not _has_parquet(self.path):
-            return
-        df = spark.read.parquet(self.path).coalesce(n_files)
-        fs = fs_for(self.path)
-        tmp = self.path.rstrip("/") + ".compact"
-        df.write.mode("overwrite").parquet(tmp)
-        old = self.path.rstrip("/") + ".old"
-        fs.rename(self.path, old)
-        fs.rename(tmp, self.path)
-        fs.rmtree(old)
+        if _has_parquet(self.path):
+            rewrite_dir(
+                self.path, spark.read.parquet(self.path).coalesce(n_files)
+            )
 
 
 def dedup_batch_against_store(
@@ -204,42 +165,15 @@ def start_incremental_dedup(
     dropped in ``source_dir`` is a micro-batch; novel docs land in
     ``out_dir``. Returns the started StreamingQuery."""
 
-    # Only the first batch after a (re)start can be a replay of a
-    # crashed attempt; steady-state batches skip both probe jobs.
-    maybe_replay = [True]
-
-    def process(batch_df: DataFrame, batch_id: int):
-        key = f"{checkpoint_dir}#{batch_id}"
+    def fold(batch_df, _batch_id, key, maybe_replay):
         novel = dedup_batch_against_store(
             spark, batch_df, store, batch_key=key,
-            assume_fresh=not maybe_replay[0],
+            assume_fresh=not maybe_replay,
         )
-        # Idempotent corpus append: rows carry the batch key, and a
-        # replay whose corpus write already landed is detected the same
-        # way store replays are. parquet min/max stats on batch_key make
-        # the probe a footer-only read at scale.
-        done = maybe_replay[0] and _has_parquet(out_dir) and bool(
-            spark.read.parquet(out_dir)
-            .filter(F.col("batch_key") == key)
-            .take(1)
-        )
-        if not done:
-            (
-                novel.drop("fingerprint")
-                .withColumn("batch_key", F.lit(key))
-                .write.mode("append")
-                .parquet(out_dir)
-            )
-        maybe_replay[0] = False
+        # idempotent corpus append: a replay whose corpus write already
+        # landed appends nothing
+        append_once(out_dir, novel.drop("fingerprint"), key, maybe_replay)
 
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(source_dir)
+    return start_fold_stream(
+        spark, source_dir, schema, checkpoint_dir, fold, available_now
     )
-    writer = reader.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -34,23 +34,29 @@ verify candidates; stored as sorted-distinct shingle HASHES, 8-byte
 bigints, not strings — see ``docs()``). At cluster scale both become tables bucketed by
 their join keys; the payload side is the one worth co-locating.
 
-Idempotency contract = same as ``incremental_dedup``: replaying an
-already-applied batch_key leaves the store untouched and re-derives the
-same survivors from the store, so a crashed downstream write can retry.
+Idempotency is the fold-stream skeleton's (``streaming/fold.py``):
+replaying an already-applied batch_key leaves the store untouched and
+re-derives the same survivors from the store, so a crashed downstream
+write can retry.
 """
 
 from __future__ import annotations
-
-import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
 from ..operators import dedup
-from .incremental_dedup import _has_parquet, _recover_compact
 from ..plans.empty import empty_local_frame
+from ..storefs import fs_for
+from .fold import (
+    _has_parquet,
+    _recover_compact,
+    append_once,
+    batch_landed,
+    rewrite_dir,
+    start_fold_stream,
+)
 
 
 # On-disk payload format of the docs/ side. v2 (r13): sorted-distinct
@@ -65,7 +71,8 @@ class LshStore:
     """Persistent LSH index: bucket keys + shingle payloads.
 
     The docs/ payload format is stamped in a ``_format_version`` marker
-    (underscore-prefixed: invisible to parquet readers). A non-empty
+    (underscore-prefixed: invisible to parquet readers), written through
+    the storefs seam's crash-safe ``write_text_atomic``. A non-empty
     store whose stamp is missing or different was written by another
     code version — constructing the store raises rather than letting a
     mixed-format verify return wrong candidates."""
@@ -73,17 +80,17 @@ class LshStore:
     def __init__(self, path: str, num_hashes: int = 8, band_size: int = 2):
         assert num_hashes % band_size == 0
         self.path = path
-        self.buckets_dir = os.path.join(path, "buckets")
-        self.docs_dir = os.path.join(path, "docs")
+        root = path.rstrip("/")
+        self.buckets_dir = f"{root}/buckets"
+        self.docs_dir = f"{root}/docs"
         self.num_hashes = num_hashes
         self.band_size = band_size
-        os.makedirs(self.buckets_dir, exist_ok=True)
-        os.makedirs(self.docs_dir, exist_ok=True)
-        marker = os.path.join(path, "_format_version")
+        fs = fs_for(path)
+        fs.mkdirs(self.buckets_dir)
+        fs.mkdirs(self.docs_dir)
         found = None
-        if os.path.exists(marker):
-            with open(marker) as f:
-                found = f.read().strip()
+        if "_format_version" in fs.listnames(path):
+            found = fs.read_text(f"{root}/_format_version").strip()
         if found is None and (
             _has_parquet(self.buckets_dir) or _has_parquet(self.docs_dir)
         ):
@@ -96,17 +103,14 @@ class LshStore:
                 "read it with the matching release"
             )
         if found is None:
-            # temp file + os.replace: a crash mid-write leaves a
-            # dot-prefixed partial temp (never read), not a torn marker
-            tmp = os.path.join(path, f"._format_version.tmp-{uuid.uuid4().hex[:8]}")
-            with open(tmp, "w") as f:
-                f.write(str(LSH_STORE_FORMAT_VERSION))
-            os.replace(tmp, marker)
+            fs.write_text_atomic(
+                path, "_format_version", str(LSH_STORE_FORMAT_VERSION)
+            )
 
     def buckets(self, spark: SparkSession) -> DataFrame:
         _recover_compact(self.buckets_dir)
         if not _has_parquet(self.buckets_dir):
-            # LocalRelation-empty: see FingerprintStore._empty (r14)
+            # LocalRelation-empty: see FingerprintStore.schema
             return empty_local_frame(spark, "band int, bucket string, doc_id bigint")
         return spark.read.parquet(self.buckets_dir)
 
@@ -123,12 +127,7 @@ class LshStore:
 
     def has_batch(self, spark: SparkSession, batch_key: str) -> bool:
         _recover_compact(self.docs_dir)
-        # empty store holds no batch: answer driver-side, zero jobs
-        if not _has_parquet(self.docs_dir):
-            return False
-        return bool(
-            self.docs(spark).filter(F.col("batch_key") == batch_key).take(1)
-        )
+        return batch_landed(spark, self.docs_dir, batch_key)
 
     def append(
         self, buckets: DataFrame, docs: DataFrame
@@ -144,21 +143,9 @@ class LshStore:
 
     def file_count(self) -> int:
         """Parquet data files across both stores — the candidate join's
-        per-batch file-open cost, and maybe_compact's trigger metric.
-
-        LOCAL-FS CONTRACT (same as compact()'s rename-swap): counts via
-        ``os.listdir`` of the flat store dirs. On an object store or
-        with nested partition dirs this reads 0 and maybe_compact never
-        fires — the whole store class assumes a POSIX path (the
-        streaming tests' model); a cluster deployment would back the
-        store with a table format (see the Delta seam in
-        operators/upsert.py) rather than grow this class."""
+        per-batch file-open cost, and maybe_compact's trigger metric."""
         return sum(
-            1
-            for d in (self.buckets_dir, self.docs_dir)
-            if os.path.isdir(d)
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
+            fs_for(d).count_parquet(d) for d in (self.buckets_dir, self.docs_dir)
         )
 
     def maybe_compact(
@@ -192,8 +179,6 @@ class LshStore:
         with an in-flight append — the rewrite is not transactional).
         The two-rename swap's crash windows are covered by
         ``_recover_compact`` at every store read and compact start."""
-        import shutil
-
         _recover_compact(self.buckets_dir)
         _recover_compact(self.docs_dir)
         live_ids = None
@@ -211,13 +196,7 @@ class LshStore:
                     if live_ids is not None
                     else df.limit(0)
                 )
-            df = df.coalesce(files_per_store)
-            tmp = dir_ + ".compact"
-            df.write.mode("overwrite").parquet(tmp)
-            old = dir_ + ".old"
-            os.rename(dir_, old)
-            os.rename(tmp, dir_)
-            shutil.rmtree(old, ignore_errors=True)
+            rewrite_dir(dir_, df.coalesce(files_per_store))
 
 
 def _verified_jaccard(cand: DataFrame, threshold: float) -> DataFrame:
@@ -401,49 +380,21 @@ def start_incremental_lsh_dedup(
     bytes, never batch_key rows, so replay decisions are unchanged.
     Bounds the store's file count over an unbounded ingest; None
     disables."""
-    first = {"fresh": False}
 
-    def handle(batch_df, batch_id: int):
-        key = f"{checkpoint_dir}#{batch_id}"
+    def fold(batch_df, _batch_id, key, maybe_replay):
         if compact_max_files is not None:
             store.maybe_compact(spark, max_files=compact_max_files)
-        maybe_replay = not first["fresh"]
         novel = near_dedup_batch_against_store(
-            spark,
-            batch_df,
-            store,
-            threshold=threshold,
-            batch_key=key,
-            assume_fresh=first["fresh"],
+            spark, batch_df, store, threshold=threshold, batch_key=key,
+            assume_fresh=not maybe_replay,
         )
-        first["fresh"] = True  # only batch 1 after a restart can replay
-        # Idempotent corpus append (same probe as start_incremental_dedup):
-        # a replayed batch whose write already landed must not append its
-        # survivors a second time. Rows carry the batch key; parquet
-        # min/max stats make the probe a footer-only read at scale.
-        done = maybe_replay and _has_parquet(out_dir) and bool(
-            spark.read.parquet(out_dir)
-            .filter(F.col("batch_key") == key)
-            .take(1)
-        )
-        if not done:
-            (
-                novel.withColumn("batch_key", F.lit(key))
-                .write.mode("append")
-                .parquet(out_dir)
-            )
+        append_once(out_dir, novel, key, maybe_replay)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        # per-shard micro-batches (otherwise availableNow folds every
-        # waiting file into one batch and between-batch hooks like the
-        # compaction trigger never see the ingest grow)
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(source_dir)
-    writer = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
+    # max_files_per_trigger=None lets availableNow fold every waiting
+    # file into one batch; pass it for per-shard micro-batches, or
+    # between-batch hooks like the compaction trigger never see the
+    # ingest grow
+    return start_fold_stream(
+        spark, source_dir, schema, checkpoint_dir, fold, available_now,
+        max_files_per_trigger=max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

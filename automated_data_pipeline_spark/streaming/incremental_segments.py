@@ -16,18 +16,17 @@ O(batch-segments + matching-store-partitions):
 4. append novel hashes to the store; rebuild each document's kept text
    (novel segments, original order) for the curated corpus.
 
-Exactly-once mirrors ``incremental_dedup``: foreachBatch is
-at-least-once, so store appends are tagged with a deterministic batch
-key and a replayed batch RE-DERIVES its keep set from the store rows
-carrying that key (recomputing the anti join would see the batch's own
-hashes and keep nothing). The within-batch survivor rule is a pure
-function of the replayed batch rows, so the re-derived output is
-byte-identical.
+Exactly-once is the fold-stream skeleton's (``streaming/fold.py``):
+foreachBatch is at-least-once, so store and output appends are tagged
+with a deterministic batch key, and a replayed batch RE-DERIVES its
+keep set from the store rows carrying that key (recomputing the anti
+join would see the batch's own hashes and keep nothing). The
+within-batch survivor rule is a pure function of the replayed batch
+rows, so the re-derived output is byte-identical.
 
-Store layout mirrors ``FingerprintStore`` (append-only parquet,
-crash-safe compaction inherited unchanged); at cluster scale it
-becomes a table bucketed on ``seg_hash`` so the anti join prunes to
-matching buckets.
+The store is a ``FingerprintStore`` (append-only parquet, crash-safe
+compaction); at cluster scale it becomes a table bucketed on
+``seg_hash`` so the anti join prunes to matching buckets.
 """
 
 from __future__ import annotations
@@ -36,8 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.spans import segment_occurrences
-from .incremental_dedup import FingerprintStore, _has_parquet
-from ..plans.empty import empty_local_frame
+from .fold import append_once, start_fold_stream
+from .incremental_dedup import FingerprintStore
 
 
 class SegmentHashStore(FingerprintStore):
@@ -45,8 +44,7 @@ class SegmentHashStore(FingerprintStore):
     idempotent-append keying and crash-safe compact from
     ``FingerprintStore``."""
 
-    def _empty(self, spark: SparkSession) -> DataFrame:
-        return empty_local_frame(spark, "seg_hash bigint, batch_key string")
+    schema = "seg_hash bigint, batch_key string"
 
 
 def dedup_segments_against_store(
@@ -160,35 +158,14 @@ def start_incremental_segment_dedup(
     every file dropped in ``source_dir`` is a micro-batch; curated
     (segment-novel) documents land in ``out_dir``. Returns the started
     StreamingQuery."""
-    maybe_replay = [True]
 
-    def process(batch_df: DataFrame, batch_id: int):
-        key = f"{checkpoint_dir}#{batch_id}"
+    def fold(batch_df, _batch_id, key, maybe_replay):
         curated = dedup_segments_against_store(
             spark, batch_df, store, seg_words=seg_words, batch_key=key,
-            assume_fresh=not maybe_replay[0],
+            assume_fresh=not maybe_replay,
         )
-        done = maybe_replay[0] and _has_parquet(out_dir) and bool(
-            spark.read.parquet(out_dir)
-            .filter(F.col("batch_key") == key)
-            .take(1)
-        )
-        if not done:
-            (
-                curated.withColumn("batch_key", F.lit(key))
-                .write.mode("append")
-                .parquet(out_dir)
-            )
-        maybe_replay[0] = False
+        append_once(out_dir, curated, key, maybe_replay)
 
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(source_dir)
+    return start_fold_stream(
+        spark, source_dir, schema, checkpoint_dir, fold, available_now
     )
-    writer = reader.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

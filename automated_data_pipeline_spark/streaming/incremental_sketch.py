@@ -25,22 +25,21 @@ estimate is bit-identical.
 
 Store layout: append-only parquet of (group..., bucket, rho) register
 rows — one small file per micro-batch, max-reduced on read; `compact`
-rewrites to the reduced form (same crash-self-healing two-rename swap
-as ``incremental_dedup.FingerprintStore``). At cluster scale the
-append lands bucketed by group so the read-side reduce is
+rewrites to the reduced form (the fold-stream skeleton's
+crash-self-healing two-rename swap, ``streaming/fold.py``). At cluster
+scale the append lands bucketed by group so the read-side reduce is
 partition-local.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import sketches as SK
-from .incremental_dedup import _has_parquet, _recover_compact
 from ..plans.empty import empty_local_frame
+from ..storefs import fs_for
+from .fold import _has_parquet, _recover_compact, rewrite_dir, start_fold_stream
 
 
 class HllSketchStore:
@@ -51,18 +50,15 @@ class HllSketchStore:
         self.path = path
         self.group_cols = list(group_cols)
         self.p = p
-        os.makedirs(path, exist_ok=True)
-
-    def _empty(self, spark: SparkSession) -> DataFrame:
-        fields = ", ".join(f"{c} string" for c in self.group_cols)
-        return empty_local_frame(spark, f"{fields}, bucket bigint, rho int")
+        fs_for(path).mkdirs(path)
 
     def read_registers(self, spark: SparkSession) -> DataFrame:
         """Max-reduced register table (duplicate/replayed appends
         collapse here)."""
         _recover_compact(self.path)
         if not _has_parquet(self.path):
-            return self._empty(spark)
+            fields = ", ".join(f"{c} string" for c in self.group_cols)
+            return empty_local_frame(spark, f"{fields}, bucket bigint, rho int")
         return (
             spark.read.parquet(self.path)
             .groupBy(*self.group_cols, "bucket")
@@ -88,18 +84,11 @@ class HllSketchStore:
         (bounded at groups × 2^p rows). Not safe concurrently with an
         ingest; every crash window self-heals via ``_recover_compact``
         exactly as the fingerprint/LSH stores do."""
-        import shutil
-
         _recover_compact(self.path)
-        if not _has_parquet(self.path):
-            return
-        reduced = self.read_registers(spark).coalesce(n_files)
-        tmp = self.path.rstrip("/") + ".compact"
-        reduced.write.mode("overwrite").parquet(tmp)
-        old = self.path.rstrip("/") + ".old"
-        os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
+        if _has_parquet(self.path):
+            rewrite_dir(
+                self.path, self.read_registers(spark).coalesce(n_files)
+            )
 
 
 def start_incremental_hll(
@@ -114,24 +103,15 @@ def start_incremental_hll(
     """Wire the register store to a file-source stream: every file in
     ``source_dir`` is a micro-batch whose items merge into the store.
     ``item_expr`` is a Column producing the distinct-counted item from
-    a batch row. Returns the started StreamingQuery."""
+    a batch row. No replay probe: the read-side MAX absorbs a replayed
+    batch's registers. Returns the started StreamingQuery."""
 
-    def process(batch_df: DataFrame, batch_id: int):
+    def fold(batch_df, *_):
         store.merge_batch(
-            batch_df.select(
-                *store.group_cols, item_expr.alias("_item")
-            ),
+            batch_df.select(*store.group_cols, item_expr.alias("_item")),
             F.col("_item"),
         )
 
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(source_dir)
+    return start_fold_stream(
+        spark, source_dir, schema, checkpoint_dir, fold, available_now
     )
-    writer = reader.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

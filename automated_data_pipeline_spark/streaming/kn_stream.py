@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TX
 from .incremental_dedup import FingerprintStore
-from ..plans.empty import empty_local_frame
 
 
 class BigramStore(FingerprintStore):
@@ -43,12 +42,7 @@ class BigramStore(FingerprintStore):
     (doc_id, w1, w2, c) per batch; inherits the idempotent-append
     keying and crash-safe compaction."""
 
-    def _empty(self, spark: SparkSession) -> DataFrame:
-        return empty_local_frame(
-            spark,
-            "doc_id bigint, w1 string, w2 string, c bigint, "
-            "batch_key string",
-        )
+    schema = "doc_id bigint, w1 string, w2 string, c bigint, batch_key string"
 
 
 def batch_bigrams(

@@ -26,8 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
+from .fold import start_fold_stream
 from .incremental_dedup import FingerprintStore
-from ..plans.empty import empty_local_frame
 
 
 class GramDocStore(FingerprintStore):
@@ -35,8 +35,7 @@ class GramDocStore(FingerprintStore):
     DISTINCT at read time is the idempotent merge (no batch_key —
     replays are value-identical appends)."""
 
-    def _empty(self, spark: SparkSession) -> DataFrame:
-        return empty_local_frame(spark, "doc_id bigint, source string, gh bigint")
+    schema = "doc_id bigint, source string, gh bigint"
 
     def read_distinct(self, spark: SparkSession) -> DataFrame:
         return self.read(spark).select("doc_id", "source", "gh").distinct()
@@ -127,17 +126,9 @@ def start_incremental_novelty(
     to the store. No replay probe — a replayed batch appends rows the
     read-time DISTINCT absorbs. Returns the started StreamingQuery."""
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def fold(batch_df, *_):
         store.append(batch_doc_grams(batch_df, text_col=text_col))
 
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(source_dir)
+    return start_fold_stream(
+        spark, source_dir, schema, checkpoint_dir, fold, available_now
     )
-    writer = reader.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

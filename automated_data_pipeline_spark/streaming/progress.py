@@ -10,7 +10,7 @@ StreamingQueryListener receives each batch's ``numInputRows`` the
 moment the batch commits, and this tracker folds them into a
 cumulative per-stream progress row in the control store. Progress is
 best-effort exactly like the reference: a failed update never fails
-the stream.
+the stream, and is logged as a warning with the query and batch id.
 
 Usage::
 
@@ -28,9 +28,12 @@ Progress is queryable two ways:
 
 from __future__ import annotations
 
+import logging
 import threading
 
 from pyspark.sql.streaming import StreamingQueryListener
+
+log = logging.getLogger(__name__)
 
 
 class StreamProgressTracker(StreamingQueryListener):
@@ -84,8 +87,11 @@ class StreamProgressTracker(StreamingQueryListener):
                     step_name="StreamProgress",
                     details=qid,
                 )
-            except Exception:
-                pass
+            except Exception as exc:  # noqa: BLE001 — best effort, see above
+                log.warning(
+                    "stream progress log failed for query %s batch %s: %s",
+                    qid, p.batchId, exc,
+                )
 
     def onQueryIdle(self, event):
         pass

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.quality import rule_report
+from .fold import append_once, fold_handler
 
 
 def batch_quality_report(
@@ -55,41 +56,21 @@ def attach_quality_monitor(
     foreachBatch shape.
 
     ``run_key`` scopes replay detection (pass the query's checkpoint
-    dir, mirroring incremental_dedup's ``checkpoint#batch`` keys): with
+    dir, the fold-stream skeleton's ``checkpoint#batch`` keys): with
     the default ''-scope, a checkpoint reset — which restarts batch ids
     at 0 — or a second query sharing ``metrics_path`` would collide
     with the old ids and silently skip genuine reports.
 
     Pass ``handler=None`` to monitor without any downstream processing.
     """
-    from .incremental_dedup import _has_parquet
 
-    # only the first batch after a (re)start can be a replay of a
-    # crashed attempt; steady-state batches skip the probe read
-    maybe_replay = [True]
-
-    def wrapped(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        key = f"{run_key}#{int(batch_id)}"
-        already = (
-            maybe_replay[0]
-            and _has_parquet(metrics_path)
-            and bool(
-                spark.read.parquet(metrics_path)
-                .filter(F.col("batch_key") == key)
-                .take(1)
-            )
-        )
-        maybe_replay[0] = False
-        if not already:
-            report = batch_quality_report(
-                batch_df, batch_id, table, rules
-            ).withColumn("batch_key", F.lit(key))
-            report.write.mode("append").parquet(metrics_path)
+    def fold(batch_df, batch_id, key, maybe_replay):
+        report = batch_quality_report(batch_df, batch_id, table, rules)
+        append_once(metrics_path, report, key, maybe_replay)
         if handler is not None:
             handler(batch_df, batch_id)
 
-    return wrapped
+    return fold_handler(run_key, fold)
 
 
 def read_quality_metrics(spark, metrics_path: str) -> DataFrame:

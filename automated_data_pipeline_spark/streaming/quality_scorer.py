@@ -19,10 +19,10 @@ any number of micro-batches MERGE EXACTLY into the batch operator's
 corpus-wide histogram — the batch≡stream invariant is integer
 equality, pytest-pinned (tests/test_quality_scorer_stream.py).
 
-Exactly-once mirrors ``quality_monitor``: foreachBatch is
-at-least-once, so appends are tagged with a deterministic
-``run_key#batch_id`` key and only the first batch after a (re)start
-pays the replay probe read.
+Exactly-once is the fold-stream skeleton's (``streaming/fold.py``):
+foreachBatch is at-least-once, so appends are tagged with a
+deterministic ``run_key#batch_id`` key and only the first batch after
+a (re)start pays the replay probe read.
 """
 
 from __future__ import annotations
@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.quality_model import score_quality
+from .fold import Fold, append_once, fold_handler, start_fold_stream
 
 
 def batch_score_summary(
@@ -87,28 +88,15 @@ def attach_quality_scorer(
     ``attach_quality_monitor`` (pass the query's checkpoint dir): a
     checkpoint reset restarts batch ids at 0, and a second query
     sharing ``metrics_path`` would collide with the old ids."""
-    from .incremental_dedup import _has_parquet
+    return fold_handler(
+        run_key, _scorer_fold(handler, metrics_path, text_col, bias, coefs)
+    )
 
-    maybe_replay = [True]
 
-    def wrapped(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        key = f"{run_key}#{int(batch_id)}"
-        already = (
-            maybe_replay[0]
-            and _has_parquet(metrics_path)
-            and bool(
-                spark.read.parquet(metrics_path)
-                .filter(F.col("batch_key") == key)
-                .take(1)
-            )
-        )
-        maybe_replay[0] = False
-        if not already:
-            summary = batch_score_summary(
-                batch_df, batch_id, text_col, bias, coefs
-            ).withColumn("batch_key", F.lit(key))
-            summary.write.mode("append").parquet(metrics_path)
+def _scorer_fold(handler, metrics_path, text_col, bias, coefs) -> Fold:
+    def fold(batch_df, batch_id, key, maybe_replay):
+        summary = batch_score_summary(batch_df, batch_id, text_col, bias, coefs)
+        append_once(metrics_path, summary, key, maybe_replay)
         if handler is not None:
             handler(
                 score_quality(
@@ -118,7 +106,7 @@ def attach_quality_scorer(
                 batch_id,
             )
 
-    return wrapped
+    return fold
 
 
 def start_quality_score_stream(
@@ -135,20 +123,11 @@ def start_quality_score_stream(
     """Wire the scorer as a file-source stream: every file dropped in
     ``source_dir`` is a micro-batch; per-batch decile summaries land
     in ``metrics_path``. Returns the started StreamingQuery."""
-    handler = attach_quality_scorer(
-        None, metrics_path, text_col, bias, coefs, run_key=checkpoint_dir
+    return start_fold_stream(
+        spark, source_dir, schema, checkpoint_dir,
+        _scorer_fold(None, metrics_path, text_col, bias, coefs),
+        available_now,
     )
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(source_dir)
-    )
-    writer = reader.writeStream.foreachBatch(handler).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def merged_score_histogram(spark: SparkSession, metrics_path: str) -> DataFrame:

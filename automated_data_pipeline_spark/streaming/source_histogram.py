@@ -25,8 +25,8 @@ Everything is integer arithmetic until the final two divisions, so
 any micro-batch split reproduces the batch report exactly —
 pytest-pinned (tests/test_source_histogram_stream.py).
 
-Store mechanics inherit the incremental-store lineage
-(``FingerprintStore``): idempotent appends under a deterministic
+Store mechanics are the fold-stream skeleton's (``streaming/fold.py``,
+a ``FingerprintStore``): idempotent appends under a deterministic
 batch key, crash-safe compaction, O(batch) per increment. Store
 growth is O(sources x distinct-scores x batches) rows — still tiny
 (the 1e-4 grid bounds distinct scores at 10001 per source), and at
@@ -40,16 +40,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.quality_model import score_quality
+from .fold import start_fold_stream
 from .incremental_dedup import FingerprintStore
-from ..plans.empty import empty_local_frame
 
 
 class SourceScoreHistogramStore(FingerprintStore):
     """Append-only parquet per-(source, score) integer counts;
     inherits the idempotent-append keying and crash-safe compact."""
 
-    def _empty(self, spark: SparkSession) -> DataFrame:
-        return empty_local_frame(spark, "source string, p_i bigint, n_docs bigint, batch_key string")
+    schema = "source string, p_i bigint, n_docs bigint, batch_key string"
 
 
 def batch_source_histogram(
@@ -191,25 +190,14 @@ def start_source_histogram_stream(
     """Wire the histogram as a file-source stream: every file dropped
     in ``source_dir`` is a micro-batch folded into the store. Returns
     the started StreamingQuery."""
-    maybe_replay = [True]
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        key = f"{checkpoint_dir}#{int(batch_id)}"
+    def fold(batch_df, _batch_id, key, maybe_replay):
         update_source_histogram(
             spark, batch_df, store, text_col=text_col, bias=bias,
             coefs=coefs, source_col=source_col, batch_key=key,
-            assume_fresh=not maybe_replay[0],
+            assume_fresh=not maybe_replay,
         )
-        maybe_replay[0] = False
 
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(source_dir)
+    return start_fold_stream(
+        spark, source_dir, schema, checkpoint_dir, fold, available_now
     )
-    writer = reader.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

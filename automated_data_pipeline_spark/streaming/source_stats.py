@@ -10,8 +10,8 @@ of everything ingested so far. Re-scanning 100 TB per increment is the
 wrong cost model; each micro-batch here pays O(batch) + an
 O(sources-in-batch) append.
 
-Mechanics mirror the other incremental stores (``FingerprintStore``
-lineage): one row per (source, batch_key) carrying EXACT-integer
+Mechanics are the fold-stream skeleton's (``streaming/fold.py``, a
+``FingerprintStore``): one row per (source, batch_key) carrying EXACT-integer
 aggregates (``n_docs``, ``chars_total``, ``sum_p_i`` in 1e-4 score
 units — the ``quality_scorer`` convention), appended idempotently
 under a deterministic batch key; a replayed batch is detected by its
@@ -35,20 +35,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.quality_model import score_quality
+from .fold import start_fold_stream
 from .incremental_dedup import FingerprintStore
-from ..plans.empty import empty_local_frame
 
 
 class SourceStatsStore(FingerprintStore):
     """Append-only parquet per-source integer accumulators; inherits
     the idempotent-append keying and crash-safe compact."""
 
-    def _empty(self, spark: SparkSession) -> DataFrame:
-        return empty_local_frame(
-            spark,
-            "source string, n_docs bigint, chars_total bigint, "
-            "sum_p_i bigint, batch_key string",
-        )
+    schema = (
+        "source string, n_docs bigint, chars_total bigint, "
+        "sum_p_i bigint, batch_key string"
+    )
 
 
 def batch_source_stats(
@@ -153,25 +151,14 @@ def start_source_stats_stream(
     """Wire the accumulator as a file-source stream: every file dropped
     in ``source_dir`` is a micro-batch folded into the store. Returns
     the started StreamingQuery."""
-    maybe_replay = [True]
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        key = f"{checkpoint_dir}#{int(batch_id)}"
+    def fold(batch_df, _batch_id, key, maybe_replay):
         update_source_stats(
             spark, batch_df, store, text_col=text_col, bias=bias,
             coefs=coefs, source_col=source_col, batch_key=key,
-            assume_fresh=not maybe_replay[0],
+            assume_fresh=not maybe_replay,
         )
-        maybe_replay[0] = False
 
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(source_dir)
+    return start_fold_stream(
+        spark, source_dir, schema, checkpoint_dir, fold, available_now
     )
-    writer = reader.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

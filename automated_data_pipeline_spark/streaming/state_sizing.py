@@ -98,7 +98,13 @@ def volume_sized_shuffle(
     """Set ``spark.sql.shuffle.partitions`` to the volume-derived width
     around a streaming query START (the width is snapshotted into the
     new query's checkpoint there), restoring the session value after.
-    Yields the width chosen."""
+    Yields the width chosen.
+
+    This flips SESSION-GLOBAL conf: any other query started or planned
+    on the same session while the block is open (another thread, a
+    concurrent stream start) picks up this width too. Not safe with
+    concurrent query starts; use it only where one thread owns the
+    session, as the bench harness does."""
     n = state_partitions_for(
         spark, *paths, target_bytes=target_bytes, floor=floor,
         cap_factor=cap_factor,

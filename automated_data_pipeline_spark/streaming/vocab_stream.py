@@ -23,16 +23,15 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TX
 from ..functions.stats import portable_round
+from .fold import start_fold_stream
 from .incremental_dedup import FingerprintStore
-from ..plans.empty import empty_local_frame
 
 
 class VocabCountStore(FingerprintStore):
     """Append-only parquet per-(lang, tok) integer token counts;
     inherits the idempotent-append keying and crash-safe compaction."""
 
-    def _empty(self, spark: SparkSession) -> DataFrame:
-        return empty_local_frame(spark, "lang string, tok string, cnt bigint, batch_key string")
+    schema = "lang string, tok string, cnt bigint, batch_key string"
 
 
 def batch_vocab_counts(
@@ -157,24 +156,13 @@ def start_incremental_vocab(
     (Spark's recovery contract — the only possible replay is the last
     uncommitted batch, which IS the restart batch). Returns the
     started StreamingQuery."""
-    maybe_replay = [True]
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def fold(batch_df, _batch_id, key, maybe_replay):
         update_vocab_counts(
             spark, batch_df, store, text_col=text_col, lang_col=lang_col,
-            batch_key=f"{checkpoint_dir}#{int(batch_id)}",
-            assume_fresh=not maybe_replay[0],
+            batch_key=key, assume_fresh=not maybe_replay,
         )
-        maybe_replay[0] = False
 
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(source_dir)
+    return start_fold_stream(
+        spark, source_dir, schema, checkpoint_dir, fold, available_now
     )
-    writer = reader.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

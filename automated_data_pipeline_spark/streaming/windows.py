@@ -35,28 +35,6 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            # keep the end too: sliding windows overlap, so start alone
-            # cannot identify the interval without out-of-band knowledge
-            # of the window width
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n",
-        )
-    )
-
-
 def session_counts(
     events: DataFrame, gap: str = "30 minutes", watermark: str = "10 minutes"
 ) -> DataFrame:

@@ -32,10 +32,7 @@ from .incremental_dedup import FingerprintStore
 class WinnowStore(FingerprintStore):
     """Append-only parquet exploded winnowing fingerprints."""
 
-    def _empty(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(
-            [], "f bigint, doc_id bigint, batch_key string"
-        )
+    schema = "f bigint, doc_id bigint, batch_key string"
 
 
 def batch_fingerprints(

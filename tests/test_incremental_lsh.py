@@ -321,9 +321,10 @@ def test_format_version_stamp(spark, tmp_path):
 
 
 def test_format_version_marker_written_atomically(tmp_path):
-    """The marker goes through a dot-prefixed temp file + os.replace: a
-    crash mid-write leaves only a partial temp, which neither a valid
-    store's reopen nor a fresh store's first open trips over."""
+    """The marker goes through storefs ``write_text_atomic`` (a
+    dot-prefixed temp file + rename): a crash mid-write leaves only a
+    partial temp, which neither a valid store's reopen nor a fresh
+    store's first open trips over."""
     from automated_data_pipeline_spark.streaming.incremental_lsh import (
         LSH_STORE_FORMAT_VERSION,
     )
@@ -333,15 +334,15 @@ def test_format_version_marker_written_atomically(tmp_path):
     marker = os.path.join(root, "_format_version")
     assert [f for f in os.listdir(root) if f.startswith(".")] == []
     # a crashed later write left a partial temp marker beside the valid one
-    with open(os.path.join(root, "._format_version.tmp-deadbeef"), "w") as f:
+    with open(os.path.join(root, ".tmp-_format_version"), "w") as f:
         f.write("9")
     LshStore(root)
     with open(marker) as f:
         assert f.read().strip() == str(LSH_STORE_FORMAT_VERSION)
-    # a crash before the first os.replace: only the partial temp exists
+    # a crash before the first rename: only the partial temp exists
     fresh = str(tmp_path / "fresh")
     os.makedirs(fresh)
-    with open(os.path.join(fresh, "._format_version.tmp-deadbeef"), "w") as f:
+    with open(os.path.join(fresh, ".tmp-_format_version"), "w") as f:
         f.write("")
     LshStore(fresh)
     with open(os.path.join(fresh, "_format_version")) as f:

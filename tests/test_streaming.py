@@ -4,6 +4,7 @@ sinks."""
 
 from __future__ import annotations
 
+import logging
 import os
 import textwrap
 import time
@@ -410,6 +411,34 @@ def test_stream_progress_tracker_cumulative_and_logged(spark, tmp_path, workdir)
         assert logs and any("30 total" in r["message"] for r in logs)
     finally:
         spark.streams.removeListener(tracker)
+
+
+def test_stream_progress_tracker_warns_on_failed_control_write(spark, caplog):
+    """Progress stays best effort — a control store whose ``log``
+    raises never fails the stream — but the failure is logged with the
+    query and batch id instead of being swallowed."""
+    from types import SimpleNamespace
+
+    from automated_data_pipeline_spark.streaming.progress import (
+        StreamProgressTracker,
+    )
+
+    class DownControl:
+        def log(self, **_kw):
+            raise OSError("control store down")
+
+    tracker = StreamProgressTracker(DownControl(), pipeline_name="ProgressTest")
+    event = SimpleNamespace(progress=SimpleNamespace(
+        id="q-1", name="prog", numInputRows=5, batchId=3,
+    ))
+    with caplog.at_level(logging.WARNING):
+        tracker.onQueryProgress(event)
+    assert tracker.snapshot()["q-1"]["rows"] == 5
+    warned = [r.getMessage() for r in caplog.records
+              if r.levelno == logging.WARNING]
+    assert len(warned) == 1
+    assert "q-1" in warned[0] and "batch 3" in warned[0]
+    assert "control store down" in warned[0]
 
 
 def test_fingerprint_store_compaction(spark, tmp_path):
