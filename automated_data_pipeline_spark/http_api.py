@@ -63,11 +63,13 @@ Design notes:
 from __future__ import annotations
 
 import json
+import logging
 import os
 import re
 import threading
 import time
 import urllib.parse
+import uuid
 from datetime import date, datetime
 from email.parser import BytesParser
 from email.policy import default as email_default_policy
@@ -77,6 +79,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from . import api, web
+
+log = logging.getLogger(__name__)
 
 
 def _jsonable(v):
@@ -177,20 +181,24 @@ class PipelineApiServer:
             )
         )
 
-    def trigger(self, filename: str, payload: bytes) -> dict:
+    def _save_upload(self, prefix: str, filename: str, payload: bytes) -> str:
+        """Validate an uploaded file and save it to the landing dir as
+        ``{prefix}_{ms}_{uuid8}{ext}``; returns the saved path. The
+        timestamp + uuid suffix keeps two uploads in the same
+        millisecond from overwriting each other."""
         api.validate_upload(filename, len(payload))
-        import uuid
-
         ext = os.path.splitext(filename)[1].lower() or ".csv"
         os.makedirs(self.landing_dir, exist_ok=True)
-        # timestamp + uuid suffix: two concurrent uploads in the same
-        # millisecond must not collide and silently overwrite each other
         saved = os.path.join(
             self.landing_dir,
-            f"upload_{int(time.time() * 1000)}_{uuid.uuid4().hex[:8]}{ext}",
+            f"{prefix}_{int(time.time() * 1000)}_{uuid.uuid4().hex[:8]}{ext}",
         )
         with open(saved, "wb") as f:
             f.write(payload)
+        return saved
+
+    def trigger(self, filename: str, payload: bytes) -> dict:
+        saved = self._save_upload("upload", filename, payload)
         run_id = str(uuid.uuid4())
         # create the control rows SYNCHRONOUSLY so a client that polls
         # GET /runs/{id} right after the 201 finds the Running row
@@ -249,20 +257,9 @@ class PipelineApiServer:
         source_path directly instead of a file. Validation happens in
         ScheduleRunner.add (compute_next_run raises on malformed
         fields -> 400)."""
-        import uuid
-
         source_path = fields.get("source_path") or fields.get("sourcePath")
         if file is not None:
-            fname, payload = file
-            api.validate_upload(fname, len(payload))
-            ext = os.path.splitext(fname)[1].lower() or ".csv"
-            os.makedirs(self.landing_dir, exist_ok=True)
-            source_path = os.path.join(
-                self.landing_dir,
-                f"schedule_{int(time.time() * 1000)}_{uuid.uuid4().hex[:8]}{ext}",
-            )
-            with open(source_path, "wb") as f:
-                f.write(payload)
+            source_path = self._save_upload("schedule", *file)
         now = datetime.utcnow()
 
         def as_int(v):
@@ -347,17 +344,7 @@ class PipelineApiServer:
     def upload_file(self, filename: str, payload: bytes) -> dict:
         """POST /pipeline/upload: save to landing WITHOUT triggering a
         run; returns the saved path (ApiServlet.java:283-326)."""
-        import uuid
-
-        api.validate_upload(filename, len(payload))
-        ext = os.path.splitext(filename)[1].lower() or ".csv"
-        os.makedirs(self.landing_dir, exist_ok=True)
-        saved = os.path.join(
-            self.landing_dir,
-            f"upload_{int(time.time() * 1000)}_{uuid.uuid4().hex[:8]}{ext}",
-        )
-        with open(saved, "wb") as f:
-            f.write(payload)
+        saved = self._save_upload("upload", filename, payload)
         return {"path": os.path.abspath(saved)}
 
     # -- lifecycle ----------------------------------------------------
@@ -402,14 +389,6 @@ def parse_multipart_form(content_type: str, body: bytes):
     return fields, file
 
 
-def parse_multipart_file(content_type: str, body: bytes):
-    """Extract (filename, payload) of the ``file`` form field from a
-    multipart/form-data body. Returns None when no file part is
-    present."""
-    _fields, file = parse_multipart_form(content_type, body)
-    return file
-
-
 def _make_handler(srv: PipelineApiServer):
     class Handler(BaseHTTPRequestHandler):
         server_version = "PipelineApi/1.0"
@@ -425,6 +404,13 @@ def _make_handler(srv: PipelineApiServer):
             self.send_header("Access-Control-Allow-Origin", "*")
             self.end_headers()
             self.wfile.write(data)
+
+        def _fail(self, e: Exception) -> None:
+            """The catch-all 500 (server.js parity): the body carries
+            the error text, the server log the traceback with the
+            request method and path (``log_message`` is silenced)."""
+            log.exception("%s %s failed", self.command, self.path)
+            self._send(500, {"error": str(e)})
 
         def _send_html(self, code: int, page: str) -> None:
             data = page.encode()
@@ -528,7 +514,7 @@ def _make_handler(srv: PipelineApiServer):
                     return self._send(200, srv.check_running_status())
                 return self._send(404, {"error": "Not found"})
             except Exception as e:  # mirror server.js catch-all 500
-                return self._send(500, {"error": str(e)})
+                return self._fail(e)
 
         def _read_body_guarded(self):
             """Read the request body with the Content-Length guards
@@ -572,7 +558,7 @@ def _make_handler(srv: PipelineApiServer):
             + ?filename=; sends the 400 and returns None otherwise."""
             ctype = self.headers.get("Content-Type", "")
             if ctype.startswith("multipart/form-data"):
-                got = parse_multipart_file(ctype, body)
+                _fields, got = parse_multipart_form(ctype, body)
                 if got is not None:
                     return got
             else:
@@ -658,7 +644,7 @@ def _make_handler(srv: PipelineApiServer):
                     return self._send(code, out)
                 return self._send(404, {"error": "Not found"})
             except Exception as e:
-                return self._send(500, {"error": str(e)})
+                return self._fail(e)
 
         def do_PUT(self):
             try:
@@ -684,7 +670,7 @@ def _make_handler(srv: PipelineApiServer):
                     return self._send(200, {"ok": True})
                 return self._send(404, {"error": "Not found"})
             except Exception as e:
-                return self._send(500, {"error": str(e)})
+                return self._fail(e)
 
         def do_DELETE(self):
             try:
@@ -704,6 +690,6 @@ def _make_handler(srv: PipelineApiServer):
                     return self._send(200, {"ok": True})
                 return self._send(404, {"error": "Not found"})
             except Exception as e:
-                return self._send(500, {"error": str(e)})
+                return self._fail(e)
 
     return Handler

@@ -47,6 +47,12 @@ corpus, and the tombstone store dies with the old generation (the new
 one starts clean). At 100 TB the build cost is the one unavoidable
 full-corpus pass (sample-train + assign/encode + partitioned write);
 the swap itself is two metadata renames.
+
+Layout: every directory this module touches (data, ``tombstones``,
+``ingest_ledger``, ``drift``), the ``ivf_cluster`` partitioning and
+the family check come from the persisted index layout declared once
+in ``operators/similarity.py`` (``index_layout``); the rebuild writes
+through ``streaming/ann_ingest``'s ``write_*_for_ingest`` writers.
 """
 
 from __future__ import annotations
@@ -67,13 +73,6 @@ from ..streaming.fold import (
 from . import similarity
 from ..plans.empty import empty_local_frame
 
-FAMILIES = ("ivf", "ivfpq", "pq", "sq8")
-
-# which parquet dir inside the index holds the (growing) row data, and
-# whether it is cluster-partitioned
-_DATA_DIR = {"ivf": "corpus", "ivfpq": "corpus", "pq": "codes", "sq8": "codes"}
-_PARTITIONED = {"ivf": True, "ivfpq": True, "pq": False, "sq8": False}
-
 
 def add_tombstones(
     spark: SparkSession,
@@ -92,7 +91,7 @@ def add_tombstones(
         ids = spark.createDataFrame(
             [(int(i),) for i in ids], f"{id_col} bigint"
         )
-    tomb_dir = f"{index_path}/tombstones"
+    tomb_dir = similarity.index_dir(index_path, similarity.TOMBSTONES)
     _recover_compact(tomb_dir)
     ids.select(id_col).write.mode("append").parquet(tomb_dir)
 
@@ -102,7 +101,7 @@ def read_tombstones(
 ) -> DataFrame:
     """The current deletion set (distinct ids; empty frame when the
     index has none)."""
-    tomb_dir = f"{index_path}/tombstones"
+    tomb_dir = similarity.index_dir(index_path, similarity.TOMBSTONES)
     _recover_compact(tomb_dir)
     if not _has_parquet(tomb_dir):
         return empty_local_frame(spark, f"{id_col} bigint")
@@ -115,8 +114,7 @@ def record_applied_batch_keys(
     """Append ingest batch_keys to the index's applied-batch ledger —
     the replay probe's purge-proof memory (see the module docstring:
     corpus batch_key stamps die with physical purges; ledger entries
-    don't). ``keys`` is a DataFrame carrying ``batch_key`` or a plain
-    iterable of strings. Append-only + read-time DISTINCT, the same
+    don't). ``keys`` is an iterable of strings. Append-only + read-time DISTINCT, the same
     idempotent-merge convention as the tombstone store.
 
     Storage is driver-side newline-text, one file per append (written
@@ -128,15 +126,10 @@ def record_applied_batch_keys(
     bench, more than the appends it protects."""
     import uuid
 
-    if isinstance(keys, DataFrame):
-        keys = [
-            r["batch_key"]
-            for r in keys.select("batch_key").distinct().collect()
-        ]
     keys = [str(k) for k in keys if k is not None]
     if not keys:
         return
-    ledger = f"{index_path}/ingest_ledger"
+    ledger = similarity.index_dir(index_path, similarity.INGEST_LEDGER)
     fs = fs_for(ledger)
     fs.mkdirs(ledger)
     fs.write_text_atomic(
@@ -148,7 +141,7 @@ def applied_batch_key_set(index_path: str) -> set:
     """The distinct set of ingest batch_keys known applied to this
     index — the replay probe's membership test (driver-side, no Spark
     job; the ledger is O(batches) short strings)."""
-    ledger = f"{index_path}/ingest_ledger"
+    ledger = similarity.index_dir(index_path, similarity.INGEST_LEDGER)
     fs = fs_for(ledger)
     out: set = set()
     if not fs.isdir(ledger):
@@ -202,14 +195,13 @@ def compact_index(
 
     At 100 TB this runs as a periodic job per hot partition range;
     cadence note in PLANS.md."""
-    if family not in FAMILIES:
-        raise ValueError(f"unknown index family {family!r}; one of {FAMILIES}")
-    data_dir = f"{index_path}/{_DATA_DIR[family]}"
+    layout = similarity.index_layout(family)
+    data_dir = layout.data_dir(index_path)
     _recover_compact(index_path)  # heal a crashed generation swap first
     _recover_compact(data_dir)
     if not _has_parquet(data_dir):
         return
-    df = spark.read.parquet(data_dir)
+    df = layout.read_rows(spark, index_path)
     applied = None
     if purge_tombstones:
         # pin the applied set: the anti-join below evaluates lazily
@@ -219,21 +211,18 @@ def compact_index(
             eager=True
         )
         if tombs.take(1):
-            if "batch_key" in df.columns:
-                # a purge can erase EVERY row of an ingest batch — fold
-                # the pre-rewrite stamps into the ledger first so the
-                # streaming replay probe still sees the batch as
-                # applied (else a replay resurrects deleted vectors;
-                # module docstring). Before the swap: a crash after the
-                # swap must already have the ledger entry.
-                record_applied_batch_keys(
-                    spark, index_path,
-                    df.select("batch_key")
-                    .filter(F.col("batch_key") != "build").distinct(),
-                )
+            # a purge can erase EVERY row of an ingest batch — fold the
+            # pre-rewrite stamps into the ledger first so the streaming
+            # replay probe still sees the batch as applied (else a
+            # replay resurrects deleted vectors; module docstring).
+            # Before the swap: a crash after the swap must already have
+            # the ledger entry.
+            record_applied_batch_keys(
+                spark, index_path, sorted(_ingest_stamps(df))
+            )
             df = df.join(F.broadcast(tombs), id_col, "left_anti")
             applied = tombs
-    if _PARTITIONED[family]:
+    if layout.partitioned:
         if files_per_cluster <= 1:
             out = df.repartition(F.col("ivf_cluster"))
         else:
@@ -250,10 +239,7 @@ def compact_index(
             n_files, F.pmod(F.xxhash64(*df.columns), F.lit(n_files))
         )
     tmp = staged_path(data_dir)
-    writer = out.write.mode("overwrite")
-    if _PARTITIONED[family]:
-        writer = writer.partitionBy("ivf_cluster")
-    writer.parquet(tmp)
+    layout.writer(out, "overwrite").parquet(tmp)
     if not _has_parquet(tmp):
         # every row tombstoned: a partitionBy overwrite of an empty
         # frame writes no part files (only _SUCCESS) and the persisted
@@ -269,6 +255,15 @@ def compact_index(
     _consolidate_ledger(spark, index_path)
 
 
+def _ingest_stamps(rows: DataFrame) -> set:
+    """The ingest batch_keys stamped on an index's rows ('build' marks
+    base-index rows, not an ingest batch)."""
+    if "batch_key" not in rows.columns:
+        return set()
+    stamps = rows.select("batch_key").filter(F.col("batch_key") != "build")
+    return {r["batch_key"] for r in stamps.distinct().collect()}
+
+
 def _consolidate_ledger(spark: SparkSession, index_path: str) -> None:
     """Rewrite the applied-batch ledger's one-file-per-append pile into
     a single file (compaction housekeeping — the ledger is append-only
@@ -277,7 +272,7 @@ def _consolidate_ledger(spark: SparkSession, index_path: str) -> None:
     consolidated file is written (and visible) BEFORE the originals
     are removed, and duplicate keys are harmless under the read-time
     set union — any crash window leaves a superset, never a loss."""
-    ledger = f"{index_path}/ingest_ledger"
+    ledger = similarity.index_dir(index_path, similarity.INGEST_LEDGER)
     fs = fs_for(ledger)
     if not fs.isdir(ledger):
         return
@@ -308,7 +303,7 @@ def _trim_tombstones(
         .join(applied, id_col, "left_anti")
         .localCheckpoint(eager=True)
     )
-    tomb_dir = f"{index_path}/tombstones"
+    tomb_dir = similarity.index_dir(index_path, similarity.TOMBSTONES)
     if not leftover.take(1):
         fs_for(tomb_dir).rmtree(tomb_dir)
         return
@@ -329,9 +324,7 @@ def needs_compaction(
     Heals crashed swaps first (an index parked at '.old' would
     otherwise read as 0 files = False, and the compact_index call
     that would heal it never fires — the r10 review's finding)."""
-    if family not in FAMILIES:
-        raise ValueError(f"unknown index family {family!r}; one of {FAMILIES}")
-    data_dir = f"{index_path}/{_DATA_DIR[family]}"
+    data_dir = similarity.index_layout(family).data_dir(index_path)
     _recover_compact(index_path)
     _recover_compact(data_dir)
     return fs_for(data_dir).count_parquet(data_dir) > max_files
@@ -401,12 +394,15 @@ def rebuild_index_generation(
     generation's store and keeps applying at query time — deletions
     are never silently lost to the rebuild window (the r10 review's
     finding); they purge physically at the next compaction. Every
-    row of every family is stamped ``batch_key='build'`` so a
-    rebuilt index keeps the uniform schema the streaming-ingest
-    replay probe requires."""
-    if family not in FAMILIES:
-        raise ValueError(f"unknown index family {family!r}; one of {FAMILIES}")
-    if family in ("ivfpq", "pq") and dim is None:
+    row of every family is stamped ``batch_key='build'`` (the
+    ``write_*_for_ingest`` writers) so a rebuilt index keeps the
+    uniform schema the streaming-ingest replay probe requires."""
+    # lazy import: streaming.ann_ingest imports this module's sibling
+    # (similarity); keep the cycle call-time only
+    from ..streaming import ann_ingest
+
+    layout = similarity.index_layout(family)
+    if similarity.CODEBOOK in layout.side_tables and dim is None:
         raise ValueError("dim is required for the PQ families")
     _recover_compact(index_path)
     # pinned snapshot: the anti-join evaluates lazily during the
@@ -419,47 +415,33 @@ def rebuild_index_generation(
         live = corpus.join(F.broadcast(tombs), id_col, "left_anti")
     tmp = staged_path(index_path)
 
+    train = dict(
+        vec_col=vec_col, seed=seed, max_iter=max_iter,
+        train_fraction=train_fraction, train_cap=train_cap,
+    )
     if family == "ivf":
-        assigned, cent_df = similarity.ivf_index(
-            live, n_clusters, vec_col, seed, max_iter=max_iter,
-            train_fraction=train_fraction, train_cap=train_cap,
-        )
-        similarity.write_ivf_index(
-            assigned.withColumn("batch_key", F.lit("build")), cent_df, tmp
-        )
+        assigned, cent_df = similarity.ivf_index(live, n_clusters, **train)
+        ann_ingest.write_ivf_index_for_ingest(assigned, cent_df, tmp)
     elif family == "ivfpq":
         enc, cent_df, _, cb_df = similarity.ivfpq_index(
-            live, dim=dim, n_clusters=n_clusters, m=m, n_codes=n_codes,
-            vec_col=vec_col, seed=seed, max_iter=max_iter,
-            train_fraction=train_fraction, train_cap=train_cap,
+            live, dim=dim, n_clusters=n_clusters, m=m, n_codes=n_codes, **train
         )
-        similarity.write_ivfpq_index(
-            enc.withColumn("batch_key", F.lit("build")), cent_df, cb_df,
-            tmp, id_col=id_col,
+        ann_ingest.write_ivfpq_index_for_ingest(
+            enc, cent_df, cb_df, tmp, id_col=id_col
         )
     elif family == "pq":
         codebooks, cb_df = similarity.pq_train(
-            live, dim=dim, m=m, n_codes=n_codes, vec_col=vec_col,
-            seed=seed, max_iter=max_iter, train_fraction=train_fraction,
-            train_cap=train_cap,
+            live, dim=dim, m=m, n_codes=n_codes, **train
         )
         enc = similarity.pq_encode_pandas(live, codebooks, vec_col=vec_col)
-        similarity.write_pq_index(
-            enc.withColumn("batch_key", F.lit("build")), cb_df, tmp,
-            id_col=id_col,
-        )
+        ann_ingest.write_pq_index_for_ingest(enc, cb_df, tmp, id_col=id_col)
     else:  # sq8
-        similarity.write_sq8_index(
-            live.withColumn("batch_key", F.lit("build")), tmp,
-            id_col=id_col, vec_col=vec_col,
+        ann_ingest.write_sq8_index_for_ingest(
+            live, tmp, id_col=id_col, vec_col=vec_col
         )
 
     if record_baseline:
-        # lazy import: streaming.ann_ingest imports this module's
-        # sibling (similarity); keep the cycle call-time only
-        from ..streaming.ann_ingest import record_drift
-
-        record_drift(spark, tmp, live, "build", vec_col, family=family)
+        ann_ingest.record_drift(spark, tmp, live, "build", vec_col, family)
 
     # carry the applied-batch ledger into the new generation, folded
     # with every batch_key stamped on the OLD corpus: the rebuild
@@ -468,16 +450,9 @@ def rebuild_index_generation(
     # the old stamps — without the carry, the stream's last
     # uncommitted batch would re-append (worse: resurrect its
     # tombstoned rows). Materialized before any directory moves.
-    data_dir = f"{index_path}/{_DATA_DIR[family]}"
     led = applied_batch_key_set(index_path)
-    if _has_parquet(data_dir):
-        old_corpus = spark.read.parquet(data_dir)
-        if "batch_key" in old_corpus.columns:
-            led |= {
-                r["batch_key"]
-                for r in old_corpus.select("batch_key")
-                .filter(F.col("batch_key") != "build").distinct().collect()
-            }
+    if _has_parquet(layout.data_dir(index_path)):
+        led |= _ingest_stamps(layout.read_rows(spark, index_path))
     if led:
         record_applied_batch_keys(spark, tmp, sorted(led))
 
@@ -491,7 +466,9 @@ def rebuild_index_generation(
         .localCheckpoint(eager=True)
     )
     if late.take(1):
-        late.write.mode("overwrite").parquet(f"{tmp}/tombstones")
+        late.write.mode("overwrite").parquet(
+            similarity.index_dir(tmp, similarity.TOMBSTONES)
+        )
 
     swap_in_staged(index_path)
 
@@ -515,7 +492,7 @@ def rebuild_if_drifted(
     from ..streaming.ann_ingest import drift_report
 
     _recover_compact(index_path)
-    if not _has_parquet(f"{index_path}/drift"):
+    if not _has_parquet(similarity.index_dir(index_path, similarity.DRIFT)):
         return False
     rep = drift_report(spark, index_path, factor=factor)
     needs = bool(

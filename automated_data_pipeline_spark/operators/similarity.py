@@ -14,9 +14,17 @@
 At 100 TB the brute-force path is a single scan per query batch
 (fine for few queries); LSH turns it into a bucket-equi-join whose
 shuffle is proportional to candidate count, not corpus x queries.
+
+The persisted indexes' on-disk layout has one home: ``index_layout``
+at the end of this module, used by the writers, appenders and
+``*_persisted`` readers here, ``operators/index_lifecycle`` and
+``streaming/ann_ingest``.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
+from typing import Callable
 
 import pandas as pd  # module-level: pandas_udf type hints are lazy
 # strings under future-annotations and resolve against module globals
@@ -90,6 +98,14 @@ def per_query_topk(
     w = Window.partitionBy(query_id_col).orderBy(*order)
     return pruned.withColumn(rank_col, F.row_number().over(w)).filter(
         F.col(rank_col) <= n
+    )
+
+
+def _rank_topk(scored: DataFrame, query_id_col: str, order: list, n: int):
+    """Single-window per-query top-n: ``rank`` 1..n over ``order``."""
+    w = Window.partitionBy(query_id_col).orderBy(*order)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= n
     )
 
 
@@ -231,8 +247,9 @@ def rhp_lsh_topk(
     )
     if multiprobe:
         scored = scored.distinct()  # a pair can match via several probes
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(
+        scored, query_id_col, [F.desc("cosine"), F.asc(id_col)], k
+    )
 
 
 def _argmin_centroid_udf(cent):
@@ -260,6 +277,32 @@ def _argmin_centroid_udf(cent):
         return _assign(col.cast("array<double>"))
 
     return apply
+
+
+def _training_sample(
+    corpus: DataFrame, vec_col: str, seed: int, train_fraction: float,
+    train_cap: int, train_rows_hint: int | None,
+):
+    """The quantizer trainers' driver-side sample: the non-NULL vectors
+    (np.array over a ragged list with None raises), pre-thinned by
+    ``train_fraction``, hash-ranked to at most ``train_cap`` rows, as
+    a float64 matrix."""
+    import numpy as np
+
+    from .sampling import hash_ranked_sample
+
+    sample = corpus.filter(F.col(vec_col).isNotNull()).select(
+        F.col(vec_col).cast("array<double>").alias("v")
+    )
+    n_hint = train_rows_hint
+    if train_fraction < 1.0:
+        sample = sample.sample(train_fraction, seed=seed)
+        if n_hint is not None:
+            n_hint = int(n_hint * train_fraction)
+    rows = hash_ranked_sample(
+        sample, ["v"], train_cap, seed, n_rows=n_hint
+    ).collect()
+    return np.array([r["v"] for r in rows], dtype=np.float64)
 
 
 def ivf_index(
@@ -298,22 +341,11 @@ def ivf_index(
     rank."""
     import numpy as np
 
-    # NULL embeddings can't train (ragged np.array); assignment below
-    # still sees them (NULL vector -> NULL distances -> NULL cluster).
-    sample = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(vec_col).cast("array<double>").alias("v")
+    # NULL embeddings can't train; assignment below still sees them
+    # (NULL vector -> NULL distances -> NULL cluster).
+    X = _training_sample(
+        corpus, vec_col, seed, train_fraction, train_cap, train_rows_hint
     )
-    n_hint = train_rows_hint
-    if train_fraction < 1.0:
-        sample = sample.sample(train_fraction, seed=seed)
-        if n_hint is not None:
-            n_hint = int(n_hint * train_fraction)
-    from .sampling import hash_ranked_sample
-
-    rows = hash_ranked_sample(
-        sample, ["v"], train_cap, seed, n_rows=n_hint
-    ).collect()
-    X = np.array([r["v"] for r in rows], dtype=np.float64)
     if len(X) < n_clusters:
         raise ValueError(f"need >= {n_clusters} training vectors, got {len(X)}")
     rng = np.random.RandomState(seed)
@@ -376,12 +408,24 @@ def ivf_topk(
         corpus, n_clusters, vec_col, seed, max_iter=max_iter,
         train_fraction=train_fraction,
     )
-    # rank clusters per query by centroid cosine; keep nprobe best
+    probes = _ivf_probes(cent_df, queries, nprobe, query_id_col, query_vec_col)
+    return _ivf_score(
+        assigned, probes, k, id_col, vec_col, query_id_col, query_vec_col,
+        exclude_self,
+    )
+
+
+def _ivf_probes(
+    cent_df: DataFrame, queries: DataFrame, nprobe: int,
+    query_id_col: str, query_vec_col: str,
+) -> DataFrame:
+    """The nprobe nearest clusters per query by centroid cosine — (qid,
+    qe, ivf_cluster), queries x nprobe rows (tiny)."""
     qc = queries.crossJoin(F.broadcast(cent_df))
     qw = Window.partitionBy(query_id_col).orderBy(
         F.desc("c_cos"), F.asc("ivf_cluster")
     )
-    probes = (
+    return (
         qc.select(
             query_id_col,
             query_vec_col,
@@ -394,8 +438,16 @@ def ivf_topk(
         .filter(F.col("_pr") <= nprobe)
         .drop("_pr", "c_cos")
     )
+
+
+def _ivf_score(
+    rows: DataFrame, probes: DataFrame, k: int, id_col: str, vec_col: str,
+    query_id_col: str, query_vec_col: str, exclude_self: bool,
+) -> DataFrame:
+    """IVF's score-and-rank tail: exact cosine of each cluster-assigned
+    row against the queries probing its cluster, per-query top-k."""
     # per-row norm hoist (r14, bit-identical — see V.cosine_hoisted)
-    pairs = assigned.withColumn("_cnrm", V.norm(F.col(vec_col))).join(
+    pairs = rows.withColumn("_cnrm", V.norm(F.col(vec_col))).join(
         F.broadcast(probes.withColumn("_qnrm", V.norm(F.col(query_vec_col)))),
         "ivf_cluster",
     )
@@ -409,8 +461,9 @@ def ivf_topk(
             F.col("_cnrm"), F.col("_qnrm"),
         ).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(
+        scored, query_id_col, [F.desc("cosine"), F.asc(id_col)], k
+    )
 
 
 def embedding_near_dup(
@@ -659,22 +712,10 @@ def pq_train(
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sub = dim // m
     # NULL embeddings are legal corpus rows (encode keeps them, NULL
-    # codes); they just can't train — np.array over a ragged list with
-    # None raises otherwise.
-    sample = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(vec_col).cast("array<double>").alias("v")
+    # codes); they just can't train
+    X = _training_sample(
+        corpus, vec_col, seed, train_fraction, train_cap, train_rows_hint
     )
-    n_hint = train_rows_hint
-    if train_fraction < 1.0:
-        sample = sample.sample(train_fraction, seed=seed)
-        if n_hint is not None:
-            n_hint = int(n_hint * train_fraction)
-    from .sampling import hash_ranked_sample
-
-    rows = hash_ranked_sample(
-        sample, ["v"], train_cap, seed, n_rows=n_hint
-    ).collect()
-    X = np.array([r["v"] for r in rows], dtype=np.float64)
     if len(X) < n_codes:
         raise ValueError(f"need >= {n_codes} training vectors, got {len(X)}")
     rng = np.random.RandomState(seed)
@@ -887,9 +928,11 @@ def sq8_encode(
     present, rides through — the streaming-ingest replay stamp."""
     from ..functions.vectors import int8_quantize
 
-    keep = ["batch_key"] if "batch_key" in corpus.columns else []
-    return corpus.filter(F.col(vec_col).isNotNull()).select(
-        id_col, int8_quantize(F.col(vec_col)).alias(codes_col), *keep
+    rows = corpus.filter(F.col(vec_col).isNotNull())
+    return rows.select(
+        *_LAYOUTS["sq8"].columns(
+            rows.columns, id_col, int8_quantize(F.col(vec_col)).alias(codes_col)
+        )
     )
 
 
@@ -980,14 +1023,9 @@ def _sq8_search(
             ).alias("cosine"),
         )
     )
-    w_rank = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col)
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
-        .orderBy(query_id_col, "rank")
-    )
+    return _rank_topk(
+        rer, query_id_col, [F.col("cosine").desc(), F.col(id_col)], k
+    ).orderBy(query_id_col, "rank")
 
 
 def sq8_topk_rerank(
@@ -1048,9 +1086,9 @@ def _minus_tombstones(spark, path: str, df: DataFrame, id_col: str) -> DataFrame
     healing stays with the maintenance entry points
     (``index_lifecycle``), which are by-contract never concurrent
     with each other."""
-    from ..streaming.incremental_dedup import _has_parquet
+    from ..streaming.fold import _has_parquet
 
-    tomb_dir = f"{path}/tombstones"
+    tomb_dir = index_dir(path, TOMBSTONES)
     src = None
     if _has_parquet(tomb_dir):
         src = tomb_dir
@@ -1075,9 +1113,10 @@ def write_sq8_index(
     smaller IO than the float corpus) and every query batch reads
     codes only. Companion of ``write_ivf_index``; query back with
     ``sq8_topk_rerank_persisted``."""
-    sq8_encode(corpus, id_col=id_col, vec_col=vec_col).write.mode(
-        mode
-    ).parquet(f"{path}/codes")
+    _LAYOUTS["sq8"].write(
+        path, sq8_encode(corpus, id_col=id_col, vec_col=vec_col), mode,
+        id_col=id_col, codes_col="sq8_codes",
+    )
 
 
 def sq8_topk_rerank_persisted(
@@ -1102,7 +1141,7 @@ def sq8_topk_rerank_persisted(
     end in ``_sq8_search``; parity pinned by
     tests/test_persisted_index.py)."""
     enc = _minus_tombstones(
-        spark, path, spark.read.parquet(f"{path}/codes"), id_col
+        spark, path, _LAYOUTS["sq8"].read_rows(spark, path), id_col
     )
     return _sq8_search(
         enc, corpus, queries, k, oversample, id_col, vec_col,
@@ -1150,15 +1189,37 @@ def pq_adc_topk(
             ).alias("d2"),
         )
     )
-    lut = (
-        lut_rows.groupBy(query_id_col, "subspace")
+    lut = _collapse_lut(lut_rows, [query_id_col])
+    # NULL codes (NULL-embedding rows, preserved by the encode
+    # contract) are unsearchable: without this filter their NULL
+    # adc_d2 would sort NULLS FIRST under asc() and displace every
+    # real neighbor at rank 1.
+    pairs = encoded.filter(F.col(codes_col).isNotNull()).crossJoin(
+        F.broadcast(lut)
+    )
+    if exclude_self:
+        pairs = pairs.filter(F.col(id_col) != F.col(query_id_col))
+    scored = pairs.select(
+        F.col(query_id_col), F.col(id_col),
+        _adc_d2(codes_col, digits).alias("adc_d2"),
+    )
+    return _rank_topk(
+        scored, query_id_col, [F.asc("adc_d2"), F.asc(id_col)], k
+    )
+
+
+def _collapse_lut(lut_rows: DataFrame, keys: list) -> DataFrame:
+    """(keys..., subspace, code, d2) rows -> one ``lut`` array<array>
+    per key, indexed [subspace][code]."""
+    return (
+        lut_rows.groupBy(*keys, "subspace")
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("code", "d2"))),
                 lambda r: r["d2"],
             ).alias("row")
         )
-        .groupBy(query_id_col)
+        .groupBy(*keys)
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("subspace", "row"))),
@@ -1166,7 +1227,11 @@ def pq_adc_topk(
             ).alias("lut")
         )
     )
-    adc = F.round(
+
+
+def _adc_d2(codes_col: str, digits: int):
+    """The ADC distance: sum_j lut[j][codes[j]], rounded."""
+    return F.round(
         F.aggregate(
             F.zip_with(
                 F.col(codes_col),
@@ -1178,24 +1243,29 @@ def pq_adc_topk(
         ),
         digits,
     )
-    # NULL codes (NULL-embedding rows, preserved by the encode
-    # contract) are unsearchable: without this filter their NULL
-    # adc_d2 would sort NULLS FIRST under asc() and displace every
-    # real neighbor at rank 1.
-    pairs = encoded.filter(F.col(codes_col).isNotNull()).crossJoin(
-        F.broadcast(lut)
+
+
+def _exact_rerank(
+    shortlist: DataFrame, vectors: DataFrame, queries: DataFrame, k: int,
+    oversample: int, id_col: str, vec_col: str, query_id_col: str,
+    query_vec_col: str, digits: int,
+) -> DataFrame:
+    """The PQ families' re-rank tail: exact squared L2 of the
+    (query, id) shortlist against the full-precision ``vectors``,
+    per-query top-k."""
+    exact_d2 = F.round(V.sq_l2(F.col(vec_col), F.col(query_vec_col)), digits)
+    # broadcast the bounded (queries x k x oversample)-row shortlist:
+    # a size-estimated SortMergeJoin would shuffle the FULL corpus per
+    # query batch (the r11 grown-corpus demo caught exactly that);
+    # exact-mode corpus-sized "shortlists" fall through to AQE — see
+    # _shortlist_hint
+    rescored = (
+        _shortlist_hint(shortlist, k, oversample)
+        .join(vectors.select(id_col, vec_col), id_col)
+        .join(F.broadcast(queries), query_id_col)
+        .select(F.col(query_id_col), F.col(id_col), exact_d2.alias("d2"))
     )
-    if exclude_self:
-        pairs = pairs.filter(F.col(id_col) != F.col(query_id_col))
-    scored = pairs.select(
-        F.col(query_id_col), F.col(id_col), adc.alias("adc_d2")
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.asc("adc_d2"), F.asc(id_col)
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank_topk(rescored, query_id_col, [F.asc("d2"), F.asc(id_col)], k)
 
 
 def pq_topk_rerank(
@@ -1234,22 +1304,9 @@ def pq_topk_rerank(
         query_id_col=query_id_col, query_vec_col=query_vec_col,
         exclude_self=exclude_self, digits=digits,
     ).select(query_id_col, id_col)
-    src = encoded if vectors is None else vectors
-    exact_d2 = F.round(V.sq_l2(F.col(vec_col), F.col(query_vec_col)), digits)
-    # broadcast the bounded (queries x k x oversample)-row shortlist:
-    # a size-estimated SortMergeJoin would shuffle the FULL corpus per
-    # query batch (the r11 grown-corpus demo caught exactly that);
-    # exact-mode corpus-sized "shortlists" fall through to AQE — see
-    # _shortlist_hint
-    rescored = (
-        _shortlist_hint(shortlist, k, oversample)
-        .join(src.select(id_col, vec_col), id_col)
-        .join(F.broadcast(queries), query_id_col)
-        .select(F.col(query_id_col), F.col(id_col), exact_d2.alias("d2"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.asc("d2"), F.asc(id_col))
-    return rescored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return _exact_rerank(
+        shortlist, encoded if vectors is None else vectors, queries, k,
+        oversample, id_col, vec_col, query_id_col, query_vec_col, digits,
     )
 
 
@@ -1269,11 +1326,10 @@ def write_pq_index(
     ``write_ivf_index``; query back with ``pq_topk_rerank_persisted``.
     A ``batch_key`` column, when present, persists with the codes
     (the streaming-ingest replay stamp)."""
-    keep = [id_col, codes_col] + (
-        ["batch_key"] if "batch_key" in encoded.columns else []
+    _LAYOUTS["pq"].write(
+        path, encoded, mode, id_col=id_col, codes_col=codes_col,
+        codebook=codebook_df,
     )
-    encoded.select(*keep).write.mode(mode).parquet(f"{path}/codes")
-    codebook_df.write.mode(mode).parquet(f"{path}/codebook")
 
 
 def pq_topk_rerank_persisted(
@@ -1298,9 +1354,9 @@ def pq_topk_rerank_persisted(
     by construction (one shared implementation; parity pinned by
     tests/test_persisted_index.py)."""
     codes = _minus_tombstones(
-        spark, path, spark.read.parquet(f"{path}/codes"), id_col
+        spark, path, _LAYOUTS["pq"].read_rows(spark, path), id_col
     )
-    codebook_df = spark.read.parquet(f"{path}/codebook")
+    codebook_df = spark.read.parquet(index_dir(path, CODEBOOK))
     return pq_topk_rerank(
         codes, codebook_df, queries, k=k, oversample=oversample,
         id_col=id_col, vec_col=vec_col, codes_col=codes_col,
@@ -1463,34 +1519,7 @@ def ivfpq_topk(
             V.sq_l2(resid_slice, F.col("pq_centroid")).alias("d2"),
         )
     )
-    lut = (
-        lut_rows.groupBy(query_id_col, "ivf_cluster", "subspace")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("code", "d2"))),
-                lambda r: r["d2"],
-            ).alias("row")
-        )
-        .groupBy(query_id_col, "ivf_cluster")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("subspace", "row"))),
-                lambda r: r["row"],
-            ).alias("lut")
-        )
-    )
-    adc = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col(codes_col),
-                F.col("lut"),
-                lambda code, row: F.element_at(row, code + 1),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        digits,
-    )
+    lut = _collapse_lut(lut_rows, [query_id_col, "ivf_cluster"])
     # same NULL-codes guard as pq_adc_topk: NULL adc_d2 sorts NULLS
     # FIRST and would poison the shortlist
     pairs = encoded.filter(F.col(codes_col).isNotNull()).join(
@@ -1498,35 +1527,16 @@ def ivfpq_topk(
     )
     if exclude_self:
         pairs = pairs.filter(F.col(id_col) != F.col(query_id_col))
-    shortlist = (
-        pairs.select(F.col(query_id_col), F.col(id_col), adc.alias("adc_d2"))
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy(query_id_col).orderBy(
-                    F.asc("adc_d2"), F.asc(id_col)
-                )
-            ),
-        )
-        .filter(F.col("rank") <= k * oversample)
-        .select(query_id_col, id_col)
+    scored = pairs.select(
+        F.col(query_id_col), F.col(id_col),
+        _adc_d2(codes_col, digits).alias("adc_d2"),
     )
-    src = encoded if vectors is None else vectors
-    exact_d2 = F.round(V.sq_l2(F.col(vec_col), F.col(query_vec_col)), digits)
-    # broadcast the bounded (queries x k x oversample)-row shortlist:
-    # a size-estimated SortMergeJoin would shuffle the FULL corpus per
-    # query batch (the r11 grown-corpus demo caught exactly that);
-    # exact-mode corpus-sized "shortlists" fall through to AQE — see
-    # _shortlist_hint
-    rescored = (
-        _shortlist_hint(shortlist, k, oversample)
-        .join(src.select(id_col, vec_col), id_col)
-        .join(F.broadcast(queries), query_id_col)
-        .select(F.col(query_id_col), F.col(id_col), exact_d2.alias("d2"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.asc("d2"), F.asc(id_col))
-    return rescored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    shortlist = _rank_topk(
+        scored, query_id_col, [F.asc("adc_d2"), F.asc(id_col)], k * oversample
+    ).select(query_id_col, id_col)
+    return _exact_rerank(
+        shortlist, encoded if vectors is None else vectors, queries, k,
+        oversample, id_col, vec_col, query_id_col, query_vec_col, digits,
     )
 
 
@@ -1545,14 +1555,10 @@ def write_ivfpq_index(
     32x compression in one artifact), plus the coarse centroids and
     the residual codebook as small side tables. Query back with
     ``ivfpq_topk_persisted``."""
-    keep = [id_col, "ivf_cluster", codes_col] + (
-        ["batch_key"] if "batch_key" in encoded.columns else []
+    _LAYOUTS["ivfpq"].write(
+        path, encoded, mode, id_col=id_col, codes_col=codes_col,
+        centroids=cent_df, codebook=codebook_df,
     )
-    encoded.select(*keep).write.mode(
-        mode
-    ).partitionBy("ivf_cluster").parquet(f"{path}/corpus")
-    cent_df.write.mode(mode).parquet(f"{path}/centroids")
-    codebook_df.write.mode(mode).parquet(f"{path}/codebook")
 
 
 def ivfpq_topk_persisted(
@@ -1579,24 +1585,13 @@ def ivfpq_topk_persisted(
     the in-session path over the same index by construction (shared
     probe + search tail; ADC only ever scores rows ivfpq_topk would
     score, since a row's LUT join key is its own cluster); parity
-    pinned by tests/test_persisted_index.py.
-
-    Collect discipline matches ``ivf_topk_persisted``: probes are
-    localCheckpoint-pinned (the lineage would otherwise execute twice
-    — once for the cluster list, once in the LUT build), and the
-    driver-side collect is bounded by n_clusters, never queries."""
-    cent_df = spark.read.parquet(f"{path}/centroids")
-    codebook_df = spark.read.parquet(f"{path}/codebook")
-    probes = _ivfpq_probes(
-        cent_df, queries, nprobe, query_id_col, query_vec_col
-    ).localCheckpoint(eager=True)
-    cluster_rows = probes.select("ivf_cluster").distinct().collect()
-    clusters = sorted(r["ivf_cluster"] for r in cluster_rows)
-    codes = _minus_tombstones(
+    pinned by tests/test_persisted_index.py. Probe pinning and the
+    bounded cluster collect are ``_read_probed``'s."""
+    cent_df = spark.read.parquet(index_dir(path, CENTROIDS))
+    codebook_df = spark.read.parquet(index_dir(path, CODEBOOK))
+    _, codes = _read_probed(
         spark, path,
-        spark.read.parquet(f"{path}/corpus").filter(
-            F.col("ivf_cluster").isin([int(c) for c in clusters])
-        ),
+        _ivfpq_probes(cent_df, queries, nprobe, query_id_col, query_vec_col),
         id_col,
     )
     return ivfpq_topk(
@@ -1622,10 +1617,7 @@ def write_ivf_index(
     set touches only the matching partitions (asserted by
     tests/test_scale_plans.py::test_ivf_index_probe_prunes_partitions).
     """
-    assigned.write.mode(mode).partitionBy("ivf_cluster").parquet(
-        f"{path}/corpus"
-    )
-    centroids.write.mode(mode).parquet(f"{path}/centroids")
+    _LAYOUTS["ivf"].write(path, assigned, mode, centroids=centroids)
 
 
 def read_ivf_probes(
@@ -1634,9 +1626,28 @@ def read_ivf_probes(
     """Read only the probe clusters from a persisted IVF index — the
     cluster filter prunes to the matching ``ivf_cluster=N`` directories
     at planning time (PartitionFilters in the scan node)."""
-    return spark.read.parquet(f"{path}/corpus").filter(
+    return _LAYOUTS["ivf"].read_rows(spark, path).filter(
         F.col("ivf_cluster").isin([int(c) for c in clusters])
     )
+
+
+def _read_probed(spark, path: str, probes: DataFrame, id_col: str):
+    """The persisted IVF/IVF-PQ readers' shared step: pin the probes,
+    collect their distinct clusters, read only those partitions minus
+    the tombstones. Returns (pinned probes, rows).
+
+    The pin (localCheckpoint, not persist: the CacheManager stays
+    empty, the ContextCleaner frees the blocks with the frame) keeps
+    the probes lineage from executing twice — for the cluster list
+    and in the final join. The collect is bounded by n_clusters, NOT
+    n_queries x nprobe."""
+    probes = probes.localCheckpoint(eager=True)
+    cluster_rows = probes.select("ivf_cluster").distinct().collect()
+    clusters = sorted(r["ivf_cluster"] for r in cluster_rows)
+    rows = _minus_tombstones(
+        spark, path, read_ivf_probes(spark, path, clusters), id_col
+    )
+    return probes, rows
 
 
 def ivf_topk_persisted(
@@ -1653,59 +1664,17 @@ def ivf_topk_persisted(
 ) -> DataFrame:
     """ivf_topk against a persisted index: rank clusters per query by
     centroid cosine, then score ONLY the union of probed clusters —
-    the corpus scan reads just those partitions."""
-    cent_df = spark.read.parquet(f"{path}/centroids")
-    qc = queries.crossJoin(F.broadcast(cent_df))
-    qw = Window.partitionBy(query_id_col).orderBy(
-        F.desc("c_cos"), F.asc("ivf_cluster")
+    the corpus scan reads just those partitions. Same probe ranking
+    and scoring tail as ``ivf_topk``."""
+    cent_df = spark.read.parquet(index_dir(path, CENTROIDS))
+    probes, corpus = _read_probed(
+        spark, path,
+        _ivf_probes(cent_df, queries, nprobe, query_id_col, query_vec_col),
+        id_col,
     )
-    probes = (
-        qc.select(
-            query_id_col,
-            query_vec_col,
-            "ivf_cluster",
-            V.cosine_rounded_safe(
-                F.col(query_vec_col).cast("array<double>"), F.col("centroid")
-            ).alias("c_cos"),
-        )
-        .withColumn("_pr", F.row_number().over(qw))
-        .filter(F.col("_pr") <= nprobe)
-        .drop("_pr", "c_cos")
-    )
-    # materialize before collecting: the probes lineage (centroid read
-    # + crossJoin + window rank) otherwise executes twice — once for
-    # the cluster list, once inside the final join. localCheckpoint
-    # (not persist) so the CacheManager stays empty for callers — the
-    # ContextCleaner frees the blocks with the frame (same discipline
-    # as the dedup operators).
-    probes = probes.localCheckpoint(eager=True)
-    # driver-side collect is bounded by n_clusters (distinct cluster
-    # ids only), NOT n_queries x nprobe — a million-query probe batch
-    # still collects at most the number of index partitions. The full
-    # per-(query, cluster) probe frame stays distributed for the join.
-    cluster_rows = probes.select("ivf_cluster").distinct().collect()
-    clusters = sorted(r["ivf_cluster"] for r in cluster_rows)
-    corpus = _minus_tombstones(
-        spark, path, read_ivf_probes(spark, path, clusters, vec_col), id_col
-    )
-    # per-row norm hoist (r14, bit-identical — see V.cosine_hoisted)
-    pairs = corpus.withColumn("_cnrm", V.norm(F.col(vec_col))).join(
-        F.broadcast(probes.withColumn("_qnrm", V.norm(F.col(query_vec_col)))),
-        "ivf_cluster",
-    )
-    if exclude_self:
-        pairs = pairs.filter(F.col(id_col) != F.col(query_id_col))
-    scored = pairs.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        V.cosine_hoisted(
-            F.col(vec_col), F.col(query_vec_col),
-            F.col("_cnrm"), F.col("_qnrm"),
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return _ivf_score(
+        corpus, probes, k, id_col, vec_col, query_id_col, query_vec_col,
+        exclude_self,
     )
 
 
@@ -1743,8 +1712,9 @@ def _centroids_from_df(cent_df: DataFrame) -> list:
 
 
 def append_to_sq8_index(
-    new_vectors: DataFrame,
+    spark,
     path: str,
+    new_vectors: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     codes_col: str = "sq8_codes",
@@ -1754,10 +1724,12 @@ def append_to_sq8_index(
     IVF/PQ appends there are no frozen parameters to honor — the codes
     a row gets are identical whether it was in the original build or
     any later batch, and grown == rebuilt holds bit-for-bit. Not
-    idempotent (parquet append); see ``append_to_ivf_index``."""
-    sq8_encode(new_vectors, id_col, vec_col, codes_col).write.mode(
-        "append"
-    ).parquet(f"{path}/codes")
+    idempotent (parquet append); see ``append_to_ivf_index``. Takes
+    ``spark`` only for the appenders' shared signature."""
+    _LAYOUTS["sq8"].write_rows(
+        sq8_encode(new_vectors, id_col, vec_col, codes_col), path, "append",
+        id_col, codes_col,
+    )
 
 
 def append_to_pq_index(
@@ -1773,14 +1745,11 @@ def append_to_pq_index(
     one Arrow/BLAS argmin pass per subspace) and append the code rows.
     The codebook is never retrained — the FAISS add() contract. Not
     idempotent (parquet append); see ``append_to_ivf_index``."""
-    books = _codebooks_from_df(spark.read.parquet(f"{path}/codebook"))
+    books = _codebooks_from_df(spark.read.parquet(index_dir(path, CODEBOOK)))
     enc = pq_encode_pandas(
         new_vectors, books, vec_col=vec_col, out_col=codes_col
     )
-    keep = [id_col, codes_col] + (
-        ["batch_key"] if "batch_key" in enc.columns else []
-    )
-    enc.select(*keep).write.mode("append").parquet(f"{path}/codes")
+    _LAYOUTS["pq"].write_rows(enc, path, "append", id_col, codes_col)
 
 
 def append_to_ivfpq_index(
@@ -1806,21 +1775,16 @@ def append_to_ivfpq_index(
     pass with zero exchanges — the residual is subtracted inside the
     encode UDF (``pq_encode_pandas(centroids=...)``), not via a
     per-row zip_with fold + broadcast join (the r9 judge note)."""
-    cent = _centroids_from_df(spark.read.parquet(f"{path}/centroids"))
+    cent = _centroids_from_df(spark.read.parquet(index_dir(path, CENTROIDS)))
     assigned = new_vectors.withColumn(
         "ivf_cluster", _argmin_centroid_udf(cent)(F.col(vec_col))
     ).filter(F.col("ivf_cluster").isNotNull())
-    books = _codebooks_from_df(spark.read.parquet(f"{path}/codebook"))
+    books = _codebooks_from_df(spark.read.parquet(index_dir(path, CODEBOOK)))
     enc = pq_encode_pandas(
         assigned, books, vec_col=vec_col, out_col=codes_col,
         centroids=cent,
     )
-    keep = [id_col, "ivf_cluster", codes_col] + (
-        ["batch_key"] if "batch_key" in enc.columns else []
-    )
-    enc.select(*keep).write.mode(
-        "append"
-    ).partitionBy("ivf_cluster").parquet(f"{path}/corpus")
+    _LAYOUTS["ivfpq"].write_rows(enc, path, "append", id_col, codes_col)
 
 
 def append_to_ivf_index(
@@ -1848,10 +1812,83 @@ def append_to_ivf_index(
     ``ivf_index`` writes — asserted (``_centroids_from_df``) rather
     than assumed.
     """
-    cent = _centroids_from_df(spark.read.parquet(f"{path}/centroids"))
+    cent = _centroids_from_df(spark.read.parquet(index_dir(path, CENTROIDS)))
     assigned = new_vectors.withColumn(
         "ivf_cluster", _argmin_centroid_udf(cent)(F.col(vec_col))
     )
-    assigned.write.mode("append").partitionBy("ivf_cluster").parquet(
-        f"{path}/corpus"
-    )
+    _LAYOUTS["ivf"].write_rows(assigned, path, "append")
+
+
+# -- the persisted ANN index layout: its one home ---------------------
+#   {path}/corpus     ivf / ivfpq row data, partitioned by ivf_cluster
+#   {path}/codes      pq / sq8 row data (flat)
+#   {path}/centroids  coarse quantizer (ivf, ivfpq)
+#   {path}/codebook   PQ codebook (pq, ivfpq)
+#   {path}/tombstones, ingest_ledger, drift    every family
+
+CENTROIDS, CODEBOOK = "centroids", "codebook"
+TOMBSTONES, INGEST_LEDGER, DRIFT = "tombstones", "ingest_ledger", "drift"
+
+
+def index_dir(path: str, name: str) -> str:
+    return f"{path}/{name}"
+
+
+@dataclass(frozen=True)
+class IndexLayout:
+    """One family's on-disk layout. ``codes`` families persist id +
+    codes only (``columns``); ivf persists its assigned rows whole.
+    ``append`` is the family's ``append_to_*_index``."""
+
+    data: str  # row-data directory
+    partitioned: bool  # row data partitioned by ivf_cluster
+    side_tables: tuple  # frozen quantizer tables, in write order
+    codes: bool
+    append: Callable
+
+    def data_dir(self, path: str) -> str:
+        return index_dir(path, self.data)
+
+    def read_rows(self, spark, path: str) -> DataFrame:
+        return spark.read.parquet(self.data_dir(path))
+
+    def columns(self, available, id_col: str, codes) -> list:
+        """id (+ ivf_cluster) + codes (+ the ingest ``batch_key`` stamp
+        when present)."""
+        part = ["ivf_cluster"] if self.partitioned else []
+        stamp = ["batch_key"] if "batch_key" in available else []
+        return [id_col, *part, codes, *stamp]
+
+    def writer(self, rows: DataFrame, mode: str):
+        w = rows.write.mode(mode)
+        return w.partitionBy("ivf_cluster") if self.partitioned else w
+
+    def write_rows(self, rows, path, mode, id_col="vec_id", codes_col=None):
+        if self.codes:
+            rows = rows.select(*self.columns(rows.columns, id_col, codes_col))
+        self.writer(rows, mode).parquet(self.data_dir(path))
+
+    def write(self, path, rows, mode, id_col="vec_id", codes_col=None, **tables):
+        """Write the row data, then each side table from ``tables``."""
+        self.write_rows(rows, path, mode, id_col, codes_col)
+        for name in self.side_tables:
+            tables[name].write.mode(mode).parquet(index_dir(path, name))
+
+
+_LAYOUTS = {
+    "ivf": IndexLayout("corpus", True, (CENTROIDS,), False,
+                       append_to_ivf_index),
+    "ivfpq": IndexLayout("corpus", True, (CENTROIDS, CODEBOOK), True,
+                         append_to_ivfpq_index),
+    "pq": IndexLayout("codes", False, (CODEBOOK,), True, append_to_pq_index),
+    "sq8": IndexLayout("codes", False, (), True, append_to_sq8_index),
+}
+
+
+def index_layout(family: str) -> IndexLayout:
+    """The layout of ``family`` — the one unknown-family check."""
+    if family not in _LAYOUTS:
+        raise ValueError(
+            f"unknown index family {family!r}; one of {tuple(_LAYOUTS)}"
+        )
+    return _LAYOUTS[family]

@@ -29,8 +29,11 @@ can stay at seconds even on a 1000-executor cluster.
 
 from __future__ import annotations
 
+import logging
 import threading
 from contextlib import contextmanager
+
+log = logging.getLogger(__name__)
 
 
 class StepProgressMonitor:
@@ -59,7 +62,13 @@ class StepProgressMonitor:
         # step at ~100%. Snapshot and exclude them.
         try:
             baseline = set(tracker.getJobIdsForGroup(run_id))
-        except Exception:
+        except Exception as e:
+            # best effort: without the snapshot the estimates may start
+            # high, but the step itself must not fail
+            log.warning(
+                "step-progress baseline snapshot failed for run %s step "
+                "%s: %s", run_id, step_number, e,
+            )
             baseline = set()
         t = threading.Thread(
             target=self._poll_loop,
@@ -80,9 +89,7 @@ class StepProgressMonitor:
             # stop is set cannot be recalled
             t.join(timeout=10.0)
             if t.is_alive():
-                import logging
-
-                logging.getLogger(__name__).warning(
+                log.warning(
                     "step-progress poll thread for %s step %s did not "
                     "stop within 10s; an estimate write already in "
                     "flight may land after the step's final counts and "
@@ -94,6 +101,7 @@ class StepProgressMonitor:
 
     def _poll_loop(self, stop, tracker, baseline, run_id, step_number, rows_total):
         last = 0
+        warned = False
         while not stop.wait(self.interval_s):
             try:
                 total_tasks = done_tasks = 0
@@ -131,7 +139,12 @@ class StepProgressMonitor:
                         rows_processed=int(est),
                         rows_total=int(rows_total),
                     )
-            except Exception:
+            except Exception as e:
                 # best-effort, like the reference's swallowed
-                # SQLException: progress must never fail the step
-                pass
+                # SQLException: progress must never fail the step. One
+                # warning per step; a persistent fault repeats at debug
+                (log.debug if warned else log.warning)(
+                    "step-progress poll failed for run %s step %s: %s",
+                    run_id, step_number, e,
+                )
+                warned = True

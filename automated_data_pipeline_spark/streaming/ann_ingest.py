@@ -1,8 +1,11 @@
-"""Streaming maintenance for the persisted IVF ANN index: replay-safe
-ingest plus partition-directory compaction — the two pieces that turn
-``operators/similarity.append_to_ivf_index`` (a raw parquet append,
-NOT idempotent by itself) into something a 24/7 vector pipeline can
-sit on.
+"""Streaming maintenance for the persisted ANN indexes (all four
+families): replay-safe ingest plus drift tracking — what turns the
+``operators/similarity.append_to_*_index`` appenders (raw parquet
+appends, NOT idempotent by themselves) into something a 24/7 vector
+pipeline can sit on. The family check, each family's appender, the
+replay-probe directory, the side tables the drift metric reads and the
+``drift`` directory all come from the persisted index layout declared
+once in ``operators/similarity.py`` (``index_layout``).
 
 Exactly-once: every appended row is stamped with its micro-batch key,
 and only the FIRST batch after a (re)start probes the corpus for an
@@ -26,17 +29,9 @@ schema consistency the BASE index must carry the column too —
 parquet directory mixing stamped and unstamped files would resolve to
 whichever file the reader samples first.
 
-Compaction: each ingest batch lands one small file per touched
-``ivf_cluster=N`` directory, so a long-lived index accumulates
-O(batches x clusters) tiny files. ``compact_ivf_index`` rewrites the
-corpus to ``files_per_cluster`` files per directory (deterministic id
-hash sub-split — no rand(), so a retried task writes the same rows)
-under the stores' crash-self-healing two-rename swap
-(``fold.swap_in_staged``); rows
-and batch_key stamps are preserved, so replay probes keep working
-across compactions and queries are value-identical (pytest-pinned).
-At 100 TB this runs as a periodic job per hot partition range; here
-it is one repartition + partitioned write.
+Compaction of the ingest file pile is ``index_lifecycle.compact_index``
+(``compact_ivf_index`` is its ivf alias): rows and batch_key stamps
+survive it, so replay probes keep working across compactions.
 """
 
 from __future__ import annotations
@@ -47,17 +42,12 @@ import pandas as pd  # module-level: pandas_udf type hints are lazy
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.similarity import (
-    append_to_ivf_index,
-    append_to_ivfpq_index,
-    append_to_pq_index,
-    append_to_sq8_index,
-    write_ivf_index,
-    write_ivfpq_index,
-    write_pq_index,
-    write_sq8_index,
-)
+from ..operators import similarity
 from .fold import _recover_compact, batch_landed, start_fold_stream
+
+
+def _build_stamped(rows: DataFrame) -> DataFrame:
+    return rows.withColumn("batch_key", F.lit("build"))
 
 
 def write_ivf_index_for_ingest(
@@ -65,40 +55,39 @@ def write_ivf_index_for_ingest(
 ) -> None:
     """``write_ivf_index`` with the build rows stamped
     ``batch_key='build'`` so later ingest batches (which MUST stamp
-    their rows for replay detection) keep the corpus schema uniform."""
-    write_ivf_index(
-        assigned.withColumn("batch_key", F.lit("build")), centroids, path
-    )
+    their rows for replay detection) keep the corpus schema uniform.
+    The three twins below pass ``kw`` (``id_col``, ...) to their
+    writer."""
+    similarity.write_ivf_index(_build_stamped(assigned), centroids, path)
 
 
 def write_ivfpq_index_for_ingest(
     encoded: DataFrame, cent_df: DataFrame, codebook_df: DataFrame,
-    path: str,
+    path: str, **kw,
 ) -> None:
     """``write_ivfpq_index`` with build rows stamped ``'build'`` —
     the IVF-PQ twin of ``write_ivf_index_for_ingest`` (the codes-only
     writer keeps the stamp column when present)."""
-    write_ivfpq_index(
-        encoded.withColumn("batch_key", F.lit("build")), cent_df,
-        codebook_df, path,
+    similarity.write_ivfpq_index(
+        _build_stamped(encoded), cent_df, codebook_df, path, **kw
     )
 
 
 def write_pq_index_for_ingest(
-    encoded: DataFrame, codebook_df: DataFrame, path: str
+    encoded: DataFrame, codebook_df: DataFrame, path: str, **kw
 ) -> None:
     """``write_pq_index`` with build rows stamped ``'build'`` — the
     flat-code-table twin (the codes writer keeps the stamp column
     when present)."""
-    write_pq_index(
-        encoded.withColumn("batch_key", F.lit("build")), codebook_df, path
+    similarity.write_pq_index(
+        _build_stamped(encoded), codebook_df, path, **kw
     )
 
 
-def write_sq8_index_for_ingest(corpus: DataFrame, path: str) -> None:
+def write_sq8_index_for_ingest(corpus: DataFrame, path: str, **kw) -> None:
     """``write_sq8_index`` with build rows stamped ``'build'`` (the
     encode keeps the stamp column when present)."""
-    write_sq8_index(corpus.withColumn("batch_key", F.lit("build")), path)
+    similarity.write_sq8_index(_build_stamped(corpus), path, **kw)
 
 
 def start_incremental_ann_ingest(
@@ -126,26 +115,13 @@ def start_incremental_ann_ingest(
     metric: assignment distance for the IVF layouts, frozen-codebook
     reconstruction error for pq, relative int8 round-trip error for
     sq8. Returns the started StreamingQuery."""
-    appenders = {
-        "ivf": append_to_ivf_index,
-        "ivfpq": append_to_ivfpq_index,
-        "pq": append_to_pq_index,
-        "sq8": lambda spark_, path_, batch, vec_col: append_to_sq8_index(
-            batch, path_, vec_col=vec_col
-        ),
-    }
-    if family not in appenders:
-        raise ValueError(
-            f"unknown index family {family!r}; one of {tuple(appenders)}"
-        )
-    append = appenders[family]
+    layout = similarity.index_layout(family)
     from ..operators.index_lifecycle import (
-        _DATA_DIR,
         applied_batch_key_set,
         record_applied_batch_keys,
     )
 
-    corpus_dir = f"{index_path}/{_DATA_DIR[family]}"
+    corpus_dir = layout.data_dir(index_path)
 
     def fold(batch_df, _batch_id, key, maybe_replay):
         # a crash mid-compact leaves the corpus parked at '.old', and
@@ -165,7 +141,7 @@ def start_incremental_ann_ingest(
         if maybe_replay and key in applied_batch_key_set(index_path):
             return
         if not (maybe_replay and batch_landed(spark, corpus_dir, key)):
-            append(
+            layout.append(
                 spark,
                 index_path,
                 batch_df.withColumn("batch_key", F.lit(key)),
@@ -291,30 +267,25 @@ def _sq8_recon_udf():
 
 
 def _drift_metric(spark: SparkSession, index_path: str, family: str):
-    """The per-family drift metric column builder: squared assignment
-    distance to the frozen coarse centroid (ivf/ivfpq), frozen-
-    codebook reconstruction error (pq), or relative int8 round-trip
-    error (sq8). All land in one 'd2' column so ``drift_report`` and
-    ``rebuild_if_drifted`` stay family-agnostic."""
-    if family in ("ivf", "ivfpq"):
-        cent_rows = (
-            spark.read.parquet(f"{index_path}/centroids")
-            .orderBy("ivf_cluster").collect()
-        )
-        ad = _assign_dist_udf([r["centroid"] for r in cent_rows])
-        return lambda col: ad(col)["d2"]
-    if family == "pq":
-        from ..operators.similarity import _codebooks_from_df
+    """The per-family drift metric column builder, keyed on the
+    family's frozen quantizer: squared assignment distance to the
+    coarse centroid when it has one (ivf/ivfpq), codebook
+    reconstruction error when only a codebook (pq), relative int8
+    round-trip error otherwise (sq8). All land in one 'd2' column so
+    ``drift_report`` and ``rebuild_if_drifted`` stay family-agnostic."""
+    side = similarity.index_layout(family).side_tables
 
-        books = _codebooks_from_df(
-            spark.read.parquet(f"{index_path}/codebook")
-        )
-        pr = _pq_recon_udf(books)
-        return lambda col: pr(col)
-    if family == "sq8":
-        sr = _sq8_recon_udf()
-        return lambda col: sr(col)
-    raise ValueError(f"unknown index family {family!r}")
+    def table(name):
+        return spark.read.parquet(similarity.index_dir(index_path, name))
+
+    if similarity.CENTROIDS in side:
+        cent = similarity._centroids_from_df(table(similarity.CENTROIDS))
+        ad = _assign_dist_udf(cent)
+        return lambda col: ad(col)["d2"]
+    if similarity.CODEBOOK in side:
+        books = similarity._codebooks_from_df(table(similarity.CODEBOOK))
+        return _pq_recon_udf(books)
+    return _sq8_recon_udf()
 
 
 def record_drift(
@@ -350,7 +321,9 @@ def record_drift(
         )
         .withColumn("batch_key", F.lit(batch_key))
     )
-    stats.write.mode("append").parquet(f"{index_path}/drift")
+    stats.write.mode("append").parquet(
+        similarity.index_dir(index_path, similarity.DRIFT)
+    )
 
 
 def drift_report(
@@ -372,7 +345,9 @@ def drift_report(
     always-one-row frame: with no baseline every batch still reports,
     with build_p90_d2 and drift_flag NULL — visibly unverdicted, never
     absent."""
-    rows = spark.read.parquet(f"{index_path}/drift")
+    rows = spark.read.parquet(
+        similarity.index_dir(index_path, similarity.DRIFT)
+    )
     # replays append identical rows — collapse per key
     per_key = rows.groupBy("batch_key").agg(
         F.first("n").alias("n"),

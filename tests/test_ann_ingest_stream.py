@@ -273,7 +273,7 @@ def test_flat_family_stream_ingest_matches_operator_append(
     ).awaitTermination(120)
     s_op = str(tmp_path / "sq8_op")
     similarity.write_sq8_index(base, s_op)
-    similarity.append_to_sq8_index(delta, s_op)
+    similarity.append_to_sq8_index(spark, s_op, delta)
     got = sorted(
         (r["vec_id"], tuple(r["sq8_codes"]))
         for r in spark.read.parquet(f"{s_stream}/codes").collect()

@@ -785,3 +785,27 @@ def test_concurrent_schedule_updates_do_not_lose_fields(served_full):
     t1.start(); t2.start(); t1.join(); t2.join()
     _code, one = _req(srv.port, f"/schedules/{sid}", "GET")
     assert one["enabled"] is False and one["name"] == "renamed"
+
+
+class _BrokenControl:
+    def runs_table(self):
+        raise OSError("control store unreadable")
+
+
+def test_catch_all_500_is_logged_with_method_and_path(caplog):
+    """A failing endpoint answers the same 500 body as before and now
+    leaves a server-side record naming the request."""
+    import logging
+
+    srv = PipelineApiServer(None, _BrokenControl()).start()
+    try:
+        with caplog.at_level(
+            logging.ERROR, logger="automated_data_pipeline_spark.http_api"
+        ):
+            code, body = _get(srv.port, "/runs")
+    finally:
+        srv.stop()
+    assert code == 500
+    assert body == {"error": "control store unreadable"}
+    recs = [r for r in caplog.records if "/runs" in r.getMessage()]
+    assert recs and "GET" in recs[0].getMessage() and recs[0].exc_info

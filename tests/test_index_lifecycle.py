@@ -196,7 +196,7 @@ def test_compact_purges_tombstones_and_bounds_files(
         "ivf": lambda d: similarity.append_to_ivf_index(spark, path, d),
         "ivfpq": lambda d: similarity.append_to_ivfpq_index(spark, path, d),
         "pq": lambda d: similarity.append_to_pq_index(spark, path, d),
-        "sq8": lambda d: similarity.append_to_sq8_index(d, path),
+        "sq8": lambda d: similarity.append_to_sq8_index(spark, path, d),
     }
     for i in range(4):
         appenders[family](delta.filter(F.col("vec_id") % 16 == 4 * i))
@@ -280,24 +280,49 @@ def test_crash_between_swap_and_tombstone_clear_is_harmless(
     assert not os.path.isdir(f"{path}/tombstones")
 
 
-def test_needs_compaction_trigger(spark, emb, tmp_path):
+@pytest.mark.parametrize("family", ["ivf", "ivfpq", "pq", "sq8"])
+def test_needs_compaction_trigger(spark, emb, family, tmp_path):
     """The cadence check: a freshly-built index is under the bound; a
-    pile of tiny appends crosses it; compaction brings it back under."""
+    pile of tiny appends crosses it; compaction brings it back under.
+    The ivf case is the original test; the other families exercise the
+    ivfpq corpus and the flat families' codes directory lookup."""
     from automated_data_pipeline_spark.operators.index_lifecycle import (
         needs_compaction,
     )
 
-    assigned, cent_df = similarity.ivf_index(emb, n_clusters=8, max_iter=1)
     path = str(tmp_path / "idx")
-    similarity.write_ivf_index(assigned, cent_df, path)
-    base_files = len(_data_files(path, "corpus"))
-    for i in range(4):
-        similarity.append_to_ivf_index(
-            spark, path, emb.filter(F.col("vec_id") % 16 == 4 * i)
+    if family == "ivf":
+        assigned, cent_df = similarity.ivf_index(emb, n_clusters=8, max_iter=1)
+        similarity.write_ivf_index(assigned, cent_df, path)
+        sub = "corpus"
+        append = similarity.append_to_ivf_index
+    elif family == "ivfpq":
+        enc, cent_df, _, cb_df = similarity.ivfpq_index(
+            emb, dim=64, n_clusters=8, m=8, n_codes=16, max_iter=1
         )
-    assert needs_compaction(path, "ivf", max_files=base_files + 8)
-    compact_index(spark, path, "ivf")
-    assert not needs_compaction(path, "ivf", max_files=base_files + 8)
+        similarity.write_ivfpq_index(enc, cent_df, cb_df, path)
+        sub = "corpus"
+        append = similarity.append_to_ivfpq_index
+    elif family == "pq":
+        codebooks, cb_df = similarity.pq_train(emb, dim=64, m=8, n_codes=16)
+        similarity.write_pq_index(
+            similarity.pq_encode_pandas(emb, codebooks), cb_df, path
+        )
+        sub = "codes"
+        append = similarity.append_to_pq_index
+    else:
+        similarity.write_sq8_index(emb, path)
+        sub = "codes"
+        append = similarity.append_to_sq8_index
+    base_files = len(_data_files(path, sub))
+    for i in range(4):
+        delta = emb.filter(F.col("vec_id") % 16 == 4 * i)
+        if sub == "codes":  # a flat append lands one file per partition
+            delta = delta.repartition(4)
+        append(spark, path, delta)
+    assert needs_compaction(path, family, max_files=base_files + 8)
+    compact_index(spark, path, family)
+    assert not needs_compaction(path, family, max_files=base_files + 8)
     with pytest.raises(ValueError, match="unknown index family"):
         needs_compaction(path, "flat")
 

@@ -211,7 +211,7 @@ def test_sq8_append_grown_equals_rebuilt(spark, emb, queries3, tmp_path):
     delta = emb.filter(F.col("vec_id") % 4 == 0)
     grown, rebuilt = str(tmp_path / "g"), str(tmp_path / "r")
     similarity.write_sq8_index(base, grown)
-    similarity.append_to_sq8_index(delta, grown)
+    similarity.append_to_sq8_index(spark, grown, delta)
     similarity.write_sq8_index(emb, rebuilt)
     assert _rows(spark.read.parquet(f"{grown}/codes")) == _rows(
         spark.read.parquet(f"{rebuilt}/codes")

@@ -134,3 +134,46 @@ def test_runner_writes_intra_stage_progress_rows(spark, workdir, monkeypatch):
     )
     assert final["status"] == "Success"
     assert final["rows_processed"] == final["rows_total"] == final["rows_affected"]
+
+
+class _RaisingTracker:
+    def getJobIdsForGroup(self, group):
+        raise RuntimeError("status tracker unavailable")
+
+
+def test_tracker_faults_warn_and_step_still_succeeds(
+    spark, workdir, monkeypatch, caplog
+):
+    """A status tracker whose every call raises must not fail the run:
+    both best-effort sites (the baseline snapshot and the poll loop)
+    log a warning naming the run id, and the step ends Success."""
+    import logging
+    from types import SimpleNamespace
+
+    from automated_data_pipeline_spark.operators import stages
+
+    orig = stages.extract
+
+    def slow_extract(df):
+        return _slow_identity(orig(df), 2, 0.3)
+
+    monkeypatch.setattr(stages, "extract", slow_extract)
+    runner = PipelineRunner(spark, workdir, progress_interval=0.05)
+    runner.progress.spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(statusTracker=_RaisingTracker)
+    )
+    with caplog.at_level(
+        logging.WARNING, logger="automated_data_pipeline_spark.progress_monitor"
+    ):
+        rid = runner.run(
+            source_df=generate_orders(spark, 200), source_type="Synthetic"
+        )
+    step = (
+        runner.control.steps(spark)
+        .filter(f"run_id = '{rid}' and step_number = 2")
+        .collect()[0]
+    )
+    assert step["status"] == "Success"
+    msgs = [r.getMessage() for r in caplog.records]
+    assert any("baseline" in m and rid in m for m in msgs), msgs
+    assert any("poll failed" in m and rid in m for m in msgs), msgs

@@ -387,7 +387,7 @@ def run_persisted_index_demo(spark, sf_dir: str) -> dict:
                 e, q, k=5, oversample=4)),
         }
         t0 = _t.time()
-        similarity.append_to_sq8_index(delta, f"{base}/sq8")
+        similarity.append_to_sq8_index(spark, f"{base}/sq8", delta)
         demo["sq8"]["append_10pct_sec"] = round(_t.time() - t0, 3)
         # PQ: train + Arrow encode + write
         t0 = _t.time()
