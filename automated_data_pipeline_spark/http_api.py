@@ -475,13 +475,15 @@ def _make_handler(srv: PipelineApiServer):
                         200,
                         srv.list_runs(q.get("pipeline"), q.get("status")),
                     )
+                # run ids are caller-chosen (PipelineRunner.run(run_id=))
+                # and may hold reserved chars: decode, as /ui/runs does
                 if len(parts) == 2 and parts[0] == "runs":
-                    detail = srv.run_detail(parts[1])
+                    detail = srv.run_detail(urllib.parse.unquote(parts[1]))
                     if detail is None:
                         return self._send(404, {"error": "Run not found"})
                     return self._send(200, detail)
                 if len(parts) == 3 and parts[0] == "runs" and parts[2] == "logs":
-                    logs = srv.run_logs(parts[1])
+                    logs = srv.run_logs(urllib.parse.unquote(parts[1]))
                     if logs is None:
                         return self._send(404, {"error": "Run not found"})
                     return self._send(200, logs)
@@ -614,6 +616,10 @@ def _make_handler(srv: PipelineApiServer):
                     try:
                         if ctype.startswith("multipart/form-data"):
                             fields, file = parse_multipart_form(ctype, body)
+                            if file is not None and srv.landing_dir is None:
+                                return self._send(
+                                    500, {"error": "upload not configured"}
+                                )
                         else:
                             fields = json.loads(body) if body else {}
                             file = None

@@ -19,6 +19,16 @@ Variants (all Spark-first, shuffle-aware):
 Hashing uses the engine-portable md5-derived ``stable_hash64`` so every
 step is reproducible in the DuckDB oracle. Swap in ``F.xxhash64`` for
 production speed — identical structure, ~3x faster hashing.
+
+The near-dup core lives here once, shared by the batch pair emitters
+(``jaccard_pairs``, ``minhash_lsh_pairs``, ``containment_pairs``) and the
+streaming LSH ingest (``streaming/incremental_lsh.py``):
+``_hashed_shingles`` (the persisted sorted-distinct shingle-hash sets),
+``_verify_sides`` (the per-document verify sides behind the size-based
+broadcast auto-switch), ``band_bucket_frame`` + ``_lsh_candidates`` (the
+(band, bucket) self-join) and ``_jaccard_verified`` (the rounded Jaccard
+filter). These are the dedup barriers: one persist, one stats job, one
+pinned-width candidate exchange.
 """
 
 from __future__ import annotations
@@ -208,13 +218,101 @@ def shingle_frame(
     )
 
 
+def _hashed_shingles(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    extra_cols: list[str] | None = None,
+) -> DataFrame:
+    """Persisted (id, hs [, extra_cols]): each document's shingles as the
+    sorted-distinct set of their md5-derived ``stable_hash64`` bigints.
+
+    One md5 pass feeds every consumer — MinHash signatures
+    (``band_bucket_frame(hashed_col="hs")``), prefix generation and both
+    verify sides — and the persisted/broadcast payload is ~4x narrower
+    than the strings (8B fixed-width), with verification intersecting
+    integers. Jaccard/containment over the hash sets equals the
+    string-set values absent a 60-bit in-pair collision (~1e-15).
+    Documents with no shingle (< 2 tokens, NULL text) are dropped: they
+    can never pair, and a hot bucket of empty sets is pure waste. The
+    caller unpersists the frame (``_finalize``). At cluster scale this
+    is a checkpointed intermediate table instead."""
+    return (
+        shingle_frame(df, id_col, text_col, extra_cols=extra_cols)
+        .filter(F.size("shingles") > 0)
+        .select(
+            "id",
+            F.array_sort(
+                F.array_distinct(
+                    F.transform("shingles", lambda s: TX.stable_hash64(s))
+                )
+            ).alias("hs"),
+            *[F.col(c) for c in (extra_cols or [])],
+        )
+        .persist()
+    )
+
+
+def _sides(hashed: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(id_a, sh_a, _na) and (id_b, sh_b, _nb) over a
+    ``_hashed_shingles`` frame: the per-document hash sets and sizes
+    keyed for joining back to each side of a candidate pair."""
+    return tuple(
+        hashed.select(
+            F.col("id").alias(f"id_{s}"),
+            F.col("hs").alias(f"sh_{s}"),
+            F.size("hs").alias(f"_n{s}"),
+        )
+        for s in "ab"
+    )
+
+
+def _verify_sides(hashed: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``_sides``, broadcast when small. Candidates outnumber documents
+    by orders of magnitude (1.4M pairs vs 5k docs at sf0.1), so shipping
+    the hash arrays with the PAIR stream is the wrong side — broadcast
+    the per-document arrays and the pair stream never moves. One small
+    agg job materializes the persist (needed anyway) and prices the
+    sides; past ``BROADCAST_VERIFY_MAX_BYTES`` the verify join degrades
+    to a shuffle join."""
+    stats = hashed.agg(
+        F.count(F.lit(1)).alias("n"), F.sum(F.size("hs")).alias("t")
+    ).first()
+    sa, sb = _sides(hashed)
+    if _should_broadcast_verify(stats["n"] or 0, stats["t"] or 0):
+        sa, sb = F.broadcast(sa), F.broadcast(sb)
+    return sa, sb
+
+
+def _jaccard_verified(
+    cand: DataFrame, sa: DataFrame, sb: DataFrame, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard) for candidate pairs (id_a, id_b) whose
+    rounded (6-digit, mirrored in the oracles) Jaccard of the sh_a/sh_b
+    sets reaches ``threshold``. |A∪B| = _na + _nb - |A∩B| skips
+    materializing the union array."""
+    o = F.size(F.array_intersect("sh_a", "sh_b"))
+    denom = F.col("_na") + F.col("_nb") - o
+    return (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.round(
+                F.when(denom > 0, o / denom).otherwise(F.lit(0.0)), 6
+            ).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
     threshold: float = 0.8,
     block_cols: list[str] | None = None,
-    broadcast_verify: bool | None = None,
 ) -> DataFrame:
     """Pairwise bigram-shingle Jaccard: emits (id_a, id_b, jaccard) for
     pairs with jaccard >= threshold.
@@ -234,46 +332,23 @@ def jaccard_pairs(
     correctness checks compare against the unblocked ground truth.
     The result is materialized before returning and the hashed-shingle
     intermediate unpersisted — repeated invocations leave no cached
-    state behind.
-    ``broadcast_verify=None`` (default) auto-switches on the estimated
-    size of the per-document shingle tables (see
-    ``BROADCAST_VERIFY_MAX_BYTES``); pass True/False to force.
+    state behind. The verify sides broadcast or shuffle by the
+    estimated size of the per-document shingle tables
+    (``_verify_sides``).
     Optional ``block_cols`` (lang, domain, ...) further restrict pairs
     *semantically* (changes the result, use when that's the intent)."""
-    sh = shingle_frame(df, id_col, text_col, extra_cols=block_cols)
-    # persist: the hashed shingle sets feed df-counting, prefix
-    # generation, AND both verification sides — 4 references that would
-    # each re-run tokenize+shingle+md5 otherwise. At cluster scale this
-    # is a checkpointed intermediate table instead.
-    hashed = (
-        sh.select(
-            "id",
-            F.array_sort(
-                F.array_distinct(
-                    F.transform("shingles", lambda s: TX.stable_hash64(s))
-                )
-            ).alias("hs"),
-            *[F.col(c) for c in (block_cols or [])],
-        )
-        .withColumn("n_sh", F.size("hs"))
-        .persist()
-    )
-    if broadcast_verify is None:
-        # one small agg materializes the persist (needed anyway) and
-        # prices the verify side: docs * overhead + shingles * 8B
-        stats = hashed.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("n_sh").alias("t")
-        ).first()
-        broadcast_verify = _should_broadcast_verify(
-            stats["n"] or 0, stats["t"] or 0
-        )
+    # the hashed shingle sets feed df-counting, prefix generation, AND
+    # both verification sides — 4 references to the one persisted frame
+    hashed = _hashed_shingles(df, id_col, text_col, block_cols)
+    va, vb = _verify_sides(hashed)
+    sized = hashed.withColumn("n_sh", F.size("hs"))
     plen = (F.col("n_sh") - F.ceil(F.col("n_sh") * threshold) + 1).cast("int")
     # global token order = ascending document frequency (ties by hash):
     # prefixes then hold each document's *rarest* tokens, so prefix-token
     # buckets stay small — a random (hash) order would park stop-bigrams
     # in prefixes and recreate the quadratic hot bucket this operator
     # exists to avoid. df-counting is one explode + groupBy (linear).
-    tok = hashed.select("id", "n_sh", F.explode("hs").alias("h"),
+    tok = sized.select("id", "n_sh", F.explode("hs").alias("h"),
                         *[F.col(c) for c in (block_cols or [])])
     dfreq = tok.groupBy("h").agg(F.count(F.lit(1)).alias("_df"))
     ordered = (
@@ -368,38 +443,7 @@ def jaccard_pairs(
         .filter(F.col("_ub") >= F.col("_alpha"))
         .select("id_a", "id_b")
     )
-    # Verification: candidates outnumber documents by orders of
-    # magnitude (1.4M pairs vs 5k docs at sf0.1), so shuffling the full
-    # hash arrays with the PAIR stream is the wrong side — broadcast the
-    # per-document arrays instead and the pair stream never moves. When
-    # the doc-side arrays outgrow BROADCAST_VERIFY_MAX_BYTES the
-    # auto-switch above degrades to the shuffle join.
-    # |A∪B| = na+nb-|A∩B| skips materializing the union array.
-    va = hashed.select(
-        F.col("id").alias("id_a"), F.col("hs").alias("hs_a"),
-        F.col("n_sh").alias("_na"),
-    )
-    vb = hashed.select(
-        F.col("id").alias("id_b"), F.col("hs").alias("hs_b"),
-        F.col("n_sh").alias("_nb"),
-    )
-    if broadcast_verify:
-        va, vb = F.broadcast(va), F.broadcast(vb)
-    o = F.size(F.array_intersect("hs_a", "hs_b"))
-    denom = F.col("_na") + F.col("_nb") - o
-    result = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.when(denom > 0, o / denom).otherwise(F.lit(0.0)), 6
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return _finalize(result, hashed, pref)
+    return _finalize(_jaccard_verified(cand, va, vb, threshold), hashed, pref)
 
 
 def connected_components(
@@ -678,22 +722,46 @@ def band_bucket_frame(
     ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
 
+def _lsh_candidates(buckets: DataFrame) -> DataFrame:
+    """DISTINCT (id_a < id_b) pairs colliding in at least one signature
+    band of a ``band_bucket_frame``: a self-join on (band, bucket) = one
+    shuffle on the bucket key, linear-ish in corpus size."""
+    from ..plans.spread import pinned_width
+
+    a = buckets.alias("a")
+    b = buckets.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        # explicit-width repartition on the pair key: the distinct
+        # reuses this exchange (same keys), and because the width is
+        # user-pinned AQE will NOT byte-coalesce it — candidate pairs
+        # are tiny in bytes but carry the whole verify CPU (an array
+        # intersect per pair), and byte-based coalescing otherwise
+        # serializes the verify stage onto 1-2 tasks (measured 6.3 s
+        # single-task stages in the streaming twin)
+        .repartition(pinned_width(buckets.sparkSession), "id_a", "id_b")
+        .distinct()
+    )
+
+
 def _lsh_verify_frames(
     df: DataFrame,
     id_col: str,
     text_col: str,
     num_hashes: int,
     band_size: int,
-    broadcast_verify: bool | None,
 ):
     """Shared MinHash/LSH candidate machinery: returns (candidates,
-    sa, sb, shingled) where candidates = DISTINCT (id_a < id_b) pairs
-    colliding in at least one signature band, sa/sb are the
-    per-document shingle arrays (+ sizes) keyed for joining back to
-    each pair side, and shingled is the persisted intermediate the
-    caller must hand to ``_finalize`` so it is unpersisted after the
-    result materializes. ``broadcast_verify=None`` auto-switches on the
-    estimated verify-side size (see ``BROADCAST_VERIFY_MAX_BYTES``).
+    sa, sb, shingled) where candidates = ``_lsh_candidates``, sa/sb are
+    the ``_verify_sides`` and shingled is the persisted
+    ``_hashed_shingles`` frame the caller must hand to ``_finalize`` so
+    it is unpersisted after the result materializes.
 
     The band/bucket construction here is bit-reproduced by the DuckDB
     oracles of every consumer (dedup_minhash_lsh, dedup_clusters,
@@ -710,79 +778,10 @@ def _lsh_verify_frames(
          never shuffles
     """
     assert num_hashes % band_size == 0
-    # persist the HASHED shingle sets (sorted-distinct md5-derived
-    # bigints), not the strings: one md5 pass feeds signature
-    # generation AND both sides of candidate verification, the
-    # persisted/broadcast payload is ~4x narrower (8B fixed-width vs
-    # strings), and verification intersects integers (guide §2.3 —
-    # narrower types / shuffle fewer bytes). Jaccard/containment over
-    # the distinct hash sets equals the string-set values absent a
-    # 60-bit in-pair collision (~1e-15) — the batch operators'
-    # documented doctrine (jaccard_pairs), shared by the streaming
-    # ingest store. At cluster scale this is a checkpoint/intermediate
-    # table instead.
-    shingled = (
-        shingle_frame(df, id_col, text_col)
-        .filter(F.size("shingles") > 0)
-        .select(
-            "id",
-            F.array_sort(
-                F.array_distinct(
-                    F.transform("shingles", lambda s: TX.stable_hash64(s))
-                )
-            ).alias("hs"),
-        )
-        .persist()
-    )
-    if broadcast_verify is None:
-        stats = shingled.agg(
-            F.count(F.lit(1)).alias("n"), F.sum(F.size("hs")).alias("t")
-        ).first()
-        broadcast_verify = _should_broadcast_verify(
-            stats["n"] or 0, stats["t"] or 0
-        )
+    shingled = _hashed_shingles(df, id_col, text_col)
+    sa, sb = _verify_sides(shingled)
     buckets = band_bucket_frame(shingled, num_hashes, band_size, hashed_col="hs")
-
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    from ..plans.spread import pinned_width
-
-    par = pinned_width(df.sparkSession)
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        # explicit-width repartition on the pair key: the distinct
-        # reuses this exchange (same keys), and because the width is
-        # user-pinned AQE will NOT byte-coalesce it — candidate pairs
-        # are tiny in bytes but carry the whole verify CPU (an array
-        # intersect per pair), and byte-based coalescing otherwise
-        # serializes the verify stage onto 1-2 tasks (measured 6.3 s
-        # single-task stages in the streaming twin)
-        .repartition(par, "id_a", "id_b")
-        .distinct()
-    )
-
-    # same verify-side reasoning as jaccard_pairs: the per-document
-    # shingle arrays are the small side — broadcast them so the pair
-    # stream never shuffles
-    sa = shingled.select(
-        F.col("id").alias("id_a"),
-        F.col("hs").alias("sh_a"),
-        F.size("hs").alias("_na"),
-    )
-    sb = shingled.select(
-        F.col("id").alias("id_b"),
-        F.col("hs").alias("sh_b"),
-        F.size("hs").alias("_nb"),
-    )
-    if broadcast_verify:
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
-    return candidates, sa, sb, shingled
+    return _lsh_candidates(buckets), sa, sb, shingled
 
 
 def minhash_lsh_pairs(
@@ -792,29 +791,14 @@ def minhash_lsh_pairs(
     num_hashes: int = 8,
     band_size: int = 2,
     threshold: float = 0.8,
-    broadcast_verify: bool | None = None,
 ) -> DataFrame:
     """MinHash + LSH banding dedup: returns verified candidate pairs
     (id_a, id_b, jaccard>=threshold). See ``_lsh_verify_frames`` for
-    the plan shape; |A∪B| = na+nb-|A∩B| skips the union array."""
+    the plan shape."""
     candidates, sa, sb, shingled = _lsh_verify_frames(
-        df, id_col, text_col, num_hashes, band_size, broadcast_verify
+        df, id_col, text_col, num_hashes, band_size
     )
-    o = F.size(F.array_intersect("sh_a", "sh_b"))
-    denom = F.col("_na") + F.col("_nb") - o
-    result = (
-        candidates.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.when(denom > 0, o / denom).otherwise(F.lit(0.0)), 6
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return _finalize(result, shingled)
+    return _finalize(_jaccard_verified(candidates, sa, sb, threshold), shingled)
 
 
 def containment_pairs(
@@ -824,7 +808,6 @@ def containment_pairs(
     threshold: float = 0.9,
     num_hashes: int = 8,
     band_size: int = 2,
-    broadcast_verify: bool | None = None,
 ) -> DataFrame:
     """Asymmetric containment dedup: emits (id_a, id_b, containment)
     with id_a < id_b (id order, NOT size order) and containment =
@@ -847,7 +830,7 @@ def containment_pairs(
     one bucket shuffle + broadcast verify.
     """
     candidates, sa, sb, shingled = _lsh_verify_frames(
-        df, id_col, text_col, num_hashes, band_size, broadcast_verify
+        df, id_col, text_col, num_hashes, band_size
     )
     o = F.size(F.array_intersect("sh_a", "sh_b"))
     result = (
@@ -965,7 +948,7 @@ def simhash_pairs(
     # simhash 0 and would collide in EVERY block — one quadratic hot
     # bucket of spurious hamming-0 "near-dups" (millions of empty docs
     # in a crawl = one killed reducer). They carry no content to
-    # compare; drop them, same guard as _lsh_verify_frames.
+    # compare; drop them, same guard as _hashed_shingles.
     df = df.filter(F.size(TX.tokens(F.col(text_col))) > 0)
     base = TX.simhash_frame(df, id_col, text_col)
     return hamming_near_dup_pairs(

@@ -320,7 +320,7 @@ def decode_image_features(df: DataFrame) -> DataFrame:
 
 def resize_image(df: DataFrame, width: int, height: int) -> DataFrame:
     """REAL resize: decode -> nearest-neighbor resample -> re-encode
-    PNG, inside the same mapInPandas shape as ``resize_stub``. Rows
+    PNG, inside one mapInPandas pass. Rows
     whose payloads don't decode pass through unchanged — payload AND
     original width/height metadata both kept (a corrupt row must not
     lose the geometry it arrived with)."""
@@ -457,21 +457,6 @@ def image_near_dup_pairs(
         hashes, "media_id", "dhash",
         bits=64, max_hamming=max_hamming, n_blocks=n_blocks,
     )
-
-
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: passes payloads through the same mapInPandas
-    shape a real resize would use; stamps the target geometry (the
-    decode/re-encode itself needs PIL — see _decode_image)."""
-
-    def do_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["width"] = width
-            pdf["height"] = height
-            yield pdf
-
-    return df.mapInPandas(do_resize, schema=MEDIA_SCHEMA)
 
 
 def encode_apng(frames: list[bytes], width: int, height: int,
@@ -648,20 +633,4 @@ def frame_sample(df: DataFrame, every_ms: int = 1000,
         run,
         schema="media_id long, frame_idx int, offset_ms long, "
                "frame_payload binary, decode_ok boolean",
-    )
-
-
-def frame_sample_stub(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plumbing: explodes each video payload into
-    frame rows (frame extraction stubbed as offset markers)."""
-    frames = df.filter(F.col("media_type") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.lit(4))
-        ).alias("frame_idx"),
-    )
-    return frames.select(
-        "media_id",
-        "frame_idx",
-        (F.col("frame_idx") * every_ms).alias("offset_ms"),
     )

@@ -757,7 +757,7 @@ def pq_encode(
     literal codebook centroids — pure expressions on a vector slice, so
     the whole encode is one narrow codegen pass (no shuffle, no Python).
     Adds ``out_col`` = array<int> of m codes; a NULL vector gets NULL
-    codes (same contract as ``pq_encode_joined``)."""
+    codes (same contract as ``pq_encode_pandas``)."""
     m = len(codebooks)
     sub = len(codebooks[0][0])
 
@@ -775,55 +775,6 @@ def pq_encode(
     return corpus.withColumn(out_col, codes)
 
 
-def pq_encode_joined(
-    corpus: DataFrame,
-    codebook_df: DataFrame,
-    m: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_col: str = "pq_codes",
-) -> DataFrame:
-    """Large-codebook PQ encode: instead of literal centroid expressions
-    (whose task binary grows with m*n_codes*sub — fine at 16-64 codes,
-    multi-MiB at FAISS-typical 256x16x64), explode each vector into its
-    m subspace slices, broadcast-join the codebook on ``subspace``, and
-    take the argmin code per (row, subspace) with a struct-min (ties ->
-    smallest code, matching numpy argmin). One partial-agg shuffle of
-    N*m rows; codes parity with ``pq_encode`` — including NULL vectors
-    -> NULL codes, row kept — is pinned by tests/test_pq.py."""
-    sub_ix = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("subspace")
-    # NULL vectors take the left-join path below (NULL codes, row kept)
-    # rather than feeding NULL distances into the struct-min
-    sliced = corpus.select(id_col, vec_col).filter(
-        F.col(vec_col).isNotNull()
-    ).select(id_col, F.col(vec_col), sub_ix)
-    pairs = sliced.join(F.broadcast(codebook_df), "subspace").select(
-        id_col,
-        "subspace",
-        "code",
-        V.sq_l2(
-            F.slice(
-                F.col(vec_col),
-                F.col("subspace") * F.size("centroid") + 1,
-                F.size("centroid"),
-            ),
-            F.col("centroid"),
-        ).alias("d2"),
-    )
-    codes = (
-        pairs.groupBy(id_col, "subspace")
-        .agg(F.min(F.struct("d2", "code"))["code"].alias("code"))
-        .groupBy(id_col)
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("subspace", "code"))),
-                lambda r: r["code"].cast("int"),
-            ).alias(out_col)
-        )
-    )
-    return corpus.join(codes, id_col, "left")
-
-
 def pq_encode_pandas(
     corpus: DataFrame,
     codebooks,
@@ -836,19 +787,21 @@ def pq_encode_pandas(
     subspace over the whole Arrow batch — the ``§2.9 wide-vector
     math`` case where a Pandas UDF beats expression folds outright.
 
-    Why a third encode path: ``pq_encode``'s literal expressions blow
-    up codegen compilation with the codebook size, and
-    ``pq_encode_joined`` evaluates m*n_codes interpreted
-    zip_with/aggregate folds per vector (measured 30 s for 20k x 64
-    codes at sf1 — the r7 scale-validation watch item) plus an N*m-row
-    partial-agg shuffle. This path is ONE narrow pass, no explode, no
+    Why a second encode path: ``pq_encode``'s literal expressions blow
+    up codegen compilation with the codebook size, and the join-based
+    encode this replaced (explode each vector into its m subspace
+    slices, broadcast-join the codebook, struct-min per slice)
+    evaluated m*n_codes interpreted zip_with/aggregate folds per vector
+    (measured 30 s for 20k x 64 codes at sf1 — the r7 scale-validation
+    watch item) plus an N*m-row partial-agg shuffle. This path is ONE
+    narrow pass, no explode, no
     join, no shuffle: the codebook ships in the UDF closure (m *
     n_codes * sub floats — kilobytes even at FAISS-typical 256x16),
     and per batch the distance matrix is one BLAS multiply per
     subspace (||x||^2 - 2 x C^T + ||c||^2, argmin rows). Ties pick
     the smallest code (numpy argmin first-occurrence), the same rule
-    the other two paths implement; three-way parity is pinned by
-    tests/test_pq.py. NULL vectors get NULL codes, row kept.
+    ``pq_encode`` implements; parity is pinned by tests/test_pq.py.
+    NULL vectors get NULL codes, row kept.
 
     ``centroids`` (optional, the IVF-PQ residual case): the coarse
     centroid matrix, indexed by ``cluster_col``. The residual

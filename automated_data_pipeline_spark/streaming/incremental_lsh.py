@@ -5,10 +5,15 @@ ingest shape for a training corpus: new crawl shards arrive
 continuously, and each must be checked against EVERYTHING already
 accepted without reprocessing the corpus.
 
+The near-dup core is the batch operators' own, in ``operators/dedup.py``
+(see its module docstring): the hashed shingle sets
+(``dedup._hashed_shingles``), the banding (``dedup.band_bucket_frame``),
+the (band, bucket) candidate self-join (``dedup._lsh_candidates``) and
+the rounded-Jaccard verify (``dedup._jaccard_verified``). Only the
+always-broadcast verify sides and the cross-store join are the stream's.
+
 Per micro-batch:
-1. shingle + MinHash-sign the batch, band into (band, bucket) keys —
-   the exact banding the batch operators use (``dedup.band_bucket_frame``,
-   one shared implementation)
+1. shingle + MinHash-sign the batch, band into (band, bucket) keys
 2. within-batch near-dups: LSH candidates inside the batch, verified
    by shingle Jaccard; a doc is dropped iff it verifies against a
    SMALLER-id batch doc. NOTE this greedy pairwise rule differs from
@@ -45,7 +50,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import text as TX
 from ..operators import dedup
 from ..plans.empty import empty_local_frame
 from ..storefs import fs_for
@@ -199,18 +203,6 @@ class LshStore:
             rewrite_dir(dir_, df.coalesce(files_per_store))
 
 
-def _verified_jaccard(cand: DataFrame, threshold: float) -> DataFrame:
-    """Rounded shingle Jaccard over candidate pairs carrying sh_a/sh_b
-    arrays (sorted-distinct shingle HASHES — bigint compares, not
-    string compares) — identical math to the batch verifiers."""
-    o = F.size(F.array_intersect("sh_a", "sh_b"))
-    denom = F.size("sh_a") + F.size("sh_b") - o
-    return cand.withColumn(
-        "jaccard",
-        F.round(F.when(denom > 0, o / denom).otherwise(F.lit(0.0)), 6),
-    ).filter(F.col("jaccard") >= threshold)
-
-
 def near_dedup_batch_against_store(
     spark: SparkSession,
     batch: DataFrame,
@@ -232,91 +224,49 @@ def near_dedup_batch_against_store(
         )
         return batch.join(mine, id_col, "left_semi").localCheckpoint(eager=True)
 
-    # Hash the shingles ONCE (sorted-distinct md5-derived bigints) and
-    # flow the hashed sets end-to-end: MinHash banding consumes them via
-    # band_bucket_frame(hashed_col=...) — bucket keys are IDENTICAL (the
-    # signature is a min over pmod of the same value set) — and both
-    # verifiers intersect 8B integers instead of shingle strings. Same
-    # results absent a 60-bit in-pair collision (~1e-15), the batch
-    # operators' documented doctrine (see jaccard_pairs).
-    shingled = (
-        dedup.shingle_frame(batch, id_col, text_col)
-        .filter(F.size("shingles") > 0)
-        .select(
-            "id",
-            F.array_sort(
-                F.array_distinct(
-                    F.transform("shingles", lambda s: TX.stable_hash64(s))
-                )
-            ).alias("hs"),
-        )
-        .persist()
-    )
+    # the batch operators' core (see dedup's module docstring): hashed
+    # shingle sets, banding, the (band, bucket) candidate self-join and
+    # the rounded-Jaccard verify
+    shingled = dedup._hashed_shingles(batch, id_col, text_col)
     buckets = dedup.band_bucket_frame(
         shingled, store.num_hashes, store.band_size, hashed_col="hs"
     )
+    # always broadcast: a micro-batch is small by construction, and the
+    # batch operators' size-pricing stats job would be one more Spark
+    # job per micro-batch
+    sa, sb = (F.broadcast(side) for side in dedup._sides(shingled))
 
-    # (2) within-batch: candidates from shared buckets, verify, drop the
-    # larger id of every verified pair (min-id survivor per pair edge).
-    # The explicit-width repartition feeding each .distinct() below is
-    # the verify-stage spread: candidate pairs are tiny in BYTES but
-    # carry the whole verify CPU (an array intersect per pair), and
-    # AQE's byte-based coalescing otherwise collapses the distinct's
-    # exchange to 1-2 partitions and serializes the verify (measured:
-    # a 6.3 s single-task stage per micro-batch at sf0.1). A
-    # user-pinned width is exempt from AQE coalescing; the distinct
-    # reuses the same exchange, so no shuffle is added.
-    from ..plans.spread import pinned_width
-
-    par = pinned_width(spark)
-    a, b = buckets.alias("a"), buckets.alias("b")
-    in_batch_cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .repartition(par, "id_a", "id_b")
-        .distinct()
-    )
-    sh_a = shingled.select(F.col("id").alias("id_a"), F.col("hs").alias("sh_a"))
-    sh_b = shingled.select(F.col("id").alias("id_b"), F.col("hs").alias("sh_b"))
+    # (2) within-batch: drop the larger id of every verified pair
+    # (min-id survivor per pair edge)
     in_batch_dups = (
-        _verified_jaccard(
-            in_batch_cand.join(F.broadcast(sh_a), "id_a").join(
-                F.broadcast(sh_b), "id_b"
-            ),
-            threshold,
-        )
+        dedup._jaccard_verified(dedup._lsh_candidates(buckets), sa, sb, threshold)
         .select(F.col("id_b").alias("dup_id"))
         .distinct()
     )
 
     # (3) cross-store: batch buckets vs the store's bucket index; fat
-    # shingle payloads join in ONLY for candidate doc_ids
+    # shingle payloads join in ONLY for candidate doc_ids. Same
+    # pinned-width spread as ``dedup._lsh_candidates``: the pairs are
+    # tiny in bytes but carry the whole verify CPU.
+    from ..plans.spread import pinned_width
+
     store_cand = (
         buckets.join(
-            store.buckets(spark).withColumnRenamed("doc_id", "store_id"),
+            store.buckets(spark).withColumnRenamed("doc_id", "id_b"),
             ["band", "bucket"],
         )
-        .select("id", "store_id")
-        .repartition(par, "id", "store_id")
+        .select(F.col("id").alias("id_a"), "id_b")
+        .repartition(pinned_width(spark), "id_a", "id_b")
         .distinct()
     )
-    store_sh = store.docs(spark).select(
-        F.col("doc_id").alias("store_id"), F.col("shingles").alias("sh_b")
+    store_sb = store.docs(spark).select(
+        F.col("doc_id").alias("id_b"),
+        F.col("shingles").alias("sh_b"),
+        F.size("shingles").alias("_nb"),
     )
     cross_dups = (
-        _verified_jaccard(
-            store_cand.join(
-                F.broadcast(shingled.select(F.col("id"), F.col("hs").alias("sh_a"))),
-                "id",
-            ).join(store_sh, "store_id"),
-            threshold,
-        )
-        .select(F.col("id").alias("dup_id"))
+        dedup._jaccard_verified(store_cand, sa, store_sb, threshold)
+        .select(F.col("id_a").alias("dup_id"))
         .distinct()
     )
 

@@ -12,12 +12,13 @@ this module turns that into a queryable accounting surface:
 
 - ``watermark_policy_metrics(query)``: cumulative late-drop counts from
   a live/finished query's recentProgress (no listener needed).
-- ``LateDataAuditor``: a StreamingQueryListener that appends one
-  control-log row per micro-batch with (batch_id, input_rows,
-  dropped_by_watermark, watermark) — the streaming twin of the
-  reference's per-step RowsAffected bookkeeping
+- ``LateDataAuditor``: a StreamingQueryListener that keeps one
+  in-memory record per micro-batch in ``records`` (query id -> list of
+  (batch_id, input_rows, dropped_by_watermark, watermark) dicts) — the
+  streaming twin of the reference's per-step RowsAffected bookkeeping
   (java_code/.../StepProgress.java:10,25-48 semantics at micro-batch
-  granularity).
+  granularity). Nothing is written to the control tables; a caller
+  that wants the rows persisted writes them from ``records``.
 
 Scale notes: the counters are driver-side aggregates Spark already
 maintains; nothing here touches executor data paths.

@@ -53,6 +53,35 @@ def session_counts(
     )
 
 
+def _range_join(
+    left: DataFrame,
+    right: DataFrame,
+    on: str,
+    left_ts: str,
+    right_ts: str,
+    within: str,
+    watermark: str,
+    how: str,
+) -> DataFrame:
+    """The watermarked event-time range join behind both stream-stream
+    joins: right_ts ∈ [left_ts - within, left_ts], columns prefixed
+    l_/r_, ``on`` kept once under its own name."""
+    l = left.withWatermark(left_ts, watermark).select(
+        F.col(on).alias("_k"),
+        *[F.col(c).alias(f"l_{c}") for c in left.columns if c != on],
+    )
+    r = right.withWatermark(right_ts, watermark).select(
+        F.col(on).alias("_k2"),
+        *[F.col(c).alias(f"r_{c}") for c in right.columns if c != on],
+    )
+    cond = (
+        (F.col("_k") == F.col("_k2"))
+        & (F.col(f"r_{right_ts}") >= F.col(f"l_{left_ts}") - F.expr(f"INTERVAL {within}"))
+        & (F.col(f"r_{right_ts}") <= F.col(f"l_{left_ts}"))
+    )
+    return l.join(r, cond, how).withColumnRenamed("_k", on).drop("_k2")
+
+
 def stream_stream_join(
     left: DataFrame,
     right: DataFrame,
@@ -67,20 +96,9 @@ def stream_stream_join(
     sides carry watermarks so Spark can bound the join state — without
     the time constraint + watermarks, stream-stream join state grows
     forever. Columns are prefixed l_/r_ to avoid collisions."""
-    l = left.withWatermark(left_ts, watermark).select(
-        F.col(on).alias("_k"),
-        *[F.col(c).alias(f"l_{c}") for c in left.columns if c != on],
+    return _range_join(
+        left, right, on, left_ts, right_ts, within, watermark, "inner"
     )
-    r = right.withWatermark(right_ts, watermark).select(
-        F.col(on).alias("_k2"),
-        *[F.col(c).alias(f"r_{c}") for c in right.columns if c != on],
-    )
-    cond = (
-        (F.col("_k") == F.col("_k2"))
-        & (F.col(f"r_{right_ts}") >= F.col(f"l_{left_ts}") - F.expr(f"INTERVAL {within}"))
-        & (F.col(f"r_{right_ts}") <= F.col(f"l_{left_ts}"))
-    )
-    return l.join(r, cond, "inner").withColumnRenamed("_k", on).drop("_k2")
 
 
 def stream_stream_left_join(
@@ -100,20 +118,9 @@ def stream_stream_left_join(
     ``within + watermark`` of event time. That delayed-null contract is
     the outer-join analogue of append-mode window emission, and the
     state stays bounded exactly like the inner variant."""
-    l = left.withWatermark(left_ts, watermark).select(
-        F.col(on).alias("_k"),
-        *[F.col(c).alias(f"l_{c}") for c in left.columns if c != on],
+    return _range_join(
+        left, right, on, left_ts, right_ts, within, watermark, "left_outer"
     )
-    r = right.withWatermark(right_ts, watermark).select(
-        F.col(on).alias("_k2"),
-        *[F.col(c).alias(f"r_{c}") for c in right.columns if c != on],
-    )
-    cond = (
-        (F.col("_k") == F.col("_k2"))
-        & (F.col(f"r_{right_ts}") >= F.col(f"l_{left_ts}") - F.expr(f"INTERVAL {within}"))
-        & (F.col(f"r_{right_ts}") <= F.col(f"l_{left_ts}"))
-    )
-    return l.join(r, cond, "left_outer").withColumnRenamed("_k", on).drop("_k2")
 
 
 def dedup_within_watermark(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:

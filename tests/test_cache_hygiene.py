@@ -63,6 +63,47 @@ def test_tfidf_leaves_no_cache(spark):
     out.count()
 
 
+# Spark jobs per call on the ``docs`` fixture: the near-dup barriers
+# (persist, stats, candidate exchange, broadcasts, result checkpoint;
+# for the ingest also the replay probe and the two store appends). A
+# new barrier fails here.
+LSH_PAIRS_JOBS = 10
+JACCARD_PAIRS_JOBS = 15
+LSH_INGEST_BATCH_JOBS = 20
+
+
+def _jobs_of(spark, name, fn):
+    from test_fold_streams import _marker_job
+
+    before = _marker_job(spark, f"{name}-before")
+    fn()
+    return _marker_job(spark, f"{name}-after") - before - 1
+
+
+def test_minhash_lsh_pairs_job_count_is_pinned(spark, docs):
+    assert _jobs_of(spark, "lsh-pairs", lambda: dedup.minhash_lsh_pairs(
+        docs, "doc_id", "text", threshold=0.8
+    )) == LSH_PAIRS_JOBS
+
+
+def test_jaccard_pairs_job_count_is_pinned(spark, docs):
+    assert _jobs_of(spark, "jaccard-pairs", lambda: dedup.jaccard_pairs(
+        docs, "doc_id", "text", threshold=0.8
+    )) == JACCARD_PAIRS_JOBS
+
+
+def test_lsh_ingest_batch_job_count_is_pinned(spark, docs, tmp_path):
+    from automated_data_pipeline_spark.streaming.incremental_lsh import (
+        LshStore,
+        near_dedup_batch_against_store,
+    )
+
+    store = LshStore(str(tmp_path / "lsh_store"))
+    assert _jobs_of(spark, "lsh-ingest", lambda: near_dedup_batch_against_store(
+        spark, docs, store, batch_key="b1"
+    )) == LSH_INGEST_BATCH_JOBS
+
+
 def test_broadcast_verify_autoswitch_thresholds():
     """The size heuristic flips to the shuffle join past the ceiling."""
     from automated_data_pipeline_spark.operators.dedup import (

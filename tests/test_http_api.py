@@ -429,6 +429,20 @@ def test_gui_run_link_roundtrips_reserved_char_ids(spark, served):
     assert "run with:odd/chars" in page
 
 
+def test_json_run_routes_decode_reserved_char_ids(served):
+    """Run ids are caller-chosen (PipelineRunner.run(run_id=...)) and
+    web.py percent-encodes them; the JSON routes decode the path
+    segment like /ui/runs does, or an id with a space or '/' 404s."""
+    srv, runner = served
+    rid = "batch 1/a"
+    runner.control.start_run(pipeline_name="Odd", run_id=rid)
+    runner.control.log(rid, "Info", "odd id", pipeline_name="Odd")
+    code, detail = _get(srv.port, "/runs/batch%201%2Fa")
+    assert code == 200 and detail["run_id"] == rid
+    code, logs = _get(srv.port, "/runs/batch%201%2Fa/logs")
+    assert code == 200 and [e["message"] for e in logs] == ["odd id"]
+
+
 def test_gui_escapes_html_in_messages():
     """A log message (or error) containing markup must render inert —
     server-rendered pages over user-supplied file contents are an XSS
@@ -576,6 +590,36 @@ def test_schedule_malformed_is_400(served_full):
     assert code == 400 and "error" in body
     code, lst = _req(srv.port, "/schedules", "GET")
     assert lst == []
+
+
+def test_schedule_upload_without_landing_dir_is_not_configured(spark, workdir):
+    """A multipart schedule on a server without a landing dir answers
+    like /pipeline/upload ("upload not configured"), not with a
+    TypeError from os.makedirs(None); a JSON source_path still works."""
+    from automated_data_pipeline_spark.scheduler import ScheduleRunner
+
+    sched = ScheduleRunner(fire=lambda s: None, poll_seconds=3600)
+    srv = PipelineApiServer(spark, ControlStore(workdir), scheduler=sched).start()
+    try:
+        boundary = "XBOUNDX"
+        body = (
+            f'--{boundary}\r\nContent-Disposition: form-data; name="file"; '
+            f'filename="orders.csv"\r\n\r\nOrderId,Amount\nA,1\n\r\n'
+            f"--{boundary}--\r\n"
+        ).encode()
+        code, out = _req(
+            srv.port, "/schedules", "POST", body,
+            content_type=f"multipart/form-data; boundary={boundary}",
+        )
+        assert code == 500 and out == {"error": "upload not configured"}
+        assert "TypeError" not in json.dumps(out)
+        code, created = _req(
+            srv.port, "/schedules", "POST",
+            json.dumps({"name": "json", "sourcePath": "/tmp/x.csv"}).encode(),
+        )
+        assert code == 201 and created["source_path"] == "/tmp/x.csv"
+    finally:
+        srv.stop()
 
 
 def test_admin_check_running_status_marks_stale_runs(spark, served_full):

@@ -55,21 +55,6 @@ def test_feature_matches_python_oracle(spark):
         assert got == pytest.approx(expect, abs=1e-4)
 
 
-def test_resize_and_frame_sample_stubs(spark):
-    d = load(spark, SF, "documents").limit(30)
-    media = multimodal.attach_fake_payload(d, "doc_id", "text")
-    resized = multimodal.resize_stub(media, 224, 224)
-    r = resized.first()
-    assert (r["width"], r["height"]) == (224, 224)
-    assert resized.count() == 30
-
-    frames = multimodal.frame_sample_stub(media, every_ms=500)
-    n_videos = media.filter(F.col("media_type") == "video").count()
-    assert frames.count() == n_videos * 5
-    one = frames.filter(F.col("frame_idx") == 2).first()
-    assert one["offset_ms"] == 1000
-
-
 def test_ivf_recall_vs_bruteforce(spark):
     e = load(spark, SF, "embeddings")
     q = e.filter(F.col("vec_id") < 5).select(

@@ -177,21 +177,15 @@ def test_ivfpq_codes_and_clusters(emb):
     assert enc.select("vec_id").distinct().count() == emb.count()
 
 
-def test_pq_encode_joined_parity(emb):
-    """The broadcast-join encode (large-codebook path) must produce
+def test_pq_encode_arrow_parity(emb):
+    """The Arrow-batched encode (large-codebook path) must produce
     byte-identical codes to the literal-expression encode."""
-    codebooks, cb_df = similarity.pq_train(emb, dim=64, m=8, n_codes=16)
+    codebooks, _ = similarity.pq_train(emb, dim=64, m=8, n_codes=16)
     lit = {
         r["vec_id"]: r["pq_codes"]
         for r in similarity.pq_encode(emb, codebooks)
         .select("vec_id", "pq_codes").collect()
     }
-    joined = {
-        r["vec_id"]: r["pq_codes"]
-        for r in similarity.pq_encode_joined(emb, cb_df, m=8)
-        .select("vec_id", "pq_codes").collect()
-    }
-    assert lit == joined
     arrow = {
         r["vec_id"]: r["pq_codes"]
         for r in similarity.pq_encode_pandas(emb, codebooks)
@@ -202,11 +196,11 @@ def test_pq_encode_joined_parity(emb):
 
 def test_pq_encode_null_vector_parity(spark, emb):
     """A NULL embedding must yield NULL codes (row KEPT) on both encode
-    paths — the literal and join variants must agree on degenerate
+    paths — the literal and Arrow variants must agree on degenerate
     input, not just the clean fixture."""
     from pyspark.sql import functions as F
 
-    codebooks, cb_df = similarity.pq_train(emb, dim=64, m=8, n_codes=16)
+    codebooks, _ = similarity.pq_train(emb, dim=64, m=8, n_codes=16)
     with_null = emb.limit(3).select(
         "vec_id",
         F.when(F.col("vec_id") == 0, F.lit(None)).otherwise(
@@ -218,14 +212,8 @@ def test_pq_encode_null_vector_parity(spark, emb):
         for r in similarity.pq_encode(with_null, codebooks)
         .select("vec_id", "pq_codes").collect()
     }
-    joined = {
-        r["vec_id"]: r["pq_codes"]
-        for r in similarity.pq_encode_joined(with_null, cb_df, m=8)
-        .select("vec_id", "pq_codes").collect()
-    }
-    assert set(lit) == set(joined) == {0, 1, 2}
-    assert lit[0] is None and joined[0] is None
-    assert lit == joined
+    assert set(lit) == {0, 1, 2}
+    assert lit[0] is None
     arrow = {
         r["vec_id"]: r["pq_codes"]
         for r in similarity.pq_encode_pandas(with_null, codebooks)
@@ -237,9 +225,8 @@ def test_pq_encode_null_vector_parity(spark, emb):
 def test_ivfpq_arrow_residual_encode_parity(spark, emb):
     """The in-UDF residual subtract (pq_encode_pandas(centroids=...),
     the r10 build/ingest hot path) must produce codes bit-identical to
-    BOTH former paths: (a) zip_with-materialized residual + Arrow
-    encode (the r9 shape), (b) zip_with residual + the broadcast-join
-    fold encode — numpy float64 subtraction computes the same IEEE-754
+    the former zip_with-materialized residual + Arrow encode (the r9
+    shape) — numpy float64 subtraction computes the same IEEE-754
     residuals as the zip_with double subtraction. NULL vectors: NULL
     cluster -> NULL codes, row kept by the encoder."""
     base = emb.select(
@@ -256,19 +243,13 @@ def test_ivfpq_arrow_residual_encode_parity(spark, emb):
             lambda x, c: x.cast("double") - c,
         ),
     ).drop("centroid")
-    codebooks, cb_df = similarity.pq_train(
+    codebooks, _ = similarity.pq_train(
         resid, dim=64, m=8, n_codes=16, vec_col="_resid"
     )
     old_arrow = {
         r["vec_id"]: r["pq_codes"]
         for r in similarity.pq_encode_pandas(
             resid, codebooks, vec_col="_resid"
-        ).select("vec_id", "pq_codes").collect()
-    }
-    old_fold = {
-        r["vec_id"]: r["pq_codes"]
-        for r in similarity.pq_encode_joined(
-            resid, cb_df, m=8, vec_col="_resid"
         ).select("vec_id", "pq_codes").collect()
     }
     cent = similarity._centroids_from_df(cent_df)
@@ -281,7 +262,7 @@ def test_ivfpq_arrow_residual_encode_parity(spark, emb):
     # the NULL-vector row (dropped by resid's inner join) is kept by
     # the new path with NULL codes — compare it separately
     assert new.pop(0) is None
-    assert new == old_arrow == old_fold
+    assert new == old_arrow
     assert len(new) == emb.count() - 1
 
 
