@@ -1096,22 +1096,32 @@ def winnowing_overlap_pairs(
     ).filter(F.col("f").isNotNull())
     if materialize:
         e = e.persist()
+    pairs = _pairs_from_index(e, max_df, min_shared)
+    if not materialize:
+        return pairs
+    out = pairs.localCheckpoint(eager=True)
+    e.unpersist()
+    return out
+
+
+def _pairs_from_index(
+    e: DataFrame, max_df: int, min_shared: int
+) -> DataFrame:
+    """The winnowing pair join over an exploded (doc, f) index: the
+    ``max_df`` cap, equi self-join, shared count — the batch ≡ stream
+    tail of :func:`winnowing_overlap_pairs` and
+    ``winnowing_stream.recover_overlap_pairs``."""
     freq = e.groupBy("f").agg(F.count(F.lit(1)).alias("n_docs"))
     keep = freq.filter(
         (F.col("n_docs") >= 2) & (F.col("n_docs") <= max_df)
     ).select("f")
     kept = e.join(keep, "f")
-    a = kept.select(F.col("f"), F.col("doc").alias("doc_a"))
-    b_side = kept.select(F.col("f"), F.col("doc").alias("doc_b"))
-    pairs = (
+    a = kept.select("f", F.col("doc").alias("doc_a"))
+    b_side = kept.select("f", F.col("doc").alias("doc_b"))
+    return (
         a.join(b_side, "f")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("shared"))
         .filter(F.col("shared") >= min_shared)
     )
-    if not materialize:
-        return pairs
-    out = pairs.localCheckpoint(eager=True)
-    e.unpersist()
-    return out

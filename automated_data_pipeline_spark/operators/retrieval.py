@@ -126,10 +126,35 @@ def bm25_top_docs_deferred(
         F.sum("dl").alias("tok_total"),
     )
 
+    result = _bm25_ranked(tf, dl, dfq, stats, queries, k, k1, b)
+
+    def release() -> None:
+        if persist_postings:
+            dl.unpersist()
+            tf.unpersist()
+
+    return result, release
+
+
+def _bm25_ranked(
+    tf: DataFrame,
+    dl: DataFrame,
+    dfq: DataFrame,
+    stats: DataFrame,
+    queries: dict[int, list[str]],
+    k: int,
+    k1: float,
+    b: float,
+) -> DataFrame:
+    """The ranked top-``k`` (query_id, doc_id, score, rnk) from postings
+    ``tf`` (doc_id, term, tf), lengths ``dl``, document frequencies
+    ``dfq`` (term, df) and the one-row ``stats`` (n_docs, tok_total) —
+    the batch ≡ stream tail of :func:`bm25_top_docs_deferred` and
+    ``bm25_stream.recover_bm25_scores``. Query/df/stats broadcast."""
     qrows = [
         (int(qid), t) for qid, terms in sorted(queries.items()) for t in terms
     ]
-    qdf = spark.createDataFrame(qrows, "query_id int, term string")
+    qdf = tf.sparkSession.createDataFrame(qrows, "query_id int, term string")
 
     scored = (
         tf.join(F.broadcast(qdf), "term")
@@ -160,7 +185,7 @@ def bm25_top_docs_deferred(
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("doc_id")
     )
-    result = (
+    return (
         agg.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select(
@@ -168,13 +193,6 @@ def bm25_top_docs_deferred(
             F.col("rnk").cast("long").alias("rnk"),
         )
     )
-
-    def release() -> None:
-        if persist_postings:
-            dl.unpersist()
-            tf.unpersist()
-
-    return result, release
 
 
 def bm25_cte_body(

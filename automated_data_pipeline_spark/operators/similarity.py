@@ -1450,6 +1450,34 @@ def ivfpq_topk(
     probes = _ivfpq_probes(
         cent_df, queries, nprobe, query_id_col, query_vec_col
     )
+    return _ivfpq_search(
+        encoded, codebook_df, queries, probes, k, oversample, id_col,
+        vec_col, codes_col, query_id_col, query_vec_col, exclude_self,
+        digits, encoded if vectors is None else vectors,
+    )
+
+
+def _ivfpq_search(
+    encoded: DataFrame,
+    codebook_df: DataFrame,
+    queries: DataFrame,
+    probes: DataFrame,
+    k: int,
+    oversample: int,
+    id_col: str,
+    vec_col: str,
+    codes_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+    exclude_self: bool,
+    digits: int,
+    vectors: DataFrame,
+) -> DataFrame:
+    """``ivfpq_topk``'s search over a given probe frame (qid, qe,
+    ivf_cluster, centroid): residual LUTs, ADC shortlist, exact
+    re-rank against ``vectors``. The in-session path passes fresh
+    probes; ``ivfpq_topk_persisted`` passes the probes it already
+    pinned, so the centroid table is not scanned again."""
     # per-(query, cluster) residual LUT: d2 between the query residual
     # slice and each residual codebook centroid
     resid_slice = F.slice(
@@ -1488,8 +1516,8 @@ def ivfpq_topk(
         scored, query_id_col, [F.asc("adc_d2"), F.asc(id_col)], k * oversample
     ).select(query_id_col, id_col)
     return _exact_rerank(
-        shortlist, encoded if vectors is None else vectors, queries, k,
-        oversample, id_col, vec_col, query_id_col, query_vec_col, digits,
+        shortlist, vectors, queries, k, oversample, id_col, vec_col,
+        query_id_col, query_vec_col, digits,
     )
 
 
@@ -1542,17 +1570,15 @@ def ivfpq_topk_persisted(
     bounded cluster collect are ``_read_probed``'s."""
     cent_df = spark.read.parquet(index_dir(path, CENTROIDS))
     codebook_df = spark.read.parquet(index_dir(path, CODEBOOK))
-    _, codes = _read_probed(
+    probes, codes = _read_probed(
         spark, path,
         _ivfpq_probes(cent_df, queries, nprobe, query_id_col, query_vec_col),
         id_col,
     )
-    return ivfpq_topk(
-        codes, cent_df, codebook_df, queries, k=k, nprobe=nprobe,
-        oversample=oversample, id_col=id_col, vec_col=vec_col,
-        codes_col=codes_col, query_id_col=query_id_col,
-        query_vec_col=query_vec_col, exclude_self=exclude_self,
-        digits=digits, vectors=corpus,
+    return _ivfpq_search(
+        codes, codebook_df, queries, probes, k, oversample, id_col,
+        vec_col, codes_col, query_id_col, query_vec_col, exclude_self,
+        digits, corpus,
     )
 
 

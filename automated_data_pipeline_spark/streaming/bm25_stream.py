@@ -12,6 +12,8 @@ the merged store the batch operator's scores are recoverable
 bit-for-bit at any moment (same integer statistics -> same IEEE
 expression -> same rounded score; the suite's
 ``bm25_scores_recovered`` shares ``bm25_top_docs``'s DuckDB oracle).
+The scoring and ranking is one tail, ``retrieval._bm25_ranked``,
+shared with the batch operator; only the statistics' source differs.
 
 The 100 TB query path this store shape buys: scoring touches only the
 postings rows of the QUERY's terms — the term filter is a literal
@@ -29,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
+from ..operators.retrieval import _bm25_ranked
 from .incremental_dedup import FingerprintStore
 
 
@@ -122,8 +125,7 @@ def recover_bm25_scores(
     Plan: the postings scan carries a literal ``term IN (...)``
     predicate (parquet pushdown — only query-term row groups read);
     document frequency aggregates from those filtered rows; lengths
-    and corpus totals come from the doclen store; query/df/stats
-    tables broadcast into the scoring join."""
+    and corpus totals come from the doclen store."""
     terms = sorted({t for ts in queries.values() for t in ts})
     post = (
         postings.read(spark)
@@ -141,47 +143,4 @@ def recover_bm25_scores(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("dl").alias("tok_total"),
     )
-    qrows = [
-        (int(qid), t) for qid, ts in sorted(queries.items()) for t in ts
-    ]
-    qdf = spark.createDataFrame(qrows, "query_id int, term string")
-
-    scored = (
-        post.join(F.broadcast(qdf), "term")
-        .join(dl, "doc_id")
-        .join(F.broadcast(dfq), "term")
-        .crossJoin(F.broadcast(stats))
-    )
-    avgdl = F.col("tok_total") / F.col("n_docs")
-    idf = F.log(
-        (F.col("n_docs") - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
-        + F.lit(1.0)
-    )
-    sat = (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf")
-        + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / avgdl)
-    )
-    # same round-9 DECIMAL-before-SUM convention as the batch operator
-    # (order-independent term sum; ADVICE r11)
-    agg = (
-        scored.select(
-            "query_id", "doc_id",
-            F.round(idf * sat, 9).cast("decimal(20,9)").alias("s"),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("s").cast("double"), 6).alias("score"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        agg.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id", "doc_id", "score",
-            F.col("rnk").cast("long").alias("rnk"),
-        )
-    )
+    return _bm25_ranked(post, dl, dfq, stats, queries, k, k1, b)

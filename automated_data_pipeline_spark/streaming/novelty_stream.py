@@ -18,6 +18,9 @@ and LSH dedup stores, and like them it compacts (FingerprintStore
 two-rename discipline). At 100 TB the store is itself partitioned by
 gram-hash range, and recovery's two aggregations shuffle store rows,
 never documents.
+
+The report is one tail, :func:`novelty_report_from_grams`, shared with
+the batch operator.
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
+from ..functions.stats import portable_round
 from .fold import start_fold_stream
 from .incremental_dedup import FingerprintStore
 
@@ -77,15 +81,11 @@ def batch_doc_grams(
     )
 
 
-def recover_novelty_report(
-    spark: SparkSession, store: GramDocStore
-) -> DataFrame:
-    """The batch ``trigram_novelty_by_source`` report recovered from
-    the incremental store: (source, n_docs, avg_novelty), value-
-    identical to the batch query over the same documents (shared
-    oracle; pytest-pinned). Two aggregations over STORE rows — the
-    corpus is never re-tokenized."""
-    grams = store.read_distinct(spark)
+def novelty_report_from_grams(grams: DataFrame) -> DataFrame:
+    """(source, n_docs, avg_novelty) off a distinct (doc_id, source, gh)
+    gram index — the batch ≡ stream tail: ``trigram_novelty_by_source``
+    feeds it the whole corpus's ``batch_doc_grams``,
+    :func:`recover_novelty_report` the merged store."""
     firsts = grams.groupBy("gh").agg(F.min("doc_id").alias("first_doc"))
     per_doc = (
         grams.join(firsts, "gh")
@@ -99,8 +99,6 @@ def recover_novelty_report(
             .alias("n_novel"),
         )
     )
-    from ..functions.stats import portable_round
-
     avg = F.avg(F.col("n_novel").cast("double") / F.col("n_grams"))
     return (
         per_doc.groupBy("source")
@@ -110,6 +108,17 @@ def recover_novelty_report(
         )
         .orderBy("source")
     )
+
+
+def recover_novelty_report(
+    spark: SparkSession, store: GramDocStore
+) -> DataFrame:
+    """The batch ``trigram_novelty_by_source`` report recovered from
+    the incremental store: (source, n_docs, avg_novelty), value-
+    identical to the batch query over the same documents (shared
+    oracle; pytest-pinned). Two aggregations over STORE rows — the
+    corpus is never re-tokenized."""
+    return novelty_report_from_grams(store.read_distinct(spark))
 
 
 def start_incremental_novelty(

@@ -14,6 +14,9 @@ Store growth is O(distinct (lang, token) x batches) rows — vocabulary-
 sized, and old batch rows collapse into a snapshot key under the
 standard store compaction. At 100 TB the recovery's shuffles move
 count rows, never documents.
+
+The screen is one tail, :func:`vocab_overlap_from_counts`, shared with
+the batch operator.
 """
 
 from __future__ import annotations
@@ -85,19 +88,18 @@ def read_vocab_counts(
     )
 
 
-def recover_vocab_overlap(
-    spark: SparkSession, store: VocabCountStore, top_n: int = 100
+def vocab_overlap_from_counts(
+    counts: DataFrame, top_n: int = 100
 ) -> DataFrame:
-    """The batch ``lang_vocab_overlap`` report recovered from the
-    incremental counts: (lang_a, lang_b, overlap, jaccard), value-
-    identical to the batch query over the same documents (shared
-    oracle; pytest-pinned). Same tie rule (cnt desc, tok asc), same
-    size-aware Jaccard over ACTUAL top-list sizes, same portable
-    rounding. The checkpoint pin mirrors the batch operator's: the
-    tiny top frame feeds a self-join and two broadcasts, and Catalyst
-    does not dedupe common subtrees — but here the pinned lineage is
-    store rows, not a corpus tokenize."""
-    counts = read_vocab_counts(spark, store)
+    """(lang_a, lang_b, overlap, jaccard) off a (lang, tok, cnt) count
+    table — the batch ≡ stream tail: ``lang_vocab_overlap`` feeds it
+    the whole corpus's ``batch_vocab_counts``,
+    :func:`recover_vocab_overlap` the merged store. Ties rank cnt desc,
+    tok asc; the Jaccard uses the ACTUAL top-list sizes (ADVICE r7).
+
+    The tiny top frame is pinned: it feeds the self-join and both size
+    broadcasts, and Catalyst does not dedupe common subtrees, so its
+    lineage (a corpus tokenize, or the store read) would run 4 times."""
     w = Window.partitionBy("lang").orderBy(F.col("cnt").desc(), F.col("tok"))
     top = (
         counts.withColumn("rk", F.row_number().over(w))
@@ -105,6 +107,7 @@ def recover_vocab_overlap(
         .select("lang", "tok")
         .localCheckpoint(eager=True)
     )
+    # <= one row per language: broadcast both joins
     sizes = top.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
     a, b = top.alias("a"), top.alias("b")
     return (
@@ -139,6 +142,15 @@ def recover_vocab_overlap(
         )
         .orderBy("lang_a", "lang_b")
     )
+
+
+def recover_vocab_overlap(
+    spark: SparkSession, store: VocabCountStore, top_n: int = 100
+) -> DataFrame:
+    """The batch ``lang_vocab_overlap`` report recovered from the
+    incremental counts, value-identical to the batch query over the
+    same documents (shared oracle; pytest-pinned)."""
+    return vocab_overlap_from_counts(read_vocab_counts(spark, store), top_n)
 
 
 def start_incremental_vocab(

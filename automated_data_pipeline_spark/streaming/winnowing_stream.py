@@ -18,6 +18,10 @@ the batch's fingerprints against the store (bucket-join shape,
 shuffle bounded by fingerprint collisions, never batch×store) — the
 shape that matters at 100 TB, where re-running the intra-corpus pair
 join per increment would re-shuffle the world.
+
+The intra-corpus pair join is one tail, ``dedup._pairs_from_index``,
+shared with the batch operator; the serving join keeps its own, since
+its frequency cap applies to the store side only.
 """
 
 from __future__ import annotations
@@ -25,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import winnowing_fingerprints
+from ..operators.dedup import _pairs_from_index, winnowing_fingerprints
 from .incremental_dedup import FingerprintStore
 
 
@@ -77,27 +81,6 @@ def update_winnow_store(
         "batch_key", F.lit(batch_key)
     )
     store.append(rows)
-
-
-def _pairs_from_index(
-    e: DataFrame, max_df: int, min_shared: int
-) -> DataFrame:
-    """The batch operator's pair join over an exploded (doc, f) index
-    frame (frequency cap, equi self-join, shared count)."""
-    freq = e.groupBy("f").agg(F.count(F.lit(1)).alias("n_docs"))
-    keep = freq.filter(
-        (F.col("n_docs") >= 2) & (F.col("n_docs") <= max_df)
-    ).select("f")
-    kept = e.join(keep, "f")
-    a = kept.select("f", F.col("doc").alias("doc_a"))
-    b_side = kept.select("f", F.col("doc").alias("doc_b"))
-    return (
-        a.join(b_side, "f")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= min_shared)
-    )
 
 
 def recover_overlap_pairs(

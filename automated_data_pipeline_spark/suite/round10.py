@@ -43,6 +43,7 @@ from .round6 import (
 )
 from .round7 import _DSIR_SQL, _NOVELTY_SQL, _VOCAB_OVERLAP_SQL, _r4
 from .round9 import _reuse_lineage, _stamp_lineage
+from .round11 import _store_root
 
 SPECS: list[QuerySpec] = []
 
@@ -107,11 +108,10 @@ def dsir_weights_recovered(spark, sf_dir):
     )
 
     docs = load(spark, sf_dir, "documents")
-    path = _index_path("dsir_store")
-    shutil.rmtree(path, ignore_errors=True)
-    store = DsirBucketStore(path)
-    # store just rmtree'd: no batch_key can be a replay, so skip the
-    # probe jobs (the stream wiring's own steady-state discipline)
+    store = DsirBucketStore(_store_root(spark, "dsir_store"))
+    # fresh store (per-session root): no batch_key can be a replay, so
+    # skip the probe jobs (the stream wiring's own steady-state
+    # discipline)
     for i in range(3):
         update_dsir_buckets(
             spark, docs.filter(F.col("doc_id") % 3 == i), store,
@@ -156,9 +156,7 @@ def trigram_novelty_recovered(spark, sf_dir):
     )
 
     docs = load(spark, sf_dir, "documents")
-    path = _index_path("novelty_store")
-    shutil.rmtree(path, ignore_errors=True)
-    store = GramDocStore(path)
+    store = GramDocStore(_store_root(spark, "novelty_store"))
     for i in range(3):
         store.append(batch_doc_grams(docs.filter(F.col("doc_id") % 3 == i)))
     return recover_novelty_report(spark, store)
@@ -189,10 +187,8 @@ def lang_vocab_overlap_recovered(spark, sf_dir):
     )
 
     docs = load(spark, sf_dir, "documents")
-    path = _index_path("vocab_store")
-    shutil.rmtree(path, ignore_errors=True)
-    store = VocabCountStore(path)
-    # fresh store (rmtree above): replays impossible, skip probe jobs
+    store = VocabCountStore(_store_root(spark, "vocab_store"))
+    # fresh store (per-session root): replays impossible, skip probe jobs
     for i in range(3):
         update_vocab_counts(
             spark, docs.filter(F.col("doc_id") % 3 == i), store,

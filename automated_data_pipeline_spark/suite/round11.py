@@ -851,10 +851,12 @@ def rrf_quality_fusion(spark, sf_dir):
     #   filtering first cannot change a surviving value. The candidate
     #   id set is bounded at |q| x 20 BY CONSTRUCTION (a top-k per
     #   query), so the driver-side collect is a bounded metadata read
-    #   (the ivf_topk_persisted discipline) and the isin predicate
+    #   (the ivf_topk_persisted discipline; the bound is checked right
+    #   after the collect) and the isin predicate
     #   pushes into the documents scan (PushedFilters: In(doc_id, ..)).
+    k_rel = 20
     bm_lazy, release = retrieval.bm25_top_docs_deferred(
-        spark, d, _BM25_QUERIES, k=20
+        spark, d, _BM25_QUERIES, k=k_rel
     )
     bm = (
         bm_lazy.select("query_id", "doc_id", F.col("rnk").alias("r_rel"))
@@ -864,6 +866,12 @@ def rrf_quality_fusion(spark, sf_dir):
     cand_ids = sorted(
         r["doc_id"] for r in bm.select("doc_id").distinct().collect()
     )
+    bound = len(_BM25_QUERIES) * k_rel
+    if len(cand_ids) > bound:
+        raise RuntimeError(
+            f"rrf_quality_fusion: {len(cand_ids)} BM25 candidate ids "
+            f"exceed the |q| x k bound {bound}"
+        )
     ent = _char_entropy_frame(
         d.filter(F.col("doc_id").isin(cand_ids)).filter(F.length("text") > 0)
     ).select("doc_id", F.col("h_entropy").alias("h"))

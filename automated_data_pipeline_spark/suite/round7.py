@@ -25,11 +25,11 @@ to HUGEINT, which the strict comparator would flag).
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions import text as TX
 from ..operators import sampling, spans
+from ..streaming.novelty_stream import batch_doc_grams, novelty_report_from_grams
+from ..streaming.vocab_stream import batch_vocab_counts, vocab_overlap_from_counts
 from . import QuerySpec, load
 
 SPECS: list[QuerySpec] = []
@@ -216,52 +216,10 @@ _NOVELTY_SQL = _NOVELTY_SQL.replace("_TOKS_SQL_PLACEHOLDER", _TOKS_SQL)
     "share of each doc's distinct trigrams first seen in that doc, averaged per source",
 )
 def trigram_novelty_by_source(spark, sf_dir):
+    """The twin's gram extraction over the whole corpus, then the tail
+    ``trigram_novelty_recovered`` also runs (streaming/novelty_stream)."""
     docs = load(spark, sf_dir, "documents")
-    # Hash-spread first (a few-row-group input would serialize the
-    # tokenize+md5 through a handful of tasks), then materialize the
-    # token array in a projection: referencing a column inside the
-    # transform lambda is O(1), while inlining tokens(text) into each
-    # element_at would re-split the document once per element per
-    # trigram (measured 40x slower at sf0.1).
-    toked = docs.repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    ).select(
-        "doc_id", "source", TX.tokens(F.col("text")).alias("_ws")
-    ).filter(F.size("_ws") >= 3)
-    tri = F.transform(
-        F.sequence(F.lit(1), F.size("_ws") - 2),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at("_ws", i),
-            F.element_at("_ws", i + 1),
-            F.element_at("_ws", i + 2),
-        ),
-    )
-    grams = (
-        toked.select("doc_id", "source", F.explode(tri).alias("g"))
-        .select("doc_id", "source", TX.stable_hash64(F.col("g")).alias("gh"))
-        .distinct()
-    )
-    firsts = grams.groupBy("gh").agg(F.min("doc_id").alias("first_doc"))
-    per_doc = (
-        grams.join(firsts, "gh")
-        .groupBy("doc_id", "source")
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.sum(F.when(F.col("doc_id") == F.col("first_doc"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_novel"),
-        )
-    )
-    return (
-        per_doc.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            _r4(F.avg(F.col("n_novel").cast("double") / F.col("n_grams")))
-            .alias("avg_novelty"),
-        )
-        .orderBy("source")
-    )
+    return novelty_report_from_grams(batch_doc_grams(docs))
 
 
 _VOCAB_OVERLAP_SQL = """
@@ -305,66 +263,10 @@ _VOCAB_OVERLAP_SQL = _VOCAB_OVERLAP_SQL.replace("_TOKS_SQL_PLACEHOLDER", _TOKS_S
     "pairwise Jaccard of per-language top-100 vocabularies (contamination screen)",
 )
 def lang_vocab_overlap(spark, sf_dir):
+    """The twin's token counts over the whole corpus, then the tail
+    ``lang_vocab_overlap_recovered`` also runs (streaming/vocab_stream)."""
     docs = load(spark, sf_dir, "documents")
-    counts = (
-        docs.repartition(spark.sparkContext.defaultParallelism)
-        .select("lang", F.explode(TX.tokens(F.col("text"))).alias("tok"))
-        .groupBy("lang", "tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = Window.partitionBy("lang").orderBy(F.col("cnt").desc(), F.col("tok"))
-    # checkpoint the tiny top-100 frame: the self-join (a, b) and the
-    # two sizes broadcasts all derive from it, and Catalyst does not
-    # dedupe common subtrees — without the pin the regex-heavy
-    # tokenize+explode corpus pass would run FOUR times (the same
-    # lesson blocklist_filter_stats applies to its per-source table)
-    top = (
-        counts.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 100)
-        .select("lang", "tok")
-        .localCheckpoint(eager=True)
-    )
-    # Actual per-language top-list sizes: with < 100 distinct tokens
-    # the true |A|/|B| is smaller, and overlap/(|A|+|B|-overlap) is the
-    # real Jaccard (ADVICE r7 — the old formula hardcoded 100+100).
-    # `sizes` is <= one row per language: broadcast both joins.
-    sizes = top.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-    a, b = top.alias("a"), top.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.tok") == F.col("b.tok"))
-            & (F.col("a.lang") < F.col("b.lang")),
-        )
-        .groupBy(
-            F.col("a.lang").alias("lang_a"), F.col("b.lang").alias("lang_b")
-        )
-        .agg(F.count(F.lit(1)).alias("overlap"))
-        .join(
-            F.broadcast(
-                sizes.select(
-                    F.col("lang").alias("_la"), F.col("n").alias("n_a")
-                )
-            ),
-            F.col("lang_a") == F.col("_la"),
-        )
-        .join(
-            F.broadcast(
-                sizes.select(
-                    F.col("lang").alias("_lb"), F.col("n").alias("n_b")
-                )
-            ),
-            F.col("lang_b") == F.col("_lb"),
-        )
-        .select(
-            "lang_a", "lang_b", "overlap",
-            _r4(
-                F.col("overlap")
-                / (F.col("n_a") + F.col("n_b") - F.col("overlap"))
-            ).alias("jaccard"),
-        )
-        .orderBy("lang_a", "lang_b")
-    )
+    return vocab_overlap_from_counts(batch_vocab_counts(docs), top_n=100)
 
 
 _PERCENTILE_SQL = """

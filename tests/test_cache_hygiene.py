@@ -12,6 +12,7 @@ import pytest
 
 from automated_data_pipeline_spark.operators import dedup
 from automated_data_pipeline_spark.suite import load
+from automated_data_pipeline_spark.suite.round11 import _BM25_QUERIES
 
 SF = "/root/testdata/sf0.001"
 
@@ -70,6 +71,12 @@ def test_tfidf_leaves_no_cache(spark):
 LSH_PAIRS_JOBS = 10
 JACCARD_PAIRS_JOBS = 15
 LSH_INGEST_BATCH_JOBS = 20
+# BM25 on the same fixture: the batch operator (postings and length
+# persists, stats, broadcasts, result checkpoint) and one store
+# recovery, whose jobs run at its action (store reads, stats,
+# broadcasts, the collect). Measured before the scorer was shared.
+BM25_TOP_DOCS_JOBS = 14
+BM25_RECOVER_JOBS = 15
 
 
 def _jobs_of(spark, name, fn):
@@ -103,6 +110,33 @@ def test_lsh_ingest_batch_job_count_is_pinned(spark, docs, tmp_path):
         spark, docs, store, batch_key="b1"
     )) == LSH_INGEST_BATCH_JOBS
 
+
+
+def test_bm25_top_docs_job_count_is_pinned(spark, docs):
+    from automated_data_pipeline_spark.operators.retrieval import bm25_top_docs
+
+    assert _jobs_of(spark, "bm25-top-docs", lambda: bm25_top_docs(
+        spark, docs, _BM25_QUERIES, k=5
+    )) == BM25_TOP_DOCS_JOBS
+
+
+def test_bm25_recover_job_count_is_pinned(spark, docs, tmp_path):
+    from pyspark.sql import functions as F
+
+    from automated_data_pipeline_spark.streaming.bm25_stream import (
+        DocLenStore, PostingsStore, recover_bm25_scores, update_postings,
+    )
+
+    postings = PostingsStore(str(tmp_path / "postings"))
+    doclens = DocLenStore(str(tmp_path / "doclens"))
+    for i in range(3):
+        update_postings(
+            spark, docs.filter(F.col("doc_id") % 3 == i), postings, doclens,
+            batch_key=f"b{i}", assume_fresh=True,
+        )
+    assert _jobs_of(spark, "bm25-recover", lambda: recover_bm25_scores(
+        spark, postings, doclens, _BM25_QUERIES, k=5
+    ).collect()) == BM25_RECOVER_JOBS
 
 def test_broadcast_verify_autoswitch_thresholds():
     """The size heuristic flips to the shuffle join past the ceiling."""

@@ -115,6 +115,31 @@ def test_ivfpq_persisted_matches_in_session(spark, emb, queries3, tmp_path):
     assert set(stored.columns) == {"vec_id", "pq_codes", "ivf_cluster"}
 
 
+
+def test_ivfpq_persisted_reuses_pinned_probes(spark, emb, queries3, tmp_path):
+    # the probes are pinned once to collect the probed clusters; the
+    # search must run on that pinned frame, not rank the centroids
+    # again inside the result's plan
+    import re
+
+    path = str(tmp_path / "ivfpq_pinned")
+    enc, cent_df, _, cb_df = similarity.ivfpq_index(
+        emb, dim=64, n_clusters=8, m=8, n_codes=16
+    )
+    similarity.write_ivfpq_index(enc, cent_df, cb_df, path)
+    out = similarity.ivfpq_topk_persisted(
+        spark, path, emb, queries3, k=5, nprobe=2, oversample=4
+    )
+
+    def plan(df):
+        text = df._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+L?", "#", text)
+
+    centroid_scan = plan(spark.read.parquet(f"{path}/centroids")).strip()
+    assert centroid_scan.startswith("Relation [")
+    assert centroid_scan not in plan(out)
+    assert "qc_d2" not in plan(out)
+
 def test_ivfpq_persisted_codes_scan_is_partition_pruned(
     spark, emb, queries3, tmp_path
 ):

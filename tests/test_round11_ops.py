@@ -766,3 +766,55 @@ def test_rrf_score_formula(spark):
         }
         for d_, v in got.items():
             assert v == expected[d_], (qid, d_, v, expected[d_])
+
+
+def test_rrf_candidate_collect_is_bounded(spark, monkeypatch):
+    """The candidate-id collect is bounded by |q| x 20 by construction;
+    a BM25 leg that breaks the bound must raise, not collect."""
+    import pytest
+    from conftest import SF_SMOKE
+
+    from automated_data_pipeline_spark.operators import retrieval
+    from automated_data_pipeline_spark.suite.round11 import (
+        _BM25_QUERIES,
+        rrf_quality_fusion,
+    )
+
+    n = len(_BM25_QUERIES) * 20 + 1
+    oversize = spark.createDataFrame(
+        [(1, i, 1.0, i + 1) for i in range(n)],
+        "query_id int, doc_id long, score double, rnk long",
+    )
+    monkeypatch.setattr(
+        retrieval, "bm25_top_docs_deferred",
+        lambda *a, **kw: (oversize, lambda: None),
+    )
+    with pytest.raises(RuntimeError, match="exceed"):
+        rrf_quality_fusion(spark, SF_SMOKE)
+
+
+def test_recovered_twins_use_per_session_store_roots(spark):
+    """The round-10 recovered twins fold into per-application store
+    roots, so two concurrent runs on one host cannot clobber each
+    other's stores; none writes the old fixed /tmp paths."""
+    import os
+    import shutil
+    import tempfile
+
+    from conftest import SF_SMOKE
+
+    from automated_data_pipeline_spark.suite import round10
+
+    fixed = [
+        os.path.join(tempfile.gettempdir(), f"adps_index_{name}_store")
+        for name in ("dsir", "novelty", "vocab")
+    ]
+    for d in fixed:
+        shutil.rmtree(d, ignore_errors=True)
+    for entry in (
+        round10.dsir_weights_recovered,
+        round10.trigram_novelty_recovered,
+        round10.lang_vocab_overlap_recovered,
+    ):
+        entry(spark, SF_SMOKE)
+    assert [d for d in fixed if os.path.exists(d)] == []
