@@ -175,10 +175,17 @@ ADDED_IN_R12 = frozenset({
     "unimax_epoch_plan",
 })
 
-# Queries ADDED in round 13: tracked live in
+# Queries ADDED in round 13 (frozen literal now that they graduated
+# into the round-15 GATE_WINDOW head; they were AWAITING_FIRST_WITNESS
+# during rounds 13 and 14).
+ADDED_IN_R13 = frozenset({
+    "hybrid_rrf_ann", "margin_bitext_mine", "unimax_plan_recovered",
+})
+
+# Queries ADDED after round 14: tracked live in
 # suite.AWAITING_FIRST_WITNESS (single source of truth — appended
-# there as they land mid-round); they head the r14 rotation.
-ADDED_IN_R13 = frozenset(AWAITING_FIRST_WITNESS)
+# there as they land); they head the next rotation.
+ADDED_IN_R14 = frozenset(AWAITING_FIRST_WITNESS)
 
 
 def test_suite_counts_match_documentation():
@@ -246,9 +253,9 @@ def _latest_witness(repo):
 
 
 def test_gate_window_rotation_is_oldest_witness_first():
-    """Round-10 rotation (VERDICT r9 item 1): the window head is the 5
-    round-9 additions (first driver witness); the tail re-witnesses
-    oldest-first. Derivable pins:
+    """The window head is the previous round's additions, awaiting
+    their first driver witness; the tail re-witnesses oldest-first.
+    Derivable pins:
     (a) every oracle-backed query except the window head and the
     current round's additions has a driver-green row in SOME artifact;
     (b) the head set is in the window;
@@ -269,11 +276,11 @@ def test_gate_window_rotation_is_oldest_witness_first():
     latest = _latest_from(per_round)
     oracle_names = {s.name for s in all_specs() if s.oracle is not None}
     never = oracle_names - set(latest)
-    assert never <= set(GATE_WINDOW) | ADDED_IN_R13, (
+    assert never <= set(GATE_WINDOW) | ADDED_IN_R14, (
         f"never-witnessed, not gated, not newly added: "
-        f"{never - set(GATE_WINDOW) - ADDED_IN_R13}"
+        f"{never - set(GATE_WINDOW) - ADDED_IN_R14}"
     )
-    assert ADDED_IN_R12 <= set(GATE_WINDOW)
+    assert ADDED_IN_R13 <= set(GATE_WINDOW)
     window_executed = bool(per_round[newest] & set(GATE_WINDOW))
     boundary = (
         _latest_from(per_round, exclude={newest})
@@ -307,7 +314,7 @@ def test_witness_age_ceiling():
     oracle_names = {s.name for s in all_specs() if s.oracle is not None}
     overdue = {
         n for n in oracle_names - set(GATE_WINDOW)
-        if latest.get(n, 0) < current_round - 4 and n not in ADDED_IN_R13
+        if latest.get(n, 0) < current_round - 4 and n not in ADDED_IN_R14
     }
     assert not overdue, (
         f"witness older than 4 rounds and not in the window: {overdue}"
