@@ -21,8 +21,12 @@ is provided too for completeness.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 
 def upsert_replace(target: DataFrame | None, updates: DataFrame, key: str) -> DataFrame:
@@ -54,7 +58,11 @@ def delta_available(spark=None) -> bool:
     try:
         spark._jvm.io.delta.tables.DeltaTable  # classpath probe
         return True
-    except Exception:
+    except Exception as exc:
+        log.warning(
+            "Delta classes not visible to the JVM, using the parquet "
+            "target: %s: %s", type(exc).__name__, exc,
+        )
         return False
 
 

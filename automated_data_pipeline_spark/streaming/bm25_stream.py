@@ -76,15 +76,16 @@ def update_postings(
     id_col: str = "doc_id",
     text_col: str = "text",
     batch_key: str = "batch-0",
-    assume_fresh: bool = False,
+    maybe_replay: bool = True,
 ) -> None:
     """Fold one micro-batch into the postings + doclen stores. The
     doclen rows derive from the SAME postings aggregate (one tokenize
     pass per increment). Replays of an applied ``batch_key`` leave
     both stores untouched; the postings append is checkpointed first
     so a crash between the two appends replays safely (the probe
-    checks the FIRST-written store)."""
-    if not assume_fresh and postings.has_batch(spark, batch_key):
+    checks the FIRST-written store); ``maybe_replay=False`` skips the
+    probes for a batch that cannot be a replay."""
+    if maybe_replay and postings.has_batch(spark, batch_key):
         # postings applied; heal a crash that lost the doclen append
         if not doclens.has_batch(spark, batch_key):
             mine = (

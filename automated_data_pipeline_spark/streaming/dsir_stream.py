@@ -71,30 +71,6 @@ def batch_dsir_buckets(
     )
 
 
-def update_dsir_buckets(
-    spark: SparkSession,
-    batch: DataFrame,
-    store: DsirBucketStore,
-    text_col: str = "text",
-    is_target: Column | None = None,
-    n_buckets: int = 256,
-    batch_key: str = "batch-0",
-    assume_fresh: bool = False,
-) -> None:
-    """Fold one micro-batch's bucket counts into the store. Replays
-    with an already-applied ``batch_key`` leave the store untouched
-    (the incremental-store contract); ``assume_fresh=True`` skips the
-    probe read for steady-state batches."""
-    if is_target is None:
-        is_target = F.lit(False)
-    if not assume_fresh and store.has_batch(spark, batch_key):
-        return
-    counts = batch_dsir_buckets(
-        batch, text_col, is_target, n_buckets
-    ).withColumn("batch_key", F.lit(batch_key))
-    store.append(counts)
-
-
 def read_dsir_stats(
     spark: SparkSession, store: DsirBucketStore
 ) -> DataFrame:
@@ -184,26 +160,22 @@ def start_incremental_dsir(
     store: DsirBucketStore,
     checkpoint_dir: str,
     is_target: Column,
-    schema: str = "doc_id bigint, text string, lang string",
-    text_col: str = "text",
-    n_buckets: int = 256,
     available_now: bool = True,
 ):
-    """Wire the bucket store as a file-source stream: every file
-    dropped in ``source_dir`` is a micro-batch folded into the store
-    under its deterministic batch key. Only the FIRST batch after a
-    (re)start probes for an already-applied key — Spark's recovery
-    contract (committed batches never re-fire; the only possible
-    replay is the last uncommitted batch, which IS the restart batch).
-    Returns the started StreamingQuery."""
+    """Wire the bucket store as a file-source stream: every JSON shard
+    of (doc_id, text, lang) dropped in ``source_dir`` is a micro-batch
+    folded into the store under its deterministic batch key. Only the
+    FIRST batch after a (re)start probes for an already-applied key —
+    Spark's recovery contract (committed batches never re-fire; the
+    only possible replay is the last uncommitted batch, which IS the
+    restart batch). Returns the started StreamingQuery."""
 
     def fold(batch_df, _batch_id, key, maybe_replay):
-        update_dsir_buckets(
-            spark, batch_df, store, text_col=text_col,
-            is_target=is_target, n_buckets=n_buckets, batch_key=key,
-            assume_fresh=not maybe_replay,
+        store.fold(
+            batch_dsir_buckets(batch_df, "text", is_target), key, maybe_replay
         )
 
     return start_fold_stream(
-        spark, source_dir, schema, checkpoint_dir, fold, available_now
+        spark, source_dir, "doc_id bigint, text string, lang string",
+        checkpoint_dir, fold, available_now,
     )

@@ -26,8 +26,14 @@ modules in this package differ only in the fold; this module owns:
    All I/O goes through the ``storefs`` seam, so the same discipline
    works on HDFS/S3/``file:`` store paths.
 
-The fourth shared decision, a store's empty-store schema, is the
-``schema`` class attribute of ``incremental_dedup.FingerprintStore``.
+The fourth shared decision is the keyed store itself,
+``incremental_dedup.FingerprintStore``: its ``fold(rows, key,
+maybe_replay)`` is the one keyed append every keyed store inherits
+(heal a crashed swap, then ``append_once``), and its ``schema`` class
+attribute declares each store's empty-store schema. A stream's fold is
+then its ``batch_*`` rows plus ``store.fold``; only folds that re-derive
+their output on replay (the dedup stores) or write two stores (BM25)
+probe for themselves.
 """
 
 from __future__ import annotations

@@ -60,7 +60,8 @@ class FingerprintStore:
     """Append-only parquet fingerprint set keyed for idempotent
     micro-batch appends. Subclasses are the other fold stores: each
     declares only its empty-store ``schema`` (DDL) and inherits the
-    keyed replay probe and the crash-safe compaction."""
+    keyed append (``fold``), the replay probe and the crash-safe
+    compaction."""
 
     # The empty-store frame is LocalRelation-empty (plans/empty.py):
     # the optimizer can PROVE it empty, so first-batch joins against a
@@ -84,6 +85,13 @@ class FingerprintStore:
     def append(self, df: DataFrame) -> None:
         df.write.mode("append").parquet(self.path)
 
+    def fold(self, rows: DataFrame, key: str, maybe_replay: bool) -> None:
+        """Fold one micro-batch's ``rows`` into the store stamped
+        ``batch_key=key``; a ``maybe_replay`` batch whose key already
+        landed appends nothing (``fold.append_once``)."""
+        _recover_compact(self.path)
+        append_once(self.path, rows, key, maybe_replay)
+
     def compact(self, spark: SparkSession, n_files: int = 8) -> None:
         """Rewrite the append-only store into few large files (one
         small parquet lands per micro-batch otherwise). Not safe
@@ -104,7 +112,7 @@ def dedup_batch_against_store(
     id_col: str = "doc_id",
     text_col: str = "text",
     batch_key: str = "batch-0",
-    assume_fresh: bool = False,
+    maybe_replay: bool = True,
 ) -> DataFrame:
     """One micro-batch of documents -> the novel subset (rows whose
     normalized fingerprint is in neither the store nor earlier in the
@@ -115,12 +123,12 @@ def dedup_batch_against_store(
     it — returning empty here would permanently drop the batch's novel
     documents from the corpus).
 
-    ``assume_fresh=True`` skips the replay probe: foreachBatch can only
-    replay the FIRST batch after a (re)start — later batches in the
-    same run were never attempted before — so steady-state batches
+    ``maybe_replay=False`` skips the replay probe: foreachBatch can
+    only replay the FIRST batch after a (re)start — later batches in
+    the same run were never attempted before — so steady-state batches
     need not pay the probe job."""
     fp = batch.withColumn("fingerprint", TX.fingerprint(F.col(text_col)))
-    if not assume_fresh and store.has_batch(spark, batch_key):
+    if maybe_replay and store.has_batch(spark, batch_key):
         mine = (
             store.read(spark)
             .filter(F.col("batch_key") == batch_key)
@@ -167,8 +175,7 @@ def start_incremental_dedup(
 
     def fold(batch_df, _batch_id, key, maybe_replay):
         novel = dedup_batch_against_store(
-            spark, batch_df, store, batch_key=key,
-            assume_fresh=not maybe_replay,
+            spark, batch_df, store, batch_key=key, maybe_replay=maybe_replay
         )
         # idempotent corpus append: a replay whose corpus write already
         # landed appends nothing

@@ -211,12 +211,12 @@ def near_dedup_batch_against_store(
     id_col: str = "doc_id",
     text_col: str = "text",
     batch_key: str = "batch-0",
-    assume_fresh: bool = False,
+    maybe_replay: bool = True,
 ) -> DataFrame:
     """One micro-batch -> its novel subset (docs near-duplicating
     neither an earlier-id batch doc nor any stored doc), store updated.
     Returns surviving rows (original columns). See module docstring."""
-    if not assume_fresh and store.has_batch(spark, batch_key):
+    if maybe_replay and store.has_batch(spark, batch_key):
         mine = (
             store.docs(spark)
             .filter(F.col("batch_key") == batch_key)
@@ -336,7 +336,7 @@ def start_incremental_lsh_dedup(
             store.maybe_compact(spark, max_files=compact_max_files)
         novel = near_dedup_batch_against_store(
             spark, batch_df, store, threshold=threshold, batch_key=key,
-            assume_fresh=not maybe_replay,
+            maybe_replay=maybe_replay,
         )
         append_once(out_dir, novel, key, maybe_replay)
 

@@ -55,7 +55,7 @@ def dedup_segments_against_store(
     text_col: str = "text",
     seg_words: int = 5,
     batch_key: str = "batch-0",
-    assume_fresh: bool = False,
+    maybe_replay: bool = True,
 ) -> DataFrame:
     """One micro-batch of documents -> per-document curated rows
     (id_col, kept_text, n_segs, n_kept) where ``kept_text`` re-joins
@@ -64,7 +64,7 @@ def dedup_segments_against_store(
     hashes. Replays with an already-applied ``batch_key`` leave the
     store untouched and re-derive the same rows.
 
-    ``assume_fresh=True`` skips the replay probe (only the first batch
+    ``maybe_replay=False`` skips the replay probe (only the first batch
     after a restart can be a replay — same contract as
     ``dedup_batch_against_store``)."""
     # spread the raw batch BEFORE tokenizing: a micro-batch is one
@@ -88,7 +88,7 @@ def dedup_segments_against_store(
     first = occ.groupBy("seg_hash").agg(
         F.min(F.struct(id_col, "seg_idx")).alias("_first")
     )
-    if not assume_fresh and store.has_batch(spark, batch_key):
+    if maybe_replay and store.has_batch(spark, batch_key):
         novel_hashes = (
             store.read(spark)
             .filter(F.col("batch_key") == batch_key)
@@ -162,7 +162,7 @@ def start_incremental_segment_dedup(
     def fold(batch_df, _batch_id, key, maybe_replay):
         curated = dedup_segments_against_store(
             spark, batch_df, store, seg_words=seg_words, batch_key=key,
-            assume_fresh=not maybe_replay,
+            maybe_replay=maybe_replay,
         )
         append_once(out_dir, curated, key, maybe_replay)
 

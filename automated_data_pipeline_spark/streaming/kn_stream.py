@@ -82,26 +82,6 @@ def batch_bigrams(
     )
 
 
-def update_bigram_store(
-    spark: SparkSession,
-    batch: DataFrame,
-    store: BigramStore,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    batch_key: str = "batch-0",
-    assume_fresh: bool = False,
-) -> None:
-    """Fold one micro-batch into the bigram store. Single-store append:
-    no multi-store crash window exists; replays of an applied
-    ``batch_key`` are no-ops."""
-    if not assume_fresh and store.has_batch(spark, batch_key):
-        return
-    rows = batch_bigrams(batch, id_col, text_col).withColumn(
-        "batch_key", F.lit(batch_key)
-    )
-    store.append(rows)
-
-
 def _kn_stats(occ: DataFrame, materialize: bool = False):
     """The four KN statistic frames off one bigram-occurrence table:
     c12 (bigram types), c1/N1+fwd per left context, N1+cont per right

@@ -126,18 +126,18 @@ def start_incremental_novelty(
     source_dir: str,
     store: GramDocStore,
     checkpoint_dir: str,
-    schema: str = "doc_id bigint, text string, source string",
-    text_col: str = "text",
     available_now: bool = True,
 ):
-    """Wire the gram-doc index as a file-source stream: every file is
-    a micro-batch of whole documents whose distinct gram rows append
-    to the store. No replay probe — a replayed batch appends rows the
-    read-time DISTINCT absorbs. Returns the started StreamingQuery."""
+    """Wire the gram-doc index as a file-source stream: every JSON
+    shard of (doc_id, text, source) is a micro-batch of whole documents
+    whose distinct gram rows append to the store. No replay probe — a
+    replayed batch appends rows the read-time DISTINCT absorbs. Returns
+    the started StreamingQuery."""
 
     def fold(batch_df, *_):
-        store.append(batch_doc_grams(batch_df, text_col=text_col))
+        store.append(batch_doc_grams(batch_df))
 
     return start_fold_stream(
-        spark, source_dir, schema, checkpoint_dir, fold, available_now
+        spark, source_dir, "doc_id bigint, text string, source string",
+        checkpoint_dir, fold, available_now,
     )

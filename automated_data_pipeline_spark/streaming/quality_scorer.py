@@ -116,16 +116,15 @@ def start_quality_score_stream(
     bias: float,
     coefs: list[float],
     checkpoint_dir: str,
-    schema: str = "doc_id bigint, text string",
-    text_col: str = "text",
     available_now: bool = True,
 ):
-    """Wire the scorer as a file-source stream: every file dropped in
-    ``source_dir`` is a micro-batch; per-batch decile summaries land
-    in ``metrics_path``. Returns the started StreamingQuery."""
+    """Wire the scorer as a file-source stream: every JSON shard of
+    (doc_id, text) dropped in ``source_dir`` is a micro-batch;
+    per-batch decile summaries land in ``metrics_path``. Returns the
+    started StreamingQuery."""
     return start_fold_stream(
-        spark, source_dir, schema, checkpoint_dir,
-        _scorer_fold(None, metrics_path, text_col, bias, coefs),
+        spark, source_dir, "doc_id bigint, text string", checkpoint_dir,
+        _scorer_fold(None, metrics_path, "text", bias, coefs),
         available_now,
     )
 

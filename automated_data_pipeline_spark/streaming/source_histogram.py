@@ -77,33 +77,6 @@ def batch_source_histogram(
     )
 
 
-def update_source_histogram(
-    spark: SparkSession,
-    batch: DataFrame,
-    store: SourceScoreHistogramStore,
-    text_col: str = "text",
-    bias: float = 0.0,
-    coefs: list[float] | None = None,
-    source_col: str = "source",
-    batch_key: str = "batch-0",
-    assume_fresh: bool = False,
-) -> DataFrame:
-    """Fold one micro-batch's histogram into the store. Replays with
-    an already-applied ``batch_key`` leave the store untouched (same
-    contract as the other incremental stores); ``assume_fresh=True``
-    skips the probe read for steady-state batches."""
-    coefs = coefs or []
-    if not assume_fresh and store.has_batch(spark, batch_key):
-        return store.read(spark).filter(
-            F.col("batch_key") == batch_key
-        ).drop("batch_key")
-    hist = batch_source_histogram(
-        batch, text_col, bias, coefs, source_col
-    ).withColumn("batch_key", F.lit(batch_key))
-    store.append(hist)
-    return hist.drop("batch_key")
-
-
 def read_source_histogram(
     spark: SparkSession, store: SourceScoreHistogramStore
 ) -> DataFrame:
@@ -182,22 +155,19 @@ def start_source_histogram_stream(
     bias: float,
     coefs: list[float],
     checkpoint_dir: str,
-    schema: str = "doc_id bigint, text string, source string",
-    text_col: str = "text",
-    source_col: str = "source",
     available_now: bool = True,
 ):
-    """Wire the histogram as a file-source stream: every file dropped
-    in ``source_dir`` is a micro-batch folded into the store. Returns
-    the started StreamingQuery."""
+    """Wire the histogram as a file-source stream: every JSON shard of
+    (doc_id, text, source) dropped in ``source_dir`` is a micro-batch
+    folded into the store. Returns the started StreamingQuery."""
 
     def fold(batch_df, _batch_id, key, maybe_replay):
-        update_source_histogram(
-            spark, batch_df, store, text_col=text_col, bias=bias,
-            coefs=coefs, source_col=source_col, batch_key=key,
-            assume_fresh=not maybe_replay,
+        store.fold(
+            batch_source_histogram(batch_df, "text", bias, coefs),
+            key, maybe_replay,
         )
 
     return start_fold_stream(
-        spark, source_dir, schema, checkpoint_dir, fold, available_now
+        spark, source_dir, "doc_id bigint, text string, source string",
+        checkpoint_dir, fold, available_now,
     )

@@ -55,27 +55,6 @@ def batch_vocab_counts(
     )
 
 
-def update_vocab_counts(
-    spark: SparkSession,
-    batch: DataFrame,
-    store: VocabCountStore,
-    text_col: str = "text",
-    lang_col: str = "lang",
-    batch_key: str = "batch-0",
-    assume_fresh: bool = False,
-) -> None:
-    """Fold one micro-batch's counts into the store; replays with an
-    already-applied ``batch_key`` leave it untouched (the incremental-
-    store contract)."""
-    if not assume_fresh and store.has_batch(spark, batch_key):
-        return
-    store.append(
-        batch_vocab_counts(batch, text_col, lang_col).withColumn(
-            "batch_key", F.lit(batch_key)
-        )
-    )
-
-
 def read_vocab_counts(
     spark: SparkSession, store: VocabCountStore
 ) -> DataFrame:
@@ -158,23 +137,18 @@ def start_incremental_vocab(
     source_dir: str,
     store: VocabCountStore,
     checkpoint_dir: str,
-    schema: str = "doc_id bigint, text string, lang string",
-    text_col: str = "text",
-    lang_col: str = "lang",
     available_now: bool = True,
 ):
-    """Wire the vocabulary counts as a file-source stream; only the
-    FIRST batch after a (re)start probes for an already-applied key
-    (Spark's recovery contract — the only possible replay is the last
-    uncommitted batch, which IS the restart batch). Returns the
-    started StreamingQuery."""
+    """Wire the vocabulary counts as a file-source stream over JSON
+    shards of (doc_id, text, lang); only the FIRST batch after a
+    (re)start probes for an already-applied key (Spark's recovery
+    contract — the only possible replay is the last uncommitted batch,
+    which IS the restart batch). Returns the started StreamingQuery."""
 
     def fold(batch_df, _batch_id, key, maybe_replay):
-        update_vocab_counts(
-            spark, batch_df, store, text_col=text_col, lang_col=lang_col,
-            batch_key=key, assume_fresh=not maybe_replay,
-        )
+        store.fold(batch_vocab_counts(batch_df), key, maybe_replay)
 
     return start_fold_stream(
-        spark, source_dir, schema, checkpoint_dir, fold, available_now
+        spark, source_dir, "doc_id bigint, text string, lang string",
+        checkpoint_dir, fold, available_now,
     )

@@ -62,27 +62,6 @@ def batch_fingerprints(
     ).filter(F.col("f").isNotNull())
 
 
-def update_winnow_store(
-    spark: SparkSession,
-    batch: DataFrame,
-    store: WinnowStore,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    w: int = 4,
-    batch_key: str = "batch-0",
-    assume_fresh: bool = False,
-) -> None:
-    """Fold one micro-batch's fingerprints into the store; replays of
-    an applied ``batch_key`` leave it untouched."""
-    if not assume_fresh and store.has_batch(spark, batch_key):
-        return
-    rows = batch_fingerprints(batch, id_col, text_col, k, w).withColumn(
-        "batch_key", F.lit(batch_key)
-    )
-    store.append(rows)
-
-
 def recover_overlap_pairs(
     spark: SparkSession,
     store: WinnowStore,

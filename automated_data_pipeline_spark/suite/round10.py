@@ -43,7 +43,7 @@ from .round6 import (
 )
 from .round7 import _DSIR_SQL, _NOVELTY_SQL, _VOCAB_OVERLAP_SQL, _r4
 from .round9 import _reuse_lineage, _stamp_lineage
-from .round11 import _store_root
+from .round11 import _fold_splits
 
 SPECS: list[QuerySpec] = []
 
@@ -103,21 +103,15 @@ def dsir_weights_recovered(spark, sf_dir):
     same DuckDB oracle."""
     from ..streaming.dsir_stream import (
         DsirBucketStore,
+        batch_dsir_buckets,
         recover_dsir_weights,
-        update_dsir_buckets,
     )
 
     docs = load(spark, sf_dir, "documents")
-    store = DsirBucketStore(_store_root(spark, "dsir_store"))
-    # fresh store (per-session root): no batch_key can be a replay, so
-    # skip the probe jobs (the stream wiring's own steady-state
-    # discipline)
-    for i in range(3):
-        update_dsir_buckets(
-            spark, docs.filter(F.col("doc_id") % 3 == i), store,
-            is_target=F.col("lang") == "en", batch_key=f"b{i}",
-            assume_fresh=True,
-        )
+    store = _fold_splits(
+        spark, docs, "dsir_store", DsirBucketStore,
+        lambda part: batch_dsir_buckets(part, "text", F.col("lang") == "en"),
+    )
     w = recover_dsir_weights(
         spark, store, docs, "text", "doc_id", keep_cols=["lang"]
     )
@@ -155,10 +149,14 @@ def trigram_novelty_recovered(spark, sf_dir):
         recover_novelty_report,
     )
 
-    docs = load(spark, sf_dir, "documents")
-    store = GramDocStore(_store_root(spark, "novelty_store"))
-    for i in range(3):
-        store.append(batch_doc_grams(docs.filter(F.col("doc_id") % 3 == i)))
+    # unkeyed store: the read-time DISTINCT is its idempotence
+    store = _fold_splits(
+        spark, load(spark, sf_dir, "documents"), "novelty_store",
+        GramDocStore,
+        fold=lambda store, part, _key, _replay: store.append(
+            batch_doc_grams(part)
+        ),
+    )
     return recover_novelty_report(spark, store)
 
 
@@ -182,18 +180,14 @@ def lang_vocab_overlap_recovered(spark, sf_dir):
     DuckDB oracle."""
     from ..streaming.vocab_stream import (
         VocabCountStore,
+        batch_vocab_counts,
         recover_vocab_overlap,
-        update_vocab_counts,
     )
 
-    docs = load(spark, sf_dir, "documents")
-    store = VocabCountStore(_store_root(spark, "vocab_store"))
-    # fresh store (per-session root): replays impossible, skip probe jobs
-    for i in range(3):
-        update_vocab_counts(
-            spark, docs.filter(F.col("doc_id") % 3 == i), store,
-            batch_key=f"b{i}", assume_fresh=True,
-        )
+    store = _fold_splits(
+        spark, load(spark, sf_dir, "documents"), "vocab_store",
+        VocabCountStore, batch_vocab_counts,
+    )
     return recover_vocab_overlap(spark, store)
 
 

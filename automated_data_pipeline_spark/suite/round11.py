@@ -12,6 +12,7 @@ rounded before ranking/compare, fully deterministic ORDER BY.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -34,17 +35,46 @@ def spec(name: str, oracle: str | None, doc: str = ""):
     return deco
 
 
+# every root _store_root handed out in this process, removed at exit
+_STORE_ROOTS: set[str] = set()
+
+
+@atexit.register
+def _remove_store_roots() -> None:
+    for root in _STORE_ROOTS:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def _store_root(spark, name: str) -> str:
     """A per-session scratch root for the *_recovered incremental
     stores: keyed by the Spark application id so two concurrent
     suite/bench runs on one host can never clobber each other's
     stores mid-query (ADVICE r11 — the fixed ``adps_*`` paths did).
     Recreated fresh (rmtree) on every call — these entries fold the
-    corpus from scratch by design."""
+    corpus from scratch by design — and removed when the interpreter
+    exits, so no run leaves its stores behind."""
     app = spark.sparkContext.applicationId
     root = os.path.join(tempfile.gettempdir(), f"adps_{name}_{app}")
     shutil.rmtree(root, ignore_errors=True)
+    _STORE_ROOTS.add(root)
     return root
+
+
+def _fold_splits(spark, docs, name: str, open_store, rows=None, fold=None):
+    """The split loop of the *_recovered entries: fold ``docs`` into
+    the store ``open_store(root)`` opens under a fresh ``_store_root``,
+    in 3 deterministic splits — split ``i`` is ``doc_id % 3 == i``,
+    keyed ``b{i}``. Each split's ``rows(part)`` goes through the keyed
+    ``store.fold``; ``fold(store, part, key, maybe_replay)`` replaces
+    that where a store folds otherwise. ``maybe_replay`` is always
+    False: a fresh root holds no key, so no split can be a replay and
+    the probe jobs are skipped (the stream wiring's own steady-state
+    discipline). Returns the store."""
+    store = open_store(_store_root(spark, name))
+    fold = fold or (lambda s, part, key, replay: s.fold(rows(part), key, replay))
+    for i in range(3):
+        fold(store, docs.filter(F.col("doc_id") % 3 == i), f"b{i}", False)
+    return store
 
 
 # --------------------------------------------------------------------
@@ -268,17 +298,16 @@ def bm25_scores_recovered(spark, sf_dir):
         update_postings,
     )
 
-    docs = load(spark, sf_dir, "documents")
-    root = _store_root(spark, "bm25_store")
-    postings = PostingsStore(os.path.join(root, "postings"))
-    doclens = DocLenStore(os.path.join(root, "doclens"))
-    # fresh stores (per-session root): replays impossible, skip the
-    # probe jobs (the stream wiring's own steady-state discipline)
-    for i in range(3):
-        update_postings(
-            spark, docs.filter(F.col("doc_id") % 3 == i),
-            postings, doclens, batch_key=f"b{i}", assume_fresh=True,
-        )
+    postings, doclens = _fold_splits(
+        spark, load(spark, sf_dir, "documents"), "bm25_store",
+        lambda root: (
+            PostingsStore(os.path.join(root, "postings")),
+            DocLenStore(os.path.join(root, "doclens")),
+        ),
+        fold=lambda stores, part, key, maybe_replay: update_postings(
+            spark, part, *stores, batch_key=key, maybe_replay=maybe_replay
+        ),
+    )
     return recover_bm25_scores(spark, postings, doclens, _BM25_QUERIES, k=5)
 
 
@@ -304,19 +333,14 @@ def winnowing_pairs_recovered(spark, sf_dir):
     oracle."""
     from ..streaming.winnowing_stream import (
         WinnowStore,
+        batch_fingerprints,
         recover_overlap_pairs,
-        update_winnow_store,
     )
 
-    docs = load(spark, sf_dir, "documents")
-    path = _store_root(spark, "winnow_store")
-    store = WinnowStore(path)
-    # fresh store: replays impossible, skip probe jobs
-    for i in range(3):
-        update_winnow_store(
-            spark, docs.filter(F.col("doc_id") % 3 == i), store,
-            batch_key=f"b{i}", assume_fresh=True,
-        )
+    store = _fold_splits(
+        spark, load(spark, sf_dir, "documents"), "winnow_store",
+        WinnowStore, batch_fingerprints,
+    )
     return recover_overlap_pairs(spark, store, max_df=8, min_shared=5)
 
 
@@ -485,19 +509,14 @@ def kn_fluency_recovered(spark, sf_dir):
     oracle."""
     from ..streaming.kn_stream import (
         BigramStore,
+        batch_bigrams,
         recover_kn_scores,
-        update_bigram_store,
     )
 
-    docs = load(spark, sf_dir, "documents")
-    path = _store_root(spark, "kn_store")
-    store = BigramStore(path)
-    # fresh store: replays impossible, skip probe jobs
-    for i in range(3):
-        update_bigram_store(
-            spark, docs.filter(F.col("doc_id") % 3 == i), store,
-            batch_key=f"b{i}", assume_fresh=True,
-        )
+    store = _fold_splits(
+        spark, load(spark, sf_dir, "documents"), "kn_store",
+        BigramStore, batch_bigrams,
+    )
     return recover_kn_scores(spark, store)
 
 
@@ -643,19 +662,14 @@ def zipf_fit_recovered(spark, sf_dir):
     this entry witnesses the derived-statistic recovery end to end."""
     from ..streaming.vocab_stream import (
         VocabCountStore,
+        batch_vocab_counts,
         read_vocab_counts,
-        update_vocab_counts,
     )
 
-    docs = load(spark, sf_dir, "documents")
-    path = _store_root(spark, "zipf_store")
-    store = VocabCountStore(path)
-    # fresh store: replays impossible, skip probe jobs
-    for i in range(3):
-        update_vocab_counts(
-            spark, docs.filter(F.col("doc_id") % 3 == i), store,
-            batch_key=f"b{i}", assume_fresh=True,
-        )
+    store = _fold_splits(
+        spark, load(spark, sf_dir, "documents"), "zipf_store",
+        VocabCountStore, batch_vocab_counts,
+    )
     freq = read_vocab_counts(spark, store).select(
         "lang", "tok", F.col("cnt").alias("f")
     )

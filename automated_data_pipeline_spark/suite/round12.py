@@ -16,7 +16,9 @@ from pyspark.sql import functions as F
 from ..operators import retrieval, similarity
 from . import QuerySpec, load
 from .llm import _WORDS_SQL
-from .round11 import _BM25_QUERIES, _PMI_SQL, _store_root, pmi_topk_from_pair_counts
+from .round11 import (
+    _BM25_QUERIES, _PMI_SQL, _fold_splits, pmi_topk_from_pair_counts,
+)
 
 SPECS: list[QuerySpec] = []
 
@@ -194,17 +196,12 @@ def pmi_collocations_recovered(spark, sf_dir):
     new ingest machinery. Replay idempotence is pinned by the store's
     own tests; this entry witnesses the derived-statistic recovery
     end to end against the batch operator's oracle."""
-    from ..streaming.kn_stream import BigramStore, update_bigram_store
+    from ..streaming.kn_stream import BigramStore, batch_bigrams
 
-    docs = load(spark, sf_dir, "documents")
-    path = _store_root(spark, "pmi_store")
-    store = BigramStore(path)
-    # fresh store: replays impossible, skip probe jobs
-    for i in range(3):
-        update_bigram_store(
-            spark, docs.filter(F.col("doc_id") % 3 == i), store,
-            batch_key=f"b{i}", assume_fresh=True,
-        )
+    store = _fold_splits(
+        spark, load(spark, sf_dir, "documents"), "pmi_store",
+        BigramStore, batch_bigrams,
+    )
     c12 = (
         store.read(spark)
         .groupBy("w1", "w2")

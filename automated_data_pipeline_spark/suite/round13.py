@@ -18,7 +18,7 @@ from . import QuerySpec, load
 from .llm import _WORDS_SQL
 from .round8 import sq8_cte_body
 from .round9 import _index_path, _reuse_lineage, _stamp_lineage
-from .round11 import _BM25_QUERIES, _store_root
+from .round11 import _BM25_QUERIES, _fold_splits
 from .round12 import (
     _HYBRID_ANCHORS, _HYBRID_K, _HYBRID_SHORTLIST, _UNIMAX_SQL,
     unimax_plan_from_counts,
@@ -193,18 +193,13 @@ def unimax_plan_recovered(spark, sf_dir):
     own tests; this entry witnesses the derived-plan recovery end to
     end against the batch operator's oracle."""
     from ..streaming.vocab_stream import (
-        VocabCountStore, read_vocab_counts, update_vocab_counts,
+        VocabCountStore, batch_vocab_counts, read_vocab_counts,
     )
 
-    docs = load(spark, sf_dir, "documents")
-    path = _store_root(spark, "unimax_store")
-    store = VocabCountStore(path)
-    # fresh store: replays impossible, skip probe jobs
-    for i in range(3):
-        update_vocab_counts(
-            spark, docs.filter(F.col("doc_id") % 3 == i), store,
-            batch_key=f"b{i}", assume_fresh=True,
-        )
+    store = _fold_splits(
+        spark, load(spark, sf_dir, "documents"), "unimax_store",
+        VocabCountStore, batch_vocab_counts,
+    )
     n = (
         read_vocab_counts(spark, store)
         .groupBy("lang")

@@ -132,7 +132,7 @@ def test_bm25_recover_job_count_is_pinned(spark, docs, tmp_path):
     for i in range(3):
         update_postings(
             spark, docs.filter(F.col("doc_id") % 3 == i), postings, doclens,
-            batch_key=f"b{i}", assume_fresh=True,
+            batch_key=f"b{i}", maybe_replay=False,
         )
     assert _jobs_of(spark, "bm25-recover", lambda: recover_bm25_scores(
         spark, postings, doclens, _BM25_QUERIES, k=5
@@ -171,7 +171,7 @@ def test_incremental_lsh_batch_leaves_no_cache(spark, tmp_path):
     docs = load(spark, SF, "documents").limit(50).select("doc_id", "text")
     store = LshStore(str(tmp_path / "hyg_store"))
     out = near_dedup_batch_against_store(
-        spark, docs, store, batch_key="h1", assume_fresh=True
+        spark, docs, store, batch_key="h1", maybe_replay=False
     )
     assert _cache_empty(spark)
     out.count()

@@ -5,6 +5,10 @@ join-rewrite TargetTable carries identical semantics otherwise."""
 
 from __future__ import annotations
 
+import logging
+import sys
+import types
+
 import pytest
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
@@ -75,3 +79,26 @@ def test_delta_runner_end_to_end(spark, workdir):
     runner = PipelineRunner(spark, workdir, target_format="delta")
     runner.run(source_df=generate_orders(spark, 500), source_type="Synthetic")
     assert runner.target.read(spark).count() == 500
+
+
+def test_delta_classpath_probe_failure_is_logged(monkeypatch, caplog):
+    """delta-spark importable but the JVM probe raises: the seam still
+    answers False, and says why in a warning naming the exception."""
+    tables = types.ModuleType("delta.tables")
+    tables.DeltaTable = object
+    delta = types.ModuleType("delta")
+    delta.tables = tables
+    monkeypatch.setitem(sys.modules, "delta", delta)
+    monkeypatch.setitem(sys.modules, "delta.tables", tables)
+
+    class _Session:
+        @property
+        def _jvm(self):
+            raise RuntimeError("gateway closed")
+
+    with caplog.at_level(logging.WARNING, logger=upsert.__name__):
+        assert upsert.delta_available(_Session()) is False
+    (rec,) = [r for r in caplog.records if r.name == upsert.__name__]
+    assert rec.levelno == logging.WARNING
+    assert "RuntimeError" in rec.getMessage()
+    assert "gateway closed" in rec.getMessage()

@@ -19,7 +19,6 @@ from automated_data_pipeline_spark.streaming.dsir_stream import (
     read_dsir_stats,
     recover_dsir_weights,
     start_incremental_dsir,
-    update_dsir_buckets,
 )
 from automated_data_pipeline_spark.suite import load
 
@@ -79,9 +78,11 @@ def test_recovered_weights_match_batch_operator(spark, docs, tmp_path):
     decimals (weights are O(1-10); double noise is ~1e-10)."""
     store = DsirBucketStore(str(tmp_path / "store"))
     for i in range(3):
-        update_dsir_buckets(
-            spark, docs.filter(F.col("doc_id") % 3 == i), store,
-            is_target=IS_EN(), batch_key=f"b{i}",
+        store.fold(
+            batch_dsir_buckets(
+                docs.filter(F.col("doc_id") % 3 == i), "text", IS_EN()
+            ),
+            f"b{i}", maybe_replay=True,
         )
     got = {
         r["doc_id"]: (r["lang"], r["n_tokens"], round(r["weight"], 6))
@@ -129,7 +130,7 @@ def test_fresh_batch_scores_against_frozen_stats(spark, docs, tmp_path):
     half_a = docs.filter(F.col("doc_id") % 2 == 0)
     half_b = docs.filter(F.col("doc_id") % 2 == 1)
     store = DsirBucketStore(str(tmp_path / "store"))
-    update_dsir_buckets(spark, half_a, store, is_target=IS_EN(), batch_key="a")
+    store.fold(batch_dsir_buckets(half_a, "text", IS_EN()), "a", maybe_replay=True)
     scored = recover_dsir_weights(
         spark, store, half_b, "text", "doc_id"
     ).collect()
@@ -144,7 +145,7 @@ def test_fresh_batch_scores_against_frozen_stats(spark, docs, tmp_path):
 
 def test_duplicate_fold_is_idempotent(spark, docs, tmp_path):
     store = DsirBucketStore(str(tmp_path / "store"))
-    update_dsir_buckets(spark, docs, store, is_target=IS_EN(), batch_key="b0")
+    store.fold(batch_dsir_buckets(docs, "text", IS_EN()), "b0", maybe_replay=True)
     before = _stats(spark, store)
-    update_dsir_buckets(spark, docs, store, is_target=IS_EN(), batch_key="b0")
+    store.fold(batch_dsir_buckets(docs, "text", IS_EN()), "b0", maybe_replay=True)
     assert _stats(spark, store) == before

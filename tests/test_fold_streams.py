@@ -5,8 +5,9 @@
   state is rolled back to each point a crash can leave it at, and the
   restarted stream must converge on the uncrashed run's output and
   store;
-- the drain's Spark job count, pinned, so the shared wiring cannot
-  grow a job per batch unnoticed.
+- the Spark job counts of a dedup drain, a vocabulary-store drain and
+  one recovered suite entry's split fold, pinned, so the shared
+  wiring cannot grow a job per batch unnoticed.
 """
 
 from __future__ import annotations
@@ -43,11 +44,24 @@ from automated_data_pipeline_spark.streaming.incremental_segments import (
 from automated_data_pipeline_spark.streaming.quality_scorer import (
     start_quality_score_stream,
 )
+from automated_data_pipeline_spark.streaming.vocab_stream import (
+    VocabCountStore,
+    read_vocab_counts,
+    start_incremental_vocab,
+)
 from automated_data_pipeline_spark.suite.round7 import _QLR
+from conftest import SF_SMOKE
 
 # Jobs of the pinned drain (test_dedup_drain_job_count_is_pinned):
 # 3 batches of the dedup fold plus the replay probes of the first.
 DRAIN_JOBS = 19
+# Jobs of the pinned vocabulary-store drain: 3 batches of the count
+# fold, the first with its replay probe.
+VOCAB_DRAIN_JOBS = 9
+# Jobs of building suite.round10.lang_vocab_overlap_recovered at sf0.001:
+# the 3-split fold into a fresh store (no probes) plus the recovery's
+# eager top-list checkpoint.
+VOCAB_RECOVERED_JOBS = 14
 
 WORDS = (
     "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu "
@@ -346,3 +360,44 @@ def test_dedup_drain_job_count_is_pinned(spark, tmp_path):
     assert spark.read.parquet(out).count() == len(
         {d["text"] for d in shards[0] + shards[1]}
     )
+
+
+def test_vocab_drain_job_count_is_pinned(spark, tmp_path):
+    """An availableNow drain of 3 shards into a vocabulary count store,
+    the last shard a replay of the first: 3 micro-batches, a fixed
+    number of Spark jobs (only the first batch pays the replay probe),
+    and the counts of shards 0, 1 and 0 again."""
+    shards = [
+        [dict(d, lang="en" if d["doc_id"] % 2 else "de") for d in shard]
+        for shard in _doc_shards()
+    ]
+    src = str(tmp_path / "src")
+    _write_shards(src, [shards[0], shards[1], shards[0]])
+    store = VocabCountStore(str(tmp_path / "store"))
+
+    before = _marker_job(spark, "vocab-drain-before")
+    q = start_incremental_vocab(spark, src, store, str(tmp_path / "ckpt"))
+    q.awaitTermination(300)
+    after = _marker_job(spark, "vocab-drain-after")
+
+    assert q.exception() is None
+    assert len(q.recentProgress) == 3
+    assert after - before - 1 == VOCAB_DRAIN_JOBS
+    n_tokens = sum(len(d["text"].split()) for d in shards[0] * 2 + shards[1])
+    assert read_vocab_counts(spark, store).agg(F.sum("cnt")).first()[0] == n_tokens
+
+
+def test_recovered_split_fold_job_count_is_pinned(spark):
+    """Building one recovered suite entry runs its 3-split store fold
+    (fresh store: no replay probes) and the recovery's eager jobs; a
+    per-split job added to the shared split loop fails here."""
+    from automated_data_pipeline_spark.suite.round10 import (
+        lang_vocab_overlap_recovered,
+    )
+
+    before = _marker_job(spark, "vocab-recovered-before")
+    out = lang_vocab_overlap_recovered(spark, SF_SMOKE)
+    after = _marker_job(spark, "vocab-recovered-after")
+
+    assert after - before - 1 == VOCAB_RECOVERED_JOBS
+    assert out.count() > 0

@@ -48,7 +48,7 @@ def test_within_batch_and_cross_batch_near_dups(spark, store):
     # (cross-batch), a fresh doc accepted
     b2 = _df(spark, [(10, BASE.replace("garden", "meadow")), (11, FAR + " with extra novel words appended here")])
     out2 = near_dedup_batch_against_store(
-        spark, b2, store, batch_key="b2", assume_fresh=True
+        spark, b2, store, batch_key="b2", maybe_replay=False
     )
     got = {r["doc_id"] for r in out2.collect()}
     assert 10 not in got and 11 in got
@@ -111,7 +111,7 @@ def test_store_compaction_preserves_content_and_dedup(spark, store, tmp_path):
     for i, (did, txt) in enumerate([(1, BASE), (2, FAR), (3, FAR + " more words here now")]):
         near_dedup_batch_against_store(
             spark, _df(spark, [(did, txt)]), store,
-            batch_key=f"c{i}", assume_fresh=True,
+            batch_key=f"c{i}", maybe_replay=False,
         )
     before_docs = {r["doc_id"] for r in store.docs(spark).collect()}
     before_buckets = {
@@ -128,7 +128,7 @@ def test_store_compaction_preserves_content_and_dedup(spark, store, tmp_path):
     } == before_buckets
     # dedup decisions unchanged post-compaction
     out = near_dedup_batch_against_store(
-        spark, _df(spark, [(9, NEAR)]), store, batch_key="c9", assume_fresh=True
+        spark, _df(spark, [(9, NEAR)]), store, batch_key="c9", maybe_replay=False
     )
     assert out.count() == 0  # NEAR still rejected against compacted store
 
@@ -231,7 +231,7 @@ def test_retired_bucket_gc_on_compact(spark, store):
         for r in store.buckets(spark).collect()
     } == live
     out = near_dedup_batch_against_store(
-        spark, _df(spark, [(9, NEAR)]), store, batch_key="g9", assume_fresh=True
+        spark, _df(spark, [(9, NEAR)]), store, batch_key="g9", maybe_replay=False
     )
     assert out.count() == 0  # NEAR still rejected post-GC
 

@@ -13,7 +13,6 @@ from automated_data_pipeline_spark.streaming.kn_stream import (
     batch_bigrams,
     recover_kn_scores,
     score_batch_against_store,
-    update_bigram_store,
 )
 from automated_data_pipeline_spark.suite.round11 import (
     kneser_ney_doc_scores,
@@ -38,11 +37,10 @@ def _docs(spark, texts, offset=0):
 
 def _fold(spark, store, docs, n_splits=3):
     for i in range(n_splits):
-        update_bigram_store(
-            spark,
-            docs.filter(F.col("doc_id") % n_splits == i),
-            store,
-            batch_key=f"b{i}",
+        store.fold(
+            batch_bigrams(docs.filter(F.col("doc_id") % n_splits == i)),
+            f"b{i}",
+            maybe_replay=True,
         )
 
 

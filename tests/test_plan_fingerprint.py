@@ -45,3 +45,14 @@ def test_different_queries_fingerprint_differently(spark, tmp_path):
     assert pf.diff(json.loads(a.read_text()), json.loads(b.read_text()))
     assert pf.main(["--diff", str(a), str(b)]) == 1
     assert pf.main(["--diff", str(a), str(a)]) == 0
+
+
+def test_store_root_application_id_is_normalized(spark):
+    """kn_fluency_recovered pins a plan that scans its store root, which
+    is named after the Spark application; the recorded plan must not
+    carry the id, or two processes never match."""
+    pf = _tool()
+    fp = pf.fingerprint(spark, SF_SMOKE, ["kn_fluency_recovered"])
+    (action,) = fp["kn_fluency_recovered"]["actions"]
+    assert "adps_kn_store_<app>" in action[1]
+    assert spark.sparkContext.applicationId not in action[1]

@@ -6,6 +6,9 @@ vs brute-force Python references plus edge behavior."""
 from __future__ import annotations
 
 import math
+import os
+import subprocess
+import sys
 
 from pyspark.sql import functions as F
 
@@ -502,8 +505,8 @@ def test_zipf_recovered_equals_batch(spark, tmp_path):
 
     from automated_data_pipeline_spark.streaming.vocab_stream import (
         VocabCountStore,
+        batch_vocab_counts,
         read_vocab_counts,
-        update_vocab_counts,
     )
     from automated_data_pipeline_spark.suite.round11 import (
         zipf_fit_by_lang,
@@ -525,9 +528,9 @@ def test_zipf_recovered_equals_batch(spark, tmp_path):
 
     store = VocabCountStore(str(tmp_path / "vc"))
     for i in range(3):
-        update_vocab_counts(
-            spark, df.filter(F.col("doc_id") % 3 == i), store,
-            batch_key=f"b{i}",
+        store.fold(
+            batch_vocab_counts(df.filter(F.col("doc_id") % 3 == i)), f"b{i}",
+            maybe_replay=True,
         )
     freq = read_vocab_counts(spark, store).select(
         "lang", "tok", F.col("cnt").alias("f")
@@ -818,3 +821,28 @@ def test_recovered_twins_use_per_session_store_roots(spark):
     ):
         entry(spark, SF_SMOKE)
     assert [d for d in fixed if os.path.exists(d)] == []
+
+
+# ------------------------------------------------------- store roots
+def test_recovered_store_roots_are_removed_at_exit(tmp_path):
+    """Each *_recovered entry folds into a per-application root under
+    the temp dir; the root is gone once the interpreter exits, so no
+    run leaves its stores behind."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import os, sys, types\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from automated_data_pipeline_spark.suite.round11 import _store_root\n"
+        "sc = types.SimpleNamespace(applicationId='local-stub')\n"
+        "root = _store_root(types.SimpleNamespace(sparkContext=sc), 'vocab_store')\n"
+        "os.makedirs(os.path.join(root, 'part'))\n"
+        "print(root)\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", script], env=env, capture_output=True,
+        text=True, check=True, timeout=120,
+    )
+    root = out.stdout.strip().splitlines()[-1]
+    assert root == os.path.join(str(tmp_path), "adps_vocab_store_local-stub")
+    assert not os.path.exists(root)

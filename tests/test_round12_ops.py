@@ -93,7 +93,7 @@ def test_pmi_recovered_equals_batch(spark, tmp_path):
     BigramStore in 3 splits and recovering through the shared scoring
     path reproduces the batch operator's exact rows."""
     from automated_data_pipeline_spark.streaming.kn_stream import (
-        BigramStore, batch_bigrams, update_bigram_store,
+        BigramStore, batch_bigrams,
     )
     from automated_data_pipeline_spark.suite.round11 import (
         pmi_collocations_topk, pmi_topk_from_pair_counts,
@@ -102,13 +102,14 @@ def test_pmi_recovered_equals_batch(spark, tmp_path):
     docs = load(spark, SF, "documents")
     store = BigramStore(str(tmp_path / "pmi_store"))
     for i in range(3):
-        update_bigram_store(
-            spark, docs.filter(F.col("doc_id") % 3 == i), store,
-            batch_key=f"b{i}",
+        store.fold(
+            batch_bigrams(docs.filter(F.col("doc_id") % 3 == i)), f"b{i}",
+            maybe_replay=True,
         )
     # replay of an applied key is a no-op
-    update_bigram_store(
-        spark, docs.filter(F.col("doc_id") % 3 == 0), store, batch_key="b0"
+    store.fold(
+        batch_bigrams(docs.filter(F.col("doc_id") % 3 == 0)), "b0",
+        maybe_replay=True,
     )
     c12 = (
         store.read(spark)

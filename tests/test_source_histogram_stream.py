@@ -15,10 +15,10 @@ from pyspark.sql import functions as F
 from automated_data_pipeline_spark.operators import quality_model as QM
 from automated_data_pipeline_spark.streaming.source_histogram import (
     SourceScoreHistogramStore,
+    batch_source_histogram,
     read_source_histogram,
     recover_quantile_gate,
     start_source_histogram_stream,
-    update_source_histogram,
 )
 from automated_data_pipeline_spark.suite import load
 from automated_data_pipeline_spark.suite.round7 import _QLR
@@ -70,14 +70,18 @@ def _rows(df):
     return [tuple(r) for r in df.collect()]
 
 
+def _fold(store, docs, key):
+    store.fold(
+        batch_source_histogram(docs, "text", BIAS, COEFS), key,
+        maybe_replay=True,
+    )
+
+
 def test_recovered_gate_equals_batch_gate_on_fixture(spark, tmp_path):
     docs = load(spark, SF, "documents").select("doc_id", "text", "source")
     store = SourceScoreHistogramStore(str(tmp_path / "hist"))
     for i in range(3):
-        update_source_histogram(
-            spark, docs.filter(F.col("doc_id") % 3 == i), store,
-            bias=BIAS, coefs=COEFS, batch_key=f"k{i}",
-        )
+        _fold(store, docs.filter(F.col("doc_id") % 3 == i), f"k{i}")
     got = _rows(recover_quantile_gate(spark, store))
     want = _rows(_batch_gate(docs))
     assert got == want
@@ -90,21 +94,14 @@ def test_histogram_split_invariance_and_replay(spark, tmp_path):
         return sorted(_rows(read_source_histogram(spark, store)))
 
     one = SourceScoreHistogramStore(str(tmp_path / "one"))
-    update_source_histogram(spark, docs, one, bias=BIAS, coefs=COEFS,
-                            batch_key="all")
+    _fold(one, docs, "all")
     three = SourceScoreHistogramStore(str(tmp_path / "three"))
     for i in range(3):
-        update_source_histogram(
-            spark, docs.filter(F.col("doc_id") % 3 == i), three,
-            bias=BIAS, coefs=COEFS, batch_key=f"k{i}",
-        )
+        _fold(three, docs.filter(F.col("doc_id") % 3 == i), f"k{i}")
     assert merged(one) == merged(three)
     # a restarted query replays batch k1: counts must not double
     before = merged(three)
-    update_source_histogram(
-        spark, docs.filter(F.col("doc_id") % 3 == 1), three,
-        bias=BIAS, coefs=COEFS, batch_key="k1",
-    )
+    _fold(three, docs.filter(F.col("doc_id") % 3 == 1), "k1")
     assert merged(three) == before
 
 
@@ -125,8 +122,7 @@ def test_tie_at_the_cut_is_count_exact(spark, tmp_path):
         rows, "doc_id long, text string, source string"
     )
     store = SourceScoreHistogramStore(str(tmp_path / "tie"))
-    update_source_histogram(spark, docs, store, bias=BIAS, coefs=COEFS,
-                            batch_key="k0")
+    _fold(store, docs, "k0")
     got = _rows(recover_quantile_gate(spark, store))
     want = _rows(_batch_gate(docs))
     assert got == want

@@ -14,7 +14,6 @@ from automated_data_pipeline_spark.streaming.source_stats import (
     batch_source_stats,
     read_source_totals,
     start_source_stats_stream,
-    update_source_stats,
 )
 from automated_data_pipeline_spark.suite.round7 import _QLR
 
@@ -36,6 +35,12 @@ ROWS = [
 def _docs(spark, ids):
     return spark.createDataFrame(
         [ROWS[i] for i in ids], "doc_id long, text string, source string"
+    )
+
+
+def _fold(store, docs, key):
+    store.fold(
+        batch_source_stats(docs, "text", BIAS, COEFS), key, maybe_replay=True
     )
 
 
@@ -75,36 +80,29 @@ def test_store_merges_to_batch_totals_over_any_split(spark, tmp_path):
         for bi in range(len(bounds) - 1):
             ids = range(bounds[bi], bounds[bi + 1])
             if ids:
-                update_source_stats(
-                    spark, _docs(spark, ids), store, bias=BIAS,
-                    coefs=COEFS, batch_key=f"k{bi}",
-                )
+                _fold(store, _docs(spark, ids), f"k{bi}")
         assert _totals(spark, store) == whole, split
 
 
 def test_replayed_batch_is_not_double_counted(spark, tmp_path):
     store = SourceStatsStore(str(tmp_path / "replay"))
-    update_source_stats(spark, _docs(spark, [0, 1, 2]), store,
-                        bias=BIAS, coefs=COEFS, batch_key="k0")
+    _fold(store, _docs(spark, [0, 1, 2]), "k0")
     once = _totals(spark, store)
     # a restarted query replays batch k0 (fresh wrapper => probe runs)
-    update_source_stats(spark, _docs(spark, [0, 1, 2]), store,
-                        bias=BIAS, coefs=COEFS, batch_key="k0")
+    _fold(store, _docs(spark, [0, 1, 2]), "k0")
     assert _totals(spark, store) == once
 
 
 def test_compaction_preserves_totals_and_replay_probe(spark, tmp_path):
     store = SourceStatsStore(str(tmp_path / "compact"))
     for bi, ids in enumerate([[0, 1], [2, 3], [4, 5, 6]]):
-        update_source_stats(spark, _docs(spark, ids), store,
-                            bias=BIAS, coefs=COEFS, batch_key=f"k{bi}")
+        _fold(store, _docs(spark, ids), f"k{bi}")
     before = _totals(spark, store)
     store.compact(spark, n_files=1)
     assert _totals(spark, store) == before
     # replay detection must survive compaction
     assert store.has_batch(spark, "k1")
-    update_source_stats(spark, _docs(spark, [2, 3]), store,
-                        bias=BIAS, coefs=COEFS, batch_key="k1")
+    _fold(store, _docs(spark, [2, 3]), "k1")
     assert _totals(spark, store) == before
 
 

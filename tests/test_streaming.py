@@ -456,7 +456,7 @@ def test_fingerprint_store_compaction(spark, tmp_path):
             "doc_id bigint, text string",
         )
         dedup_batch_against_store(
-            spark, batch, store, batch_key=f"b{i}", assume_fresh=True
+            spark, batch, store, batch_key=f"b{i}", maybe_replay=False
         )
     before = {
         (r["fingerprint"], r["doc_id"]) for r in store.read(spark).collect()
@@ -473,7 +473,7 @@ def test_fingerprint_store_compaction(spark, tmp_path):
         [(99, "doc number 0 0 content")], "doc_id bigint, text string"
     )
     out = dedup_batch_against_store(
-        spark, dup, store, batch_key="b9", assume_fresh=True
+        spark, dup, store, batch_key="b9", maybe_replay=False
     )
     assert out.count() == 0
 

@@ -17,7 +17,6 @@ from automated_data_pipeline_spark.streaming.vocab_stream import (
     read_vocab_counts,
     recover_vocab_overlap,
     start_incremental_vocab,
-    update_vocab_counts,
 )
 from automated_data_pipeline_spark.suite import all_specs, load
 
@@ -87,9 +86,9 @@ def test_restart_replay_is_noop(spark, docs, tmp_path):
 
 def test_duplicate_fold_is_idempotent(spark, docs, tmp_path):
     store = VocabCountStore(str(tmp_path / "store"))
-    update_vocab_counts(spark, docs, store, batch_key="b0")
+    store.fold(batch_vocab_counts(docs), "b0", maybe_replay=True)
     before = sorted(tuple(r) for r in read_vocab_counts(spark, store).collect())
-    update_vocab_counts(spark, docs, store, batch_key="b0")
+    store.fold(batch_vocab_counts(docs), "b0", maybe_replay=True)
     assert sorted(
         tuple(r) for r in read_vocab_counts(spark, store).collect()
     ) == before

@@ -13,8 +13,8 @@ from automated_data_pipeline_spark.operators.dedup import (
     winnowing_fingerprints, winnowing_overlap_pairs,
 )
 from automated_data_pipeline_spark.streaming.winnowing_stream import (
-    WinnowStore, batch_overlap_against_store, recover_overlap_pairs,
-    update_winnow_store,
+    WinnowStore, batch_fingerprints, batch_overlap_against_store,
+    recover_overlap_pairs,
 )
 
 SHARED = "a long shared passage of text that both documents contain"
@@ -42,9 +42,9 @@ def store(tmp_path):
 
 def _fold(spark, docs, store, n_splits=3):
     for i in range(n_splits):
-        update_winnow_store(
-            spark, docs.filter(F.col("doc_id") % n_splits == i),
-            store, batch_key=f"b{i}",
+        store.fold(
+            batch_fingerprints(docs.filter(F.col("doc_id") % n_splits == i)),
+            f"b{i}", maybe_replay=True,
         )
 
 

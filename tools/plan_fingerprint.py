@@ -6,9 +6,11 @@ DataFrame actions ``first``, ``collect``, ``count``, ``localCheckpoint``
 and ``toPandas`` wrapped: every outermost call records its action name
 and the normalized optimized plan of the frame it ran on (the eager
 jobs inside the query function). Then it records the returned frame's
-normalized plan and a digest of its rows. Expression, plan and RDD ids
-and lambda variable numbers are normalized away, so two runs of an
-unchanged query match, in one process or in two.
+normalized plan and a digest of its rows. Expression, plan and RDD ids,
+lambda variable numbers and the Spark application id (it names the
+per-application store roots the ``*_recovered`` queries scan) are
+normalized away, so two runs of an unchanged query match, in one
+process or in two.
 
 Usage:
   python tools/plan_fingerprint.py sf_dir name [name ...] > out.json
@@ -45,7 +47,9 @@ def normalize(plan: str) -> str:
 
 
 def _plan(df) -> str:
-    return normalize(df._jdf.queryExecution().optimizedPlan().toString())
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    app = df.sparkSession.sparkContext.applicationId
+    return normalize(plan.replace(app, "<app>"))
 
 
 @contextlib.contextmanager
