@@ -7,28 +7,69 @@ row-update primitive, so the control plane is **event-sourced**: every
 state change appends an immutable full-state row (tiny parquet file,
 written driver-side via pyarrow — the control plane is metadata beside
 the dataflow, exactly like the reference's SQLite-beside-the-pipeline).
-Appends are atomic-by-file, so concurrent readers (the monitoring API)
-never see torn state — the reference gets the same property from WAL
-journaling (orchestrator/db.js:17).
 
-Reads never scan with Spark. Event files are immutable once in place
-and uniquely named, so each store instance decodes every file with
-pyarrow exactly once (cached by file name; a directory listing per
-read picks up other writers' files and drops deleted ones). The
-*current* state — latest row per key by ``event_seq``, ties to the
-earliest file — is computed once per listing in Arrow. Driver-side
-readers (the monitoring endpoints, the timeout sweep) take those Arrow
-tables directly (``runs_table``/``steps_table``/``logs_table``) and run
-no Spark job; the ``runs``/``steps``/``logs`` DataFrame views are local
-relations over the same tables: no file scan, no schema-inference job,
-no window shuffle.
+**Appends.** One single-row parquet file per event, written as
+``.tmp-*`` and put in place with ``os.replace``: appends are
+atomic-by-file and take no lock, so concurrent writers (other stores,
+other processes) never coordinate and readers never see torn state —
+the reference gets the same property from WAL journaling
+(orchestrator/db.js:17). File names are ``<time_ns>-<uuid>`` and
+unique; event order is file-name order.
 
-At scale this would be a Delta/Iceberg table with OPTIMIZE compaction;
-the event-sourced latest-wins view is identical.
+**Snapshots.** One file per event makes a cold read decode the whole
+history, so each table compacts itself (the OPTIMIZE of a Delta or
+Iceberg table, done in place). A store counts its own appends; every
+``COMPACT_AT`` of them it refreshes the table, and when the
+uncompacted tail then holds ``COMPACT_AT`` or more event files it
+writes ``_snapshot-<last covered name>.arrow``: an Arrow IPC file with
+every row of the previous snapshot and of the tail, in file-name
+order, each row tagged with its event file's name. The snapshot
+records the exact names it absorbed that were still on disk, and
+only those count as covered. A watermark ("every name up to X") would
+be wrong: a writer takes its name before its ``os.replace``, so an
+event can land after the compactor's listing with a name inside the
+covered range, and it must stay in the tail. After the snapshot is in
+place the compactor deletes the older snapshots and the covered files.
+
+**Readers.** A view is the newest snapshot plus every listed event
+file the snapshot does not cover, merged in file-name order, so the
+latest-wins tie rule and the mid-stage step history read the same as
+over the raw files. Each store decodes a file once (cached by name)
+and re-decodes nothing while the listing is unchanged. A listed file
+that vanishes before it is decoded was deleted by a compactor: the
+reader lists again. The *current* state — latest row per key by
+``event_seq``, ties to the earliest file — is computed once per
+listing in Arrow. Driver-side readers (the monitoring endpoints, the
+timeout sweep) take those Arrow tables directly
+(``runs_table``/``steps_table``/``logs_table``) and run no Spark job;
+the ``runs``/``steps``/``logs`` DataFrame views are local relations
+over the same tables: no file scan, no schema-inference job, no
+window shuffle.
+
+**One compactor at a time.** An O_EXCL ``_compact`` marker in the
+table directory arbitrates, the way ``_claim_run_*`` arbitrates run
+numbers; a store that finds it taken skips this round. A claim older
+than ``STALE_CLAIM_S`` was left by a dead process and is broken, and
+a compactor re-checks that it still holds the claim before it puts
+its snapshot in place.
+
+**Crash windows.** Each leaves a view identical to the uncompacted
+one:
+- a torn ``.tmp-`` snapshot is not a table file; the next compactor
+  removes it;
+- after the snapshot's ``os.replace`` but before or during the
+  deletes, the covered files still listed are skipped (they are in
+  the snapshot's covered names) and the older snapshot is ignored;
+  the next compactor carries those names forward and deletes them;
+- a crash holding the claim blocks compaction for ``STALE_CLAIM_S``,
+  never reads.
+A compaction that fails inside ``append`` (an ``OSError``) is logged,
+not raised: the event itself is already in place.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 import threading
 import time
@@ -42,6 +83,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from .schemas import STEP_NAMES
+
+log = logging.getLogger(__name__)
 
 
 def where(table: pa.Table, **equals) -> pa.Table:
@@ -99,9 +142,79 @@ def utcnow() -> datetime:
     return datetime.now(timezone.utc)
 
 
+# appends between compaction checks, and the tail length that compacts
+COMPACT_AT = 16
+# a compactor claim this old was left by a process that died holding it
+STALE_CLAIM_S = 60.0
+# listings a read retries when compactors keep deleting what it listed
+_RELISTS = 8
+_SNAPSHOT = "_snapshot-"
+_CLAIM = "_compact"
+_NAME = "_name"  # snapshot column: the event file a row came from
+_COVERED = b"covered"  # snapshot metadata: the names it absorbed
+
+
+def _decode(path: str) -> pa.Table:
+    """Read one table file: an IPC snapshot or a parquet event file.
+    A missing file raises ``FileNotFoundError``."""
+    if path.endswith(".arrow"):
+        with pa.OSFile(path) as f:
+            return pa.ipc.open_file(f).read_all()
+    return pq.ParquetFile(path).read()
+
+
+def _tagged(table: pa.Table, name: str) -> pa.Table:
+    """An event file's rows with the file's name in ``_NAME``."""
+    return table.append_column(_NAME, pa.array([name] * table.num_rows, pa.string()))
+
+
+def _write_snapshot(path: str, table: pa.Table) -> None:
+    with pa.OSFile(path, "wb") as sink, pa.ipc.new_file(sink, table.schema) as w:
+        w.write_table(table)
+
+
+def _remove(path: str) -> None:
+    try:
+        os.remove(path)
+    except FileNotFoundError:
+        pass
+
+
+def _take_claim(path: str, token: str) -> bool:
+    """Create the O_EXCL compactor claim holding ``token``; break it
+    first when it is older than ``STALE_CLAIM_S``. False when another
+    compactor holds it."""
+    for _ in range(2):
+        try:
+            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        except FileExistsError:
+            try:
+                age = time.time() - os.stat(path).st_mtime
+            except FileNotFoundError:
+                continue  # released meanwhile
+            if age < STALE_CLAIM_S:
+                return False
+            _remove(path)
+            continue
+        with os.fdopen(fd, "w") as f:
+            f.write(token)
+        return True
+    return False
+
+
+def _holds_claim(path: str, token: str) -> bool:
+    try:
+        with open(path) as f:
+            return f.read() == token
+    except FileNotFoundError:
+        return False
+
+
 class _EventTable:
     """One control table: appends one immutable single-row parquet file
-    per event and reads them back through a decode-once cache."""
+    per event, compacts the tail into an IPC snapshot every
+    ``COMPACT_AT`` own appends, and reads the snapshot plus the tail
+    back through a decode-once cache."""
 
     def __init__(self, directory: str, fields, keys: list[str] | None = None):
         self.directory = directory
@@ -109,45 +222,141 @@ class _EventTable:
         self.keys = keys  # latest-wins key; None = append-only (logs)
         os.makedirs(directory, exist_ok=True)
         self._lock = threading.Lock()
-        self._files: dict[str, pa.Table] = {}
-        self._names: list[str] = []
+        self._appends = 0  # own appends since the last compaction check
+        self._listed: list[str] = []  # event files of the last listing
+        self._snap_name: str | None = None
+        self._snap = self._named_empty()
+        self._covered: frozenset[str] = frozenset()
+        self._files: dict[str, pa.Table] = {}  # tagged tail rows, by name
+        self._named = self._snap  # snapshot + tail rows, name order
         self._events = self.schema.empty_table()
         self._latest: pa.Table | None = None
 
+    def _named_empty(self) -> pa.Table:
+        return self.schema.append(pa.field(_NAME, pa.string())).empty_table()
+
+    def _path(self, name: str) -> str:
+        return os.path.join(self.directory, name)
+
     def append(self, row: dict[str, Any]) -> None:
-        arrays = [pa.array([row.get(f.name)], type=f.type) for f in self.schema]
-        table = pa.Table.from_arrays(arrays, schema=self.schema)
+        table = pa.Table.from_pylist([row], schema=self.schema)
         fname = f"{time.time_ns():020d}-{uuid.uuid4().hex[:8]}.parquet"
-        tmp = os.path.join(self.directory, f".tmp-{fname}")
+        tmp = self._path(f".tmp-{fname}")
         pq.write_table(table, tmp)
-        os.replace(tmp, os.path.join(self.directory, fname))
+        os.replace(tmp, self._path(fname))
         with self._lock:  # our own event: no need to decode it back
-            self._files[fname] = table
+            self._files[fname] = _tagged(table, fname)
+            self._appends += 1
+            due = self._appends >= COMPACT_AT
+            if due:
+                self._appends = 0
+        if due:
+            try:
+                self.compact()
+            except OSError:  # the event is in place; the next check retries
+                log.warning("compaction of %s failed", self.directory, exc_info=True)
+
+    def compact(self) -> None:
+        """Refresh, and snapshot the tail once it holds ``COMPACT_AT``
+        or more event files (see the module docstring)."""
+        with self._lock:
+            self._refresh()
+            if len(self._files) < COMPACT_AT:
+                return
+            claim, token = self._path(_CLAIM), uuid.uuid4().hex
+            if not _take_claim(claim, token):
+                return  # another store is compacting this table
+            try:
+                self._refresh()  # the view as of holding the claim
+                if len(self._files) >= COMPACT_AT:
+                    self._snapshot(claim, token)
+            finally:
+                if _holds_claim(claim, token):
+                    _remove(claim)
+
+    def _snapshot(self, claim: str, token: str) -> None:
+        named = self._named
+        last = named[_NAME][-1].as_py()
+        snap = f"{_SNAPSHOT}{last.removesuffix('.parquet')}.arrow"
+        if snap == self._snap_name:
+            # every tail file sorts inside the covered range; a newer
+            # event gives the next snapshot a new name
+            return
+        absorbed = sorted(set(self._files) | (self._covered & set(self._listed)))
+        # under the claim no other snapshot appears: these are older
+        # snapshots and crashed compactors' temp files
+        entries = os.listdir(self.directory)
+        for f in entries:
+            if f.startswith(f".tmp-{_SNAPSHOT}"):
+                _remove(self._path(f))
+        tmp = self._path(f".tmp-{snap}")
+        _write_snapshot(tmp, named.replace_schema_metadata(
+            {_COVERED: "\n".join(absorbed)}
+        ))
+        if not _holds_claim(claim, token):  # broken as stale meanwhile
+            _remove(tmp)
+            return
+        os.replace(tmp, self._path(snap))
+        # our view is unchanged: it is now the snapshot alone
+        self._snap_name, self._snap = snap, named
+        self._covered, self._files, self._listed = frozenset(absorbed), {}, []
+        for f in entries:
+            if f.startswith(_SNAPSHOT):
+                _remove(self._path(f))
+        for f in absorbed:
+            _remove(self._path(f))
 
     def _refresh(self) -> None:
-        """Sync the cache with a listing (call under ``_lock``).
+        """Sync the view with a listing (call under ``_lock``).
         Dot/underscore-prefixed entries (a crashed write's '.tmp-*',
-        run-number claims) are not events. A file is decoded the first
-        time a listing shows it; one that left the listing leaves the
-        view. A decode error propagates: an empty answer would make
+        claims) are not events. A file is decoded the first time a
+        listing shows it; one that left the listing leaves the view. A
+        listed file gone before its decode was compacted away: list
+        again. A decode error propagates: an empty answer would make
         update_run merge onto a bare {run_id} (wiping state to NULLs)
         and restart run numbering at 1."""
-        names = sorted(
-            f for f in os.listdir(self.directory)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        for _ in range(_RELISTS):
+            entries = os.listdir(self.directory)
+            names = sorted(
+                f for f in entries
+                if f.endswith(".parquet") and not f.startswith((".", "_"))
+            )
+            snap = max(
+                (f for f in entries if f.startswith(_SNAPSHOT) and f.endswith(".arrow")),
+                default=None,
+            )
+            if names == self._listed and snap == self._snap_name:
+                return
+            try:
+                self._load(snap, names)
+                return
+            except FileNotFoundError:
+                continue
+        raise RuntimeError(
+            f"{self.directory}: listed files kept vanishing over {_RELISTS} listings"
         )
-        if names == self._names:
-            return
-        self._files = {
+
+    def _load(self, snap: str | None, names: list[str]) -> None:
+        if snap == self._snap_name:
+            rows, covered = self._snap, self._covered
+        elif snap is None:
+            rows, covered = self._named_empty(), frozenset()
+        else:
+            rows = _decode(self._path(snap))
+            covered = frozenset(rows.schema.metadata[_COVERED].decode().split("\n"))
+            rows = rows.replace_schema_metadata(None)
+        files = {
             n: self._files[n] if n in self._files
-            else pq.ParquetFile(os.path.join(self.directory, n)).read()
-            for n in names
+            else _tagged(_decode(self._path(n)), n)
+            for n in names if n not in covered
         }
-        self._names = names
-        self._events = (
-            pa.concat_tables(self._files.values()).combine_chunks()
-            if names else self.schema.empty_table()
-        )
+        named = pa.concat_tables([rows, *files.values()]).combine_chunks()
+        if files and rows.num_rows and min(files) < rows[_NAME][-1].as_py():
+            named = named.sort_by(_NAME)  # a late event inside the snapshot's range
+        self._snap_name, self._snap, self._covered = snap, rows, covered
+        self._files, self._listed = files, names
+        self._named = named
+        self._events = named.drop_columns([_NAME])
         self._latest = None
 
     def events(self) -> pa.Table:

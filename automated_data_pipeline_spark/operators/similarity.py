@@ -1573,7 +1573,7 @@ def ivfpq_topk_persisted(
     probes, codes = _read_probed(
         spark, path,
         _ivfpq_probes(cent_df, queries, nprobe, query_id_col, query_vec_col),
-        id_col,
+        id_col, cent_df.count(),
     )
     return _ivfpq_search(
         codes, codebook_df, queries, probes, k, oversample, id_col,
@@ -1610,7 +1610,9 @@ def read_ivf_probes(
     )
 
 
-def _read_probed(spark, path: str, probes: DataFrame, id_col: str):
+def _read_probed(
+    spark, path: str, probes: DataFrame, id_col: str, n_clusters: int
+):
     """The persisted IVF/IVF-PQ readers' shared step: pin the probes,
     collect their distinct clusters, read only those partitions minus
     the tombstones. Returns (pinned probes, rows).
@@ -1618,10 +1620,17 @@ def _read_probed(spark, path: str, probes: DataFrame, id_col: str):
     The pin (localCheckpoint, not persist: the CacheManager stays
     empty, the ContextCleaner frees the blocks with the frame) keeps
     the probes lineage from executing twice — for the cluster list
-    and in the final join. The collect is bounded by n_clusters, NOT
-    n_queries x nprobe."""
+    and in the final join. The collect is bounded by the index's
+    ``n_clusters`` centroids, NOT n_queries x nprobe: it takes at most
+    one row more, and more clusters than centroids raise."""
     probes = probes.localCheckpoint(eager=True)
-    cluster_rows = probes.select("ivf_cluster").distinct().collect()
+    cluster_rows = (
+        probes.select("ivf_cluster").distinct().limit(n_clusters + 1).collect()
+    )
+    if len(cluster_rows) > n_clusters:
+        raise ValueError(
+            f"probes name more clusters than the index's {n_clusters} centroids"
+        )
     clusters = sorted(r["ivf_cluster"] for r in cluster_rows)
     rows = _minus_tombstones(
         spark, path, read_ivf_probes(spark, path, clusters), id_col
@@ -1649,7 +1658,7 @@ def ivf_topk_persisted(
     probes, corpus = _read_probed(
         spark, path,
         _ivf_probes(cent_df, queries, nprobe, query_id_col, query_vec_col),
-        id_col,
+        id_col, cent_df.count(),
     )
     return _ivf_score(
         corpus, probes, k, id_col, vec_col, query_id_col, query_vec_col,
@@ -1690,6 +1699,18 @@ def _centroids_from_df(cent_df: DataFrame) -> list:
     return [r["centroid"] for r in rows]
 
 
+def frozen_quantizers(spark, path: str, family: str) -> dict:
+    """The family's frozen quantizers collected to the driver, keyed by
+    side table: the centroid matrix (ivf, ivfpq) and the codebook list
+    (pq, ivfpq); sq8 has none. An ingest batch reads them once and
+    hands them to both its append and its drift metric."""
+    collect = {CENTROIDS: _centroids_from_df, CODEBOOK: _codebooks_from_df}
+    return {
+        name: collect[name](spark.read.parquet(index_dir(path, name)))
+        for name in index_layout(family).side_tables
+    }
+
+
 def append_to_sq8_index(
     spark,
     path: str,
@@ -1697,6 +1718,7 @@ def append_to_sq8_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     codes_col: str = "sq8_codes",
+    quantizers: dict | None = None,
 ) -> None:
     """Incremental ingest into a persisted SQ8 index. SQ8 quantization
     is PER-ROW (each vector scaled by its own max-abs), so unlike the
@@ -1704,7 +1726,8 @@ def append_to_sq8_index(
     a row gets are identical whether it was in the original build or
     any later batch, and grown == rebuilt holds bit-for-bit. Not
     idempotent (parquet append); see ``append_to_ivf_index``. Takes
-    ``spark`` only for the appenders' shared signature."""
+    ``spark`` and ``quantizers`` only for the appenders' shared
+    signature."""
     _LAYOUTS["sq8"].write_rows(
         sq8_encode(new_vectors, id_col, vec_col, codes_col), path, "append",
         id_col, codes_col,
@@ -1718,13 +1741,15 @@ def append_to_pq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     codes_col: str = "pq_codes",
+    quantizers: dict | None = None,
 ) -> None:
     """Incremental ingest into a persisted PQ index: encode the new
-    vectors against the index's FROZEN codebook (read back off disk,
-    one Arrow/BLAS argmin pass per subspace) and append the code rows.
+    vectors against the index's FROZEN codebook (read back off disk
+    unless ``quantizers`` — ``frozen_quantizers`` — carries it; one
+    Arrow/BLAS argmin pass per subspace) and append the code rows.
     The codebook is never retrained — the FAISS add() contract. Not
     idempotent (parquet append); see ``append_to_ivf_index``."""
-    books = _codebooks_from_df(spark.read.parquet(index_dir(path, CODEBOOK)))
+    books = (quantizers or frozen_quantizers(spark, path, "pq"))[CODEBOOK]
     enc = pq_encode_pandas(
         new_vectors, books, vec_col=vec_col, out_col=codes_col
     )
@@ -1738,13 +1763,15 @@ def append_to_ivfpq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     codes_col: str = "pq_codes",
+    quantizers: dict | None = None,
 ) -> None:
     """Incremental ingest into the persisted IVF-PQ layout: assign
     each new vector to its frozen coarse centroid, product-quantize
     the RESIDUAL against the frozen codebook (the same
     assign -> subtract -> encode pipeline ``ivfpq_index`` runs, with
-    both quantizers read back instead of trained), and append into
-    the cluster-partitioned codes directories. NULL vectors carry no
+    both quantizers read back — or taken from ``quantizers`` — instead
+    of trained), and append into the cluster-partitioned codes
+    directories. NULL vectors carry no
     similarity evidence and are dropped exactly as the initial build
     drops them (NULL cluster filter — the former inner centroid
     join's effect). Not idempotent (parquet append); see
@@ -1754,11 +1781,11 @@ def append_to_ivfpq_index(
     pass with zero exchanges — the residual is subtracted inside the
     encode UDF (``pq_encode_pandas(centroids=...)``), not via a
     per-row zip_with fold + broadcast join (the r9 judge note)."""
-    cent = _centroids_from_df(spark.read.parquet(index_dir(path, CENTROIDS)))
+    frozen = quantizers or frozen_quantizers(spark, path, "ivfpq")
+    cent, books = frozen[CENTROIDS], frozen[CODEBOOK]
     assigned = new_vectors.withColumn(
         "ivf_cluster", _argmin_centroid_udf(cent)(F.col(vec_col))
     ).filter(F.col("ivf_cluster").isNotNull())
-    books = _codebooks_from_df(spark.read.parquet(index_dir(path, CODEBOOK)))
     enc = pq_encode_pandas(
         assigned, books, vec_col=vec_col, out_col=codes_col,
         centroids=cent,
@@ -1767,7 +1794,8 @@ def append_to_ivfpq_index(
 
 
 def append_to_ivf_index(
-    spark, path: str, new_vectors: DataFrame, vec_col: str = "embedding"
+    spark, path: str, new_vectors: DataFrame, vec_col: str = "embedding",
+    quantizers: dict | None = None,
 ) -> None:
     """Incremental ingest into a persisted IVF index: assign the new
     vectors against the index's FROZEN centroids (one Arrow/BLAS
@@ -1789,9 +1817,10 @@ def append_to_ivf_index(
     Assignment uses positional argmin over the centroid matrix, so
     the index's cluster ids must be the contiguous 0..n-1 range that
     ``ivf_index`` writes — asserted (``_centroids_from_df``) rather
-    than assumed.
+    than assumed. ``quantizers`` (``frozen_quantizers``) saves the
+    centroid read when the caller already holds them.
     """
-    cent = _centroids_from_df(spark.read.parquet(index_dir(path, CENTROIDS)))
+    cent = (quantizers or frozen_quantizers(spark, path, "ivf"))[CENTROIDS]
     assigned = new_vectors.withColumn(
         "ivf_cluster", _argmin_centroid_udf(cent)(F.col(vec_col))
     )

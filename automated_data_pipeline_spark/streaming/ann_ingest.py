@@ -141,15 +141,19 @@ def start_incremental_ann_ingest(
         if maybe_replay and key in applied_batch_key_set(index_path):
             return
         if not (maybe_replay and batch_landed(spark, corpus_dir, key)):
+            # one read of the frozen side tables feeds both passes
+            frozen = similarity.frozen_quantizers(spark, index_path, family)
             layout.append(
                 spark,
                 index_path,
                 batch_df.withColumn("batch_key", F.lit(key)),
                 vec_col=vec_col,
+                quantizers=frozen,
             )
             if track_drift:
                 record_drift(
-                    spark, index_path, batch_df, key, vec_col, family=family
+                    spark, index_path, batch_df, key, vec_col, family=family,
+                    quantizers=frozen,
                 )
         # AFTER the corpus append: a crash in between leaves the stamp
         # probe to detect the landed rows, and the replay records the
@@ -266,25 +270,19 @@ def _sq8_recon_udf():
     return _f
 
 
-def _drift_metric(spark: SparkSession, index_path: str, family: str):
+def _drift_metric(quantizers: dict):
     """The per-family drift metric column builder, keyed on the
-    family's frozen quantizer: squared assignment distance to the
-    coarse centroid when it has one (ivf/ivfpq), codebook
-    reconstruction error when only a codebook (pq), relative int8
-    round-trip error otherwise (sq8). All land in one 'd2' column so
-    ``drift_report`` and ``rebuild_if_drifted`` stay family-agnostic."""
-    side = similarity.index_layout(family).side_tables
-
-    def table(name):
-        return spark.read.parquet(similarity.index_dir(index_path, name))
-
-    if similarity.CENTROIDS in side:
-        cent = similarity._centroids_from_df(table(similarity.CENTROIDS))
-        ad = _assign_dist_udf(cent)
+    family's frozen quantizers (``similarity.frozen_quantizers``):
+    squared assignment distance to the coarse centroid when it has one
+    (ivf/ivfpq), codebook reconstruction error when only a codebook
+    (pq), relative int8 round-trip error otherwise (sq8). All land in
+    one 'd2' column so ``drift_report`` and ``rebuild_if_drifted`` stay
+    family-agnostic."""
+    if similarity.CENTROIDS in quantizers:
+        ad = _assign_dist_udf(quantizers[similarity.CENTROIDS])
         return lambda col: ad(col)["d2"]
-    if similarity.CODEBOOK in side:
-        books = similarity._codebooks_from_df(table(similarity.CODEBOOK))
-        return _pq_recon_udf(books)
+    if similarity.CODEBOOK in quantizers:
+        return _pq_recon_udf(quantizers[similarity.CODEBOOK])
     return _sq8_recon_udf()
 
 
@@ -295,6 +293,7 @@ def record_drift(
     batch_key: str,
     vec_col: str = "embedding",
     family: str = "ivf",
+    quantizers: dict | None = None,
 ) -> None:
     """Append one drift row for a vector batch: (batch_key, n,
     mean_d2, p50_d2, p90_d2) of the family's drift metric — squared
@@ -306,8 +305,11 @@ def record_drift(
     retrain signal (record the build corpus under batch_key='build'
     to set the baseline). One narrow Arrow pass + one small agg per
     batch; replayed keys are absorbed at read time (identical
-    content, first-key-wins in ``drift_report``)."""
-    metric = _drift_metric(spark, index_path, family)
+    content, first-key-wins in ``drift_report``). ``quantizers`` saves
+    reading the side tables when the caller already holds them."""
+    metric = _drift_metric(
+        quantizers or similarity.frozen_quantizers(spark, index_path, family)
+    )
     stats = (
         vectors.select(
             metric(F.col(vec_col).cast("array<double>")).alias("d2")

@@ -526,3 +526,27 @@ def test_fully_purged_batch_never_resurrects_on_replay(spark, emb, tmp_path):
     corpus = spark.read.parquet(f"{path}/corpus")
     assert corpus.count() == n_base
     assert corpus.filter(F.col("vec_id").isin(dead)).count() == 0
+
+
+# Spark jobs of an availableNow drain of one shard into a fresh IVF
+# index with track_drift: the stream's own jobs, the ledger and stamp
+# probes, the append, the drift row and the ledger write. The frozen
+# centroids are read and collected once per batch, for both the append
+# and the drift metric (reading them twice took 14 jobs).
+DRIFT_BATCH_JOBS = 10
+
+
+def test_track_drift_batch_job_count_is_pinned(spark, emb, tmp_path):
+    from test_fold_streams import _marker_job
+
+    path = _build(spark, emb, tmp_path)
+    src = str(tmp_path / "in")
+    _write_shards(emb, src, [emb.filter(F.col("vec_id") % 8 == 0)])
+    before = _marker_job(spark, "drift-batch-before")
+    q = start_incremental_ann_ingest(
+        spark, src, path, str(tmp_path / "ckpt"), track_drift=True
+    )
+    q.awaitTermination(120)
+    after = _marker_job(spark, "drift-batch-after")
+    assert q.exception() is None and len(q.recentProgress) == 1
+    assert after - before - 1 == DRIFT_BATCH_JOBS

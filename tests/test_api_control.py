@@ -397,3 +397,447 @@ def test_scheduler_survives_fire_failures(spark):
     clock["now"] += timedelta(days=1)
     assert set(sr.run_due()) == {"good"}  # bad errors again, good fires
     assert fired.count("bad") == 2 and fired.count("good") == 2
+
+
+# ---- snapshot compaction of the control tables ------------------------
+# Each case compares a compacting store with an uncompacted copy of the
+# same event files: every table's events (in file-name order) and both
+# latest-wins views must be identical.
+
+NO_COMPACTION = 10**9
+
+
+def _write_run(store, rid, pipeline="P"):
+    """The control calls of one successful PipelineRunner.run, with a
+    mid-step progress row per step (24 events)."""
+    store.start_run(pipeline_name=pipeline, run_id=rid)
+    store.log(rid, "Info", "Pipeline started", pipeline_name=pipeline)
+    for i in range(1, 5):
+        store.update_step(rid, i, status="Running", started_at=utcnow(),
+                          rows_processed=3, rows_total=9)
+        store.log(rid, "Info", f"Step started: {i}", pipeline_name=pipeline,
+                  step_number=i)
+        store.update_step(rid, i, status="Success", finished_at=utcnow(),
+                          rows_affected=9, rows_processed=9, rows_total=9)
+        store.log(rid, "Info", f"Step finished: {i}", pipeline_name=pipeline,
+                  step_number=i)
+    store.update_run(rid, status="Success", finished_at=utcnow())
+    store.log(rid, "Info", "Pipeline finished", pipeline_name=pipeline)
+
+
+def _tables(store):
+    return (store._run_events, store._step_events, store._log_events)
+
+
+def _views(store):
+    return [t.events() for t in _tables(store)] + [
+        store._run_events.latest(), store._step_events.latest()
+    ]
+
+
+def _assert_same_views(a, b):
+    for x, y in zip(_views(a), _views(b), strict=True):
+        assert x.equals(y)
+
+
+def _listing(d):
+    import os
+
+    names = sorted(os.listdir(d))
+    return ([f for f in names if f.endswith(".parquet") and f[0] not in "._"],
+            [f for f in names if f.startswith("_snapshot-")])
+
+
+@pytest.fixture()
+def history_pair(tmp_path, monkeypatch):
+    """(reference store, store over a copy) on 3 runs of uncompacted
+    event files; ``mirror(fn)`` runs ``fn`` on the reference store and
+    copies the files it wrote into the copy."""
+    import os
+    import shutil
+
+    from automated_data_pipeline_spark import control
+    from automated_data_pipeline_spark.control import ControlStore
+
+    monkeypatch.setattr(control, "COMPACT_AT", NO_COMPACTION)
+    ref_dir, cmp_dir = str(tmp_path / "ref"), str(tmp_path / "cmp")
+    ref = ControlStore(ref_dir)
+    for k in range(3):
+        _write_run(ref, f"run-{k}", pipeline=f"P{k % 2}")
+    shutil.copytree(ref_dir, cmp_dir)
+
+    def mirror(fn):
+        dirs = [t.directory for t in _tables(ref)]
+        before = {d: set(os.listdir(d)) for d in dirs}
+        fn(ref)
+        for d in dirs:
+            for f in set(os.listdir(d)) - before[d]:
+                shutil.copy2(os.path.join(d, f), d.replace(ref_dir, cmp_dir, 1))
+
+    return ref, ControlStore(cmp_dir), mirror
+
+
+def _compact_all(store, monkeypatch, at=4):
+    from automated_data_pipeline_spark import control
+
+    monkeypatch.setattr(control, "COMPACT_AT", at)
+    try:
+        for t in _tables(store):
+            t.compact()
+    finally:
+        monkeypatch.setattr(control, "COMPACT_AT", NO_COMPACTION)
+
+
+def test_compacted_view_matches_uncompacted(history_pair, monkeypatch):
+    """A compacted table is one snapshot and no event files; warm and
+    cold stores over it read what the raw files read, and so do stores
+    after more events land on top of the snapshot."""
+    from automated_data_pipeline_spark.control import ControlStore
+
+    ref, cmp, mirror = history_pair
+    _compact_all(cmp, monkeypatch)
+    for t in _tables(cmp):
+        events, snaps = _listing(t.directory)
+        assert events == [] and len(snaps) == 1
+    _assert_same_views(ref, cmp)
+    _assert_same_views(ref, ControlStore(cmp.workdir))
+
+    mirror(lambda s: _write_run(s, "run-3"))
+    _assert_same_views(ref, cmp)
+    _compact_all(cmp, monkeypatch)
+    _assert_same_views(ref, ControlStore(cmp.workdir))
+    assert all(len(_listing(t.directory)[1]) == 1 for t in _tables(cmp))
+
+
+def test_own_appends_compact_every_compact_at_events(tmp_path):
+    """Writing the default way compacts on its own: after 2 runs the
+    step table (24 events) is one snapshot plus 8 files, and a cold
+    store reads all 24 events, the mid-step progress rows included."""
+    from automated_data_pipeline_spark import control
+    from automated_data_pipeline_spark.control import ControlStore
+
+    assert control.COMPACT_AT == 16
+    store = ControlStore(str(tmp_path))
+    for k in range(2):
+        _write_run(store, f"r{k}")
+    events, snaps = _listing(store.steps_dir)
+    assert len(events) == 8 and len(snaps) == 1
+    cold = ControlStore(str(tmp_path))
+    steps = cold._step_events.events()
+    assert steps.num_rows == 24
+    assert sum(s == "Running" for s in steps["status"].to_pylist()) == 8
+    _assert_same_views(store, cold)
+
+
+def test_torn_snapshot_temp_is_ignored_and_removed(history_pair, monkeypatch):
+    """A compactor that fails writing its snapshot leaves a torn
+    '.tmp-' file: no reader sees it, the claim is released, and the
+    next compaction removes the temp file."""
+    import os
+
+    from automated_data_pipeline_spark import control
+    from automated_data_pipeline_spark.control import ControlStore
+
+    ref, cmp, _ = history_pair
+    runs = cmp._run_events  # the first table compacted
+
+    def torn(path, table):
+        with open(path, "wb") as f:
+            f.write(b"ARROW1 torn")
+        raise OSError("disk full")
+
+    real_write = control._write_snapshot
+    monkeypatch.setattr(control, "_write_snapshot", torn)
+    with pytest.raises(OSError, match="disk full"):
+        _compact_all(cmp, monkeypatch)
+    monkeypatch.setattr(control, "_write_snapshot", real_write)
+    leftovers = [f for f in os.listdir(runs.directory) if f.startswith(".tmp-")]
+    assert len(leftovers) == 1
+    assert not os.path.exists(os.path.join(runs.directory, "_compact"))
+    _assert_same_views(ref, cmp)
+    _assert_same_views(ref, ControlStore(cmp.workdir))
+
+    _compact_all(cmp, monkeypatch)
+    assert not [f for f in os.listdir(runs.directory) if f.startswith(".tmp-")]
+    _assert_same_views(ref, ControlStore(cmp.workdir))
+
+
+def test_failed_compaction_in_append_is_a_warning(tmp_path, monkeypatch, caplog):
+    """A compaction that fails inside append (here: the snapshot write)
+    does not fail the append: its event is already in place."""
+    from automated_data_pipeline_spark import control
+    from automated_data_pipeline_spark.control import ControlStore
+
+    def full(path, table):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(control, "_write_snapshot", full)
+    store = ControlStore(str(tmp_path))
+    with caplog.at_level("WARNING", logger="automated_data_pipeline_spark.control"):
+        for i in range(control.COMPACT_AT):
+            store.log("r", "Info", f"m{i}")
+    assert "compaction of" in caplog.text and "disk full" in caplog.text
+    assert ControlStore(str(tmp_path)).logs_table().num_rows == control.COMPACT_AT
+
+
+class _Crash(Exception):
+    pass
+
+
+@pytest.mark.parametrize("deleted_before_crash", [0, 5])
+def test_crash_during_snapshot_cleanup(history_pair, monkeypatch,
+                                       deleted_before_crash):
+    """A crash after the snapshot's os.replace, before or partway
+    through deleting what it covers: the covered files still listed are
+    not counted twice, the older snapshot is ignored, and the next
+    compaction carries the leftovers forward and deletes them."""
+    import os
+
+    from automated_data_pipeline_spark import control
+    from automated_data_pipeline_spark.control import ControlStore
+
+    ref, cmp, mirror = history_pair
+    _compact_all(cmp, monkeypatch)  # a first snapshot to supersede
+    mirror(lambda s: _write_run(s, "run-3"))
+    real_remove, removed = control._remove, []
+
+    def crashing_remove(path):
+        if os.path.basename(path) != "_compact":
+            if len(removed) == deleted_before_crash:
+                raise _Crash(path)
+            removed.append(path)
+        real_remove(path)
+
+    monkeypatch.setattr(control, "_remove", crashing_remove)
+    with pytest.raises(_Crash):
+        _compact_all(cmp, monkeypatch)
+    monkeypatch.setattr(control, "_remove", real_remove)
+    steps_dir = cmp._step_events.directory
+    events, snaps = _listing(steps_dir)
+    # the older snapshot goes first, then the covered files
+    assert len(snaps) == (1 if deleted_before_crash else 2)
+    assert len(events) == 12 - max(0, deleted_before_crash - 1)
+    _assert_same_views(ref, cmp)
+    _assert_same_views(ref, ControlStore(cmp.workdir))
+
+    mirror(lambda s: _write_run(s, "run-4"))
+    _assert_same_views(ref, ControlStore(cmp.workdir))
+    _compact_all(cmp, monkeypatch)
+    events, newest = _listing(steps_dir)
+    assert events == [] and len(newest) == 1 and newest[0] > snaps[-1]
+    _assert_same_views(ref, ControlStore(cmp.workdir))
+
+
+def test_late_append_inside_covered_range_stays_in_view(history_pair,
+                                                        monkeypatch):
+    """A writer names its file before its os.replace, so an event can
+    land after the compactor's listing with a name inside the covered
+    range. It is not covered: it stays on disk and in the view, in
+    file-name order, where it wins an equal-event_seq tie against a
+    later-named covered event."""
+    import os
+
+    import pyarrow.compute as pc
+
+    from automated_data_pipeline_spark import control
+    from automated_data_pipeline_spark.control import ControlStore
+
+    ref, cmp, mirror = history_pair
+    runs_dir = cmp._run_events.directory
+    first, *_ = _listing(runs_dir)[0]
+    winner = ref._run_events.latest_row({"run_id": "run-0"})
+    seq = ref._run_events.events().filter(
+        pc.equal(ref._run_events.events()["run_id"], "run-0")
+    )["event_seq"]
+    late = first.replace(".parquet", "z.parquet")  # sorts right after
+    row = dict(winner, status="LateTie", event_seq=pc.max(seq).as_py())
+    real_write = control._write_snapshot
+
+    def land_late(path, table):
+        real_write(path, table)
+        for d in (ref._run_events.directory, runs_dir):
+            _event_file(d, late, **row)
+
+    monkeypatch.setattr(control, "_write_snapshot", land_late)
+    _compact_all(cmp, monkeypatch)
+    monkeypatch.setattr(control, "_write_snapshot", real_write)
+    assert _listing(runs_dir)[0] == [late]
+    assert os.path.exists(os.path.join(runs_dir, late))
+    # it ties run-0's final event and is named earlier, so it wins
+    assert ref.latest_run_state("run-0")["status"] == "LateTie"
+    _assert_same_views(ref, cmp)
+    _assert_same_views(ref, ControlStore(cmp.workdir))
+    # the next snapshot absorbs it (one needs a newer last name)
+    mirror(lambda s: s.update_run("run-1", status="Again"))
+    _compact_all(cmp, monkeypatch, at=2)
+    assert _listing(runs_dir)[0] == []
+    _assert_same_views(ref, ControlStore(cmp.workdir))
+
+
+def test_reader_lists_again_when_a_listed_file_vanishes(history_pair,
+                                                        monkeypatch):
+    """A reader lists event files, then a compactor deletes them before
+    the reader decodes them: the reader lists again instead of
+    failing, and reads the compactor's snapshot."""
+    from automated_data_pipeline_spark import control
+    from automated_data_pipeline_spark.control import ControlStore
+
+    ref, cmp, mirror = history_pair
+    reader = ControlStore(cmp.workdir)
+    _views(reader)  # warm
+    mirror(lambda s: _write_run(s, "run-3"))
+    compactor = ControlStore(cmp.workdir)
+    real_decode, fired = control._decode, []
+
+    def compact_first(path):
+        if not fired and path.endswith(".parquet"):
+            fired.append(path)
+            _compact_all(compactor, monkeypatch)
+        return real_decode(path)
+
+    monkeypatch.setattr(control, "_decode", compact_first)
+    _assert_same_views(ref, reader)
+    assert fired and reader._run_events._snap_name is not None
+
+
+def test_two_stores_compact_one_table_at_once(tmp_path, monkeypatch):
+    """Stores on one directory append and compact from many threads at
+    once; the claim lets one compactor in at a time, so no event is
+    lost or counted twice. A claim another store holds makes a
+    compaction skip, not wait."""
+    import os
+    import sys
+    import threading
+
+    from automated_data_pipeline_spark import control
+    from automated_data_pipeline_spark.control import ControlStore
+
+    monkeypatch.setattr(control, "COMPACT_AT", 4)
+    workdir, n_threads, n_logs = str(tmp_path), 6, 40
+    errors = []
+
+    def worker(k):
+        store = ControlStore(workdir)
+        try:
+            for i in range(n_logs):
+                store.log(f"r{k}", "Info", f"{k}:{i}")
+                store._log_events.events()
+        except Exception as e:  # noqa: BLE001 — asserted below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(k,)) for k in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and errors == []
+    logs = ControlStore(workdir).logs_table()["message"].to_pylist()
+    assert sorted(logs) == sorted(f"{k}:{i}" for k in range(n_threads) for i in range(n_logs))
+    d = os.path.join(workdir, "control", "pipeline_logs")
+    assert len(_listing(d)[1]) == 1 and not os.path.exists(os.path.join(d, "_compact"))
+
+    # a held claim: the other store's compaction is skipped
+    store = ControlStore(workdir)
+    open(os.path.join(d, "_compact"), "w").close()
+    for i in range(8):
+        store.log("held", "Info", f"held:{i}")
+    assert len(_listing(d)[0]) >= 8
+    assert ControlStore(workdir).logs_table().num_rows == n_threads * n_logs + 8
+
+
+def test_stale_compactor_claim_is_broken(history_pair, monkeypatch):
+    """A claim a dead compactor left behind blocks compaction for
+    STALE_CLAIM_S only; then the next compactor breaks it."""
+    import os
+    import time
+
+    from automated_data_pipeline_spark import control
+
+    ref, cmp, _ = history_pair
+    claim = os.path.join(cmp.steps_dir, "_compact")
+    with open(claim, "w") as f:
+        f.write("dead compactor")
+    _compact_all(cmp, monkeypatch)
+    assert _listing(cmp.steps_dir)[1] == []  # fresh claim: skipped
+    old = time.time() - control.STALE_CLAIM_S - 1
+    os.utime(claim, (old, old))
+    _compact_all(cmp, monkeypatch)
+    assert len(_listing(cmp.steps_dir)[1]) == 1
+    assert not os.path.exists(claim)
+    _assert_same_views(ref, cmp)
+
+
+def test_refresh_after_one_event_decodes_one_file(tmp_path, monkeypatch):
+    """At 300 runs each table is one snapshot plus fewer than
+    COMPACT_AT event files; a cold store decodes just those, and a
+    refresh after one new event decodes exactly that one file."""
+    from automated_data_pipeline_spark import control
+    from automated_data_pipeline_spark.control import ControlStore
+
+    writer = ControlStore(str(tmp_path))
+    for k in range(300):
+        _write_run(writer, f"run-{k:03d}", pipeline=f"P{k % 3}")
+    for t in _tables(writer):
+        events, snaps = _listing(t.directory)
+        assert len(snaps) == 1 and len(events) < control.COMPACT_AT
+
+    real_decode, decoded = control._decode, []
+
+    def counting(path):
+        decoded.append(path)
+        return real_decode(path)
+
+    monkeypatch.setattr(control, "_decode", counting)
+    reader = ControlStore(str(tmp_path))
+    assert reader.runs_table().num_rows == 300
+    assert reader.steps_table().num_rows == 1200
+    assert reader.logs_table().num_rows == 3000
+    assert len(decoded) == sum(
+        1 + len(_listing(t.directory)[0]) for t in _tables(reader)
+    )
+    for table in ("runs_table", "steps_table", "logs_table"):
+        decoded.clear()
+        getattr(reader, table)()
+        assert decoded == []  # unchanged listing: nothing decoded
+    writer.log("run-000", "Info", "one more")
+    decoded.clear()
+    assert reader.logs_table().num_rows == 3001
+    assert len(decoded) == 1 and decoded[0].endswith(".parquet")
+
+
+def test_event_row_build_matches_per_column_arrays():
+    """append builds its row with one from_pylist; it equals the table
+    the per-column pa.array build gave, nulls and tz-aware timestamps
+    (converted to UTC) included."""
+    from datetime import datetime, timedelta, timezone
+
+    import pyarrow as pa
+
+    from automated_data_pipeline_spark.control import _STEP_FIELDS
+
+    schema = pa.schema(_STEP_FIELDS)
+    st_johns = timezone(timedelta(hours=-3, minutes=-30))
+    row = {
+        "run_id": "r", "step_number": 2, "step_name": "Extract",
+        "started_at": datetime(2024, 3, 10, 1, 2, 3, 456789, tzinfo=st_johns),
+        "finished_at": None, "status": "Running", "rows_affected": None,
+        "rows_processed": 5, "rows_total": None, "error_message": None,
+        "created_at": datetime(2024, 3, 10, 4, 0, tzinfo=timezone.utc),
+        "updated_at": datetime.now(timezone.utc), "event_seq": 7,
+    }
+    per_column = pa.Table.from_arrays(
+        [pa.array([row.get(f.name)], type=f.type) for f in schema], schema=schema
+    )
+    assert pa.Table.from_pylist([row], schema=schema).equals(per_column)
+    partial = {"run_id": "r", "step_number": 1}
+    assert pa.Table.from_pylist([partial], schema=schema).equals(
+        pa.Table.from_arrays(
+            [pa.array([partial.get(f.name)], type=f.type) for f in schema],
+            schema=schema,
+        )
+    )

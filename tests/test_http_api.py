@@ -167,6 +167,78 @@ def test_get_endpoints_match_dataframe_twins(spark, served, workdir):
     assert _get(srv.port, "/bogus")[0] == 404
 
 
+def _raw_get(port, path):
+    try:
+        with urllib.request.urlopen(f"http://127.0.0.1:{port}{path}") as r:
+            return r.status, r.read()
+    except urllib.error.HTTPError as e:
+        return e.code, e.read()
+
+
+def _tied_store(workdir):
+    """Finished runs, a live run, and two run events with one
+    event_seq: the earlier-named one must win."""
+    store = ControlStore(workdir)
+    for k, pipeline in enumerate(["Alpha", "Beta", "Alpha"]):
+        rid = f"run-{k}"
+        store.start_run(pipeline_name=pipeline, run_id=rid)
+        store.log(rid, "Info", "started", pipeline_name=pipeline)
+        for i in range(1, 5):
+            store.update_step(rid, i, status="Running", started_at=utcnow())
+            store.log(rid, "Info", f"step {i}", pipeline_name=pipeline,
+                      step_number=i)
+            store.update_step(rid, i, status="Success", finished_at=utcnow(),
+                              rows_affected=10 * k + i)
+        store.update_run(rid, status="Success", finished_at=utcnow())
+    store.start_run(pipeline_name="Beta", run_id="live-run")
+    tie = dict(store._run_events.latest_row({"run_id": "run-1"}),
+               event_seq=time.time_ns(), updated_at=utcnow())
+    store._run_events.append(dict(tie, status="TieFirst"))
+    store._run_events.append(dict(tie, status="TieSecond"))
+    return store
+
+
+def test_get_endpoints_byte_identical_with_compaction(spark, tmp_path, monkeypatch):
+    """The 4 JSON endpoints and the 3 HTML pages answer the same bytes
+    from compacted tables as from the raw event files they replace, on
+    a store with an equal-event_seq tie and on one whose run numbers
+    are synthesized."""
+    import shutil
+
+    from automated_data_pipeline_spark import control
+
+    for build in (_tied_store, _unnumbered_store):
+        monkeypatch.setattr(control, "COMPACT_AT", 10**9)
+        raw_dir = str(tmp_path / build.__name__)
+        build(raw_dir)
+        snap_dir = raw_dir + "-compacted"
+        shutil.copytree(raw_dir, snap_dir)
+        compacted = ControlStore(snap_dir)
+        monkeypatch.setattr(control, "COMPACT_AT", 2)
+        for t in (compacted._run_events, compacted._step_events, compacted._log_events):
+            t.compact()
+            assert [f for f in os.listdir(t.directory) if f.endswith(".parquet")] == []
+        raw = PipelineApiServer(spark, ControlStore(raw_dir)).start()
+        snap = PipelineApiServer(spark, ControlStore(snap_dir)).start()
+        try:
+            run_ids = [r["run_id"] for r in _get(raw.port, "/runs")[1]]
+            assert len(run_ids) >= 3
+            paths = ["/runs", "/runs?pipeline=Alpha", "/logs", "/logs?limit=3",
+                     "/", "/ui/logs", "/ui/logs?level=Info&limit=5"]
+            for rid in run_ids:
+                paths += [f"/runs/{rid}", f"/runs/{rid}/logs",
+                          f"/logs?runId={rid}&limit=3", f"/ui/runs/{rid}"]
+            for path in paths:
+                want = _raw_get(raw.port, path)
+                assert want[0] == 200, path
+                assert _raw_get(snap.port, path) == want, (build.__name__, path)
+            if build is _tied_store:
+                assert _get(snap.port, "/runs/run-1")[1]["status"] == "TieFirst"
+        finally:
+            raw.stop()
+            snap.stop()
+
+
 def test_gui_requests_job_budget_and_local_views(spark, served):
     """GUI requests are answered from the control store's Arrow tables
     on the driver: zero Spark jobs per request, so a Spark job sneaking

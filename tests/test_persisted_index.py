@@ -228,6 +228,30 @@ def test_ivf_append_rejects_noncontiguous_cluster_ids(spark, tmp_path):
         similarity.append_to_ivf_index(spark, path, df)
 
 
+def test_read_probed_rejects_more_clusters_than_centroids(spark, tmp_path):
+    # the cluster collect is bounded by the index's centroid count; a
+    # probe frame naming more clusters fails instead of collecting them
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "vec_id int, embedding array<double>"
+    )
+    cent_df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+        "ivf_cluster int, centroid array<double>",
+    )
+    path = str(tmp_path / "ivf_wide")
+    similarity.write_ivf_index(df.withColumn("ivf_cluster", F.col("vec_id")), cent_df, path)
+    wide = spark.createDataFrame(
+        [(q, [1.0, 0.0], c) for q in range(2) for c in range(3)],
+        "qid int, qe array<double>, ivf_cluster int",
+    )
+    with pytest.raises(ValueError, match="more clusters than the index's 2"):
+        similarity._read_probed(spark, path, wide, "vec_id", 2)
+    _, rows = similarity._read_probed(
+        spark, path, wide.filter(F.col("ivf_cluster") < 2), "vec_id", 2
+    )
+    assert sorted(r["vec_id"] for r in rows.collect()) == [0, 1]
+
+
 def test_sq8_append_grown_equals_rebuilt(spark, emb, queries3, tmp_path):
     # SQ8 quantization is per-row (own max-abs scale), so a grown
     # index is BIT-IDENTICAL to one rebuilt over the union — the

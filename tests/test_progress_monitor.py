@@ -5,13 +5,11 @@ mid-step visibility the reference gets from StepProgress.java:25-48
 
 from __future__ import annotations
 
-import glob
-import os
 import time
 
-import pyarrow.parquet as pq
 import pytest
 
+from automated_data_pipeline_spark.control import ControlStore
 from automated_data_pipeline_spark.progress_monitor import StepProgressMonitor
 from automated_data_pipeline_spark.runner import PipelineRunner
 from automated_data_pipeline_spark.sources.generators import generate_orders
@@ -99,7 +97,7 @@ def test_monitor_inert_without_rows_total(spark):
 
 def test_runner_writes_intra_stage_progress_rows(spark, workdir, monkeypatch):
     """End-to-end: a slowed Extract step must leave at least one
-    versioned step row on disk with 0 < rows_processed < rows_total
+    versioned step row in the store with 0 < rows_processed < rows_total
     (the control store appends every update, so mid-stage history
     survives the step's final exact write)."""
     from automated_data_pipeline_spark.operators import stages
@@ -113,8 +111,9 @@ def test_runner_writes_intra_stage_progress_rows(spark, workdir, monkeypatch):
     runner = PipelineRunner(spark, workdir, progress_interval=0.08)
     rid = runner.run(source_df=generate_orders(spark, 2000), source_type="Synthetic")
 
-    files = glob.glob(os.path.join(runner.control.steps_dir, "*.parquet"))
-    hist = pq.ParquetDataset(files).read().to_pylist()
+    # every step event, read back cold: compaction moves event files
+    # into the table's snapshot, which keeps every row
+    hist = ControlStore(workdir)._step_events.events().to_pylist()
     mid = [
         r
         for r in hist
