@@ -425,6 +425,9 @@ class ControlStore:
         on_disk = pc.max(self._run_events.events()["run_number"]).as_py()
         return max(mx, on_disk or 0) + 1
 
+    def _claim_path(self, n: int) -> str:
+        return os.path.join(self.runs_dir, f"_claim_run_{n:09d}")
+
     def _claim_run_number(self) -> int:
         """Allocate a fresh run number exclusively ACROSS processes: the
         in-memory lock makes next_run_number atomic within one store,
@@ -433,15 +436,29 @@ class ControlStore:
         O_EXCL claim file per number arbitrates — the loser advances
         to the next free number (same discipline as TargetTable's
         version claims; the event listing skips the underscore-prefixed
-        markers)."""
+        markers).
+
+        The winner removes its marker once its Running row is listed
+        (``_start_run_locked``), so markers do not pile up. That opens
+        one window: a store that read MAX before the row landed can
+        claim the same number after the marker is gone. Hence the
+        re-read after every claim: the row is listed before its marker
+        goes, so a claim at or below the listed MAX is dropped and the
+        next number tried."""
         n = self.next_run_number()
         while True:
-            claim = os.path.join(self.runs_dir, f"_claim_run_{n:09d}")
             try:
-                os.close(os.open(claim, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-                return n
+                os.close(
+                    os.open(self._claim_path(n), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+                )
             except FileExistsError:
                 n += 1
+                continue
+            on_disk = pc.max(self._run_events.events()["run_number"]).as_py() or 0
+            if on_disk < n:
+                return n
+            os.remove(self._claim_path(n))
+            n = on_disk + 1
 
     def start_run(
         self,
@@ -466,10 +483,9 @@ class ControlStore:
         existing = self._runs.get(run_id) or self._run_events.latest_row(
             {"run_id": run_id}
         )
+        claimed = not (existing and existing.get("run_number") is not None)
         run_number = (
-            existing["run_number"]
-            if existing and existing.get("run_number") is not None
-            else self._claim_run_number()
+            self._claim_run_number() if claimed else existing["run_number"]
         )
         created_at = (
             existing["created_at"]
@@ -487,6 +503,8 @@ class ControlStore:
             "created_at": created_at,
         }
         self._write_run(row)
+        if claimed:  # the row is listed now: it holds the number
+            os.remove(self._claim_path(run_number))
         for i, name in enumerate(STEP_NAMES, start=1):
             self._write_step(
                 {

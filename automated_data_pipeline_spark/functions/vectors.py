@@ -15,6 +15,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+DIGITS = 6  # every cosine here is rounded to 6 digits
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -53,15 +55,15 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_rounded(a: Column, b: Column, digits: int = 6) -> Column:
+def cosine_rounded(a: Column, b: Column) -> Column:
     """Alias of ``cosine_rounded_safe`` — kept for callers of the old
     name; the unguarded form it used to be is exactly the ANSI
     divide-by-zero footgun the safe variant exists to remove, so the
     short name must not hand it back."""
-    return cosine_rounded_safe(a, b, digits)
+    return cosine_rounded_safe(a, b)
 
 
-def cosine_rounded_safe(a: Column, b: Column, digits: int = 6) -> Column:
+def cosine_rounded_safe(a: Column, b: Column) -> Column:
     """Like cosine_rounded, but a zero-norm side yields 0.0 instead of
     a divide-by-zero (Spark 4 ANSI mode RAISES on x/0 — a single
     all-zero embedding would kill a whole corpus-scale job otherwise).
@@ -69,13 +71,11 @@ def cosine_rounded_safe(a: Column, b: Column, digits: int = 6) -> Column:
     gates on degenerate vectors."""
     denom = norm(a) * norm(b)
     return F.when(denom == 0, F.lit(0.0)).otherwise(
-        F.round(dot(a, b) / denom, digits)
+        F.round(dot(a, b) / denom, DIGITS)
     )
 
 
-def cosine_hoisted(
-    a: Column, b: Column, norm_a: Column, norm_b: Column, digits: int = 6
-) -> Column:
+def cosine_hoisted(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
     """``cosine_rounded_safe`` with the norms supplied as pre-computed
     per-ROW columns — the hard_negative_topk doctrine generalized: the
     array folds behind ``norm()`` never enter codegen (interpreted
@@ -88,7 +88,7 @@ def cosine_hoisted(
     ``cosine_rounded_safe`` and the oracles still hash-match."""
     denom = norm_a * norm_b
     return F.when(denom == 0, F.lit(0.0)).otherwise(
-        F.round(dot(a, b) / denom, digits)
+        F.round(dot(a, b) / denom, DIGITS)
     )
 
 
@@ -133,7 +133,7 @@ def int8_quantize(a: Column) -> Column:
     )
 
 
-def cosine_pandas_udf(digits: int = 6):
+def cosine_pandas_udf():
     """Arrow-batched cosine for WIDE vectors: the expression path
     (zip_with+aggregate) evaluates per element inside codegen, fine at
     64-dim; at 1024+-dim the vectorized numpy path wins on constant
@@ -144,7 +144,7 @@ def cosine_pandas_udf(digits: int = 6):
     on either side yields NULL (np.stack over a Series containing None
     would otherwise kill the Python worker — the single-bad-row
     job-kill class the safe expression was built to prevent), a
-    zero-norm pair yields 0.0, and the result is rounded to ``digits``.
+    zero-norm pair yields 0.0, and the result is rounded to ``DIGITS``.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -159,7 +159,7 @@ def cosine_pandas_udf(digits: int = 6):
             den = np.linalg.norm(am, axis=1) * np.linalg.norm(bm, axis=1)
             vals = np.where(den == 0, 0.0,
                             num / np.where(den == 0, 1.0, den))
-            out[mask.to_numpy()] = np.round(vals, digits)
+            out[mask.to_numpy()] = np.round(vals, DIGITS)
         # NaN positions (NULL inputs) become SQL NULL through Arrow
         return pd.Series(out)
 

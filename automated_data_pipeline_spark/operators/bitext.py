@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..functions import vectors as V
 from ..functions.stats import portable_round
-from .similarity import per_query_topk
+from .similarity import DIGITS, ID, PROBE_ID, PROBE_VEC, VEC, per_query_topk
 
 
 def margin_bitext_mine(
@@ -52,11 +52,6 @@ def margin_bitext_mine(
     corpus: DataFrame,
     k: int = 4,
     out_k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "src_id",
-    probe_vec_col: str = "se",
-    digits: int = 6,
 ) -> DataFrame:
     """Mine up to ``out_k`` target candidates per probe, ranked by the
     ratio-margin over each side's ``k``-NN baseline.
@@ -67,27 +62,26 @@ def margin_bitext_mine(
     """
     from ..plans.spread import spread_if_narrow
 
-    corpus = spread_if_narrow(corpus, id_col)
+    corpus = spread_if_narrow(corpus, ID)
     # per-row norm hoist (r14; bit-identical — see V.cosine_hoisted):
     # each side's norm folds once per ROW instead of (twice) per PAIR,
     # and both quadratic passes below are pure pair stages
-    probes = probes.withColumn("_pnrm", V.norm(F.col(probe_vec_col)))
-    corpus = corpus.withColumn("_cnrm", V.norm(F.col(vec_col)))
+    probes = probes.withColumn("_pnrm", V.norm(F.col(PROBE_VEC)))
+    corpus = corpus.withColumn("_cnrm", V.norm(F.col(VEC)))
     # forward pass: the ONLY corpus-sized stage — |B| x |A| map-side
     # cosines, two-phase top-k prune
     fwd_scored = (
         corpus.crossJoin(F.broadcast(probes))
         .select(
-            F.col(probe_id_col),
-            F.col(id_col).alias("tgt_id"),
+            F.col(PROBE_ID),
+            F.col(ID).alias("tgt_id"),
             # the candidate vector rides through the top-k so the
             # backward pass never rescans B: the local phase prunes to
             # k rows per (probe, partition) BEFORE the exchange, so
             # the carried payload is k x partitions x |A| vectors
-            F.col(vec_col).alias("_tv"),
+            F.col(VEC).alias("_tv"),
             V.cosine_hoisted(
-                F.col(vec_col), F.col(probe_vec_col),
-                F.col("_cnrm"), F.col("_pnrm"), digits,
+                F.col(VEC), F.col(PROBE_VEC), F.col("_cnrm"), F.col("_pnrm")
             ).alias("cosine"),
         )
     )
@@ -97,15 +91,15 @@ def margin_bitext_mine(
     # re-execute the whole corpus pass (3 scans of B at 100 TB). The
     # one barrier on a bounded frame is the MMR/BPE discipline.
     fwd = per_query_topk(
-        fwd_scored, probe_id_col, [F.desc("cosine"), F.asc("tgt_id")], k
+        fwd_scored, PROBE_ID, [F.desc("cosine"), F.asc("tgt_id")], k
     ).localCheckpoint(eager=True)
     # each probe's neighborhood baseline: avg of its k rounded NN
     # cosines (DECIMAL sum / actual count — exact, order-independent)
-    avg_f = fwd.groupBy(probe_id_col).agg(
+    avg_f = fwd.groupBy(PROBE_ID).agg(
         portable_round(
             F.sum(F.col("cosine").cast("decimal(10,6)")).cast("double")
             / F.count(F.lit(1)),
-            digits,
+            DIGITS,
         ).alias("af")
     )
     # backward pass: candidates x probes — both bounded (<=|A|*k and
@@ -130,50 +124,49 @@ def margin_bitext_mine(
     )
     bwd_scored = cand_vecs.crossJoin(F.broadcast(probes)).select(
         "tgt_id",
-        F.col(probe_id_col),
+        F.col(PROBE_ID),
         V.cosine_hoisted(
-            F.col("_tv"), F.col(probe_vec_col),
-            F.col("_tnrm"), F.col("_pnrm"), digits,
+            F.col("_tv"), F.col(PROBE_VEC), F.col("_tnrm"), F.col("_pnrm")
         ).alias("bcos"),
     )
     bwd = per_query_topk(
-        bwd_scored, "tgt_id", [F.desc("bcos"), F.asc(probe_id_col)], k,
+        bwd_scored, "tgt_id", [F.desc("bcos"), F.asc(PROBE_ID)], k,
         rank_col="brank",
     )
     avg_b = bwd.groupBy("tgt_id").agg(
         portable_round(
             F.sum(F.col("bcos").cast("decimal(10,6)")).cast("double")
             / F.count(F.lit(1)),
-            digits,
+            DIGITS,
         ).alias("ab")
     )
     # margin over the forward shortlist only (|A| x k rows)
     scored = (
-        fwd.join(F.broadcast(avg_f), probe_id_col)
+        fwd.join(F.broadcast(avg_f), PROBE_ID)
         .join(F.broadcast(avg_b), "tgt_id")
         .select(
-            probe_id_col,
+            PROBE_ID,
             "tgt_id",
             "cosine",
             # portable half-up: a rounded RATIO crosses the oracle
             # gate (functions/stats.portable_round doctrine)
             portable_round(
                 F.col("cosine") / ((F.col("af") + F.col("ab")) / F.lit(2.0)),
-                digits,
+                DIGITS,
             ).alias("margin"),
         )
     )
     from pyspark.sql import Window
 
     # bare window is correct here: the frame is |A| x k BY CONSTRUCTION
-    w = Window.partitionBy(probe_id_col).orderBy(
+    w = Window.partitionBy(PROBE_ID).orderBy(
         F.desc("margin"), F.asc("tgt_id")
     )
     return (
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= out_k)
         .select(
-            F.col(probe_id_col),
+            F.col(PROBE_ID),
             "tgt_id",
             "cosine",
             "margin",

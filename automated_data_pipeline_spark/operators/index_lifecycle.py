@@ -71,41 +71,33 @@ from ..streaming.fold import (
     swap_in_staged,
 )
 from . import similarity
+from .similarity import ID
 from ..plans.empty import empty_local_frame
 
 
-def add_tombstones(
-    spark: SparkSession,
-    index_path: str,
-    ids,
-    id_col: str = "vec_id",
-) -> None:
+def add_tombstones(spark: SparkSession, index_path: str, ids) -> None:
     """Mark vectors deleted: append their ids to the index's tombstone
-    store. ``ids`` is a DataFrame carrying ``id_col`` or a plain
+    store. ``ids`` is a DataFrame carrying ``vec_id`` or a plain
     iterable of ids. Effective immediately for every
     ``*_topk_persisted`` query (anti-join; see
     ``similarity._minus_tombstones``); physically purged at the next
     ``compact_index`` or ``rebuild_index_generation``. Idempotent by
     merge: duplicate appends collapse under the read-time DISTINCT."""
     if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame(
-            [(int(i),) for i in ids], f"{id_col} bigint"
-        )
+        ids = spark.createDataFrame([(int(i),) for i in ids], f"{ID} bigint")
     tomb_dir = similarity.index_dir(index_path, similarity.TOMBSTONES)
     _recover_compact(tomb_dir)
-    ids.select(id_col).write.mode("append").parquet(tomb_dir)
+    ids.select(ID).write.mode("append").parquet(tomb_dir)
 
 
-def read_tombstones(
-    spark: SparkSession, index_path: str, id_col: str = "vec_id"
-) -> DataFrame:
+def read_tombstones(spark: SparkSession, index_path: str) -> DataFrame:
     """The current deletion set (distinct ids; empty frame when the
     index has none)."""
     tomb_dir = similarity.index_dir(index_path, similarity.TOMBSTONES)
     _recover_compact(tomb_dir)
     if not _has_parquet(tomb_dir):
-        return empty_local_frame(spark, f"{id_col} bigint")
-    return spark.read.parquet(tomb_dir).select(id_col).distinct()
+        return empty_local_frame(spark, f"{ID} bigint")
+    return spark.read.parquet(tomb_dir).select(ID).distinct()
 
 
 def record_applied_batch_keys(
@@ -170,7 +162,6 @@ def compact_index(
     files_per_cluster: int = 1,
     n_files: int = 8,
     purge_tombstones: bool = True,
-    id_col: str = "vec_id",
 ) -> None:
     """One compaction entry point for all four index families
     (VERDICT r9 item 5): rewrite the ingest-grown data directory into
@@ -207,9 +198,7 @@ def compact_index(
         # pin the applied set: the anti-join below evaluates lazily
         # DURING the rewrite, and the post-swap trim must subtract
         # exactly what was applied, not whatever landed since
-        tombs = read_tombstones(spark, index_path, id_col).localCheckpoint(
-            eager=True
-        )
+        tombs = read_tombstones(spark, index_path).localCheckpoint(eager=True)
         if tombs.take(1):
             # a purge can erase EVERY row of an ingest batch — fold the
             # pre-rewrite stamps into the ledger first so the streaming
@@ -220,7 +209,7 @@ def compact_index(
             record_applied_batch_keys(
                 spark, index_path, sorted(_ingest_stamps(df))
             )
-            df = df.join(F.broadcast(tombs), id_col, "left_anti")
+            df = df.join(F.broadcast(tombs), ID, "left_anti")
             applied = tombs
     if layout.partitioned:
         if files_per_cluster <= 1:
@@ -251,7 +240,7 @@ def compact_index(
         df.limit(0).coalesce(1).write.mode("overwrite").parquet(tmp)
     swap_in_staged(data_dir)
     if applied is not None:
-        _trim_tombstones(spark, index_path, applied, id_col)
+        _trim_tombstones(spark, index_path, applied)
     _consolidate_ledger(spark, index_path)
 
 
@@ -289,7 +278,7 @@ def _consolidate_ledger(spark: SparkSession, index_path: str) -> None:
 
 
 def _trim_tombstones(
-    spark: SparkSession, index_path: str, applied: DataFrame, id_col: str
+    spark: SparkSession, index_path: str, applied: DataFrame
 ) -> None:
     """After a rewrite physically removed the ``applied`` tombstone
     ids, shrink the store to the ids that were NOT applied — i.e. any
@@ -299,8 +288,8 @@ def _trim_tombstones(
     store directory is replaced, then swapped in under the standard
     two-rename discipline; empty leftover drops the store entirely."""
     leftover = (
-        read_tombstones(spark, index_path, id_col)
-        .join(applied, id_col, "left_anti")
+        read_tombstones(spark, index_path)
+        .join(applied, ID, "left_anti")
         .localCheckpoint(eager=True)
     )
     tomb_dir = similarity.index_dir(index_path, similarity.TOMBSTONES)
@@ -335,7 +324,6 @@ def start_incremental_tombstones(
     source_dir: str,
     index_path: str,
     checkpoint_dir: str,
-    id_col: str = "vec_id",
     schema: str = "vec_id bigint",
     available_now: bool = True,
 ):
@@ -349,7 +337,7 @@ def start_incremental_tombstones(
     StreamingQuery."""
 
     def fold(batch_df, *_):
-        add_tombstones(spark, index_path, batch_df, id_col)
+        add_tombstones(spark, index_path, batch_df)
 
     return start_fold_stream(
         spark, source_dir, schema, checkpoint_dir, fold, available_now
@@ -366,8 +354,6 @@ def rebuild_index_generation(
     n_clusters: int = 16,
     m: int = 8,
     n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 42,
     max_iter: int = 6,
     train_fraction: float = 1.0,
@@ -407,17 +393,15 @@ def rebuild_index_generation(
     _recover_compact(index_path)
     # pinned snapshot: the anti-join evaluates lazily during the
     # build, and the pre-swap carry must subtract exactly this set
-    tombs = read_tombstones(spark, index_path, id_col).localCheckpoint(
-        eager=True
-    )
+    tombs = read_tombstones(spark, index_path).localCheckpoint(eager=True)
     live = corpus
     if tombs.take(1):
-        live = corpus.join(F.broadcast(tombs), id_col, "left_anti")
+        live = corpus.join(F.broadcast(tombs), ID, "left_anti")
     tmp = staged_path(index_path)
 
     train = dict(
-        vec_col=vec_col, seed=seed, max_iter=max_iter,
-        train_fraction=train_fraction, train_cap=train_cap,
+        seed=seed, max_iter=max_iter, train_fraction=train_fraction,
+        train_cap=train_cap,
     )
     if family == "ivf":
         assigned, cent_df = similarity.ivf_index(live, n_clusters, **train)
@@ -426,22 +410,18 @@ def rebuild_index_generation(
         enc, cent_df, _, cb_df = similarity.ivfpq_index(
             live, dim=dim, n_clusters=n_clusters, m=m, n_codes=n_codes, **train
         )
-        ann_ingest.write_ivfpq_index_for_ingest(
-            enc, cent_df, cb_df, tmp, id_col=id_col
-        )
+        ann_ingest.write_ivfpq_index_for_ingest(enc, cent_df, cb_df, tmp)
     elif family == "pq":
         codebooks, cb_df = similarity.pq_train(
             live, dim=dim, m=m, n_codes=n_codes, **train
         )
-        enc = similarity.pq_encode_pandas(live, codebooks, vec_col=vec_col)
-        ann_ingest.write_pq_index_for_ingest(enc, cb_df, tmp, id_col=id_col)
+        enc = similarity.pq_encode_pandas(live, codebooks)
+        ann_ingest.write_pq_index_for_ingest(enc, cb_df, tmp)
     else:  # sq8
-        ann_ingest.write_sq8_index_for_ingest(
-            live, tmp, id_col=id_col, vec_col=vec_col
-        )
+        ann_ingest.write_sq8_index_for_ingest(live, tmp)
 
     if record_baseline:
-        ann_ingest.record_drift(spark, tmp, live, "build", vec_col, family)
+        ann_ingest.record_drift(spark, tmp, live, "build", family)
 
     # carry the applied-batch ledger into the new generation, folded
     # with every batch_key stamped on the OLD corpus: the rebuild
@@ -461,8 +441,8 @@ def rebuild_index_generation(
     # the pinned snapshot are already physically absent from the new
     # corpus and die with the old generation
     late = (
-        read_tombstones(spark, index_path, id_col)
-        .join(tombs, id_col, "left_anti")
+        read_tombstones(spark, index_path)
+        .join(tombs, ID, "left_anti")
         .localCheckpoint(eager=True)
     )
     if late.take(1):

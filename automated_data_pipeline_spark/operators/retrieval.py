@@ -270,11 +270,6 @@ def mmr_topk(
     k: int = 5,
     shortlist: int = 20,
     lam: float = 0.7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "qid",
-    query_vec_col: str = "qe",
-    exclude_self: bool = True,
     materialize: bool = True,
 ) -> DataFrame:
     """Maximal Marginal Relevance (Carbonell/Goldstein) diversified
@@ -309,50 +304,35 @@ def mmr_topk(
     Returns (qid, pick 1..k, id, mmr).
     """
     from ..functions import vectors as V
-    from .similarity import cosine_topk, per_query_topk
+    from .similarity import ID, QID, VEC, cosine_topk, per_query_topk
 
     om = round(1.0 - lam, 12)
-    short = cosine_topk(
-        corpus, queries, k=shortlist, id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
-        exclude_self=exclude_self,
-    ).select(query_id_col, id_col, F.col("cosine").alias("rel"))
+    short = cosine_topk(corpus, queries, k=shortlist).select(
+        QID, ID, F.col("cosine").alias("rel")
+    )
     if materialize:
         short = short.localCheckpoint(eager=True)
 
-    vecs = corpus.select(F.col(id_col), F.col(vec_col))
-    sv = vecs.join(F.broadcast(short.select(query_id_col, id_col)),
-                   id_col).select(query_id_col, id_col, vec_col)
-    a = sv.select(
-        query_id_col,
-        F.col(id_col).alias("a_id"),
-        F.col(vec_col).alias("a_vec"),
-    )
-    b = sv.select(
-        query_id_col,
-        F.col(id_col).alias("b_id"),
-        F.col(vec_col).alias("b_vec"),
-    )
+    vecs = corpus.select(F.col(ID), F.col(VEC))
+    sv = vecs.join(F.broadcast(short.select(QID, ID)), ID).select(QID, ID, VEC)
+    a = sv.select(QID, F.col(ID).alias("a_id"), F.col(VEC).alias("a_vec"))
+    b = sv.select(QID, F.col(ID).alias("b_id"), F.col(VEC).alias("b_vec"))
     psim = (
-        a.join(b, query_id_col)
+        a.join(b, QID)
         .filter(F.col("a_id") != F.col("b_id"))
         .select(
-            query_id_col, "a_id", "b_id",
-            V.cosine_rounded_safe(
-                F.col("a_vec"), F.col("b_vec")
-            ).alias("sim"),
+            QID, "a_id", "b_id",
+            V.cosine_rounded_safe(F.col("a_vec"), F.col("b_vec")).alias("sim"),
         )
     )
     if materialize:
         psim = psim.localCheckpoint(eager=True)
 
     first = (
-        per_query_topk(
-            short, query_id_col, [F.desc("rel"), F.asc(id_col)], 1
-        )
+        per_query_topk(short, QID, [F.desc("rel"), F.asc(ID)], 1)
         .select(
-            query_id_col,
-            F.col(id_col),
+            QID,
+            F.col(ID),
             F.round(F.lit(lam) * F.col("rel"), 7).alias("mmr"),
             F.lit(1).alias("pick"),
         )
@@ -361,44 +341,29 @@ def mmr_topk(
     if materialize:
         selected = selected.localCheckpoint(eager=True)
     for i in range(2, k + 1):
-        cand = short.join(
-            selected.select(query_id_col, id_col),
-            [query_id_col, id_col],
-            "left_anti",
-        )
-        sel_ids = selected.select(
-            query_id_col, F.col(id_col).alias("b_id")
-        )
+        cand = short.join(selected.select(QID, ID), [QID, ID], "left_anti")
+        sel_ids = selected.select(QID, F.col(ID).alias("b_id"))
         ms = (
-            cand.join(
-                psim.withColumnRenamed("a_id", id_col),
-                [query_id_col, id_col],
-            )
-            .join(sel_ids, [query_id_col, "b_id"])
-            .groupBy(query_id_col, id_col, "rel")
+            cand.join(psim.withColumnRenamed("a_id", ID), [QID, ID])
+            .join(sel_ids, [QID, "b_id"])
+            .groupBy(QID, ID, "rel")
             .agg(F.max("sim").alias("maxsim"))
         )
         scored = ms.select(
-            query_id_col,
-            F.col(id_col),
+            QID,
+            F.col(ID),
             F.round(
                 F.lit(lam) * F.col("rel") - F.lit(om) * F.col("maxsim"), 7
             ).alias("mmr"),
         )
-        pick = (
-            per_query_topk(
-                scored, query_id_col, [F.desc("mmr"), F.asc(id_col)], 1
-            )
-            .select(query_id_col, id_col, "mmr", F.lit(i).alias("pick"))
+        pick = per_query_topk(scored, QID, [F.desc("mmr"), F.asc(ID)], 1).select(
+            QID, ID, "mmr", F.lit(i).alias("pick")
         )
         selected = selected.unionByName(pick)
         if materialize:
             selected = selected.localCheckpoint(eager=True)
     return selected.select(
-        query_id_col,
-        F.col("pick").cast("long").alias("pick"),
-        F.col(id_col),
-        "mmr",
+        QID, F.col("pick").cast("long").alias("pick"), F.col(ID), "mmr"
     )
 
 

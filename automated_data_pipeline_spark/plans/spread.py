@@ -24,6 +24,9 @@ from pyspark.sql import DataFrame
 
 log = logging.getLogger(__name__)
 
+# a verify-stage pin never fans out past this many tasks per core
+_PIN_CAP = 4
+
 
 def planned_partitions(df: DataFrame) -> int:
     """Partition count the frame would execute with (physical planning
@@ -49,12 +52,15 @@ def pinned_width(spark) -> int:
     of the two, so the pin only ever guards against AQE byte-
     coalescing (tiny-bytes/heavy-CPU pair stages), never against
     scaling up. Locally the two are equal, so bench behavior is
-    unchanged."""
+    unchanged. Capped at ``_PIN_CAP`` tasks per core: a session left
+    at ``shuffle.partitions=200`` on a small host would otherwise fan
+    every verify stage out to 200 tasks."""
+    par = spark.sparkContext.defaultParallelism
     try:
         sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         sp = 0
-    return max(spark.sparkContext.defaultParallelism, sp)
+    return min(max(par, sp), _PIN_CAP * par)
 
 
 def spread_if_narrow(df: DataFrame, *key_cols: str, min_ratio: float = 0.5) -> DataFrame:

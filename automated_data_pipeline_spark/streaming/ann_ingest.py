@@ -55,39 +55,32 @@ def write_ivf_index_for_ingest(
 ) -> None:
     """``write_ivf_index`` with the build rows stamped
     ``batch_key='build'`` so later ingest batches (which MUST stamp
-    their rows for replay detection) keep the corpus schema uniform.
-    The three twins below pass ``kw`` (``id_col``, ...) to their
-    writer."""
+    their rows for replay detection) keep the corpus schema uniform."""
     similarity.write_ivf_index(_build_stamped(assigned), centroids, path)
 
 
 def write_ivfpq_index_for_ingest(
-    encoded: DataFrame, cent_df: DataFrame, codebook_df: DataFrame,
-    path: str, **kw,
+    encoded: DataFrame, cent_df: DataFrame, codebook_df: DataFrame, path: str
 ) -> None:
     """``write_ivfpq_index`` with build rows stamped ``'build'`` —
     the IVF-PQ twin of ``write_ivf_index_for_ingest`` (the codes-only
     writer keeps the stamp column when present)."""
-    similarity.write_ivfpq_index(
-        _build_stamped(encoded), cent_df, codebook_df, path, **kw
-    )
+    similarity.write_ivfpq_index(_build_stamped(encoded), cent_df, codebook_df, path)
 
 
 def write_pq_index_for_ingest(
-    encoded: DataFrame, codebook_df: DataFrame, path: str, **kw
+    encoded: DataFrame, codebook_df: DataFrame, path: str
 ) -> None:
     """``write_pq_index`` with build rows stamped ``'build'`` — the
     flat-code-table twin (the codes writer keeps the stamp column
     when present)."""
-    similarity.write_pq_index(
-        _build_stamped(encoded), codebook_df, path, **kw
-    )
+    similarity.write_pq_index(_build_stamped(encoded), codebook_df, path)
 
 
-def write_sq8_index_for_ingest(corpus: DataFrame, path: str, **kw) -> None:
+def write_sq8_index_for_ingest(corpus: DataFrame, path: str) -> None:
     """``write_sq8_index`` with build rows stamped ``'build'`` (the
     encode keeps the stamp column when present)."""
-    similarity.write_sq8_index(_build_stamped(corpus), path, **kw)
+    similarity.write_sq8_index(_build_stamped(corpus), path)
 
 
 def start_incremental_ann_ingest(
@@ -96,7 +89,6 @@ def start_incremental_ann_ingest(
     index_path: str,
     checkpoint_dir: str,
     schema: str = "vec_id bigint, embedding array<double>",
-    vec_col: str = "embedding",
     available_now: bool = True,
     family: str = "ivf",
     track_drift: bool = False,
@@ -147,13 +139,11 @@ def start_incremental_ann_ingest(
                 spark,
                 index_path,
                 batch_df.withColumn("batch_key", F.lit(key)),
-                vec_col=vec_col,
                 quantizers=frozen,
             )
             if track_drift:
                 record_drift(
-                    spark, index_path, batch_df, key, vec_col, family=family,
-                    quantizers=frozen,
+                    spark, index_path, batch_df, key, family, quantizers=frozen
                 )
         # AFTER the corpus append: a crash in between leaves the stamp
         # probe to detect the landed rows, and the replay records the
@@ -291,7 +281,6 @@ def record_drift(
     index_path: str,
     vectors: DataFrame,
     batch_key: str,
-    vec_col: str = "embedding",
     family: str = "ivf",
     quantizers: dict | None = None,
 ) -> None:
@@ -312,7 +301,7 @@ def record_drift(
     )
     stats = (
         vectors.select(
-            metric(F.col(vec_col).cast("array<double>")).alias("d2")
+            metric(F.col(similarity.VEC).cast("array<double>")).alias("d2")
         )
         .filter(F.col("d2").isNotNull())
         .agg(

@@ -77,10 +77,7 @@ _COS_SQL = (
 )
 def semdedup_prune(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
-    return similarity.semantic_dedup(
-        e, id_col="vec_id", vec_col="embedding", cluster_col="label",
-        threshold=0.25,
-    )
+    return similarity.semantic_dedup(e, threshold=0.25)
 
 
 # --------------------------------------------------------------------

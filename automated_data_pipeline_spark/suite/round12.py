@@ -141,6 +141,19 @@ def hybrid_rrf_fused_lazy(spark, sf_dir, persist_postings: bool = True):
     (r12 weak row: the per-leg eager checkpoint was a materialization
     barrier per leg costing ~3× at sf1); the plan-contract test reads
     this lazy frame directly so the lineage pin stays non-vacuous."""
+    return _hybrid_rrf_lazy(
+        spark, sf_dir,
+        lambda e, anchors: similarity.cosine_topk(e, anchors, k=_HYBRID_SHORTLIST),
+        persist_postings,
+    )
+
+
+def _hybrid_rrf_lazy(spark, sf_dir, dense_leg, persist_postings: bool = True):
+    """The hybrid retrieval composition both hybrid queries share, lazy:
+    the BM25 top-20 leg, the anchor vectors, ``dense_leg(embeddings,
+    anchors)`` — a (qid, vec_id, rank) top-20 per anchor — mapped back
+    to query ids, and the RRF fusion. Returns ``(fused, release)``;
+    the BM25 leg runs its eager steps before the dense leg is built."""
     docs = load(spark, sf_dir, "documents")
     bm_full, release_postings = retrieval.bm25_top_docs_deferred(
         spark, docs, _BM25_QUERIES, k=_HYBRID_SHORTLIST,
@@ -157,15 +170,10 @@ def hybrid_rrf_fused_lazy(spark, sf_dir, persist_postings: bool = True):
         *[F.lit(x) for kv in sorted(_HYBRID_ANCHORS.items())
           for x in (kv[1], kv[0])]
     )
-    dense = (
-        similarity.cosine_topk(
-            e, anchors, k=_HYBRID_SHORTLIST, exclude_self=True
-        )
-        .select(
-            mapping[F.col("qid")].alias("query_id"),
-            F.col("vec_id").alias("doc_id"),
-            F.col("rank").alias("rnk"),
-        )
+    dense = dense_leg(e, anchors).select(
+        mapping[F.col("qid")].alias("query_id"),
+        F.col("vec_id").alias("doc_id"),
+        F.col("rank").alias("rnk"),
     )
     fused = retrieval.rrf_fuse(
         [bm, dense], "query_id", "doc_id", k=_HYBRID_K

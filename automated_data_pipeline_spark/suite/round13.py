@@ -21,7 +21,7 @@ from .round9 import _index_path, _reuse_lineage, _stamp_lineage
 from .round11 import _BM25_QUERIES, _fold_splits
 from .round12 import (
     _HYBRID_ANCHORS, _HYBRID_K, _HYBRID_SHORTLIST, _UNIMAX_SQL,
-    unimax_plan_from_counts,
+    _hybrid_rrf_lazy, unimax_plan_from_counts,
 )
 
 SPECS: list[QuerySpec] = []
@@ -132,42 +132,20 @@ def hybrid_rrf_ann_fused_lazy(spark, sf_dir, persist_postings: bool = True):
     would hide the lineage)."""
     from ..plans.spread import spread_if_narrow
 
-    docs = load(spark, sf_dir, "documents")
-    bm_full, release_postings = retrieval.bm25_top_docs_deferred(
-        spark, docs, _BM25_QUERIES, k=_HYBRID_SHORTLIST,
-        persist_postings=persist_postings,
-    )
-    bm = bm_full.select("query_id", "doc_id", "rnk")
+    def sq8_leg(e, anchors):
+        path = _index_path("sq8_hybrid")
+        if not _reuse_lineage(path, sf_dir, "sq8-hybrid-v1"):
+            # quantize at WRITE time (spread first — the r7 coarse-scan
+            # lesson applies to the index build exactly as to the
+            # in-session pass); queries pay the codes scan only
+            similarity.write_sq8_index(spread_if_narrow(e, "vec_id"), path)
+            _stamp_lineage(path, sf_dir, "sq8-hybrid-v1")
+        return similarity.sq8_topk_rerank_persisted(
+            spark, path, e, anchors,
+            k=_HYBRID_SHORTLIST, oversample=_ANN_OVERSAMPLE,
+        )
 
-    e = load(spark, sf_dir, "embeddings")
-    path = _index_path("sq8_hybrid")
-    if not _reuse_lineage(path, sf_dir, "sq8-hybrid-v1"):
-        # quantize at WRITE time (spread first — the r7 coarse-scan
-        # lesson applies to the index build exactly as to the
-        # in-session pass); queries pay the codes scan only
-        similarity.write_sq8_index(spread_if_narrow(e, "vec_id"), path)
-        _stamp_lineage(path, sf_dir, "sq8-hybrid-v1")
-    anchor_ids = sorted(_HYBRID_ANCHORS.values())
-    anchors = e.filter(F.col("vec_id").isin(anchor_ids)).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    ann = similarity.sq8_topk_rerank_persisted(
-        spark, path, e, anchors,
-        k=_HYBRID_SHORTLIST, oversample=_ANN_OVERSAMPLE,
-    )
-    mapping = F.create_map(
-        *[F.lit(x) for kv in sorted(_HYBRID_ANCHORS.items())
-          for x in (kv[1], kv[0])]
-    )
-    dense = ann.select(
-        mapping[F.col("qid")].alias("query_id"),
-        F.col("vec_id").alias("doc_id"),
-        F.col("rank").alias("rnk"),
-    )
-    fused = retrieval.rrf_fuse(
-        [bm, dense], "query_id", "doc_id", k=_HYBRID_K
-    )
-    return fused, release_postings
+    return _hybrid_rrf_lazy(spark, sf_dir, sq8_leg, persist_postings)
 
 
 # --------------------------------------------------------------------

@@ -366,6 +366,73 @@ def test_concurrent_start_runs_get_distinct_run_numbers(spark, workdir):
     assert len(set(nums)) == 20, f"duplicate run numbers: {sorted(nums)}"
 
 
+def test_run_number_claims_are_removed_and_stale_views_advance(spark, workdir):
+    """Two stores on one workdir: the claim marker goes once the
+    Running row is listed, and a store whose MAX read predates another
+    store's row (a stale view) still gets a distinct number — its
+    claim of the taken number is dropped on the post-claim re-read."""
+    import os
+
+    from automated_data_pipeline_spark.control import ControlStore
+
+    a, b = ControlStore(workdir), ControlStore(workdir)
+    ra = a.start_run(pipeline_name="A")
+    # b read MAX=0 before a's row landed; a's marker is already gone
+    b.next_run_number = lambda: 1
+    rb = b.start_run(pipeline_name="B")
+    rc = a.start_run(pipeline_name="C")
+    nums = {
+        r["run_id"]: r["run_number"]
+        for r in ControlStore(workdir).runs(spark).collect()
+    }
+    assert sorted(nums.values()) == [1, 2, 3], nums
+    assert nums[ra] == 1 and nums[rb] == 2 and nums[rc] == 3
+    assert not [f for f in os.listdir(a.runs_dir) if f.startswith("_claim_run_")]
+
+
+def test_two_stores_many_threads_get_distinct_run_numbers(workdir):
+    """Stress: two stores on one workdir, more threads than cores,
+    a short switch interval. Every run gets its own number and no
+    claim marker outlives its run."""
+    import os
+    import sys
+    import threading
+
+    from automated_data_pipeline_spark.control import ControlStore
+
+    stores = [ControlStore(workdir), ControlStore(workdir)]
+    n_threads = 2 * (os.cpu_count() or 2) + 2
+    errors = []
+
+    def worker(store):
+        try:
+            for _ in range(3):
+                store.start_run(pipeline_name="P")
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    threads = [
+        threading.Thread(target=worker, args=(stores[i % 2],))
+        for i in range(n_threads)
+    ]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    nums = ControlStore(workdir).runs_table()["run_number"].to_pylist()
+    assert sorted(nums) == list(range(1, 3 * n_threads + 1))
+    assert not [
+        f for f in os.listdir(stores[0].runs_dir) if f.startswith("_claim_run_")
+    ]
+
+
 def test_scheduler_survives_fire_failures(spark):
     """A failing fire() records the error and advances next_run_at —
     it must not kill the poll loop or hot-loop the broken schedule."""

@@ -377,7 +377,7 @@ def test_trim_keeps_tombstones_not_applied_by_the_rewrite(
     late = [100, 101]
     add_tombstones(spark, path, late)  # "landed during the rewrite"
     applied = spark.createDataFrame([(int(i),) for i in DEAD], "vec_id bigint")
-    _trim_tombstones(spark, path, applied, "vec_id")
+    _trim_tombstones(spark, path, applied)
     left = sorted(r["vec_id"] for r in read_tombstones(spark, path).collect())
     assert left == late
     got = similarity.ivf_topk_persisted(spark, path, queries3, k=5, nprobe=8)
@@ -386,7 +386,6 @@ def test_trim_keeps_tombstones_not_applied_by_the_rewrite(
     _trim_tombstones(
         spark, path,
         spark.createDataFrame([(int(i),) for i in late], "vec_id bigint"),
-        "vec_id",
     )
     assert not os.path.isdir(f"{path}/tombstones")
 

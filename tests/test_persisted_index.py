@@ -245,9 +245,9 @@ def test_read_probed_rejects_more_clusters_than_centroids(spark, tmp_path):
         "qid int, qe array<double>, ivf_cluster int",
     )
     with pytest.raises(ValueError, match="more clusters than the index's 2"):
-        similarity._read_probed(spark, path, wide, "vec_id", 2)
+        similarity._read_probed(spark, path, wide, 2)
     _, rows = similarity._read_probed(
-        spark, path, wide.filter(F.col("ivf_cluster") < 2), "vec_id", 2
+        spark, path, wide.filter(F.col("ivf_cluster") < 2), 2
     )
     assert sorted(r["vec_id"] for r in rows.collect()) == [0, 1]
 

@@ -1075,3 +1075,23 @@ def test_spread_if_narrow_conditional(spark, tmp_path):
     assert same is wide  # no added exchange, plan untouched
     # values identical either way
     assert sorted(r["doc_id"] for r in spread.collect()) == list(range(1000))
+
+
+def test_pinned_width_capped_at_four_tasks_per_core(spark):
+    """A verify-stage pin takes max(defaultParallelism, shuffle
+    partitions), but never more than 4 tasks per core: a session left
+    at the Spark default of 200 shuffle partitions on a small host
+    must not fan every verify stage out to 200 tasks."""
+    from automated_data_pipeline_spark.plans.spread import pinned_width
+
+    par = spark.sparkContext.defaultParallelism
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "200")
+        assert pinned_width(spark) == min(200, 4 * par)
+        for sp in (1, par, 2 * par, 4 * par):
+            spark.conf.set(key, str(sp))
+            assert pinned_width(spark) == max(par, sp)
+    finally:
+        spark.conf.set(key, old)

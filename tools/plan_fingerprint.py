@@ -9,8 +9,9 @@ jobs inside the query function). Then it records the returned frame's
 normalized plan and a digest of its rows. Expression, plan and RDD ids,
 lambda variable numbers and the Spark application id (it names the
 per-application store roots the ``*_recovered`` queries scan) are
-normalized away, so two runs of an unchanged query match, in one
-process or in two.
+normalized away, and so is the random UUID naming an unnamed
+``Observation``'s ``CollectMetrics`` node, so two runs of an unchanged
+query match, in one process or in two.
 
 Usage:
   python tools/plan_fingerprint.py sf_dir name [name ...] > out.json
@@ -37,6 +38,9 @@ _NORMALIZE = [
     (re.compile(r"\*\(\d+\)"), "*()"),
     # PySpark numbers lambda variables per process (x_1, x_2, ...)
     (re.compile(r"(lambda [A-Za-z]+)_\d+"), r"\1_"),
+    # an unnamed Observation names its CollectMetrics node by a random UUID
+    (re.compile(r"CollectMetrics [0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}"),
+     "CollectMetrics <uuid>"),
 ]
 
 
